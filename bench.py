@@ -1,41 +1,29 @@
 #!/usr/bin/env python
-"""Benchmark harness for the driver and for local iteration.
+"""Scaling and throughput protocols for local iteration.
 
-Default mode: runs the headline queries at ``$SPARK_GRAFT_SF_DIR``
-(default ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and
-prints ONE JSON line::
+The end-to-end benchmark is ``perfbench/run.py`` (declared in
+BENCHMARK.json); this script keeps the protocols it has no counterpart
+for. Each mode prints ONE JSON line:
 
-    {"metric": "headline_total", "value": <sec>, "unit": "sec",
-     "queries": {...}, "sf": ..., "triples_per_sec": ...}
-
-Other modes:
-  --scaling           run the extraction throughput job at two parallelism
+  --throughput --cores N   one extraction-throughput run (synthesized
+                      FOXML from ``orders`` through the full plan).
+  --scaling           the extraction throughput run at two parallelism
                       levels (8 and 32 cores by default) in fresh
-                      subprocesses (one JVM each) and report scaling
-                      efficiency = (tps_hi / tps_lo) / (hi / lo) — the
-                      sandbox stand-in for the north rule's N vs 4N
-                      executors.
-  --throughput --cores N   internal single-run worker used by --scaling;
-                      prints its own JSON line.
+                      subprocesses (one JVM each); reports scaling
+                      efficiency = (tps_hi / tps_lo) / (hi / lo).
   --curate            run the jobs/curate.py CLI end-to-end (exact dedup ->
                       near-dup clustering -> quality/lang -> token counts ->
                       write) on a synthesized corpus at the same two
                       parallelism levels and report docs/sec at each plus
                       scaling efficiency and the per-stage breakdown.
   --code-throughput / --code-scaling   the same two protocols for the
-                      north-rule CODE payload: the full code_kg_plan
-                      (constants + defs + imports + entity linking +
-                      calls + vendored + dedup) over the synthesized
-                      source-contract table.
+                      code KG: the full code_kg_plan (constants + defs +
+                      imports + entity linking + calls + vendored +
+                      dedup) over the synthesized source-contract table.
 
-The default (headline) line additionally carries ``code_kg_sec`` /
-``code_triples`` / ``code_triples_per_sec`` measured OUTSIDE the
-headline suite, so ``headline_total`` stays comparable across rounds.
-
-Timing protocol: each query is materialized with a `noop` write (full
-execution, nothing collected to the driver); one warmup pass reads every
-input table so JVM/codegen warmup and OS page cache are amortized out of
-the measured numbers.
+Timing protocol: each run is materialized with a `noop` write (full
+execution, nothing collected to the driver) after one untimed pass that
+pays whole-stage codegen; best-of-``--reps`` with the steal meter.
 """
 
 from __future__ import annotations
@@ -50,20 +38,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-#: the queries the driver's BENCH_r{N}.json is graded on — a spread over
-#: the engine's surface: full KG pipeline, dedup, similarity, text,
-#: relational agg/join. Names match __spark_entry__.queries().
-HEADLINE = [
-    "kg_extract_orders",
-    "kg_dedup_exact",
-    "docs_dedup_exact",
-    "docs_minhash_neardup",
-    "docs_quality_score",
-    "emb_cosine_topk",
-    "tpch_q1_pricing_summary",
-    "star_join_revenue_by_region",
-]
 
 
 def _materialize(df) -> None:
@@ -105,102 +79,6 @@ def _steal_jiffies() -> int:
             return int(f.readline().split()[8])
     except (OSError, IndexError, ValueError):
         return 0
-
-
-def run_headline(sf_dir: str, cores: int) -> dict:
-    import __spark_entry__ as entrymod
-    from fcrepo3_rdf_extractor_spark.session import build_session
-
-    spark = build_session("bench", cores=cores)
-    qs = entrymod.queries()
-
-    # warmup: touch every parquet input once (page cache + codegen)
-    for t in ("orders", "lineitem", "customer", "nation", "region",
-              "documents", "embeddings", "events", "part", "supplier"):
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
-    _warm_python_workers(spark, cores)
-
-    steal0 = _steal_jiffies()
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        # one untimed pass per query: whole-stage codegen compiles (and
-        # caches) on first execution; production jobs pay this once per
-        # long-lived session, so steady state is the honest number.
-        # Then best-of-3 timed passes: this host's hypervisor steals
-        # 1-3 cores' worth of CPU in bursts exactly when a stage goes
-        # full-width (measured: identical warm extraction 4.3-14.6 s,
-        # ~100 CPU-s of /proc/stat steal during the run), so a single
-        # pass is a coin flip and min is the honest estimator
-        _materialize(qs[name](spark, sf_dir))
-        best = None
-        for _ in range(3):
-            df = qs[name](spark, sf_dir)
-            t0 = time.perf_counter()
-            _materialize(df)
-            dt = time.perf_counter() - t0
-            best = dt if best is None or dt < best else best
-        timings[name] = round(best, 3)
-
-    # flagship triples/sec on the full extraction pipeline
-    n_triples = qs["kg_extract_orders"](spark, sf_dir).count()
-    tps = round(n_triples / timings["kg_extract_orders"], 1)
-    # close the HEADLINE steal window before the code-KG block: the
-    # steal meter is the vet for whether a headline_total regression is
-    # real (CLAUDE.md protocol), so a neighbor burst landing only
-    # during the code passes must not pollute it — the code block gets
-    # its own window below
-    steal_headline = round((_steal_jiffies() - steal0) / 100.0, 1)
-    steal1 = _steal_jiffies()
-
-    # north-rule code payload: the full code-KG plan, measured with the
-    # same protocol but reported outside `queries`/headline_total
-    from fcrepo3_rdf_extractor_spark.plans.code_pipeline import (
-        CodeKgConfig,
-        code_kg_plan,
-    )
-    from fcrepo3_rdf_extractor_spark.queries import _src_files
-
-    # headline code_kg_sec stays the cross-round-comparable shape: the
-    # raw synthesized corpus through the DEFAULT (global-dedup) config.
-    # The dedup='local' snapshot-contract protocol lives in
-    # --code-throughput/--code-scaling, where its uniqued corpus is
-    # large enough to pay off; at sf0.1 (5k files) a cached/uniqued
-    # source measured 2.2s SLOWER than the raw projection regardless of
-    # dedup mode (cache/partition overheads dwarf the tiny exchange).
-    code_cfg = CodeKgConfig(calls=True, vendored=True)
-    code_src = _src_files(spark, sf_dir, calls=True)
-    code_df = code_kg_plan(code_src, code_cfg)
-    _materialize(code_df)  # untimed codegen pass
-    code_best = None
-    for _ in range(3):
-        # fresh plan + cold cache per rep: code_kg_plan persists its
-        # fused state, so a reused DataFrame would time only the
-        # content-free assembly from rep 2 on (see run_code_throughput)
-        spark.catalog.clearCache()
-        code_df = code_kg_plan(code_src, code_cfg)
-        t0 = time.perf_counter()
-        _materialize(code_df)
-        dt = time.perf_counter() - t0
-        code_best = dt if code_best is None or dt < code_best else code_best
-    code_triples = code_df.count()
-    code_steal = round((_steal_jiffies() - steal1) / 100.0, 1)
-    spark.stop()
-    total = round(sum(timings.values()), 3)
-    return {
-        "metric": "headline_total",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": _sf_label(sf_dir),
-        "cores": cores,
-        "triples": n_triples,
-        "triples_per_sec": tps,
-        "code_kg_sec": round(code_best, 3),
-        "code_triples": code_triples,
-        "code_triples_per_sec": round(code_triples / code_best, 1),
-        "code_steal_cpu_sec": code_steal,
-        "steal_cpu_sec": steal_headline,
-    }
 
 
 def _snapshot_unique(source):
@@ -263,7 +141,7 @@ def run_throughput(sf_dir: str, cores: int, copies: int = 1,
     n_objects = source.count()  # warmup + pin the synthesized input
 
     out = extract_plan(source, ExtractConfig(skip_empty=True, dedup=True))
-    _materialize(out)  # untimed codegen-compile pass (see run_headline)
+    _materialize(out)  # untimed codegen-compile pass
     # best-of-3: this sandbox is a shared VM with bursty interference
     # (observed 15s..81s for the identical warm job); min is the honest
     # steady-state estimator
@@ -543,8 +421,7 @@ def run_curate_scaling(sf_dir: str, lo: int, hi: int, copies: int,
     best-of-``runs`` per level against neighbor interference. The
     per-stage seconds come from the job's own stage boundaries, so the
     breakdown excludes JVM startup but INCLUDES first-run codegen — the
-    CLI is a cold-start batch job, unlike the long-lived-session headline
-    numbers."""
+    CLI is a cold-start batch job."""
     import tempfile
 
     tmp = tempfile.mkdtemp(prefix="curate-bench-")
@@ -586,13 +463,14 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
     ap.add_argument("--cores", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    ap.add_argument("--throughput", action="store_true")
-    ap.add_argument("--scaling", action="store_true")
-    ap.add_argument("--code-throughput", action="store_true",
-                    help="single code-KG pipeline throughput run")
-    ap.add_argument("--code-scaling", action="store_true",
-                    help="code-KG pipeline at two parallelism levels")
-    ap.add_argument("--curate", action="store_true")
+    mode = ap.add_mutually_exclusive_group(required=True)
+    mode.add_argument("--throughput", action="store_true")
+    mode.add_argument("--scaling", action="store_true")
+    mode.add_argument("--code-throughput", action="store_true",
+                      help="single code-KG pipeline throughput run")
+    mode.add_argument("--code-scaling", action="store_true",
+                      help="code-KG pipeline at two parallelism levels")
+    mode.add_argument("--curate", action="store_true")
     ap.add_argument("--curate-runs", type=int, default=3)
     ap.add_argument("--scale-lo", type=int, default=8)
     ap.add_argument("--scale-hi", type=int, default=32)
@@ -617,11 +495,9 @@ def main() -> None:
         out = run_scaling(args.sf_dir, args.scale_lo, args.scale_hi,
                           args.copies, args.interleave,
                           mode="--code-throughput")
-    elif args.curate:
+    else:
         out = run_curate_scaling(args.sf_dir, args.scale_lo, args.scale_hi,
                                  args.copies, args.curate_runs)
-    else:
-        out = run_headline(args.sf_dir, args.cores)
     print(json.dumps(out))
 
 

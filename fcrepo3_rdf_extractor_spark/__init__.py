@@ -6,10 +6,14 @@ Layers:
 - pure-Python core: ``vocab``, ``terms``, ``foxml``, ``rdfxml``, ``dc``,
   ``extract`` (no Spark imports; runs inside pandas UDFs)
 - ``operators/``: vectorized extraction, filters, dedup, canonicalization,
-  training-data ops (minhash/simhash/ANN/text-quality/multimodal)
+  SPARQL (``bgp``, ``sparql``), code-KG extraction, and the corpus-curation
+  operators ``jobs/curate.py`` runs (minhash/containment/line dedup,
+  text quality, sampling); ``classify``, ``multimodal``, ``relational``
+  and ``similarity`` serve only the query registry's reference checks
 - ``sources/``: source-table readers/synthesizers, N-Quads sink
-- ``plans/``: the end-to-end extraction pipeline + checkpoint/resume
-- ``streaming/``: Structured Streaming variant
+- ``plans/``: the end-to-end extraction and code-KG pipelines +
+  checkpoint/resume
+- ``streaming/``: Structured Streaming variants
 """
 
 __version__ = "0.1.0"

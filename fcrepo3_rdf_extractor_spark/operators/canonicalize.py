@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-ALIAS_SCHEMA = "alias string, canonical string"
-
 
 def canonicalize(
     triples: DataFrame,
@@ -83,15 +81,6 @@ def canonicalize_sameas(triples: DataFrame, sameas: DataFrame) -> DataFrame:
     dictionary (two broadcast hash joins; the triple stream never
     shuffles)."""
     return canonicalize(triples, sameas_closure(sameas))
-
-
-def pid_prefix_aliases(spark, prefixes: list[str]) -> DataFrame:
-    """Helper: build an alias dictionary that rewrites foreign PID
-    prefixes (e.g. ``http://fedora.example/``) to ``info:fedora/`` given
-    the set of known PIDs is not needed — prefix rewriting is expressed
-    as columns instead when the alias set would be unbounded."""
-    rows = [(p, "info:fedora/") for p in prefixes]
-    return spark.createDataFrame(rows, ALIAS_SCHEMA)
 
 
 def fuzzy_entity_match(

@@ -18,8 +18,8 @@ GIF — :func:`decode_gif` runs a
 full variable-width
 LZW decompressor (growing dictionary, early-change width bumps, KwKwK),
 de-interlaces, and applies the color table. :func:`encode_png` / :func:`encode_gif`
-are the write sides, and the ``mm_png_decode`` / ``mm_gif_decode``
-oracles prove the round trips from pixel arithmetic alone. JPEG/video
+are the write sides, and the round-trip tests prove both decoders
+from pixel arithmetic alone. JPEG/video
 decode genuinely needs libraries (libjpeg/ffmpeg) this container
 lacks, so that branch stays a clearly-marked stub: ``decode_stub='fake'`` derives
 deterministic features from the bytes (so the plumbing — schema, batch
@@ -41,17 +41,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),       # image | audio | video
-        T.StructField("mime", T.StringType()),
-        T.StructField("payload", T.BinaryType()),     # opaque bytes
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("payload_sha256", T.StringType()),
-    ]
-)
 
 
 def documents_as_media(docs: DataFrame) -> DataFrame:
@@ -651,7 +640,7 @@ def encode_png(
     round-trip proof). ``filter_mode='cycle'`` applies filter type
     ``row % 5`` per (sub)image so a decode of the result exercises
     every unfilter branch — if decode_png faked any filter, the pixel
-    round-trip (and the mm_png_decode oracle) would not match.
+    round-trip would not match.
     ``interlace=True`` writes the Adam7 pass sequence (each pass its
     own independently-filtered sub-image, PNG §8.2)."""
     import zlib
@@ -971,121 +960,3 @@ def extract_gif_features(media: DataFrame) -> DataFrame:
     """REAL LZW decode + per-channel mean reduction for GIF payloads
     (shared reducer: _image_mean_features)."""
     return _image_mean_features(media, decode_gif)
-
-
-def documents_as_gif_media(docs: DataFrame) -> DataFrame:
-    """Synthesize a VALID GIF89a per document with the shared pixel
-    formula (index i = (doc_id*7 + i*13) % 256) and the linear palette
-    entry j = (j, (2*j)%256, (3*j)%256) — the oracle states the decoded
-    channel means from that arithmetic alone. Same fixture shape as
-    documents_as_png_media (Python synthesis: LZW bit-packing is not a
-    column expression; the DECODE path is the operator under test)."""
-    import numpy as np
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("mime", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-    j = np.arange(256, dtype=np.int64)
-    palette = (
-        np.stack([j, (2 * j) % 256, (3 * j) % 256], axis=1)
-        .astype(np.uint8)
-        .tobytes()
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 4 + d % 5, 3 + d % 4
-                i = np.arange(w * h, dtype=np.int64)
-                idx = ((d * 7 + i * 13) % 256).astype(np.uint8).tobytes()
-                # odd doc_ids interlace: the oracle is decode-
-                # invariant, so the driver check covers both layouts
-                payload = encode_gif(w, h, idx, palette,
-                                     interlace=bool(d % 2))
-                rows.append((d, "image", "image/gif", payload, len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "mime", "payload", "n_bytes"]
-            )
-
-    return docs.select("doc_id").mapInPandas(run, schema=schema)
-
-
-def documents_as_png_media(docs: DataFrame) -> DataFrame:
-    """Synthesize a VALID RGB PNG per document with the SAME pixel
-    formula as the PPM fixture (pixel i = (doc_id*7 + i*13) % 256,
-    w = 4 + doc_id%5, h = 3 + doc_id%4) — so the DuckDB oracle states
-    the expected decode from arithmetic alone. Unlike PPM, a PNG
-    payload needs deflate + CRC32, which column expressions cannot
-    produce, so synthesis runs in the same Arrow-batched mapInPandas
-    shape as the decoder (documented Python stage; fixture-only — the
-    DECODE path is the operator under test). Rows are filtered with
-    ``row % 5`` so every decode exercises all five filters."""
-    import numpy as np
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("mime", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 4 + d % 5, 3 + d % 4
-                i = np.arange(w * h * 3, dtype=np.int64)
-                pix = ((d * 7 + i * 13) % 256).astype(np.uint8).tobytes()
-                # odd doc_ids Adam7-interlace: decode-invariant,
-                # so the oracle covers both layouts
-                payload = encode_png(w, h, pix, channels=3,
-                                     interlace=bool(d % 2))
-                rows.append((d, "image", "image/png", payload, len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "mime", "payload", "n_bytes"]
-            )
-
-    return docs.select("doc_id").mapInPandas(run, schema=schema)
-
-
-def documents_as_ppm_media(docs: DataFrame) -> DataFrame:
-    """Synthesize a VALID P6 image per document, entirely JVM-side:
-    dimensions and every pixel byte are pure functions of doc_id
-    (pixel i = (doc_id*7 + i*13) % 256), so the DuckDB oracle can state
-    the expected decode output from the same arithmetic without ever
-    constructing bytes — the FOXML-synthesis trick applied to images.
-    Payload built as header ++ unhex(pixel hex): binary concat of a
-    format_string header and a transform/lpad/hex pixel raster."""
-    d = F.col("doc_id")
-    w = (F.lit(4) + d % 5).cast("int")
-    h = (F.lit(3) + d % 4).cast("int")
-    header = F.encode(F.format_string("P6\n%d %d\n255\n", w, h), "UTF-8")
-    n = (w * h * F.lit(3)).cast("int")
-    pix_hex = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), n - F.lit(1)),
-            lambda i: F.lpad(F.hex((d * 7 + i * 13) % 256), 2, "0"),
-        ),
-        "",
-    )
-    payload = F.concat(header, F.unhex(pix_hex))
-    return docs.select(
-        d.alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.lit("image/x-portable-pixmap").alias("mime"),
-        payload.alias("payload"),
-        F.octet_length(payload).cast("long").alias("n_bytes"),
-        F.sha2(payload, 256).alias("payload_sha256"),
-    )

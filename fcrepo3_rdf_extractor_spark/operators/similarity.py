@@ -121,8 +121,8 @@ def lsh_topk_multiprobe(
 def _probe_buckets(sign_bits: int, radius: int) -> list[Column]:
     """The probe-bucket expressions over a ``q_bucket`` column: the
     bucket itself plus (radius >= 1) every single-bit flip. Row-wise
-    column math, so the same list serves a 1-row query frame
-    (:func:`lsh_topk_multiprobe`) or an n-row panel (:func:`ann_recall`)."""
+    column math, so the list serves a 1-row query frame
+    (:func:`lsh_topk_multiprobe`)."""
     probes = [F.col("q_bucket")]
     if radius >= 1:
         for i in range(sign_bits):
@@ -137,89 +137,6 @@ def _probe_buckets(sign_bits: int, radius: int) -> list[Column]:
                 )
             )
     return probes
-
-
-def ann_recall(
-    emb: DataFrame,
-    n_queries: int = 8,
-    k: int = 10,
-    sign_bits: int = 4,
-    radius: int = 1,
-) -> DataFrame:
-    """Recall@k of multi-probe LSH against exact brute force, per query,
-    over a panel of query vectors (``vec_id < n_queries``) — the quality
-    gate an ANN deployment ships with: you don't tune ``sign_bits`` /
-    ``radius`` by feel, you measure what fraction of the true top-k the
-    index returns. Output (query_id, n_hits, recall); a query whose
-    bucket probes miss everything still appears with recall 0.0.
-
-    Scale shape: this is an EVALUATION harness, run on a sampled corpus
-    + sampled query panel (nobody brute-forces 10^9 vectors to score an
-    index — the exact arm is the expensive one by design). The query
-    panel broadcasts; both arms rank with one window partitioned by
-    query_id, fine for a panel-sized partition count at eval scale (the
-    per-query SERVING path stays TakeOrderedAndProject —
-    :func:`lsh_topk_multiprobe`). Ranking ties break on (cosine desc,
-    vec_id asc) — the same total order as every top-k here, so the
-    recall number is deterministic and cross-engine checkable."""
-    assert radius in (0, 1), "only radius 0/1 probing implemented"
-    from pyspark.sql import Window
-
-    panel_raw = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        sign_bucket_col(F.col("embedding"), sign_bits).alias("q_bucket"),
-    )
-    panel = F.broadcast(panel_raw)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-
-    def topk(scored: DataFrame) -> DataFrame:
-        return (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .select("query_id", "vec_id")
-        )
-
-    exact = topk(
-        emb.crossJoin(panel)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", "vec_id",
-            F.round(cosine_col(F.col("embedding"), F.col("q_emb")), 6).alias("cosine"),
-        )
-    )
-    probe_tbl = panel.select(
-        "query_id", "q_emb",
-        F.explode(F.array(*_probe_buckets(sign_bits, radius))).alias("bucket"),
-    )
-    bucketed = emb.withColumn("bucket", sign_bucket_col(F.col("embedding"), sign_bits))
-    approx = topk(
-        bucketed.join(F.broadcast(probe_tbl), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", "vec_id",
-            F.round(cosine_col(F.col("embedding"), F.col("q_emb")), 6).alias("cosine"),
-        )
-    )
-    hits = (
-        exact.join(approx, ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").cast("long").alias("n_hits"))
-    )
-    # hint the RIGHT (buildable) side: a broadcast hint on the left of
-    # a left-outer join is dropped with a planner warning, and the
-    # warning noise would hide real hints going stale
-    return (
-        panel_raw.select("query_id")
-        .join(F.broadcast(hits), "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            F.round(F.coalesce("n_hits", F.lit(0)) / F.lit(float(k)), 6).alias("recall"),
-        )
-    )
 
 
 def ivf_topk(
@@ -383,8 +300,7 @@ def kmeans_train(
     codebook trainer (``metric="l2"``).
 
     Deterministic by construction, so the whole training run is
-    cross-engine checkable (queries.emb_kmeans_train unrolls the same
-    recurrence in SQL): init = the ``k`` lowest-id vectors, assignment
+    cross-engine checkable: init = the ``k`` lowest-id vectors, assignment
     ties break toward the lowest centroid id, and the iteration count
     is FIXED (at 100 TB you budget rounds, you don't convergence-poll).
 
@@ -672,8 +588,7 @@ def pq_train_codebooks(
     (Jegou et al. 2011 §III — each subquantizer minimizes in-subspace
     L2 distortion; cosine is the wrong objective inside a subspace).
     Init/tie/fixed-iteration rules are :func:`kmeans_train`'s, so the
-    whole training run stays deterministic and cross-engine checkable
-    (queries.emb_pq_recall unrolls all m recurrences in SQL).
+    whole training run stays deterministic and cross-engine checkable.
 
     Scale shape: m * n_iter narrow jobs, each ONE codegen argmin
     projection over a staged subvector slice + ONE partial-agg groupBy
@@ -709,17 +624,16 @@ def pq_recall(
     """Recall@k of trained-codebook PQ asymmetric-distance search
     against exact (full-precision) squared-L2 brute force, per query,
     over a panel of query vectors (``vec_id < n_queries``) — the PQ arm
-    of the ANN quality gate (:func:`ann_recall` is the LSH arm,
-    :func:`ivf_recall` the IVF arm). You don't pick m/ksub/n_iter by
-    feel; you measure what fraction of the true top-k the codes keep.
+    of the ANN quality gate (:func:`ivf_recall` is the IVF arm). You
+    don't pick m/ksub/n_iter by feel; you measure what fraction of the
+    true top-k the codes keep.
 
-    Scale shape: an EVALUATION harness (sampled corpus + panel), like
-    ann_recall — the exact arm is the expensive one by design. The
-    panel's per-query distance tables are driver-computed literals
-    (n_queries * m * ksub doubles) broadcast as one tiny table; the
-    approx arm touches only the encoded codes. Both arms rank on the
-    raw (unrounded) distance with a vec_id tie-break — the same total
-    order in the SQL twin."""
+    Scale shape: an EVALUATION harness (sampled corpus + panel) — the
+    exact arm is the expensive one by design. The panel's per-query
+    distance tables are driver-computed literals (n_queries * m * ksub
+    doubles) broadcast as one tiny table; the approx arm touches only
+    the encoded codes. Both arms rank on the raw (unrounded) distance
+    with a vec_id tie-break — one deterministic total order."""
     from pyspark.sql import Window
 
     books = pq_train_codebooks(emb, m=m, ksub=ksub, n_iter=n_iter)
@@ -784,7 +698,7 @@ def pq_recall(
         .groupBy("query_id")
         .agg(F.count("*").cast("long").alias("n_hits"))
     )
-    # right-side hint: see ann_recall — a left-side broadcast hint on a
+    # right-side hint: a left-side broadcast hint on a
     # left-outer join is dropped with a planner warning
     return (
         panel_raw.select("query_id")
@@ -813,7 +727,7 @@ def ivf_recall(
     choosing kc/nprobe: recall rises with nprobe at linear candidate
     cost, and this is the curve you read it off.
 
-    Scale shape: evaluation harness like :func:`ann_recall`; the
+    Scale shape: evaluation harness like :func:`pq_recall`; the
     centroid table and per-query probe lists are broadcast
     (metadata-sized), the candidate fetch is the assignment join that
     partition-prunes at scale, and both arms rank by the same
@@ -873,7 +787,7 @@ def ivf_recall(
         .groupBy("query_id")
         .agg(F.count("*").cast("long").alias("n_hits"))
     )
-    # right-side hint: see ann_recall — a left-side broadcast hint on a
+    # right-side hint: a left-side broadcast hint on a
     # left-outer join is dropped with a planner warning
     return (
         panel_raw.select("query_id")

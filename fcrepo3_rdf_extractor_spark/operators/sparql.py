@@ -63,7 +63,9 @@ grammar, same rebind rules).
 
 Deliberate subset limits (each raises a clear SparqlParseError):
 FILTER functions beyond the expression set above (no LANG/DATATYPE —
-the store keeps lexical forms only — and EXISTS is a group-level
+the table stores ``obj_lang``/``obj_datatype``, but a BGP variable
+binding carries only the term's lexical value, so a bound variable has
+no tag or datatype left to read — and EXISTS is a group-level
 construct, not an expression operand),
 a group filter referencing a variable its OPTIONAL group does
 not bind (outer-variable filter scope), MINUS/VALUES/BIND/EXISTS

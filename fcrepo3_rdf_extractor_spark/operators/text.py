@@ -47,13 +47,6 @@ def shingles_of(words: Column, k: int = 3) -> Column:
     ).otherwise(F.array(F.concat_ws(" ", words)))
 
 
-def shingles_col(text: Column, k: int = 3) -> Column:
-    """Convenience single-evaluation form; for anything evaluated more
-    than once per row, stage ``tokens_col`` first and use
-    ``shingles_of``."""
-    return shingles_of(tokens_col(text), k)
-
-
 def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace token count plus a BPE-ish subword estimate (characters
     / 3.8 is the classic ~bytes-per-token heuristic, kept integral and
@@ -63,22 +56,6 @@ def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
         "doc_id",
         F.size(tokens_col(t)).cast("long").alias("n_tokens"),
         F.ceil(F.length(t) / 4).cast("long").alias("n_subword_est"),
-    )
-
-
-#: BPE-ish pre-tokenization: letter runs, digit runs, single punctuation —
-#: the shape of GPT-style pre-tokenizers, portable to any regex engine
-BPE_PIECE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def bpe_piece_count(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Subword-piece count via the BPE-ish pre-tokenizer regex (an upper
-    bound on BPE token count: merges only reduce pieces)."""
-    t = F.col(text_col)
-    return df.select(
-        "doc_id",
-        F.size(F.regexp_extract_all(t, F.lit(BPE_PIECE_RE), 0)).cast("long")
-        .alias("n_pieces"),
     )
 
 
@@ -359,102 +336,6 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# repetition signals (Gopher-style quality filters)
-
-
-def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Gopher-style repetition quality signals: duplicate-word fraction,
-    most-frequent-word fraction, most-frequent-bigram fraction (Rae et
-    al. 2021 §A1.1 use these to drop boilerplate/spam documents before
-    training).
-
-    Scale shape: per-word stats come from ONE explode ->
-    groupBy(doc_id, word) -> groupBy(doc_id) tree — both aggregations
-    get map-side partial combine, and the grouping key (doc_id, word)
-    cannot hot-spot (cardinality >= docs). The row-local alternative
-    (array_distinct + per-distinct filter counts) is O(len^2) per row —
-    quadratic in document length, which a 1M-token document turns into
-    10^12 comparisons on one task; the shuffle form stays linear.
-    Bigram stats are the same tree over 2-gram shingles; the two trees
-    join back on doc_id (shuffle-partitioned both sides, no skew).
-    """
-    staged = df.select("doc_id", tokens_col(F.col(text_col)).alias("_w"))
-    wc = (
-        staged.select("doc_id", F.explode("_w").alias("_t"))
-        .groupBy("doc_id", "_t")
-        .agg(F.count("*").alias("_c"))
-    )
-    word_stats = wc.groupBy("doc_id").agg(
-        F.round(F.lit(1) - F.count("*") / F.sum("_c"), 4).alias("dup_word_frac"),
-        F.round(F.max("_c") / F.sum("_c"), 4).alias("top_word_frac"),
-    )
-    gc = (
-        staged.select("doc_id", F.explode(shingles_of(F.col("_w"), 2)).alias("_g"))
-        .groupBy("doc_id", "_g")
-        .agg(F.count("*").alias("_c"))
-    )
-    bigram_stats = gc.groupBy("doc_id").agg(
-        F.round(F.max("_c") / F.sum("_c"), 4).alias("top_bigram_frac")
-    )
-    return word_stats.join(bigram_stats, "doc_id")
-
-
-# ---------------------------------------------------------------------------
-# benchmark decontamination
-
-
-def ngram_contamination(
-    df: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    k: int = 5,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Benchmark decontamination: per-document fraction of distinct word
-    k-grams that also occur in an evaluation set (``benchmark``, one
-    ``gram`` string column). Training pipelines drop or flag documents
-    whose eval-set overlap exceeds a threshold so held-out benchmarks
-    stay held out.
-
-    Scale shape: the benchmark is an EVAL set — small by construction —
-    so its distinct grams broadcast and the overlap test is a map-side
-    ``left_semi`` broadcast join on the exploded doc grams: no shuffle
-    of the (huge) corpus gram table against the benchmark. The per-doc
-    totals and hit counts are two partial-agg groupBys over the same
-    exploded frame, joined back on doc_id. Distinct-per-document grams
-    (``array_distinct`` BEFORE explode) keep the explode row count
-    bounded by document length and make the fraction a set overlap.
-    """
-    staged = df.select("doc_id", tokens_col(F.col(text_col)).alias("_w"))
-    grams = staged.select(
-        "doc_id",
-        F.explode(F.array_distinct(shingles_of(F.col("_w"), k))).alias("gram"),
-    )
-    bench = benchmark.select("gram").distinct()
-    totals = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
-    hits = (
-        grams.join(F.broadcast(bench), "gram", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("_n_hits"))
-    )
-    return (
-        totals.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("n_grams").cast("long").alias("n_grams"),
-            F.coalesce("_n_hits", F.lit(0)).cast("long").alias("n_contaminated"),
-            F.round(
-                F.coalesce("_n_hits", F.lit(0)) / F.col("n_grams"), 4
-            ).alias("contamination_frac"),
-        )
-        .withColumn(
-            "contaminated",
-            (F.col("contamination_frac") >= threshold).cast("int"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # Bloom-filter decontamination (space-bounded membership at corpus scale)
 
 #: Bloom geometry: positions are 16-bit (4 md5 hex chars each), the
@@ -526,8 +407,8 @@ def bloom_contamination(
     grams ≈ tens of GB of text, but always fit a fixed-size bitmap):
     the filter rides into every task as a CONSTANT-FOLDED literal array
     (16 KB), so probing is a pure projection — no join, no shuffle, no
-    explode; compare :func:`ngram_contamination`'s broadcast semi-join,
-    which stays the exact path when the eval set is broadcastable.
+    explode. An explode -> broadcast semi-join on the exact gram table
+    stays the exact path when the eval set is broadcastable.
 
     False-positive rate at the test geometry (n benchmark grams, m =
     2^16 bits, k = 3 probes) is (1 - e^(-3n/65536))^3 — ~0.9% at
@@ -583,28 +464,6 @@ PII_PHONE_RE = r"\+?[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}"
 PII_IP_RE = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 
 
-def pii_redact(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """PII scrub for training corpora: replace emails / phone numbers /
-    IPv4 addresses with typed placeholders and count what was removed
-    (the counts feed the curation summary; the redacted text is what
-    ships). Pure codegen regexp expressions — no Python per row, no
-    shuffle, embarrassingly parallel over document partitions.
-
-    Counts are taken on the ORIGINAL text per pattern independently;
-    redaction applies email -> ip -> phone so earlier placeholders
-    (no digits) cannot create later matches.
-    """
-    t = F.col(text_col)
-    red, n_email, n_phone, n_ip = _pii_exprs(t)
-    return df.select(
-        "doc_id",
-        red.alias("redacted"),
-        n_email.alias("n_emails"),
-        n_phone.alias("n_phones"),
-        n_ip.alias("n_ips"),
-    )
-
-
 def _pii_exprs(t: Column):
     """(redacted, n_emails, n_phones, n_ips) expressions over ``t``."""
     red = F.regexp_replace(
@@ -625,12 +484,16 @@ def _pii_exprs(t: Column):
 
 
 def pii_redact_inplace(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Pipeline form of :func:`pii_redact`: replace ``text_col`` with the
-    redacted text IN PLACE (all other columns carried through) and
-    append one total ``n_pii`` count. Pure projection — no join, no
-    shuffle — which is the form a curation pipeline wants: joining the
-    (doc_id, redacted) table back to the corpus would shuffle the full
-    text column on doc_id for no reason."""
+    """PII scrub for training corpora: replace emails / phone numbers /
+    IPv4 addresses in ``text_col`` with typed placeholders IN PLACE (all
+    other columns carried through) and append one total ``n_pii`` count.
+    Pure projection — no join, no shuffle — which is the form a curation
+    pipeline wants: joining a (doc_id, redacted) table back to the
+    corpus would shuffle the full text column on doc_id for no reason.
+
+    Counts are taken on the ORIGINAL text per pattern independently;
+    redaction applies email -> ip -> phone so earlier placeholders (no
+    digits) cannot create later matches."""
     t = F.col(text_col)
     red, n_email, n_phone, n_ip = _pii_exprs(t)
     others = [c for c in df.columns if c != text_col]
@@ -642,30 +505,6 @@ def pii_redact_inplace(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # --- vocab-aware token counting ---------------------------------------------
-
-
-def corpus_vocab(
-    docs: DataFrame, text_col: str = "text", top_n: int = 50
-) -> list[str]:
-    """Deterministic corpus-derived subword vocabulary for
-    :func:`vocab_token_count` when no external merges/vocab file is at
-    hand: the ``top_n`` most frequent whole words (ties toward the
-    lexicographically smaller term — the same total order as
-    docs_top_terms_global) plus each one's 3-char prefix. One
-    partial-agg groupBy + TakeOrderedAndProject; the collect is
-    vocabulary-sized. Production uses :func:`load_vocab` on a real
-    tokenizer's vocab instead."""
-    top = (
-        docs.select(F.explode(tokens_col(F.col(text_col))).alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy("term")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.col("n").desc(), F.col("term").asc())
-        .limit(top_n)
-        .collect()
-    )
-    pieces = {r.term for r in top} | {r.term[:3] for r in top}
-    return sorted(p for p in pieces if p)
 
 
 def load_vocab(spark, path: str) -> list[str]:
@@ -683,9 +522,8 @@ def vocab_token_count(
 ) -> DataFrame:
     """TRUE vocab-aware token count: greedy longest-match segmentation
     of each whitespace word against a real vocabulary — the number a
-    token-budget pipeline actually bills, where
-    :func:`bpe_piece_count`'s regex is only an upper bound and
-    ``token_count``'s chars/4 only an estimate. At each position the
+    token-budget pipeline actually bills, where ``token_count``'s
+    chars/4 is only an estimate. At each position the
     longest vocab piece matching a prefix of the remaining word is
     consumed; if none matches, one character is consumed as an UNK
     piece (equivalent to byte-fallback vocabularies). Empty words
@@ -928,7 +766,7 @@ def perplexity_buckets(df: DataFrame, text_col: str = "text") -> DataFrame:
     (:func:`unigram_logprob` — higher per-token logprob = more
     predictable text) and split the corpus into head / middle / tail
     TERCILES of that score. CCNet keeps head+middle for training and
-    uses the split as its data-mixing knob; ``docs_mixture_rates``
+    uses the split as its data-mixing knob; :func:`mixture_rates`
     consumes exactly this kind of stratum column.
 
     Threshold discipline: the tercile cut points are ORDER STATISTICS —
@@ -991,9 +829,8 @@ def badwords_filter(
     discipline as the Bloom filter (`bloom_contamination`). Token-level
     matching (not substring) avoids the Scunthorpe failure mode of
     regex blocklists. For a list too large to inline (100k+ multi-word
-    entries), the explode -> broadcast left_semi join of
-    ``ngram_contamination`` is the drop-in alternative; the projection
-    form wins while the list fits a literal.
+    entries), an explode -> broadcast left_semi join is the drop-in
+    alternative; the projection form wins while the list fits a literal.
 
     Hit counting is over DISTINCT tokens (``array_intersect`` is a set
     op) plus a total occurrence count via ``filter``: both ride the same
@@ -1126,9 +963,8 @@ def bpe_train(
     excluded (they would collide with the wrapped-symbol encoding — a
     production build picks non-printing delimiters).
 
-    Completes the tokenizer story: :func:`bpe_piece_count` is the
-    pre-tokenizer upper bound, :func:`vocab_token_count` counts against
-    a GIVEN vocabulary, and this trains the vocabulary itself.
+    Completes the tokenizer story: :func:`vocab_token_count` counts
+    against a GIVEN vocabulary, and this trains the vocabulary itself.
 
     Scale shape — the key fact about BPE training is that after ONE
     corpus aggregation it is a vocabulary-sized problem: the corpus
@@ -1199,9 +1035,9 @@ def bpe_token_count(
     (rank order — e.g. ``bpe_train(...).collect()``): every word is
     wrapped-symbol encoded, the merges are applied in order as literal
     replaces, and the token count is simply the number of '(' symbol
-    wrappers left. The billable number :func:`bpe_piece_count` upper-
-    bounds and :func:`vocab_token_count` approximates (greedy longest-
-    match ignores merge ORDER; canonical BPE does not).
+    wrappers left. The billable number :func:`vocab_token_count`
+    approximates (greedy longest-match ignores merge ORDER; canonical
+    BPE does not).
 
     Scale shape — two implementations behind one semantic, dispatched
     on merge-list size (``max_jvm_merges``, default 64):

@@ -16,6 +16,7 @@ itself rides on every output row).
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -80,3 +81,26 @@ def chunk_manifest(extracted_chunk: DataFrame) -> DataFrame:
 
 def append_manifest(manifest_rows: DataFrame, checkpoint_dir: str) -> None:
     manifest_rows.write.mode("append").parquet(manifest_path(checkpoint_dir))
+
+
+def write_layout_marker(out_dir: str, layout: str, **extra) -> None:
+    """Record the table layout in ``_LAYOUT.json`` next to the data, so a
+    later ``--previous`` can be validated (local paths only; on an
+    object-store URI the write fails and is skipped)."""
+    try:
+        with open(os.path.join(out_dir, "_LAYOUT.json"), "w") as fh:
+            json.dump({"layout": layout, **extra}, fh)
+    except OSError:
+        pass
+
+
+def read_layout_marker(out_dir: str) -> dict | None:
+    """The ``_LAYOUT.json`` marker dict, or None. An absent marker and a
+    corrupt one (e.g. truncated by a kill mid-write) both read as None,
+    which callers treat as warn-and-proceed."""
+    try:
+        with open(os.path.join(out_dir, "_LAYOUT.json")) as fh:
+            marker = json.load(fh)
+    except (OSError, ValueError):
+        return None
+    return marker if isinstance(marker, dict) else None

@@ -1,5 +1,6 @@
-"""Driver-contract query registry: every implemented operator exposed as a
-(spark_query, duckdb_oracle_sql) pair over the shared testdata tables.
+"""Driver-contract query registry: the KG queries (``kg_*``, ``src_*``,
+``graph_*``) and the operator reference checks, each a (spark_query,
+duckdb_oracle_sql) pair over the shared testdata tables.
 
 Conventions (the driver hash-compares results column-name-sorted):
 - every computed column is aliased identically in Spark and SQL
@@ -848,173 +849,11 @@ def kg_set_ops_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     got = li.filter(F.col("l_discount") > 0.05).select(F.col("l_orderkey").alias("k")).distinct()
     want = orders.filter(F.col("o_totalprice") > 100000).select(F.col("o_orderkey").alias("k")).distinct()
     # one lazy plan (1-row aggregate subplans crossJoined), not eager
-    # .count() actions — see join_semi_anti_customers
+    # .count() actions
     tp = got.intersect(want).agg(F.count("*").cast("long").alias("tp"))
     fp = got.exceptAll(got.intersect(want)).agg(F.count("*").cast("long").alias("fp"))
     fn = want.exceptAll(want.intersect(got)).agg(F.count("*").cast("long").alias("fn"))
     return tp.crossJoin(fp).crossJoin(fn)
-
-
-# =========================================================================
-# relational breadth: aggregation / sort / top-k
-# =========================================================================
-
-@_q(
-    "join_semi_anti_customers",
-    """SELECT
-         CAST((SELECT count(*) FROM customer c
-               WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey))
-              AS BIGINT) AS n_with_orders,
-         CAST((SELECT count(*) FROM customer c
-               WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey))
-              AS BIGINT) AS n_without_orders""",
-)
-def join_semi_anti_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi/anti joins as first-class plans (the shapes incremental
-    refresh runs on its identity keys): customers with vs without
-    orders. left_semi/left_anti never materialize the probe side's
-    payload — the build side reduces to its join key."""
-    cust = _read(spark, sf_dir, "customer")
-    orders = _read(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("c_custkey")
-    )
-    # ONE lazy plan (two 1-row aggregate subplans crossJoined — the
-    # documented-fine scalar BNLJ), not eager .count() actions at
-    # query-construction time: an eager version returns a precomputed
-    # 1-row frame whose materialization measures ~0s and whose real
-    # work escapes plan inspection and benchmarks
-    n_with = (
-        cust.join(orders, "c_custkey", "left_semi")
-        .agg(F.count("*").cast("long").alias("n_with_orders"))
-    )
-    n_without = (
-        cust.join(orders, "c_custkey", "left_anti")
-        .agg(F.count("*").cast("long").alias("n_without_orders"))
-    )
-    return n_with.crossJoin(n_without)
-
-
-@_q(
-    "join_outer_custdist",
-    """SELECT n_orders, CAST(count(*) AS BIGINT) AS n_customers
-       FROM (SELECT c.c_custkey,
-                    CAST(count(o.o_orderkey) AS BIGINT) AS n_orders
-             FROM customer c LEFT OUTER JOIN orders o
-               ON c.c_custkey = o.o_custkey
-             GROUP BY c.c_custkey) t
-       GROUP BY n_orders""",
-)
-def join_outer_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer order-count distribution (TPC-H Q13 shape): LEFT OUTER
-    join preserving order-less customers, count(non-null) per customer,
-    then a distribution over the counts. Scale shape: the outer join
-    shuffles both sides on custkey and the per-customer groupBy reuses
-    that partitioning (no second exchange on the wide side); the
-    distribution groupBy moves one row per customer."""
-    cust = _read(spark, sf_dir, "customer").select("c_custkey")
-    orders = _read(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
-    per_cust = (
-        cust.join(orders, cust["c_custkey"] == orders["o_custkey"], "left_outer")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").cast("long").alias("n_orders"))
-    )
-    return per_cust.groupBy("n_orders").agg(
-        F.count("*").cast("long").alias("n_customers")
-    )
-
-
-@_q(
-    "events_lag_lead_gaps",
-    """SELECT event_id, user_id,
-              CAST(floor(epoch(ts)) - floor(epoch(lag(ts) OVER w)) AS BIGINT)
-                AS gap_prev_sec,
-              CAST(floor(epoch(lead(ts) OVER w)) - floor(epoch(ts)) AS BIGINT)
-                AS gap_next_sec
-       FROM events
-       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""",
-)
-def events_lag_lead_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user inter-event gaps via lag/lead over one window (the
-    sessionization primitive). Ordering tiebreaks on event_id so frames
-    are total-ordered and both engines agree; first/last events keep
-    NULL gaps. One exchange on user_id serves both offsets."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sec = F.unix_timestamp("ts")
-    return ev.select(
-        "event_id", "user_id",
-        (sec - F.unix_timestamp(F.lag("ts").over(w))).cast("long").alias("gap_prev_sec"),
-        (F.unix_timestamp(F.lead("ts").over(w)) - sec).cast("long").alias("gap_next_sec"),
-    )
-
-
-@_q(
-    "tpch_q1_pricing_summary",
-    """SELECT l_returnflag, l_linestatus,
-              round(sum(l_quantity), 2) AS sum_qty,
-              round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-              round(avg(l_discount), 6) AS avg_disc,
-              CAST(count(*) AS BIGINT) AS count_order
-       FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-       GROUP BY l_returnflag, l_linestatus""",
-)
-def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count("*").cast("long").alias("count_order"),
-        )
-    )
-
-
-@_q(
-    "topk_orders",
-    """SELECT o_orderkey, round(o_totalprice, 2) AS totalprice
-       FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""",
-)
-def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _read(spark, sf_dir, "orders")
-    return (
-        orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-        .select("o_orderkey", F.round("o_totalprice", 2).alias("totalprice"))
-    )
-
-
-@_q(
-    "star_join_revenue_by_region",
-    """SELECT r.r_name AS region, round(sum(o.o_totalprice), 2) AS revenue,
-              CAST(count(*) AS BIGINT) AS n_orders
-       FROM orders o
-       JOIN customer c ON o.o_custkey = c.c_custkey
-       JOIN nation n ON c.c_nationkey = n.n_nationkey
-       JOIN region r ON n.n_regionkey = r.r_regionkey
-       GROUP BY r.r_name""",
-)
-def star_join_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast-dimension star join: fact stream joined to three tiny
-    dims, all broadcast — zero shuffles of the fact side before the agg."""
-    o = _read(spark, sf_dir, "orders")
-    c = _read(spark, sf_dir, "customer")
-    n = _read(spark, sf_dir, "nation")
-    r = _read(spark, sf_dir, "region")
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("r_name").alias("region"))
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-            F.count("*").cast("long").alias("n_orders"),
-        )
-    )
 
 
 # =========================================================================
@@ -1211,59 +1050,6 @@ def docs_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "docs_bpe_piece_count",
-    r"""SELECT doc_id,
-               CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT)
-                 AS n_pieces
-        FROM documents""",
-)
-def docs_bpe_piece_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text import bpe_piece_count
-
-    return bpe_piece_count(_read(spark, sf_dir, "documents"))
-
-
-@_q(
-    "docs_vocab_token_count",
-    f"""WITH RECURSIVE
-    top50 AS (SELECT term FROM (SELECT unnest({_WORDS}) AS term FROM documents) t
-              WHERE term <> '' GROUP BY term
-              ORDER BY count(*) DESC, term ASC LIMIT 50),
-    vocab AS (SELECT DISTINCT piece FROM (
-              SELECT term AS piece FROM top50
-              UNION ALL SELECT substr(term, 1, 3) FROM top50) v
-              WHERE piece <> ''),
-    words AS (SELECT doc_id, unnest({_WORDS}) AS w FROM documents),
-    steps(doc_id, rest) AS (
-        SELECT doc_id, w FROM words WHERE w <> ''
-      UNION ALL
-        SELECT doc_id, substr(rest, 1 + coalesce(
-            (SELECT max(len(v.piece)) FROM vocab v
-             WHERE substr(rest, 1, len(v.piece)) = v.piece), 1))
-        FROM steps WHERE rest <> ''),
-    counts AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
-               FROM steps WHERE rest <> '' GROUP BY doc_id)
-    SELECT d.doc_id, coalesce(n, 0) AS n_vocab_tokens
-    FROM documents d LEFT JOIN counts USING (doc_id)""",
-)
-def docs_vocab_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRUE vocab-aware token count (greedy longest-match segmentation
-    against a vocabulary, 1-char UNK fallback) — the billable number a
-    token-budget pipeline needs, where bpe_piece_count is only an upper
-    bound. Vocab here is the deterministic corpus-derived one
-    (corpus_vocab: top-50 words + 3-char prefixes); production swaps in
-    load_vocab over a real tokenizer export, same operator. The oracle
-    replays the greedy recurrence as a recursive CTE over the identical
-    vocab definition; the Spark side is the documented Arrow-batched
-    Pandas-UDF slow path (a sequential per-word loop has no closed
-    column form)."""
-    from .operators.text import corpus_vocab, vocab_token_count
-
-    docs = _read(spark, sf_dir, "documents")
-    return vocab_token_count(docs, corpus_vocab(docs, top_n=50))
-
-
-@_q(
     "docs_winnow_fingerprint",
     """WITH s AS (SELECT doc_id, lower(trim(text)) AS t FROM documents),
         g AS (SELECT doc_id,
@@ -1416,76 +1202,12 @@ def docs_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fingerprint(_read(spark, sf_dir, "documents"))
 
-
-# over a bound list column named w (NOT the text-based _SHINGLES macro)
-_BIGRAMS = (
-    "CASE WHEN len(w) >= 2 THEN "
-    "[w[i] || ' ' || w[i+1] for i in generate_series(1, len(w)-1)] "
-    "ELSE [array_to_string(w, ' ')] END"
-)
-
 _5GRAMS = (
     "CASE WHEN len(w) >= 5 THEN "
     "[w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4] "
     " for i in generate_series(1, len(w)-4)] "
     "ELSE [array_to_string(w, ' ')] END"
 )
-
-
-@_q(
-    "docs_repetition_signals",
-    f"""WITH t AS (SELECT doc_id, {_WORDS} AS w FROM documents),
-        wc AS (SELECT doc_id, tok, count(*) AS c
-               FROM (SELECT doc_id, unnest(w) AS tok FROM t)
-               GROUP BY doc_id, tok),
-        ws AS (SELECT doc_id,
-                      round(1 - count(*) / sum(c), 4) AS dup_word_frac,
-                      round(max(c) / sum(c), 4) AS top_word_frac
-               FROM wc GROUP BY doc_id),
-        gc AS (SELECT doc_id, g, count(*) AS c
-               FROM (SELECT doc_id, unnest({_BIGRAMS}) AS g FROM t)
-               GROUP BY doc_id, g),
-        gs AS (SELECT doc_id, round(max(c) / sum(c), 4) AS top_bigram_frac
-               FROM gc GROUP BY doc_id)
-        SELECT doc_id, dup_word_frac, top_word_frac, top_bigram_frac
-        FROM ws JOIN gs USING (doc_id)""",
-)
-def docs_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition quality filters (dup-word / top-word /
-    top-bigram fractions) — training-data extension, no reference twin."""
-    from .operators.text import repetition_signals
-
-    return repetition_signals(_read(spark, sf_dir, "documents"))
-
-
-@_q(
-    "docs_ngram_contamination",
-    f"""WITH t AS (SELECT doc_id, {_WORDS} AS w FROM documents),
-        g AS (SELECT doc_id, unnest(list_distinct({_5GRAMS})) AS gram FROM t),
-        bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 50 = 0),
-        tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams
-                FROM g GROUP BY doc_id),
-        hit AS (SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_hits
-                FROM g JOIN bench USING (gram) GROUP BY g.doc_id)
-        SELECT doc_id, n_grams,
-               coalesce(n_hits, 0) AS n_contaminated,
-               round(coalesce(n_hits, 0) / n_grams, 4) AS contamination_frac,
-               CAST(round(coalesce(n_hits, 0) / n_grams, 4) >= 0.5 AS INT)
-                 AS contaminated
-        FROM tot LEFT JOIN hit USING (doc_id)""",
-)
-def docs_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: distinct 5-gram overlap of every doc
-    against an eval set (every 50th doc), broadcast semi-join."""
-    from .operators.text import ngram_contamination, shingles_of, tokens_col
-
-    docs = _read(spark, sf_dir, "documents")
-    bench = (
-        docs.filter(F.col("doc_id") % 50 == 0)
-        .select(tokens_col(F.col("text")).alias("_w"))
-        .select(F.explode(shingles_of(F.col("_w"), 5)).alias("gram"))
-    )
-    return ngram_contamination(docs, bench, k=5, threshold=0.5)
 
 
 def _hex4(off: int) -> str:
@@ -1533,8 +1255,8 @@ def docs_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter decontamination: the space-bounded membership path
     for when the eval-gram table is too big to broadcast as strings —
     the filter (2^16 bits, 16 KB) constant-folds into every task and
-    probing is a shuffle-free projection. Same eval set as
-    docs_ngram_contamination (every 50th doc); flagged counts include
+    probing is a shuffle-free projection. The eval set is every 50th
+    doc; flagged counts include
     the filter's (deterministic) false positives, reproduced
     bit-for-bit by the oracle's identical md5 arithmetic. See
     operators/text.py:bloom_contamination for geometry and fp math."""
@@ -1558,70 +1280,6 @@ def docs_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     words = bloom_build(bench)
     return bloom_contamination(docs, words, k=5, threshold=0.5)
-
-
-_PII_INJECTED_SQL = """
-    (CASE WHEN doc_id % 7 = 0
-          THEN 'user' || CAST(doc_id AS VARCHAR) || '@example.com ' ELSE '' END)
-    || (CASE WHEN doc_id % 11 = 0
-          THEN 'call 555-010-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-               || ' ' ELSE '' END)
-    || (CASE WHEN doc_id % 13 = 0
-          THEN 'host 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.25 '
-          ELSE '' END)
-    || text"""
-
-
-def _pii_oracle() -> str:
-    from .operators.text import PII_EMAIL_RE, PII_IP_RE, PII_PHONE_RE
-
-    return f"""WITH t AS (SELECT doc_id, {_PII_INJECTED_SQL} AS text FROM documents)
-        SELECT doc_id,
-          regexp_replace(regexp_replace(regexp_replace(text,
-              '{PII_EMAIL_RE}', '<EMAIL>', 'g'),
-              '{PII_IP_RE}', '<IP>', 'g'),
-              '{PII_PHONE_RE}', '<PHONE>', 'g') AS redacted,
-          CAST(len(regexp_extract_all(text, '{PII_EMAIL_RE}')) AS BIGINT) AS n_emails,
-          CAST(len(regexp_extract_all(text, '{PII_PHONE_RE}')) AS BIGINT) AS n_phones,
-          CAST(len(regexp_extract_all(text, '{PII_IP_RE}')) AS BIGINT) AS n_ips
-        FROM t"""
-
-
-@_q("docs_pii_redact", _pii_oracle())
-def docs_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub over documents with deterministic synthetic PII injected
-    (the raw corpus has none), so redaction and counts have real signal."""
-    from .operators.text import pii_redact
-
-    docs = _read(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    injected = docs.select(
-        "doc_id",
-        F.concat(
-            F.when(
-                did % 7 == 0,
-                F.concat(F.lit("user"), did.cast("string"), F.lit("@example.com ")),
-            ).otherwise(F.lit("")),
-            F.when(
-                did % 11 == 0,
-                F.concat(
-                    F.lit("call 555-010-"),
-                    F.lpad((did % 10000).cast("string"), 4, "0"),
-                    F.lit(" "),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                did % 13 == 0,
-                F.concat(
-                    F.lit("host 10.0."),
-                    (did % 256).cast("string"),
-                    F.lit(".25 "),
-                ),
-            ).otherwise(F.lit("")),
-            F.col("text"),
-        ).alias("text"),
-    )
-    return pii_redact(injected)
 
 
 @_q(
@@ -2369,66 +2027,6 @@ def emb_lsh_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_recall_probes_sql(sign_bits: int = 4) -> str:
-    """Per-query probe rows (query bucket + all 1-bit flips), each row
-    carrying (query_id, q_emb) — the n-query generalization of
-    :func:`_multiprobe_flips_sql`."""
-    rows = ["SELECT query_id, q_emb, q_bucket AS b FROM q"]
-    for i in range(sign_bits):
-        rows.append(
-            f"SELECT query_id, q_emb, substr(q_bucket, 1, {i}) || "
-            f"(CASE substr(q_bucket, {i + 1}, 1) WHEN '1' THEN '0' ELSE '1' END) || "
-            f"substr(q_bucket, {i + 2}) FROM q"
-        )
-    return "\n          UNION ALL ".join(rows)
-
-
-@_q(
-    "emb_ann_recall",
-    f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, {_BUCKET_SQL} AS bucket
-                   FROM embeddings),
-        q AS (SELECT vec_id AS query_id, emb AS q_emb, bucket AS q_bucket
-              FROM e WHERE vec_id < 8),
-        exact AS (
-          SELECT query_id, vec_id FROM (
-            SELECT q.query_id, e.vec_id,
-                   row_number() OVER (
-                     PARTITION BY q.query_id
-                     ORDER BY round({_COS_SQL.format(a='e.emb', b='q.q_emb')}, 6) DESC,
-                              e.vec_id ASC) AS rn
-            FROM e CROSS JOIN q WHERE e.vec_id <> q.query_id) WHERE rn <= 10),
-        probes AS (
-          {_ann_recall_probes_sql(4)}),
-        approx AS (
-          SELECT query_id, vec_id FROM (
-            SELECT p.query_id, e.vec_id,
-                   row_number() OVER (
-                     PARTITION BY p.query_id
-                     ORDER BY round({_COS_SQL.format(a='e.emb', b='p.q_emb')}, 6) DESC,
-                              e.vec_id ASC) AS rn
-            FROM e JOIN probes p ON e.bucket = p.b
-            WHERE e.vec_id <> p.query_id) WHERE rn <= 10),
-        hits AS (
-          SELECT a.query_id, count(*) AS n_hits
-          FROM exact a JOIN approx b
-            ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-          GROUP BY a.query_id)
-        SELECT q.query_id,
-               CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-               round(coalesce(h.n_hits, 0) / 10.0, 6) AS recall
-        FROM q LEFT JOIN hits h ON q.query_id = h.query_id""",
-)
-def emb_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of radius-1 multi-probe LSH vs exact top-10 over an
-    8-query panel — the measured quality gate for the ANN index
-    parameters (sign_bits/radius), not a by-feel setting."""
-    from .operators.similarity import ann_recall
-
-    return ann_recall(
-        _read(spark, sf_dir, "embeddings"), n_queries=8, k=10, sign_bits=4, radius=1
-    )
-
-
 @_q(
     "emb_near_duplicates",
     f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, {_BUCKET_SQL} AS bucket
@@ -2569,7 +2167,6 @@ def emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     books = pq_codebooks(emb, m=_PQ_M, ksub=_PQ_KSUB)
     return ivfpq_topk(emb, centroids, books, query_id=0, k=10, nprobe=2)
-
 
 
 def _kmeans_ctes(
@@ -2880,59 +2477,6 @@ def mm_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "events_tumbling_window",
-    """SELECT strftime(date_trunc('day', ts), '%Y-%m-%dT%H:%M:%SZ') AS window_start,
-              event_type, CAST(count(*) AS BIGINT) AS n,
-              round(sum(value), 4) AS total_value
-       FROM events GROUP BY 1, 2""",
-)
-def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window aggregation (batch twin of the Structured
-    Streaming plan in streaming/extract_stream.py)."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_format(F.date_trunc("DAY", "ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("window_start"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-    )
-
-
-@_q(
-    "events_sliding_window",
-    """SELECT strftime(win_start, '%Y-%m-%dT%H:%M:%SZ') AS window_start,
-              event_type, CAST(count(*) AS BIGINT) AS n,
-              round(sum(value), 4) AS total_value
-       FROM (SELECT date_trunc('day', ts) - INTERVAL (k) DAY AS win_start,
-                    event_type, value
-             FROM events CROSS JOIN (SELECT unnest([0, 1]) AS k) s
-             WHERE ts >= date_trunc('day', ts) - INTERVAL (k) DAY
-               AND ts < date_trunc('day', ts) - INTERVAL (k) DAY + INTERVAL 2 DAY) t
-       GROUP BY 1, 2""",
-)
-def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window aggregation (2-day windows, 1-day slide): each
-    event lands in 2 windows via Spark's window() expansion; the oracle
-    restates the expansion with an explicit unnest."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "2 days", "1 day").alias("win"), "event_type")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("window_start"),
-            "event_type", "n", "total_value",
-        )
-    )
-
-
-@_q(
     "events_asof_join",
     """WITH clicks AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
             views AS (SELECT user_id, ts, max(value) AS view_value
@@ -3072,194 +2616,8 @@ def events_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grouped_trend(ev, by="user_id", ts_col="ts", value_col="value")
 
 
-@_q(
-    "events_session_window",
-    """SELECT user_id,
-              strftime(min(ts), '%Y-%m-%dT%H:%M:%S.%f') AS session_start,
-              CAST(count(*) AS BIGINT) AS n_events,
-              round(sum(value), 4) AS total_value
-       FROM (SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                                         ROWS UNBOUNDED PRECEDING) AS session_id
-             FROM (SELECT user_id, ts, value,
-                          -- gap == 30min MERGES in Spark's session_window
-                          -- (verified empirically: two events exactly 30:00
-                          -- apart land in one session), hence <= not <
-                          CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                                    <= INTERVAL 30 MINUTE THEN 0 ELSE 1 END AS is_new
-                   FROM events))
-       GROUP BY user_id, session_id""",
-)
-def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows (30-min gap): Spark's session_window vs the
-    gaps-and-islands SQL formulation."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.date_format("session_window.start", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("session_start"),
-            "n_events", "total_value",
-        )
-    )
-
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-@_q(
-    "events_pivot_type_by_day",
-    f"""SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        {", ".join(f'''CAST(count(*) FILTER (WHERE event_type = '{t}') AS BIGINT) AS n_{t}'''
-                   for t in _EVENT_TYPES)}
-        FROM events GROUP BY 1""",
-)
-def events_pivot_type_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT (wide counts per day x event type). The pivot values are
-    supplied explicitly — Spark otherwise runs an extra distinct pass to
-    discover them, and explicit values keep the output schema stable
-    (a streaming/append requirement and a 100-TB nicety: one pass)."""
-    ev = _read(spark, sf_dir, "events")
-    out = (
-        ev.groupBy(F.date_format(F.date_trunc("DAY", "ts"), "yyyy-MM-dd").alias("day"))
-        .pivot("event_type", _EVENT_TYPES)
-        .count()
-    )
-    return out.select(
-        "day",
-        *[F.coalesce(F.col(t), F.lit(0)).cast("long").alias(f"n_{t}")
-          for t in _EVENT_TYPES],
-    )
-
-
-@_q(
-    "events_json_props",
-    """SELECT CAST(props->>'k' AS BIGINT) AS k_bucket,
-              CAST(count(*) AS BIGINT) AS n,
-              CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS avg_value
-       FROM events GROUP BY 1""",
-)
-def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON scalar extraction (get_json_object) + aggregate.
-
-    avg is computed as exact-decimal sum / count, NOT avg(double):
-    double summation is order-dependent, so two engines (or two cluster
-    layouts) legitimately disagree in the last ulp — and a final
-    round() AMPLIFIES that ulp into a 4th-decimal flip when the true
-    value sits on a rounding boundary (caught by the sf0.001 full-oracle
-    sweep; the sf0.01 driver sample never hit a boundary). The decimal
-    sum is exact and order-independent; the decimal->double conversion
-    and the division are single IEEE ops, identical on any engine."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.select(F.get_json_object("props", "$.k").cast("long").alias("k_bucket"), "value")
-        .groupBy("k_bucket")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            (F.sum(F.col("value").cast("decimal(18,6)")).cast("double") / F.count("*"))
-            .alias("avg_value"),
-        )
-    )
-
-
-@_q(
-    "agg_rollup_orders",
-    """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-              coalesce(o_orderpriority, 'ALL') AS priority,
-              CAST(grouping(o_orderstatus) * 2 + grouping(o_orderpriority) AS BIGINT) AS gid,
-              CAST(count(*) AS BIGINT) AS n,
-              round(sum(o_totalprice), 2) AS revenue
-       FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)""",
-)
-def agg_rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP hierarchy totals with grouping ids (the cube/rollup
-    category SURVEY marks N/A in the reference, exercised here)."""
-    orders = _read(spark, sf_dir, "orders")
-    return (
-        orders.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-            (F.grouping("o_orderstatus") * 2 + F.grouping("o_orderpriority"))
-            .cast("long").alias("gid"),
-        )
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("priority"),
-            "gid", "n", "revenue",
-        )
-    )
-
-
-@_q(
-    "events_time_rollup",
-    """SELECT coalesce(strftime(date_trunc('month', ts), '%Y-%m'), 'ALL') AS month,
-              coalesce(strftime(date_trunc('day', ts), '%Y-%m-%d'), 'ALL') AS day,
-              CAST(grouping(date_trunc('month', ts)) * 2
-                   + grouping(date_trunc('day', ts)) AS BIGINT) AS gid,
-              CAST(count(*) AS BIGINT) AS n, round(sum(value), 4) AS total_value
-       FROM events GROUP BY ROLLUP(date_trunc('month', ts), date_trunc('day', ts))""",
-)
-def events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hypertable-style time-hierarchy rollup: day aggregates nested in
-    month aggregates nested in a grand total, one pass (the batch twin
-    of a continuous aggregate; at scale this is the precomputed table
-    dashboards read instead of re-scanning raw events)."""
-    ev = _read(spark, sf_dir, "events")
-    staged = ev.select(
-        F.date_trunc("month", "ts").alias("_m"),
-        F.date_trunc("day", "ts").alias("_d"),
-        "value",
-    )
-    return (
-        staged.rollup("_m", "_d")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-            (F.grouping("_m") * 2 + F.grouping("_d")).cast("long").alias("gid"),
-        )
-        .select(
-            F.coalesce(F.date_format("_m", "yyyy-MM"), F.lit("ALL")).alias("month"),
-            F.coalesce(F.date_format("_d", "yyyy-MM-dd"), F.lit("ALL")).alias("day"),
-            "gid", "n", "total_value",
-        )
-    )
-
-
-@_q(
-    "agg_quantile_sketch",
-    """SELECT l_returnflag,
-              round(quantile_disc(l_extendedprice, 0.5), 2) AS p50,
-              round(quantile_disc(l_extendedprice, 0.9), 2) AS p90,
-              round(quantile_disc(l_extendedprice, 0.99), 2) AS p99
-       FROM lineitem GROUP BY l_returnflag""",
-)
-def agg_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile sketch (Greenwald-Khanna via percentile_approx): the
-    sketch merges across partitions — the only distributed-quantile
-    shape at 10^12 rows. Accuracy here exceeds the row count so the
-    result is exact and DuckDB-oracleable; production lowers accuracy
-    for O(1) state. (HLL distinct-count sketches are tested with an
-    error-bound assertion instead — cross-engine sketch states differ.)"""
-    li = _read(spark, sf_dir, "lineitem")
-    q = F.percentile_approx("l_extendedprice", [0.5, 0.9, 0.99], 1000000)
-    return (
-        li.groupBy("l_returnflag")
-        .agg(q.alias("_q"))
-        .select(
-            "l_returnflag",
-            F.round(F.col("_q")[0], 2).alias("p50"),
-            F.round(F.col("_q")[1], 2).alias("p90"),
-            F.round(F.col("_q")[2], 2).alias("p99"),
-        )
-    )
-
-
 # =========================================================================
-# round-3 additions: containment dedup, global top-k, Q3 shape, funnel
+# containment near-dup, global top-k, length histogram
 # =========================================================================
 
 _CONTAINMENT_SQL = f"""WITH sh AS (
@@ -3361,103 +2719,6 @@ def docs_top_terms_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "tpch_q3_shipping_priority",
-    """SELECT l_orderkey,
-              round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-              strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-              o_orderpriority
-       FROM customer, orders, lineitem
-       WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
-         AND l_orderkey = o_orderkey
-         AND o_orderdate < TIMESTAMP '1998-01-01'
-         AND l_shipdate > TIMESTAMP '1998-01-01'
-       GROUP BY l_orderkey, o_orderdate, o_orderpriority
-       ORDER BY revenue DESC, l_orderkey ASC LIMIT 10""",
-)
-def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: selective dim filter -> broadcast -> fact join ->
-    partial-agg -> top-10. customer(BUILDING) broadcasts; both date
-    filters push to the parquet scans; the only exchange is the
-    l_orderkey aggregation; order-limit is TakeOrderedAndProject."""
-    from pyspark.sql.functions import broadcast
-
-    cust = _read(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    ).select("c_custkey")
-    orders = _read(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < "1998-01-01"
-    ).select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-    li = _read(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > "1998-01-01"
-    ).select("l_orderkey", "l_extendedprice", "l_discount")
-    return (
-        orders.join(broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(li, li.l_orderkey == orders.o_orderkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue")
-        )
-        .select(
-            "l_orderkey",
-            "revenue",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "o_orderpriority",
-        )
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
-        .limit(10)
-    )
-
-
-@_q(
-    "events_funnel_conversion",
-    """WITH v AS (SELECT user_id, min(ts) AS v_ts FROM events
-                  WHERE event_type = 'view' GROUP BY user_id),
-        c AS (SELECT e.user_id, min(e.ts) AS c_ts
-              FROM events e JOIN v ON e.user_id = v.user_id AND e.ts > v.v_ts
-              WHERE e.event_type = 'click' GROUP BY e.user_id),
-        p AS (SELECT e.user_id, min(e.ts) AS p_ts
-              FROM events e JOIN c ON e.user_id = c.user_id AND e.ts > c.c_ts
-              WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-       SELECT CAST((SELECT count(*) FROM v) AS BIGINT) AS n_view,
-              CAST((SELECT count(*) FROM c) AS BIGINT) AS n_view_click,
-              CAST((SELECT count(*) FROM p) AS BIGINT) AS n_view_click_purchase""",
-)
-def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel (view -> later click -> later purchase): each stage
-    is min-ts-per-user AFTER the previous stage's timestamp. Every
-    groupBy and join hashes on user_id, so the three stages reuse one
-    partitioning end-to-end (exchange reuse across stages); stage
-    counts are 1-row aggregates crossJoined lazily (the documented-fine
-    scalar BNLJ), keeping the whole funnel one inspectable plan."""
-    ev = _read(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("v_ts"))
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts") > F.col("v_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("c_ts"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts") > F.col("c_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("p_ts"))
-    )
-    n_v = v.agg(F.count("*").cast("long").alias("n_view"))
-    n_c = c.agg(F.count("*").cast("long").alias("n_view_click"))
-    n_p = p.agg(F.count("*").cast("long").alias("n_view_click_purchase"))
-    return n_v.crossJoin(n_c).crossJoin(n_p)
-
-
-@_q(
     "docs_mixture_rates",
     f"""WITH agg AS (
           SELECT source, CAST(sum(len({_WORDS})) AS BIGINT) AS stratum_weight
@@ -3480,46 +2741,6 @@ def docs_mixture_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.size(tokens_col(F.col("text"))).alias("n_tokens")
     )
     return mixture_rates(docs, "source", "n_tokens", budget=25000.0)
-
-
-@_q(
-    "events_retention_cohorts",
-    """WITH cohort AS (
-          SELECT user_id, min(date_trunc('week', ts)) AS w0
-          FROM events GROUP BY user_id),
-        activity AS (
-          SELECT DISTINCT user_id, date_trunc('week', ts) AS w
-          FROM events)
-       SELECT strftime(c.w0, '%Y-%m-%d') AS cohort_week,
-              CAST(datediff('day', c.w0, a.w) / 7 AS BIGINT) AS week_offset,
-              CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_users
-       FROM activity a JOIN cohort c ON a.user_id = c.user_id
-       GROUP BY c.w0, datediff('day', c.w0, a.w) / 7""",
-)
-def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix: users grouped by first-activity week,
-    counted per week offset they return. Both aggregations and the join
-    hash on user_id (one partitioning end-to-end until the final
-    cohort-sized rollup); distinct (user, week) activity collapses
-    map-side before anything shuffles."""
-    ev = _read(spark, sf_dir, "events").select(
-        "user_id", F.date_trunc("week", "ts").alias("w")
-    )
-    cohort = ev.groupBy("user_id").agg(F.min("w").alias("w0"))
-    activity = ev.distinct()
-    return (
-        activity.join(cohort, "user_id")
-        .groupBy(
-            F.col("w0"),
-            (F.datediff(F.col("w"), F.col("w0")) / 7).cast("long").alias("week_offset"),
-        )
-        .agg(F.count_distinct("user_id").cast("long").alias("n_users"))
-        .select(
-            F.date_format("w0", "yyyy-MM-dd").alias("cohort_week"),
-            "week_offset",
-            "n_users",
-        )
-    )
 
 
 @_q(
@@ -3582,59 +2803,6 @@ def docs_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("_n").cast("long").alias("min_tokens"),
             F.max("_n").cast("long").alias("max_tokens"),
         )
-    )
-
-
-@_q(
-    "events_rolling_avg",
-    """SELECT event_id,
-              round(avg(value) OVER (
-                PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 6) AS rolling_avg
-       FROM events""",
-)
-def events_rolling_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user 3-row moving average — the smoothing window of metric
-    dashboards. Partitioned by user_id so the sort is per-partition
-    (never global); event_id breaks timestamp ties so the frame is
-    deterministic across engines and partitionings."""
-    from pyspark.sql import Window as W
-
-    ev = _read(spark, sf_dir, "events")
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-2, W.currentRow)
-    )
-    return ev.select(
-        "event_id", F.round(F.avg("value").over(w), 6).alias("rolling_avg")
-    )
-
-
-@_q(
-    "events_topk_per_user",
-    """SELECT user_id, event_id, round(value, 6) AS value
-       FROM (SELECT user_id, event_id, value,
-                    row_number() OVER (
-                      PARTITION BY user_id
-                      ORDER BY value DESC, event_id ASC) AS rn
-             FROM events) t
-       WHERE rn <= 2""",
-)
-def events_topk_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-2 events by value per user — the per-key top-k shape (latest
-    N versions, best N candidates). One exchange on user_id, then a
-    per-partition sort + rank; the filter on rn pushes into the window
-    via Spark's rank-limit pushdown, so each group materializes only its
-    top rows. event_id breaks value ties deterministically."""
-    from pyspark.sql import Window as W
-
-    ev = _read(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy(F.col("value").desc(), F.col("event_id").asc())
-    return (
-        ev.select("user_id", "event_id", "value", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= 2)
-        .select("user_id", "event_id", F.round("value", 6).alias("value"))
     )
 
 
@@ -5620,59 +4788,6 @@ def kg_bgp_path_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "docs_contamination_closure",
-    f"""WITH RECURSIVE
-        prs AS (SELECT doc_a, doc_b FROM ({_MINHASH_NEARDUP_SQL}) mm),
-        e AS (SELECT doc_a AS a, doc_b AS b FROM prs
-              UNION SELECT doc_b, doc_a FROM prs),
-        r(id, lab) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT e.b, r.lab FROM r JOIN e ON e.a = r.id),
-        lab AS (SELECT id AS doc_id, min(lab) AS cluster_id
-                FROM r GROUP BY id),
-        t AS (SELECT doc_id, {_WORDS} AS w FROM documents),
-        g AS (SELECT doc_id, unnest(list_distinct({_5GRAMS})) AS gram FROM t),
-        bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 50 = 0),
-        tot AS (SELECT doc_id, count(*) AS n_grams FROM g GROUP BY doc_id),
-        hit AS (SELECT g.doc_id, count(*) AS n_hits
-                FROM g JOIN bench USING (gram) GROUP BY g.doc_id),
-        cont AS (SELECT doc_id,
-                        CAST(round(coalesce(n_hits, 0) / n_grams, 4) >= 0.5
-                             AS INT) AS contaminated
-                 FROM tot LEFT JOIN hit USING (doc_id)),
-        clus AS (SELECT cluster_id, max(contaminated) AS anyc
-                 FROM lab JOIN cont USING (doc_id) GROUP BY 1)
-       SELECT lab.doc_id, cont.contaminated,
-              CAST(clus.anyc AS INTEGER) AS cluster_contaminated
-       FROM lab JOIN cont USING (doc_id) JOIN clus USING (cluster_id)""",
-)
-def docs_contamination_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decontamination CLOSURE: a near-duplicate of a benchmark-
-    contaminated document leaks the benchmark too, so the drop set is
-    the connected-component closure of the contamination flags
-    (operators/graph.py:contamination_closure) — the same cluster-level
-    reasoning as the leakage-safe train/test split. Oracle composes the
-    recursive-CTE component labeling with the 5-gram contamination
-    flags and a per-cluster max."""
-    from .operators.dedup_approx import minhash_near_duplicates
-    from .operators.graph import contamination_closure
-    from .operators.text import ngram_contamination, shingles_of, tokens_col
-
-    docs = _read(spark, sf_dir, "documents")
-    pairs = minhash_near_duplicates(docs, threshold=0.5, num_hashes=8, bands=4)
-    bench = (
-        docs.filter(F.col("doc_id") % 50 == 0)
-        .select(tokens_col(F.col("text")).alias("_w"))
-        .select(F.explode(shingles_of(F.col("_w"), 5)).alias("gram"))
-    )
-    flags = ngram_contamination(docs, bench, k=5, threshold=0.5).select(
-        "doc_id", "contaminated"
-    )
-    return contamination_closure(flags, pairs)
-
-
-@_q(
     "events_asof_forward_tolerance",
     """WITH clicks AS (SELECT event_id, user_id, ts FROM events
                        WHERE event_type = 'click'),
@@ -5753,77 +4868,6 @@ def docs_code_clone_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "tpch_q4_order_priority",
-    """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-       FROM orders
-       WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-         AND o_orderdate < TIMESTAMP '1997-01-01'
-         AND EXISTS (SELECT 1 FROM lineitem
-                     WHERE l_orderkey = o_orderkey
-                       AND l_returnflag = 'R')
-       GROUP BY o_orderpriority""",
-)
-def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TPC-H Q4 shape: a correlated EXISTS subquery decorrelated to
-    a LEFT SEMI join (existence only — no row multiplication, no
-    distinct needed), then one partial-agg groupBy on the surviving
-    orders. The date filter pushes to the orders scan; the lineitem
-    side projects two columns and filters before the join. (This
-    testdata's lineitem has no commit/receipt dates, so the existence
-    predicate is a returned line — same plan shape as the spec's
-    late-delivery test.)"""
-    orders = _read(spark, sf_dir, "orders")
-    li = _read(spark, sf_dir, "lineitem")
-    windowed = orders.filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1997-01-01")
-    )
-    returned = li.filter(F.col("l_returnflag") == "R").select("l_orderkey")
-    return (
-        windowed.join(
-            returned, windowed.o_orderkey == returned.l_orderkey, "left_semi"
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).cast("long").alias("order_count"))
-    )
-
-
-@_q(
-    "tpch_q17_small_quantity_revenue",
-    """SELECT round(sum(l_extendedprice) / 7.0, 4) AS avg_yearly
-       FROM lineitem l
-       JOIN part p ON p.p_partkey = l.l_partkey
-       JOIN (SELECT l_partkey, 0.2 * avg(l_quantity) AS qty_bound
-             FROM lineitem GROUP BY l_partkey) b
-         ON b.l_partkey = l.l_partkey
-       WHERE p.p_brand = 'Brand#13' AND p.p_type = 'ECONOMY'
-         AND l.l_quantity < b.qty_bound""",
-)
-def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 (small-quantity-order revenue): the correlated scalar
-    subquery (per-part 0.2*avg bound) DECORRELATED into a grouped
-    aggregate joined back on partkey — the rewrite every serious
-    optimizer performs, stated explicitly (testdata part table has
-    brand/type, not container; same plan shape). The part dimension filter is
-    tiny and broadcasts; the per-part bound table is partkey-partitioned
-    by its own groupBy, so the probe join reuses that exchange. One
-    1-row result."""
-    li = _read(spark, sf_dir, "lineitem")
-    part = _read(spark, sf_dir, "part").filter(
-        (F.col("p_brand") == "Brand#13") & (F.col("p_type") == "ECONOMY")
-    ).select("p_partkey")
-    bound = li.groupBy("l_partkey").agg(
-        (F.lit(0.2) * F.avg("l_quantity")).alias("qty_bound")
-    )
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(bound, "l_partkey")
-        .filter(F.col("l_quantity") < F.col("qty_bound"))
-        .agg(F.round(F.sum("l_extendedprice") / 7.0, 4).alias("avg_yearly"))
-    )
-
-
-@_q(
     "docs_shuffle_rank",
     """SELECT doc_id,
               CAST(row_number() OVER (
@@ -5876,146 +4920,6 @@ def kg_bgp_union_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("?obj", OWNER, "?owner")],
         ],
         select=["obj", "owner"],
-    )
-
-
-@_q(
-    "mm_gif_decode",
-    """WITH dims AS (SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
-                     FROM documents),
-        px AS (SELECT doc_id, w, h,
-                      (doc_id * 7 + unnest(range(0, w * h)) * 13) % 256 AS idx
-               FROM dims)
-       SELECT doc_id AS media_id,
-              CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-              round(avg(idx), 6) AS mean_r,
-              round(avg((2 * idx) % 256), 6) AS mean_g,
-              round(avg((3 * idx) % 256), 6) AS mean_b
-       FROM px GROUP BY doc_id, w, h""",
-)
-def mm_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GENUINE GIF decode end-to-end, pure Python: valid GIF89a
-    payloads (LZW-compressed index stream + 256-entry linear palette)
-    synthesized per document, decompressed by the real variable-width
-    LZW decoder and palette-mapped
-    (operators/multimodal.py:decode_gif), channel means reduced with
-    numpy. The oracle restates the means from index arithmetic through
-    the palette formula — a wrong LZW bit-unpack, width bump, or
-    palette lookup cannot match. With mm_png_decode this makes real
-    compressed decode cover PNG + GIF; the stub is JPEG/video only."""
-    from .operators.multimodal import (
-        documents_as_gif_media,
-        extract_gif_features,
-    )
-
-    media = documents_as_gif_media(_read(spark, sf_dir, "documents"))
-    return extract_gif_features(media)
-
-
-@_q(
-    "mm_png_decode",
-    """WITH dims AS (SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
-                     FROM documents),
-        px AS (SELECT doc_id, w, h, unnest(range(0, w * h * 3)) AS i
-               FROM dims)
-       SELECT doc_id AS media_id,
-              CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-              round(avg(CASE WHEN i % 3 = 0
-                             THEN (doc_id * 7 + i * 13) % 256 END), 6)
-                AS mean_r,
-              round(avg(CASE WHEN i % 3 = 1
-                             THEN (doc_id * 7 + i * 13) % 256 END), 6)
-                AS mean_g,
-              round(avg(CASE WHEN i % 3 = 2
-                             THEN (doc_id * 7 + i * 13) % 256 END), 6)
-                AS mean_b
-       FROM px GROUP BY doc_id, w, h""",
-)
-def mm_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GENUINE COMPRESSED-image decode end-to-end, stdlib-only: valid
-    RGB PNGs (deflate + CRC32, one of all five scanline filters per
-    row) synthesized per document, then CRC-checked, inflated,
-    UNFILTERED and reduced by the real decode_png path
-    (operators/multimodal.py) — no Pillow, no codec library. The
-    oracle restates the expected means from the synthesis arithmetic:
-    if any unfilter branch (Sub/Up/Average/Paeth) were wrong or faked,
-    the channel means could not match. This closes the former
-    compressed-codec stub for PNG; JPEG/video remain documented
-    environment limits (their decode genuinely needs external codec
-    libraries)."""
-    from .operators.multimodal import (
-        documents_as_png_media,
-        extract_png_features,
-    )
-
-    media = documents_as_png_media(_read(spark, sf_dir, "documents"))
-    return extract_png_features(media)
-
-
-@_q(
-    "mm_ppm_decode",
-    """WITH dims AS (SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
-                     FROM documents),
-        px AS (SELECT doc_id, w, h, unnest(range(0, w * h * 3)) AS i
-               FROM dims)
-       SELECT doc_id AS media_id,
-              CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-              round(avg(CASE WHEN i % 3 = 0
-                             THEN (doc_id * 7 + i * 13) % 256 END), 6)
-                AS mean_r,
-              round(avg(CASE WHEN i % 3 = 1
-                             THEN (doc_id * 7 + i * 13) % 256 END), 6)
-                AS mean_g,
-              round(avg(CASE WHEN i % 3 = 2
-                             THEN (doc_id * 7 + i * 13) % 256 END), 6)
-                AS mean_b
-       FROM px GROUP BY doc_id, w, h""",
-)
-def mm_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GENUINE pixel decode end-to-end, no codec library: valid P6 PPM
-    payloads synthesized JVM-side as pure functions of doc_id, parsed
-    by the real decode_ppm header/raster parser in the mapInPandas
-    stage, per-channel means reduced with numpy. The oracle restates
-    the expected decode from the synthesis arithmetic — an image
-    round-trip correctness check with no image bytes in the oracle
-    (operators/multimodal.py:decode_ppm/extract_ppm_features)."""
-    from .operators.multimodal import documents_as_ppm_media, extract_ppm_features
-
-    media = documents_as_ppm_media(_read(spark, sf_dir, "documents"))
-    return extract_ppm_features(media)
-
-
-@_q(
-    "agg_cube_events",
-    """SELECT event_type,
-              CAST(date_part('dow', ts) AS BIGINT) AS dow,
-              CAST(GROUPING(event_type, date_part('dow', ts)) AS BIGINT)
-                AS gid,
-              CAST(count(*) AS BIGINT) AS n_events,
-              round(sum(value), 4) AS sum_value
-       FROM events
-       GROUP BY CUBE (event_type, date_part('dow', ts))""",
-)
-def agg_cube_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE: all 2^2 grouping sets of (event_type, day-of-week) in one
-    pass with grouping_id disambiguating the NULL-as-aggregated rows —
-    the OLAP companion to agg_rollup_orders. Spark expands the cube
-    map-side (each input row feeds all 4 sets through one partial agg),
-    so the shuffle carries at most 4x the distinct-group count, never
-    4x the data."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_type",
-        (F.dayofweek("ts") - 1).cast("long").alias("dow"),
-        "value",
-    )
-    return (
-        ev.cube("event_type", "dow")
-        .agg(
-            F.grouping_id().cast("long").alias("gid"),
-            F.count("*").cast("long").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select("event_type", "dow", "gid", "n_events", "sum_value")
     )
 
 

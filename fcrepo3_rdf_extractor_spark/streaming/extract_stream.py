@@ -93,20 +93,10 @@ def streaming_code_state(
     batch ``code_kg_from_state`` over the accumulated state — they
     depend on the whole corpus (an unchanged importer's edge flips
     when another file starts defining its module), so no bounded-state
-    streaming operator can emit them correctly.
-
-    ``config.calls`` is rejected: call-mention netting is a per-file
-    groupBy (stateful on a stream); compute mentions in the batch
-    assembly instead or ingest with calls off."""
+    streaming operator can emit them correctly."""
     from ..plans.code_pipeline import CodeKgConfig, code_kg_state
 
     config = config or CodeKgConfig()
-    if config.calls:
-        raise ValueError(
-            "streaming_code_state: calls=True requires a per-file "
-            "netting groupBy (stateful on a stream); ingest with calls "
-            "off and net mentions during batch assembly"
-        )
     # config.vendored is fine: the state layer doesn't consult it —
     # the batch assembly derives vendored flags from the identity table
     return code_kg_state(source_stream, config)

@@ -74,8 +74,9 @@ def main(argv: list[str] | None = None) -> int:
                          "the full-output exchange (37%% of 8-core wall "
                          "time) by deduping only the import-derived "
                          "subsets. REQUIRES a snapshot-table source "
-                         "with unique (repo, path) per row — combine "
-                         "with --latest-only on versioned tables")
+                         "with unique (repo, path) per row (checked: a "
+                         "repeated one fails the job) — combine with "
+                         "--latest-only on versioned tables")
     ap.add_argument("--no-resolve", action="store_true",
                     help="skip entity linking (no code:dependsOn edges)")
     ap.add_argument("--calls", action="store_true",
@@ -122,6 +123,10 @@ def main(argv: list[str] | None = None) -> int:
         TRIPLE_KEY,
         dedup_exact,
     )
+    from fcrepo3_rdf_extractor_spark.plans.checkpoint import (
+        read_layout_marker,
+        write_layout_marker,
+    )
     from fcrepo3_rdf_extractor_spark.plans.code_pipeline import (
         CodeKgConfig,
         code_kg_plan,
@@ -155,20 +160,6 @@ def main(argv: list[str] | None = None) -> int:
         subject_buckets=args.buckets,
     )
 
-    def write_layout_marker(out_dir: str, layout: str, **extra) -> None:
-        try:
-            with open(os.path.join(out_dir, "_LAYOUT.json"), "w") as fh:
-                json.dump({"layout": layout, **extra}, fh)
-        except OSError:
-            pass
-
-    def read_layout_marker(out_dir: str) -> dict | None:
-        try:
-            with open(os.path.join(out_dir, "_LAYOUT.json")) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return None
-
     summary: dict = {"out": args.out}
     if args.previous and args.checkpoint:
         print("error: --previous (incremental) and --checkpoint "
@@ -176,6 +167,24 @@ def main(argv: list[str] | None = None) -> int:
               file=sys.stderr)
         spark.stop()
         return 2
+    if config.dedup == "local" and not args.latest_only:
+        # the 'local' mode is distinct by construction only over unique
+        # (repo, path) rows; a repeated file would emit duplicate quads
+        # silently, so probe for one (repo, path) seen twice
+        dup = (
+            source.groupBy("repo", "path").agg(F.count("*").alias("n"))
+            .filter(F.col("n") > 1).limit(1).collect()
+        )
+        if dup:
+            print(
+                f"error: --local-dedup requires unique (repo, path) rows, "
+                f"but ({dup[0].repo}, {dup[0].path}) occurs {dup[0].n} "
+                "times; add --latest-only for a versioned table or drop "
+                "--local-dedup",
+                file=sys.stderr,
+            )
+            spark.stop()
+            return 2
     if args.previous:
         from fcrepo3_rdf_extractor_spark.plans.code_pipeline import (
             code_kg_from_state,

@@ -102,6 +102,10 @@ def main(argv: list[str] | None = None) -> int:
         error_counts,
         triples_only,
     )
+    from fcrepo3_rdf_extractor_spark.plans.checkpoint import (
+        read_layout_marker,
+        write_layout_marker,
+    )
     from fcrepo3_rdf_extractor_spark.plans.pipeline import (
         ExtractConfig,
         dedup_mixed,
@@ -144,29 +148,11 @@ def main(argv: list[str] | None = None) -> int:
         subject_buckets=args.buckets,
     )
 
-    def write_layout_marker(out_dir: str, layout: str) -> None:
-        """Record the table layout next to the data so --previous can be
-        validated (local-path best effort; object-store URIs skip)."""
-        try:
-            with open(os.path.join(out_dir, "_LAYOUT.json"), "w") as fh:
-                json.dump({"layout": layout}, fh)
-        except OSError:
-            pass
-
-    def read_layout_marker(out_dir: str) -> str | None:
-        try:
-            with open(os.path.join(out_dir, "_LAYOUT.json")) as fh:
-                return json.load(fh).get("layout")
-        except (OSError, ValueError):
-            # absent OR corrupt/truncated marker (non-atomic write, e.g.
-            # killed mid-dump) both degrade to the warn-and-proceed path
-            return None
-
     summary: dict = {"out": args.out}
     if selected:
         summary["n_selected_paths"] = len(selected)
     if args.previous:
-        prev_layout = read_layout_marker(args.previous)
+        prev_layout = (read_layout_marker(args.previous) or {}).get("layout")
         if prev_layout is not None and prev_layout != "per_document":
             print(
                 f"error: --previous table has layout '{prev_layout}'; "

@@ -629,6 +629,23 @@ def code_kg_end_to_end(spark, base: Path) -> dict:
         "--source", src, "--out", str(base / "triples_local"),
         "--local", "2", "--calls", "--vendored", "--local-dedup",
     ])
+    # ... and must refuse a table holding one (repo, path) twice (two
+    # commits of src/app.py), one-shot and resumable alike
+    src_dup = str(base / "files_dup")
+    spark.createDataFrame(
+        files + [("r1", "src/app.py", "c0", "py", "import os\n")],
+        "repo string, path string, commit string, lang string, "
+        "content string",
+    ).write.parquet(src_dup)
+    local_dedup_dup = [
+        _run_job("code_kg.py", [
+            "--source", src_dup, "--out", str(base / f"triples_dup{i}"),
+            "--local", "2", "--local-dedup", *extra,
+        ])
+        for i, extra in enumerate(
+            ([], ["--checkpoint", str(base / "cp_dup")])
+        )
+    ]
     query = _run_job("query.py", [
         "--triples", out,
         "--pattern", "?f code:defines ?s",
@@ -653,7 +670,7 @@ def code_kg_end_to_end(spark, base: Path) -> dict:
         "--source", src2, "--out", st2, "--previous", st1, "--local", "2",
     ])
     return {"fresh": fresh, "resume": resume, "query": query,
-            "local_dedup": local_dedup,
+            "local_dedup": local_dedup, "local_dedup_dup": local_dedup_dup,
             "inc1": inc1, "inc2": inc2, "nquads_out": nq, "out": out}
 
 

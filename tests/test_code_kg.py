@@ -638,6 +638,12 @@ def test_code_kg_cli_end_to_end(spark, cli_results):
     # distinct-by-construction mode ≡ global dedup on the contract-
     # valid (unique repo/path) table — same triple count end-to-end
     assert ld["summary"]["n_triples"] == s1["n_triples"]
+    # a repeated (repo, path) breaks that contract: refused loudly on
+    # the one-shot and the resumable path, nothing written
+    for run in art["local_dedup_dup"]:
+        assert run["rc"] == 2, run["stderr"][-2000:]
+        assert "--local-dedup requires unique (repo, path)" in run["stderr"]
+        assert "(r1, src/app.py) occurs 2 times" in run["stderr"]
     nq = pathlib.Path(art["nquads_out"])
     lines = [
         l

@@ -70,14 +70,6 @@ def test_source_filter_pushdown(spark, tmp_path):
     assert "repo" in pushed, pushed
 
 
-def test_star_join_broadcasts_dims(spark):
-    from fcrepo3_rdf_extractor_spark.queries import star_join_revenue_by_region
-
-    plan = _formatted(star_join_revenue_by_region(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_dedup_partial_aggregation(spark):
     """dedup_exact must combine map-side before its one shuffle."""
     from fcrepo3_rdf_extractor_spark.queries import kg_dedup_exact
@@ -343,33 +335,6 @@ def test_top_terms_global_take_ordered(spark):
     plan = _formatted(docs_top_terms_global(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan, plan
     assert "partial_count" in plan
-
-
-def test_tpch_q3_broadcasts_dim_and_pushes_dates(spark):
-    """Q3 shape: the filtered customer dim must broadcast; both date
-    filters must reach the parquet scans as PushedFilters; the top-10
-    must be TakeOrderedAndProject."""
-    from fcrepo3_rdf_extractor_spark.queries import tpch_q3_shipping_priority
-
-    plan = _formatted(tpch_q3_shipping_priority(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    assert "TakeOrderedAndProject" in plan
-    # the DATE predicates specifically must reach the scans — a bare
-    # IsNotNull count is satisfied by join-key null filters alone
-    assert "LessThan(o_orderdate" in plan, plan
-    assert "GreaterThan(l_shipdate" in plan, plan
-
-
-def test_topk_per_user_window_group_limit(spark):
-    """Per-key top-k must push the rank limit into the window on BOTH
-    sides of the exchange (partial WindowGroupLimit before the shuffle,
-    final after): each map task forwards at most k rows per group
-    instead of the whole group — the property that makes per-key top-k
-    viable on 10^12-row inputs."""
-    from fcrepo3_rdf_extractor_spark.queries import events_topk_per_user
-
-    plan = _formatted(events_topk_per_user(spark, SF_DIR))
-    assert plan.count("WindowGroupLimit") >= 2, plan
 
 
 def test_ivfpq_topk_is_joinfree_pruned_scan(spark):

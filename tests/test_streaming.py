@@ -345,9 +345,8 @@ def test_streaming_code_state_then_assemble_matches_plan(spark, tmp_path):
     through an append sink (stateless, exactly-once), and the periodic
     batch assembly over the accumulated state equals the one-shot plan
     over the same corpus — the same local/corpus split the incremental
-    batch path uses. calls=True is refused (stateful on a stream)."""
-    import pytest
-
+    batch path uses. Holds with and without call edges: call-mention
+    netting is row-local, so the calls branch streams too."""
     from fcrepo3_rdf_extractor_spark.plans.code_pipeline import (
         CodeKgConfig,
         code_kg_from_state,
@@ -366,33 +365,37 @@ def test_streaming_code_state_then_assemble_matches_plan(spark, tmp_path):
             ("r1", "src/app.py", "c1", "py",
              "import util\nclass App:\n    pass\n"),
             ("r2", "lib/app.py", "c2", "py", "import util\n"),
+            ("r1", "src/cli.py", "c1", "py",
+             "import util\ny = helper(1)\n"),
         ],
         "repo string, path string, commit string, lang string, "
         "content string",
     )
-    src_dir, out_dir, cp_dir = (
+    src_dir, state_dir, cp_root = (
         str(tmp_path / d) for d in ("src", "state", "cp")
     )
     files.write.parquet(src_dir)
-    cfg = CodeKgConfig(vendored=True)
-
-    stream = read_blob_stream(spark, src_dir, max_files_per_trigger=1)
-    state_stream = streaming_code_state(stream, cfg)
-    assert state_stream.isStreaming
-    q = write_triples_stream(state_stream, out_dir, cp_dir,
-                             available_now=True)
-    q.awaitTermination(120)
-
-    state = spark.read.parquet(out_dir)
     cur_ids = files.select(
         "repo", "path", "commit",
         F.sha2(F.col("content"), 256).alias("content_sha256"),
     )
-    assembled = code_kg_from_state(state, cur_ids, cfg)
-    want = code_kg_plan(files, cfg)
-    assert sorted(map(tuple, assembled.collect())) == sorted(
-        map(tuple, want.collect())
-    )
 
-    with pytest.raises(ValueError, match="calls"):
-        streaming_code_state(stream, CodeKgConfig(calls=True))
+    for cfg in (CodeKgConfig(vendored=True),
+                CodeKgConfig(vendored=True, calls=True)):
+        tag = "calls" if cfg.calls else "plain"
+        out_dir, cp_dir = f"{state_dir}-{tag}", f"{cp_root}-{tag}"
+        stream = read_blob_stream(spark, src_dir, max_files_per_trigger=1)
+        state_stream = streaming_code_state(stream, cfg)
+        assert state_stream.isStreaming
+        q = write_triples_stream(state_stream, out_dir, cp_dir,
+                                 available_now=True)
+        q.awaitTermination(120)
+
+        state = spark.read.parquet(out_dir)
+        assembled = code_kg_from_state(state, cur_ids, cfg)
+        want = code_kg_plan(files, cfg)
+        assert sorted(map(tuple, assembled.collect())) == sorted(
+            map(tuple, want.collect())
+        ), tag
+        n_calls = want.filter(F.col("pred") == "code:calls").count()
+        assert n_calls == (1 if cfg.calls else 0), tag
