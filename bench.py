@@ -247,6 +247,10 @@ def run_code_throughput(sf_dir: str, cores: int, copies: int = 1,
         "triples_per_sec": round(n_triples / sec, 1),
         "sf": _sf_label(sf_dir),
         "steal_cpu_sec": steal_cpu_sec,
+        # protocol tags: samples from before the local-dedup, uniqued-
+        # corpus protocol carry neither key
+        "dedup": "local",
+        "corpus": "uniqued",
     }
 
 

@@ -3933,174 +3933,6 @@ def emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LOGREG_LR, _LOGREG_ITERS = 2.0, 3
-
-
-def _logreg_ctes(
-    lr: float, n_iter: int, src: str = "documents"
-) -> list[str]:
-    """Training CTE blocks shared by the classifier oracles: hashed
-    L1-normalized features over ``src``, zero-initialized weights over
-    the OBSERVED bucket set plus a scalar bias, and per iteration the
-    same two aggregations the Spark trainer runs (per-doc score,
-    per-bucket gradient) with the same left-to-right update arithmetic
-    ((lr * grad) / n_docs). Every CTE is MATERIALIZED — the iteration
-    chain references its predecessor from two places and DuckDB's
-    default inlining would re-evaluate the whole upstream chain per
-    reference (same lesson as the PQ-recall oracle)."""
-    blocks = [
-        f"""toks AS MATERIALIZED (SELECT doc_id, substr(md5(tok), 1, 2) AS g
-             FROM (SELECT doc_id,
-                          unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
-                   FROM {src}))""",
-        """nt AS MATERIALIZED (SELECT doc_id, count(*) AS n FROM toks
-             GROUP BY doc_id)""",
-        """feat AS MATERIALIZED (SELECT t.doc_id, g,
-                    count(*)::DOUBLE / min(nt.n) AS x
-             FROM toks t JOIN nt USING (doc_id) GROUP BY t.doc_id, g)""",
-        f"""lab AS MATERIALIZED (SELECT doc_id,
-                    CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y
-             FROM {src})""",
-        f"nd AS (SELECT count(*)::DOUBLE AS n FROM {src})",
-        "w0 AS MATERIALIZED (SELECT DISTINCT g, 0.0 AS w FROM feat)",
-        "b0 AS (SELECT 0.0 AS b)",
-    ]
-    for t in range(1, n_iter + 1):
-        p = t - 1
-        blocks += [
-            f"""z{t} AS MATERIALIZED (SELECT doc_id, sum(x * w) AS z
-                  FROM feat JOIN w{p} USING (g) GROUP BY doc_id)""",
-            f"""s{t} AS MATERIALIZED (SELECT l.doc_id,
-                     l.y - 1.0 / (1.0 + exp(-(COALESCE(z.z, 0.0) + b{p}.b))) AS r
-                  FROM lab l LEFT JOIN z{t} z USING (doc_id) CROSS JOIN b{p})""",
-            f"""w{t} AS MATERIALIZED (SELECT w.g,
-                     w.w + ({lr} * COALESCE(gr.gw, 0.0)) / nd.n AS w
-                  FROM w{p} w
-                  LEFT JOIN (SELECT f.g, sum(s.r * f.x) AS gw
-                             FROM feat f JOIN s{t} s USING (doc_id)
-                             GROUP BY f.g) gr USING (g)
-                  CROSS JOIN nd)""",
-            f"""b{t} AS (SELECT b{p}.b + ({lr} * (SELECT sum(r) FROM s{t})) / nd.n
-                     AS b FROM b{p} CROSS JOIN nd)""",
-        ]
-    return blocks
-
-
-def _logreg_oracle(lr: float = _LOGREG_LR, n_iter: int = _LOGREG_ITERS) -> str:
-    """classifier train+score oracle: the shared training chain over
-    the full documents table, final scoring pass projected per doc."""
-    n = n_iter
-    ctes = ",\n".join(_logreg_ctes(lr, n_iter))
-    return f"""WITH {ctes}
-        SELECT l.doc_id,
-               round(1.0 / (1.0 + exp(-(COALESCE(zf.z, 0.0) + b{n}.b))), 6)
-                 AS p_target,
-               (1.0 / (1.0 + exp(-(COALESCE(zf.z, 0.0) + b{n}.b))) >= 0.5)
-                 AS keep
-        FROM lab l
-        LEFT JOIN (SELECT doc_id, sum(x * w) AS z FROM feat
-                   JOIN w{n} USING (g) GROUP BY doc_id) zf USING (doc_id)
-        CROSS JOIN b{n}"""
-
-
-@_q("docs_quality_classifier", _logreg_oracle())
-def docs_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained quality-classifier filtering (the CCNet/LLaMA-pipeline
-    modality): full-batch logistic regression over hashed-unigram
-    features toward the lang='en' slice, then per-document
-    (p_target, keep). See operators/classify.py for the driver-held-
-    weights scale argument."""
-    from .operators.classify import classifier_score, logreg_train
-
-    docs = _read(spark, sf_dir, "documents")
-    w = logreg_train(
-        docs, F.col("lang") == "en", lr=_LOGREG_LR, n_iter=_LOGREG_ITERS
-    )
-    return classifier_score(docs, w)
-
-
-def _classifier_eval_oracle(
-    lr: float = _LOGREG_LR, n_iter: int = _LOGREG_ITERS
-) -> str:
-    """Unroll classifier_eval: md5(doc_id) holdout split, the shared
-    training chain over the TRAIN slice only, holdout-side features
-    scored through the final weights, then accuracy + tie-aware
-    Mann-Whitney AUC from per-distinct-score (pos, neg) counts (the
-    prefix-sum formulation classifier_eval uses — never a per-doc
-    rank). The AUC prefix-sum terms are integer/half-integer valued,
-    so the cross-engine sums are exact regardless of partial-agg
-    order."""
-    split = "substr(md5(doc_id::VARCHAR), 1, 1)"
-    hold = "('0', '1', '2', '3')"
-    n = n_iter
-    blocks = [
-        f"""tr AS MATERIALIZED (SELECT * FROM documents
-             WHERE {split} NOT IN {hold})""",
-        f"""ho AS MATERIALIZED (SELECT * FROM documents
-             WHERE {split} IN {hold})""",
-    ]
-    blocks += _logreg_ctes(lr, n_iter, src="tr")
-    blocks += [
-        """toksh AS MATERIALIZED (SELECT doc_id, substr(md5(tok), 1, 2) AS g
-             FROM (SELECT doc_id,
-                          unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
-                   FROM ho))""",
-        """nth AS MATERIALIZED (SELECT doc_id, count(*) AS n FROM toksh
-             GROUP BY doc_id)""",
-        """feath AS MATERIALIZED (SELECT t.doc_id, g,
-                    count(*)::DOUBLE / min(nth.n) AS x
-             FROM toksh t JOIN nth USING (doc_id) GROUP BY t.doc_id, g)""",
-        """labh AS (SELECT doc_id,
-                    CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y
-             FROM ho)""",
-        f"""sc AS MATERIALIZED (SELECT l.doc_id, l.y,
-               round(1.0 / (1.0 + exp(-(COALESCE(z.z, 0.0) + b{n}.b))), 6) AS p,
-               (1.0 / (1.0 + exp(-(COALESCE(z.z, 0.0) + b{n}.b))) >= 0.5) AS keep
-             FROM labh l
-             LEFT JOIN (SELECT doc_id, sum(x * w) AS z FROM feath
-                        JOIN w{n} USING (g) GROUP BY doc_id) z USING (doc_id)
-             CROSS JOIN b{n})""",
-        """bys AS (SELECT p, sum(y) AS pos, sum(1.0 - y) AS neg,
-                 sum(CASE WHEN keep = (y = 1.0) THEN 1.0 ELSE 0.0 END) AS ok
-             FROM sc GROUP BY p)""",
-        """cum AS (SELECT pos, neg, ok,
-                 COALESCE(sum(neg) OVER (ORDER BY p
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0.0)
-                   AS neg_below
-             FROM bys)""",
-    ]
-    ctes = ",\n".join(blocks)
-    return f"""WITH {ctes}
-        SELECT (SELECT count(*) FROM tr)::BIGINT AS n_train,
-               (SELECT count(*) FROM ho)::BIGINT AS n_holdout,
-               CAST(sum(pos) AS BIGINT) AS n_pos,
-               CAST(sum(neg) AS BIGINT) AS n_neg,
-               round(sum(ok) / (sum(pos) + sum(neg)), 6) AS accuracy,
-               CASE WHEN sum(pos) * sum(neg) = 0 THEN NULL
-                    ELSE round(sum(pos * (neg_below + neg / 2.0))
-                               / (sum(pos) * sum(neg)), 6)
-               END AS auc
-        FROM cum"""
-
-
-@_q("docs_classifier_eval", _classifier_eval_oracle())
-def docs_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measured classifier evaluation (the gate-query form of the
-    pytest accuracy gate): deterministic md5(doc_id) 25% holdout,
-    train on the complement, report accuracy + tie-aware AUC from the
-    bounded distinct-score table. On this corpus the langs share one
-    vocabulary by construction, so the HONEST reading is AUC near 0.5
-    — the operator reports it; the quality floor is pinned in pytest
-    on a separable planted corpus. See
-    operators/classify.py:classifier_eval for the scale shape."""
-    from .operators.classify import classifier_eval
-
-    docs = _read(spark, sf_dir, "documents")
-    return classifier_eval(
-        docs, F.col("lang") == "en", lr=_LOGREG_LR, n_iter=_LOGREG_ITERS
-    )
-
-
 @_q(
     "kg_bgp_star_query",
     f"""SELECT 'info:fedora/order:' || o_orderkey AS obj,

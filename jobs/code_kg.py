@@ -17,7 +17,7 @@ Emits the full quad+lineage table of ``plans/code_pipeline.code_kg_plan``
 nodes, import literals, resolved dependsOn edges, optional
 license/cloneKey/vendored annotations) through the SAME materialization
 / N-Quads / checkpoint machinery as the FOXML extract job — so the
-output is immediately queryable by jobs/query.py's BGP/SPARQL runner.
+output is immediately queryable by jobs/query.py's SPARQL runner.
 
 Resumable mode (--checkpoint): chunked by xxhash64(repo, path, commit)
 with per-chunk manifests exactly like extract.py; import resolution and
@@ -39,23 +39,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
-
-
-def build_job_session(args):
-    from fcrepo3_rdf_extractor_spark.session import build_session
-
-    if args.local:
-        return build_session("code-kg", cores=args.local)
-    from pyspark.sql import SparkSession
-
-    builder = (
-        SparkSession.builder.appName("code-kg")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    return builder.getOrCreate()
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -116,7 +99,9 @@ def main(argv: list[str] | None = None) -> int:
               "--no-resolve", file=sys.stderr)
         return 2
 
-    spark = build_job_session(args)
+    from fcrepo3_rdf_extractor_spark.session import job_session
+
+    spark = job_session("code-kg", args.local)
     from pyspark.sql import functions as F
 
     from fcrepo3_rdf_extractor_spark.operators.dedup import (
@@ -293,10 +278,15 @@ def main(argv: list[str] | None = None) -> int:
         summary["layout"] = "code_plan"
         triples = spark.read.parquet(args.out)
 
-    counts = {
-        r.pred: r.n
-        for r in triples.groupBy("pred").agg(F.count("*").alias("n")).collect()
+    # one action: per-pred counts, plus the resolved dependsOn edges
+    by_pred = {
+        r.pred: r
+        for r in triples.groupBy("pred").agg(
+            F.count("*").alias("n"),
+            F.count_if(F.col("obj_value").startswith("src:")).alias("n_src"),
+        ).collect()
     }
+    counts = {p: r.n for p, r in by_pred.items()}
     summary["n_triples"] = sum(counts.values())
     summary["n_files"] = counts.get("code:sha256", 0)
     summary["n_defines"] = counts.get("code:defines", 0)
@@ -305,12 +295,10 @@ def main(argv: list[str] | None = None) -> int:
         summary["n_calls"] = counts.get("code:calls", 0)
     n_dep = counts.get("code:dependsOn", 0)
     if n_dep:
-        n_resolved = triples.filter(
-            (F.col("pred") == "code:dependsOn")
-            & F.col("obj_value").startswith("src:")
-        ).count()
         summary["n_depends"] = n_dep
-        summary["resolved_frac"] = round(n_resolved / n_dep, 6)
+        summary["resolved_frac"] = round(
+            by_pred["code:dependsOn"].n_src / n_dep, 6
+        )
 
     if args.nquads_out:
         write_nquads(triples, args.nquads_out, canonical=args.canonical_sort)

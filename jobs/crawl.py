@@ -91,19 +91,9 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import functions as F
 
-    if args.local:
-        from fcrepo3_rdf_extractor_spark.session import build_session
+    from fcrepo3_rdf_extractor_spark.session import job_session
 
-        spark = build_session("crawl", cores=args.local)
-    else:
-        from pyspark.sql import SparkSession
-
-        spark = (
-            SparkSession.builder.appName("crawl")
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.session.timeZone", "UTC")
-            .getOrCreate()
-        )
+    spark = job_session("crawl", args.local)
 
     from fcrepo3_rdf_extractor_spark.plans.pipeline import managed_content_requests
     from fcrepo3_rdf_extractor_spark.sources.source_table import read_source

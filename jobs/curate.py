@@ -220,21 +220,12 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import functions as F
 
-    if args.local:
-        from fcrepo3_rdf_extractor_spark.session import build_session
+    from fcrepo3_rdf_extractor_spark.session import job_session
 
-        local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-        extra = {"spark.local.dir": local_dir} if local_dir else None
-        spark = build_session("curate", cores=args.local, extra_conf=extra)
-    else:
-        from pyspark.sql import SparkSession
-
-        spark = (
-            SparkSession.builder.appName("curate")
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.session.timeZone", "UTC")
-            .getOrCreate()
-        )
+    # a local run's shuffle/spill dir; a cluster's comes from its manager
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
+    extra = {"spark.local.dir": local_dir} if local_dir and args.local else None
+    spark = job_session("curate", args.local, extra_conf=extra)
 
     from fcrepo3_rdf_extractor_spark.operators.dedup_approx import (
         dedup_exact_docs,

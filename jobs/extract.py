@@ -11,10 +11,11 @@ Local smoke (same code path, master from --local):
     python jobs/extract.py --source /tmp/src_parquet --out /tmp/triples \
         --local 8
 
-The session builder sets no master unless ``--local N`` is given, so the
-submitted cluster master/deploy-mode win; every tuning conf in
-``session.build_session`` is equally valid as ``--conf`` flags on a real
-cluster (the reference's CLI analog is ``Extract.java:76-175``).
+The session (``session.job_session``) sets no master unless ``--local N``
+is given, so the submitted cluster master/deploy-mode win; the engine
+confs it applies (``session.ENGINE_CONF``) are equally valid as
+``--conf`` flags on a real cluster (the reference's CLI analog is
+``Extract.java:76-175``).
 
 Exit contract: prints one JSON summary line (objects, triples, errors,
 per-stage error counts, output paths) to stdout; nonzero exit on failure.
@@ -28,27 +29,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
-
-
-def build_job_session(args):
-    from fcrepo3_rdf_extractor_spark.session import build_session
-
-    if args.local:
-        return build_session("kg-extract", cores=args.local)
-    # cluster mode: master/memory come from spark-submit; keep only the
-    # engine-level confs
-    from pyspark.sql import SparkSession
-
-    builder = (
-        SparkSession.builder.appName("kg-extract")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    return builder.getOrCreate()
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -95,13 +75,12 @@ def main(argv: list[str] | None = None) -> int:
                     help="run on local[N] instead of the submitted master")
     args = ap.parse_args(argv)
 
-    spark = build_job_session(args)
+    from fcrepo3_rdf_extractor_spark.session import job_session
+
+    spark = job_session("kg-extract", args.local)
     from pyspark.sql import functions as F
 
-    from fcrepo3_rdf_extractor_spark.operators.extractor import (
-        error_counts,
-        triples_only,
-    )
+    from fcrepo3_rdf_extractor_spark.operators.extractor import triples_only
     from fcrepo3_rdf_extractor_spark.plans.checkpoint import (
         read_layout_marker,
         write_layout_marker,
@@ -123,14 +102,19 @@ def main(argv: list[str] | None = None) -> int:
         with open(args.paths_file) as fh:
             selected += [line.strip() for line in fh if line.strip()]
     if selected:
-        if args.previous:
-            print(
-                "error: --paths/--paths-file cannot combine with "
+        if args.previous or args.checkpoint:
+            why = (
                 "--previous: the incremental identity anti-join would "
                 "treat every unselected object as DELETED and drop its "
-                "rows from the refreshed state",
-                file=sys.stderr,
+                "rows from the refreshed state"
+                if args.previous else
+                "--checkpoint: the resumable run marks every chunk done, "
+                "selected objects or not, so a later full run on the "
+                "same checkpoint would skip everything and output only "
+                "the selected objects"
             )
+            print(f"error: --paths/--paths-file cannot combine with {why}",
+                  file=sys.stderr)
             spark.stop()
             return 2
         from fcrepo3_rdf_extractor_spark.operators.filters import (
@@ -216,18 +200,27 @@ def main(argv: list[str] | None = None) -> int:
         )
         extracted = spark.read.parquet(args.out)
 
-    triples = triples_only(extracted) if "error_stage" in extracted.columns else extracted
-    summary["n_triples"] = triples.count()
-    summary["n_objects"] = triples.select("repo", "path", "commit").distinct().count()
-    if "error_stage" in extracted.columns:
-        summary["errors_by_stage"] = {
-            r.error_stage: r.n_errors for r in error_counts(extracted).collect()
-        }
-        summary["n_errors"] = sum(summary["errors_by_stage"].values())
-    else:
-        summary["n_errors"] = 0
+    # the whole report is ONE action: the NULL error_stage group is the
+    # triples, the others are per-stage error counts. The struct keeps a
+    # (repo, path, commit) with a NULL field countable, as .distinct() does
+    has_errors = "error_stage" in extracted.columns
+    stage = F.col("error_stage") if has_errors else F.lit(None).cast("string")
+    groups = {
+        r.error_stage: (r.n, r.n_objects)
+        for r in extracted.groupBy(stage.alias("error_stage")).agg(
+            F.count("*").alias("n"),
+            F.count_distinct(F.struct("repo", "path", "commit")).alias(
+                "n_objects"
+            ),
+        ).collect()
+    }
+    summary["n_triples"], summary["n_objects"] = groups.pop(None, (0, 0))
+    if has_errors:
+        summary["errors_by_stage"] = {k: n for k, (n, _) in groups.items()}
+    summary["n_errors"] = sum(n for n, _ in groups.values())
 
     if args.nquads_out:
+        triples = triples_only(extracted) if has_errors else extracted
         write_nquads(triples.filter(F.col("subj").isNotNull()), args.nquads_out,
                      canonical=args.canonical_sort)
         summary["nquads_out"] = args.nquads_out

@@ -1,53 +1,28 @@
 #!/usr/bin/env python
-"""BGP query runner — the engine's query surface as a CLI.
+"""SPARQL query runner — the engine's query surface as a CLI.
 
-    python jobs/query.py --triples /data/triples_parquet \
-        --pattern '?obj rel:isMemberOfCollection ?coll' \
-        --pattern '?obj model:state model:Active' \
-        --optional '?obj model:ownerId ?owner' \
-        --filter '?coll contains collection:1' \
-        --select obj,coll,owner --limit 20
+    python jobs/query.py --triples /data/triples_parquet --sparql '
+        SELECT ?obj ?coll ?owner WHERE {
+          ?obj <rel:isMemberOfCollection> ?coll .
+          ?obj <model:state> <model:Active> .
+          OPTIONAL { ?obj <model:ownerId> ?owner }
+          FILTER(CONTAINS(?coll, "collection:1"))
+        } ORDER BY ASC(?obj) LIMIT 20'
 
-Runs a SPARQL-style basic graph pattern (operators/bgp.py: conjunctive
-patterns, OPTIONAL groups, FILTER constraints, `pred+` / `^pred` /
-`(p|q)+` property paths) against a triples table (parquet columns subj,
-pred, obj_value — the `materialize_graph` output). Results stream to
-stdout as JSON lines (bounded by --limit) or to parquet via --out; the
-LAST stdout line is always one JSON summary (n_rows, elapsed seconds,
-plan echo) — the same exit contract as jobs/curate.py.
+    python jobs/query.py --triples /data/quads_parquet --sparql '
+        DESCRIBE ?x WHERE { GRAPH <g2> {
+          ?x <rel:member> ?c VALUES ?x { <p:3> } } }'
 
-Term syntax (whitespace-tokenized, three terms per pattern — the
-engine's vocabulary has no spaces inside URIs): `?name` is a variable,
-anything else a constant. Each --optional flag is ONE group of
-'.'-separated patterns; each --filter is '?var op value' with op in
-{=, !=, <, <=, >, >=, contains, regex} (value may contain spaces).
-
-SPARQL 1.1 aggregates: --group-by '?coll' with one or more
---agg 'fn ?var alias' (fn in {count, count_distinct, sum, avg, min,
-max, group_concat[:sep], group_concat_distinct[:sep], sample}; var may
-be '*' with count) switch the query to bgp_aggregate; --having
-'alias op value' constrains the aggregated rows. --group-by '' (empty)
-means one global group.
-
-Negation: each --not-exists flag is ONE FILTER NOT EXISTS group
-('.'-separated patterns, left-anti-joined on shared variables).
-CONSTRUCT: one or more --construct '?s pred ?o' template triples switch
-the output to derived subj/pred/obj_value triples (set semantics).
-ASK: --ask prints one {matched: bool} row (existence, LIMIT-1 plan).
-DESCRIBE: --describe '?var' prints the outbound triples of every
-binding of ?var in the WHERE patterns; --describe '<uri>' (a constant)
-needs no --pattern and is a point lookup.
-Named graphs: --graph 'g' pins every pattern to one named graph;
---graph '?g' binds each solution's graph as a variable (quad tables
-with a 'graph' column only).
-VALUES: each --values flag is ONE inline row as a JSON object
-('{"?owner": "cust:1"}'); omitted variables are UNDEF wildcards.
-Property paths in patterns: pred+ (one or more), pred* (zero or more),
-pred? (zero or one), ^pred (inverse), (p|q)+ (alternation); wrap a
-constant in <angle brackets> to match it literally (no path reading).
-Solution modifiers: --order-by '?var asc|desc' (repeatable) makes
---limit the QUERY limit (TakeOrderedAndProject) and enables --offset
-for deterministic paging.
+Runs one SPARQL query (SELECT / ASK / CONSTRUCT / DESCRIBE; the
+supported grammar is documented in operators/sparql.py, which compiles
+the text onto the operators/bgp.py functions) against a triples table
+(parquet columns subj, pred, obj_value, plus graph for quad tables —
+the `materialize_graph` output). Results stream to stdout as JSON lines
+(at most --limit of them; a LIMIT/OFFSET in the text bounds the query
+itself) or to parquet via --out; the LAST stdout line is always one
+JSON summary (n_rows, elapsed seconds, columns, out) — the same exit
+contract as jobs/curate.py. A query the parser or the BGP compiler
+rejects exits 2 with the reason on stderr.
 """
 
 from __future__ import annotations
@@ -61,299 +36,28 @@ import time
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 
-def _parse_pattern(text: str) -> tuple[str, str, str]:
-    parts = text.split()
-    if len(parts) != 3:
-        raise SystemExit(
-            f"error: pattern must be exactly three whitespace-separated "
-            f"terms, got {text!r}"
-        )
-    return (parts[0], parts[1], parts[2])
-
-
-def _parse_filter(text: str):
-    parts = text.split(None, 2)
-    if len(parts) != 3:
-        raise SystemExit(
-            f"error: filter must be '?var op value', got {text!r}"
-        )
-    var, op, value = parts
-    # ordering ops with a numeric-looking value get SPARQL numeric
-    # semantics (bgp_query compares on try_cast(double)); everything
-    # else stays a string comparison
-    if op in ("<", "<=", ">", ">="):
-        try:
-            return (var, op, float(value))
-        except ValueError:
-            pass
-    return (var, op, value)
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--triples", required=True,
                     help="triples parquet path (subj, pred, obj_value)")
-    ap.add_argument("--sparql", default=None,
-                    help="a full SPARQL query string (SELECT/ASK/"
-                         "CONSTRUCT/DESCRIBE; see operators/sparql.py "
-                         "for the supported subset) — exclusive with "
-                         "the per-clause flags below")
-    ap.add_argument("--pattern", action="append", default=[],
-                    help="one triple pattern '?s pred ?o' (repeatable; "
-                         "required unless --describe names a constant "
-                         "or --sparql is given)")
-    ap.add_argument("--optional", action="append", default=[],
-                    help="one OPTIONAL group: patterns joined by ' . ' "
-                         "(repeatable)")
-    ap.add_argument("--not-exists", action="append", default=[],
-                    help="one FILTER NOT EXISTS group: patterns joined "
-                         "by ' . ' (repeatable)")
-    ap.add_argument("--construct", action="append", default=[],
-                    help="CONSTRUCT template triple '?s pred ?o' "
-                         "(repeatable; switches output to subj/pred/"
-                         "obj_value triples, set semantics)")
-    ap.add_argument("--ask", action="store_true",
-                    help="ASK: print one {matched: bool} row instead of "
-                         "bindings")
-    ap.add_argument("--describe", default=None,
-                    help="DESCRIBE: print the outbound triples of a "
-                         "constant URI, or of every binding of '?var' "
-                         "in the WHERE patterns")
-    ap.add_argument("--graph", default=None,
-                    help="GRAPH scope: a constant graph name pins every "
-                         "pattern to that named graph; '?g' binds the "
-                         "solution's graph as a variable (quad tables "
-                         "with a 'graph' column only)")
-    ap.add_argument("--values", action="append", default=[],
-                    help="one VALUES row as a JSON object, e.g. "
-                         "'{\"?owner\": \"cust:1\"}' (repeatable; a "
-                         "variable a row omits is UNDEF — a wildcard)")
-    ap.add_argument("--filter", action="append", default=[],
-                    help="'?var op value' constraint (repeatable)")
-    ap.add_argument("--select", default=None,
-                    help="comma-separated variables to project")
-    ap.add_argument("--distinct", action="store_true")
-    ap.add_argument("--group-by", default=None,
-                    help="comma-separated group variables ('' = one "
-                         "global group); requires at least one --agg")
-    ap.add_argument("--agg", action="append", default=[],
-                    help="'fn ?var alias' aggregate (repeatable; see "
-                         "module docstring for fns)")
-    ap.add_argument("--having", action="append", default=[],
-                    help="'alias op value' constraint on aggregates "
-                         "(repeatable)")
-    ap.add_argument("--order-by", action="append", default=[],
-                    help="'?var asc|desc' solution modifier (repeatable; "
-                         "with --limit plans as TakeOrderedAndProject)")
-    ap.add_argument("--offset", type=int, default=0,
-                    help="skip N ordered solutions (requires --order-by)")
+    ap.add_argument("--sparql", required=True,
+                    help="the SPARQL query text (see operators/sparql.py "
+                         "for the supported subset)")
     ap.add_argument("--limit", type=int, default=20,
-                    help="max rows printed to stdout; with --order-by it "
-                         "is the QUERY limit (deterministic page)")
+                    help="max rows printed to stdout")
     ap.add_argument("--out", default=None,
                     help="write full results as parquet instead of printing")
-    ap.add_argument("--local", type=int, default=None)
+    ap.add_argument("--local", type=int, default=None,
+                    help="run on local[N] instead of the submitted master")
     args = ap.parse_args(argv)
 
-    if args.local:
-        from fcrepo3_rdf_extractor_spark.session import build_session
+    from fcrepo3_rdf_extractor_spark.operators.sparql import sparql_query
+    from fcrepo3_rdf_extractor_spark.session import job_session
 
-        spark = build_session("query", cores=args.local)
-    else:
-        from pyspark.sql import SparkSession
-
-        spark = (
-            SparkSession.builder.appName("query")
-            .config("spark.sql.adaptive.enabled", "true")
-            .getOrCreate()
-        )
-
-    from fcrepo3_rdf_extractor_spark.operators.bgp import (
-        bgp_aggregate,
-        bgp_ask,
-        bgp_construct,
-        bgp_describe,
-        bgp_query,
-    )
-
-    if args.sparql is not None and (
-        args.pattern or args.optional or args.not_exists or args.construct
-        or args.ask or args.describe is not None or args.filter
-        or args.select or args.distinct or args.group_by is not None
-        or args.agg or args.having or args.order_by or args.offset
-        or args.graph or args.values
-    ):
-        print("error: --sparql is the whole query — it does not combine "
-              "with the per-clause flags", file=sys.stderr)
-        spark.stop()
-        return 2
-    if (args.group_by is not None) != bool(args.agg):
-        print("error: --group-by and --agg go together", file=sys.stderr)
-        spark.stop()
-        return 2
-    if sum([bool(args.construct), args.group_by is not None, args.ask,
-            args.describe is not None]) > 1:
-        print("error: --construct / --group-by / --ask / --describe are "
-              "exclusive", file=sys.stderr)
-        spark.stop()
-        return 2
-    if (
-        args.construct
-        or args.group_by is not None
-        or args.ask
-        or args.describe is not None
-    ) and (args.select or args.distinct or args.order_by or args.offset):
-        # none of these modes takes a projection or solution modifiers:
-        # CONSTRUCT/DESCRIBE output is triples (set semantics built in),
-        # aggregate output is group keys + aliases — reject instead of
-        # silently ignoring
-        print(
-            "error: --select/--distinct/--order-by/--offset do not apply "
-            "with --construct, --group-by, --ask, or --describe",
-            file=sys.stderr,
-        )
-        spark.stop()
-        return 2
-    if args.sparql is None and not args.pattern and not (
-        args.describe is not None and not args.describe.startswith("?")
-    ):
-        print(
-            "error: at least one --pattern is required (only DESCRIBE of "
-            "a constant URI runs without a WHERE clause)",
-            file=sys.stderr,
-        )
-        spark.stop()
-        return 2
-    values_rows = []
-    for raw in args.values:
-        try:
-            row = json.loads(raw)
-        except json.JSONDecodeError as e:
-            print(f"error: --values must be a JSON object: {e}",
-                  file=sys.stderr)
-            spark.stop()
-            return 2
-        if not isinstance(row, dict) or not all(
-            isinstance(k, str) and isinstance(v, str) for k, v in row.items()
-        ):
-            print("error: --values must be a JSON object of "
-                  "string->string", file=sys.stderr)
-            spark.stop()
-            return 2
-        values_rows.append(row)
-
+    spark = job_session("query", args.local)
     t0 = time.perf_counter()
     try:
-        triples = spark.read.parquet(args.triples)
-        if args.sparql is not None:
-            from fcrepo3_rdf_extractor_spark.operators.sparql import (
-                sparql_query,
-            )
-
-            result = sparql_query(triples, args.sparql)
-        else:
-            patterns = [_parse_pattern(p) for p in args.pattern]
-            optional = [
-                [_parse_pattern(p) for p in group.split(" . ")]
-                for group in args.optional
-            ]
-            filters = [_parse_filter(f) for f in args.filter]
-            negation = [
-                [_parse_pattern(p) for p in group.split(" . ")]
-                for group in args.not_exists
-            ]
-            if args.ask:
-                result = bgp_ask(
-                    triples,
-                    patterns,
-                    optional_patterns=optional,
-                    filters=filters,
-                    not_exists=negation,
-                    graph=args.graph,
-                    values=values_rows or None,
-                )
-            elif args.describe is not None:
-                result = bgp_describe(
-                    triples,
-                    args.describe,
-                    patterns or None,
-                    optional_patterns=optional,
-                    filters=filters,
-                    not_exists=negation,
-                    graph=args.graph,
-                    values=values_rows or None,
-                )
-            elif args.construct:
-                result = bgp_construct(
-                    triples,
-                    patterns,
-                    template=[_parse_pattern(p) for p in args.construct],
-                    optional_patterns=optional,
-                    filters=filters,
-                    not_exists=negation,
-                    graph=args.graph,
-                    values=values_rows or None,
-                )
-            elif args.group_by is not None:
-                def parse_agg(text: str) -> tuple[str, str, str]:
-                    parts = text.split()
-                    if len(parts) != 3:
-                        raise SystemExit(
-                            f"error: agg must be 'fn ?var alias', got {text!r}"
-                        )
-                    return (parts[0], parts[1], parts[2])
-
-                def parse_having(text: str):
-                    alias, op, value = _parse_filter(text)
-                    # HAVING compares real aggregate types (counts/sums),
-                    # not string lexical forms — coerce numeric-looking
-                    # values for comparison ops (= too: 'n = 2' means the
-                    # count), but NEVER for contains/regex, whose argument
-                    # must stay a string (a double literal there is an
-                    # AnalysisException, not a match)
-                    if op not in ("contains", "regex") and not isinstance(value, float):
-                        try:
-                            value = float(value)
-                        except ValueError:
-                            pass
-                    return (alias, op, value)
-
-                result = bgp_aggregate(
-                    triples,
-                    patterns,
-                    group_by=[v for v in args.group_by.split(",") if v],
-                    aggs=[parse_agg(a) for a in args.agg],
-                    having=[parse_having(h) for h in args.having],
-                    optional_patterns=optional,
-                    filters=filters,
-                    not_exists=negation,
-                    graph=args.graph,
-                    values=values_rows or None,
-                )
-            else:
-                def parse_order(text: str) -> tuple[str, str]:
-                    parts = text.split()
-                    if len(parts) != 2 or parts[1] not in ("asc", "desc"):
-                        raise SystemExit(
-                            f"error: order-by must be '?var asc|desc', got {text!r}"
-                        )
-                    return (parts[0], parts[1])
-
-                order = [parse_order(o) for o in args.order_by]
-                result = bgp_query(
-                    triples,
-                    patterns,
-                    select=args.select.split(",") if args.select else None,
-                    distinct=args.distinct,
-                    optional_patterns=optional,
-                    filters=filters,
-                    not_exists=negation,
-                    order_by=order,
-                    offset=args.offset if order else 0,
-                    limit=args.limit if order else None,
-                    graph=args.graph,
-                    values=values_rows or None,
-                )
+        result = sparql_query(spark.read.parquet(args.triples), args.sparql)
         if args.out:
             result.write.mode("overwrite").parquet(args.out)
             n = spark.read.parquet(args.out).count()
@@ -370,7 +74,8 @@ def main(argv: list[str] | None = None) -> int:
         }))
         return 0
     except ValueError as e:
-        # compile-time BGP rejections (disconnected, unbound filter, ...)
+        # parse and compile-time BGP rejections (disconnected, unbound
+        # filter, ...)
         print(f"error: {e}", file=sys.stderr)
         return 2
     finally:

@@ -462,48 +462,32 @@ def query_cli(spark, base: Path) -> dict:
     spark.createDataFrame(
         rows, "subj string, pred string, obj_value string, graph string"
     ).write.parquet(tdir)
-    ok = _run_job("query.py", [
-        "--triples", tdir,
-        "--pattern", "?x rel:member ?c",
-        "--optional", "?x m:owner ?o",
-        "--filter", "?c contains :a",
-        "--select", "x,c,o",
-        "--order-by", "?x asc", "--offset", "1", "--limit", "5",
-        "--local", "2",
-    ])
-    bad = _run_job("query.py", [
-        "--triples", tdir,
-        "--pattern", "?x rel:member ?c",
-        "--pattern", "?y m:owner ?o",
-        "--local", "2",
-    ])
-    agg = _run_job("query.py", [
-        "--triples", tdir,
-        "--pattern", "?x rel:member ?c",
-        "--group-by", "?c",
-        "--agg", "count * n",
-        "--agg", "sample ?x first_x",
-        "--having", "n >= 2",
-        "--local", "2",
-    ])
-    con = _run_job("query.py", [
-        "--triples", tdir,
-        "--pattern", "?x rel:member ?c",
-        "--not-exists", "?x m:owner ?o",
-        "--construct", "?c ex:contains ?x",
-        "--local", "2",
-    ])
+    def run(text):
+        return _run_job("query.py", [
+            "--triples", tdir, "--sparql", text, "--local", "2",
+        ])
+
+    ok = run(
+        "SELECT ?x ?c ?o WHERE { ?x <rel:member> ?c . "
+        "OPTIONAL { ?x <m:owner> ?o } FILTER(CONTAINS(?c, \":a\")) } "
+        "ORDER BY ASC(?x) LIMIT 5 OFFSET 1"
+    )
+    bad = run("SELECT * WHERE { ?x <rel:member> ?c . ?y <m:owner> ?o }")
+    agg = run(
+        "SELECT ?c (COUNT(*) AS ?n) (SAMPLE(?x) AS ?first_x) "
+        "WHERE { ?x <rel:member> ?c } GROUP BY ?c HAVING(?n >= 2)"
+    )
+    con = run(
+        "CONSTRUCT { ?c <ex:contains> ?x } WHERE { ?x <rel:member> ?c . "
+        "FILTER NOT EXISTS { ?x <m:owner> ?o } }"
+    )
     # DESCRIBE + GRAPH + VALUES in one run: the WHERE clause is scoped
     # to named graph g2 and the inline VALUES row pins ?x, so the
     # description covers exactly p:3's outbound triples
-    dsc = _run_job("query.py", [
-        "--triples", tdir,
-        "--pattern", "?x rel:member ?c",
-        "--graph", "g2",
-        "--values", '{"?x": "p:3"}',
-        "--describe", "?x",
-        "--local", "2",
-    ])
+    dsc = run(
+        "DESCRIBE ?x WHERE { GRAPH <g2> { ?x <rel:member> ?c "
+        "VALUES ?x { <p:3> } } }"
+    )
     return {"ok": ok, "bad": bad, "agg": agg, "construct": con, "dsc": dsc}
 
 
@@ -555,10 +539,11 @@ def extract_then_query(spark, base: Path) -> dict:
     ])
     qry = _run_job("query.py", [
         "--triples", out,
-        "--pattern",
-        "?obj info:fedora/fedora-system:def/model#hasModel "
-        "info:fedora/fedora-system:FedoraObject-3.0",
-        "--select", "obj", "--limit", "50", "--local", "2",
+        "--sparql",
+        "SELECT ?obj WHERE { ?obj "
+        "<info:fedora/fedora-system:def/model#hasModel> "
+        "<info:fedora/fedora-system:FedoraObject-3.0> }",
+        "--limit", "50", "--local", "2",
     ])
     return {"extract": ext, "query": qry, "out": out}
 
@@ -596,6 +581,26 @@ def extract_select_paths(spark, base: Path) -> dict:
     ])
     return {"sel": sel, "sel_file": sel_file, "refused": refused,
             "out": out, "out2": out2}
+
+
+@scenario
+def extract_paths_with_checkpoint(spark, base: Path) -> dict:
+    """--paths with --checkpoint must refuse: the resumable run marks
+    every chunk done, so a later full run on that checkpoint would skip
+    everything. The guard fires before extraction, so a one-row blob
+    table is enough."""
+    src = str(base / "src")
+    spark.createDataFrame(
+        [("r", "info:fedora/x:1", "c", "foxml", "<not-parsed/>")],
+        "repo string, path string, commit string, lang string, "
+        "content string",
+    ).write.parquet(src)
+    cp = str(base / "cp")
+    refused = _run_job("extract.py", [
+        "--source", src, "--out", str(base / "triples"),
+        "--paths", "info:fedora/x:1", "--checkpoint", cp, "--local", "2",
+    ])
+    return {"refused": refused, "checkpoint": cp}
 
 
 @scenario
@@ -648,8 +653,8 @@ def code_kg_end_to_end(spark, base: Path) -> dict:
     ]
     query = _run_job("query.py", [
         "--triples", out,
-        "--pattern", "?f code:defines ?s",
-        "--select", "f", "--local", "2",
+        "--sparql", "SELECT ?f WHERE { ?f <code:defines> ?s }",
+        "--local", "2",
     ])
     # incremental chain: bootstrap a state, then refresh with one NEW
     # file that makes an unchanged importer's edge flip ext: -> src:

@@ -1,12 +1,14 @@
-"""Regrowth pin: every ``operators/`` module must serve a program path.
+"""Regrowth pins: every ``operators/`` module must serve a program path,
+and every job takes its session from ``session.job_session``.
 
 Reach starts at every function of the jobs (``jobs/``), of the plan,
 stream and source modules, of the end-to-end benchmark (``perfbench/``),
 at ``__spark_entry__.entry`` and at the KG queries (``kg_*``, ``src_*``,
 ``graph_*`` in ``queries.py``), and follows the names each reached
 function uses, local imports included. The other registry queries,
-``bench.py``, ``tools/`` and the tests are no roots. This Spark-free
-scan fails when an operator module has no reached function.
+``bench.py``, ``tools/`` and the tests are no roots. These Spark-free
+scans fail when an operator module has no reached function, or when a
+job builds its own SparkSession.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ ROOT_DIRS = ("jobs/", "perfbench/", *(f"{PKG}/{d}/" for d in ("plans", "streamin
 #: operator modules only the query registry's reference checks and the
 #: unit tests still reach; they go together with those checks and tests
 #: (ROADMAP). Shrinks only; nothing may join it.
-UNREACHED = {"classify", "multimodal", "relational", "similarity"}
+UNREACHED = {"multimodal", "relational", "similarity"}
 
 
 def _module(rel: str) -> str:
@@ -85,3 +87,13 @@ def test_every_operator_module_is_reached_from_a_program_path():
         if p.stem != "__init__" and f"{PKG}.operators.{p.stem}" not in reached_mods
     }
     assert unreached == UNREACHED, unreached ^ UNREACHED
+
+
+def test_jobs_take_their_session_from_job_session():
+    """One session builder: a job that builds its own SparkSession forks
+    the engine confs (``session.ENGINE_CONF``) again."""
+    forks = [
+        p.name for p in (ROOT / "jobs").glob("*.py")
+        if "SparkSession.builder" in p.read_text()
+    ]
+    assert not forks, forks

@@ -860,6 +860,21 @@ def test_fuzzy_entity_match_tiebreak_and_block_bound(spark):
     assert [(r.mention_id, r.entity_id) for r in got2] == [(1, 1)]
 
 
+def test_extract_cli_paths_refuse_checkpoint(cli_results):
+    """A selected-paths resumable run would mark every chunk done and
+    poison the checkpoint for the next full run: refused up front, the
+    checkpoint left unwritten."""
+    from conftest import cli_art
+
+    art = cli_art(cli_results, "extract_paths_with_checkpoint")
+    refused = art["refused"]
+    assert refused["rc"] == 2, refused["stderr"][-2000:]
+    assert "--paths/--paths-file cannot combine with --checkpoint" in (
+        refused["stderr"]
+    )
+    assert not pathlib.Path(art["checkpoint"]).exists()
+
+
 def test_extract_cli_select_paths(spark, cli_results):
     """Reference parity with Extract.java's positional-URI mode: --paths
     extracts exactly the named objects (2 of the 7 fixtures), a

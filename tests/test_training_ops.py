@@ -1517,219 +1517,6 @@ def test_dsir_importance_prefers_target_like_docs(spark):
     assert got[200].n_tokens == 4
 
 
-def test_logreg_classifier_separates_vocabularies(spark):
-    """The trained quality classifier must separate two disjoint
-    vocabularies: unlabeled docs drawn from the target vocabulary score
-    p > 0.5, off-target docs p < 0.5, and the probabilities order
-    correctly. Also pins the weight dict shape (observed buckets +
-    bias)."""
-    from pyspark.sql import functions as F
-
-    from fcrepo3_rdf_extractor_spark.operators.classify import (
-        BIAS_KEY,
-        classifier_score,
-        logreg_train,
-    )
-
-    tgt = "alpha beta gamma delta epsilon zeta"
-    off = "uno dos tres cuatro cinco seis"
-    rows = ([(i, tgt, 1) for i in range(12)]
-            + [(100 + i, off, 0) for i in range(12)]
-            + [(200, "alpha beta gamma", 0),   # held-out target-like
-               (201, "uno dos tres", 1)])      # held-out off-target
-    df = spark.createDataFrame(rows, "doc_id long, text string, y int")
-    train = df.filter(F.col("doc_id") < 200)
-    w = logreg_train(train, F.col("y") == 1, lr=4.0, n_iter=6)
-    assert BIAS_KEY in w and len(w) >= 3
-    got = {r.doc_id: r for r in classifier_score(df, w).collect()}
-    assert got[200].p_target > 0.5 and got[200].keep
-    assert got[201].p_target < 0.5 and not got[201].keep
-    assert got[0].p_target > got[100].p_target
-
-
-def test_logreg_one_action_per_iteration(spark, monkeypatch):
-    """The bias rides the gradient aggregation as a pseudo-bucket, so
-    training runs exactly ONE collect per iteration (plus the one-time
-    bucket enumeration) — the scored subplan must not evaluate twice."""
-    from pyspark.sql import DataFrame
-    from pyspark.sql import functions as F
-
-    from fcrepo3_rdf_extractor_spark.operators.classify import logreg_train
-
-    df = spark.createDataFrame(
-        [(0, "aa bb", 1), (1, "cc dd", 0), (2, "aa cc", 1)],
-        "doc_id long, text string, y int",
-    )
-    # patch the CONCRETE class (Spark 4: pyspark.sql.classic.DataFrame,
-    # not the pyspark.sql.DataFrame ABC)
-    cls = type(df)
-    assert isinstance(df, DataFrame)
-    calls = []
-    orig = cls.collect
-
-    def counting(self):
-        calls.append(1)
-        return orig(self)
-
-    monkeypatch.setattr(cls, "collect", counting)
-    w = logreg_train(df, F.col("y") == 1, n_iter=3)
-    assert len(calls) == 3 + 1  # one gradient per iteration + buckets
-    from fcrepo3_rdf_extractor_spark.operators.classify import BIAS_KEY
-
-    assert BIAS_KEY in w
-
-
-def test_logreg_holdout_accuracy_gate(spark):
-    """Measured quality gate (the same discipline as the ANN recall
-    gates): train on a deterministic 80% of a planted two-vocabulary
-    corpus (each class has its own word pool plus a SHARED confounder
-    pool), score the HELD-OUT doc_id %% 5 == 0 slice, and pin an
-    accuracy floor — generalization to unseen docs, not train-set
-    recall. The real `documents` table is unusable for this gate: its
-    langs share one vocabulary by construction, so no unigram model
-    can separate them (measured: p_en == p_off to 3 decimals).
-    Measured 2026-08-20: holdout accuracy 1.000 on 40 docs; floor 0.95
-    leaves slack for hashing-collision jitter if bucket width changes."""
-    from pyspark.sql import functions as F
-
-    from fcrepo3_rdf_extractor_spark.operators.classify import (
-        classifier_score,
-        logreg_train,
-    )
-
-    rows = []
-    for d in range(200):
-        pool = (
-            [f"tgt{(d * 7 + k) % 12}" for k in range(6)]
-            if d % 2 == 0
-            else [f"off{(d * 5 + k) % 12}" for k in range(6)]
-        )
-        shared = [f"common{(d + k) % 8}" for k in range(6)]
-        rows.append((d, " ".join(pool + shared), 1 if d % 2 == 0 else 0))
-    docs = spark.createDataFrame(rows, "doc_id long, text string, y int")
-    label = F.col("y") == 1
-    train = docs.filter(F.col("doc_id") % 5 != 0)
-    hold = docs.filter(F.col("doc_id") % 5 == 0)
-    w = logreg_train(train, label, lr=4.0, n_iter=6)
-    scored = classifier_score(hold, w).join(
-        hold.select("doc_id", label.alias("is_t")), "doc_id"
-    )
-    row = scored.agg(
-        F.avg((F.col("keep") == F.col("is_t")).cast("double")).alias("acc"),
-        F.avg(F.when(F.col("is_t"), F.col("p_target"))).alias("p_t"),
-        F.avg(F.when(~F.col("is_t"), F.col("p_target"))).alias("p_o"),
-    ).collect()[0]
-    assert row.acc >= 0.95, (row.acc, row.p_t, row.p_o)
-    assert row.p_t > row.p_o  # scores order by class, not just threshold
-
-
-def test_classifier_eval_metrics_gate(spark):
-    """classifier_eval end-to-end on the planted two-vocabulary corpus
-    (same construction as the accuracy gate above, doc_ids shifted so
-    the md5 holdout slice holds both classes): the one-row report must
-    show a ~25% split, both classes present in the holdout, and
-    measured accuracy/AUC floors. Measured 2026-08-21: accuracy 1.0,
-    AUC 1.0 on 54 held-out docs; floors 0.95/0.95 leave hash-jitter
-    slack. Also pins the hand-check identity: AUC computed from the
-    bounded distinct-score prefix sum equals the tie-aware
-    Mann-Whitney statistic computed per-pair on the driver."""
-    from pyspark.sql import functions as F
-
-    from fcrepo3_rdf_extractor_spark.operators.classify import (
-        classifier_eval,
-    )
-
-    rows = []
-    for d in range(200):
-        pool = (
-            [f"tgt{(d * 7 + k) % 12}" for k in range(6)]
-            if d % 2 == 0
-            else [f"off{(d * 5 + k) % 12}" for k in range(6)]
-        )
-        shared = [f"common{(d + k) % 8}" for k in range(6)]
-        rows.append((d, " ".join(pool + shared), 1 if d % 2 == 0 else 0))
-    docs = spark.createDataFrame(rows, "doc_id long, text string, y int")
-    got = classifier_eval(
-        docs, F.col("y") == 1, lr=4.0, n_iter=6
-    ).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert r.n_train + r.n_holdout == 200
-    assert r.n_pos + r.n_neg == r.n_holdout
-    assert 0 < r.n_pos and 0 < r.n_neg
-    # md5 slice ('0'-'3') is ~4/16 of doc_ids — loose band, exact split
-    # is a deterministic property of the ids
-    assert 20 <= r.n_holdout <= 90
-    assert r.accuracy >= 0.95, r
-    assert r.auc >= 0.95, r
-
-
-def test_classifier_eval_single_class_holdout_null_auc(spark):
-    """A holdout slice containing only one class has an UNDEFINED AUC:
-    the report must carry NULL there (try_divide), never abort the job
-    with an ANSI DIVIDE_BY_ZERO; accuracy stays defined."""
-    from pyspark.sql import functions as F
-
-    from fcrepo3_rdf_extractor_spark.operators.classify import (
-        classifier_eval,
-    )
-
-    rows = [(d, f"tok{d % 7} common", 1) for d in range(80)]  # all positive
-    docs = spark.createDataFrame(rows, "doc_id long, text string, y int")
-    r = classifier_eval(docs, F.col("y") == 1, lr=2.0, n_iter=2).collect()[0]
-    assert r.n_neg == 0 and r.n_pos == r.n_holdout > 0
-    assert r.auc is None
-    assert r.accuracy is not None
-
-
-def test_classifier_eval_auc_is_mann_whitney(spark):
-    """The prefix-sum AUC must equal the per-pair tie-aware
-    Mann-Whitney statistic: score a corpus where ties are FORCED
-    (several docs share the exact token multiset, so identical
-    p_target), recompute AUC on the driver as
-    [#(p_pos > p_neg) + 0.5 * #(p_pos == p_neg)] / (n_pos * n_neg)
-    over the same holdout scores, and require equality to 6 dp."""
-    from pyspark.sql import functions as F
-
-    from fcrepo3_rdf_extractor_spark.operators.classify import (
-        classifier_eval,
-        classifier_score,
-        logreg_train,
-    )
-
-    rows = []
-    for d in range(120):
-        # only 4 distinct texts per class -> heavy score ties
-        variant = d % 4
-        pool = (
-            [f"tgt{(variant + k) % 6}" for k in range(5)]
-            if d % 2 == 0
-            else [f"off{(variant + k) % 6}" for k in range(5)]
-        )
-        rows.append((d, " ".join(pool), 1 if d % 2 == 0 else 0))
-    docs = spark.createDataFrame(rows, "doc_id long, text string, y int")
-    label = F.col("y") == 1
-    got = classifier_eval(docs, label, lr=2.0, n_iter=3).collect()[0]
-
-    hx = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    train = docs.filter(~hx.isin("0", "1", "2", "3"))
-    hold = docs.filter(hx.isin("0", "1", "2", "3"))
-    w = logreg_train(train, label, lr=2.0, n_iter=3)
-    scored = {
-        r.doc_id: r.p_target
-        for r in classifier_score(hold, w).collect()
-    }
-    ys = {r.doc_id: r.y for r in hold.select("doc_id", "y").collect()}
-    pos = [scored[d] for d in scored if ys[d] == 1]
-    neg = [scored[d] for d in scored if ys[d] == 0]
-    num = sum(
-        1.0 if p > q else 0.5 if p == q else 0.0 for p in pos for q in neg
-    )
-    want = round(num / (len(pos) * len(neg)), 6)
-    assert abs(got.auc - want) < 1e-6, (got.auc, want)
-    assert len({round(v, 6) for v in scored.values()}) < len(scored)  # ties real
-
-
 def test_curate_code_filter_stage(spark, cli_results):
     """--code-filter drops the long-line and autogen docs the quality
     filter passes; without the flag all three quality-passing docs
