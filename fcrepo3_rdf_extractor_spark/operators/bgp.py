@@ -958,22 +958,36 @@ def bgp_query(
     out = joined.select(*sel)
     if distinct:
         out = out.distinct()
+    return solution_modifiers(out, order_by, offset, limit)
+
+
+def solution_modifiers(
+    df: DataFrame,
+    order_by: Sequence[tuple[str, str]] | None = None,
+    offset: int | None = 0,
+    limit: int | None = None,
+) -> DataFrame:
+    """SPARQL's ORDER BY / OFFSET / LIMIT over an already-projected
+    frame: BGP, aggregate and UNION results alike, so ORDER BY may name
+    only an output column (a selected variable, group key or aggregate
+    alias). ORDER BY ... LIMIT k plans as TakeOrderedAndProject (no
+    global sort materialization) — the SPARQL top-k idiom."""
     if order_by:
         cols = []
         for var, direction in order_by:
             name = var.lstrip("?")
-            if name not in sel:
-                raise ValueError(f"ORDER BY {var!r}: not a selected variable")
+            if name not in df.columns:
+                raise ValueError(f"ORDER BY ?{name}: not a selected variable")
             if direction not in ("asc", "desc"):
                 raise ValueError(f"ORDER BY direction must be asc/desc: {direction!r}")
             c = F.col(name)
             cols.append(c.desc() if direction == "desc" else c.asc())
-        out = out.orderBy(*cols)
+        df = df.orderBy(*cols)
     if offset:
-        out = out.offset(offset)
+        df = df.offset(offset)
     if limit is not None:
-        out = out.limit(limit)
-    return out
+        df = df.limit(limit)
+    return df
 
 
 def bgp_union(

@@ -1239,32 +1239,6 @@ class _Parser:
             q.select = ordered
 
 
-def _apply_modifiers(df: DataFrame, q: "ParsedQuery") -> DataFrame:
-    """ORDER BY / OFFSET / LIMIT over an already-projected frame — the
-    aggregate and union results, whose output columns are group keys /
-    aggregate aliases / branch variables. ORDER BY DESC(?n) LIMIT k
-    over an aggregate plans as TakeOrderedAndProject (no global sort
-    materialization) — the SPARQL top-k idiom."""
-    if q.order_by:
-        from pyspark.sql import functions as F
-
-        cols = []
-        for var, direction in q.order_by:
-            name = var.lstrip("?")
-            if name not in df.columns:
-                raise ValueError(
-                    f"ORDER BY ?{name}: not a selected variable"
-                )
-            c = F.col(name)
-            cols.append(c.desc() if direction == "desc" else c.asc())
-        df = df.orderBy(*cols)
-    if q.offset:
-        df = df.offset(q.offset)
-    if q.limit is not None:
-        df = df.limit(q.limit)
-    return df
-
-
 def _group_pats(group: object):
     """Triple patterns of one OPTIONAL group entry — plain list or the
     sub-group mapping form — nested groups included, depth-first (the
@@ -1308,7 +1282,15 @@ def sparql_query(triples: DataFrame, text: str) -> DataFrame:
     byte-identical to the equivalent programmatic call, so every plan
     pin (pushdown, broadcast, no-BNLJ) carries over.
     """
-    from .bgp import bgp_aggregate, bgp_ask, bgp_construct, bgp_describe, bgp_query, bgp_union
+    from .bgp import (
+        bgp_aggregate,
+        bgp_ask,
+        bgp_construct,
+        bgp_describe,
+        bgp_query,
+        bgp_union,
+        solution_modifiers,
+    )
 
     q = parse_sparql(text)
     if q.verb == "ask":
@@ -1362,12 +1344,12 @@ def sparql_query(triples: DataFrame, text: str) -> DataFrame:
     if q.union_branches:
         # solution modifiers apply to the union result (SPARQL evaluates
         # them over the combined solution sequence)
-        return _apply_modifiers(
+        return solution_modifiers(
             bgp_union(
                 triples, q.union_branches, select=q.select,
                 distinct=q.distinct,
             ),
-            q,
+            q.order_by, q.offset, q.limit,
         )
     subs = []
     for sub in q.subselects:
@@ -1389,7 +1371,9 @@ def sparql_query(triples: DataFrame, text: str) -> DataFrame:
                 values=sub.values or None,
             )
             subs.append({
-                "df": _apply_modifiers(sdf, sub),
+                "df": solution_modifiers(
+                    sdf, sub.order_by, sub.offset, sub.limit
+                ),
                 "scalar": not (sub.group_by or []),
             })
         else:
@@ -1410,7 +1394,7 @@ def sparql_query(triples: DataFrame, text: str) -> DataFrame:
             )
             subs.append({"df": sdf, "scalar": False})
     if q.aggs:
-        return _apply_modifiers(
+        return solution_modifiers(
             bgp_aggregate(
                 triples,
                 q.patterns,
@@ -1425,7 +1409,7 @@ def sparql_query(triples: DataFrame, text: str) -> DataFrame:
                 values=q.values or None,
                 sub_solutions=subs or None,
             ),
-            q,
+            q.order_by, q.offset, q.limit,
         )
     return bgp_query(
         triples,

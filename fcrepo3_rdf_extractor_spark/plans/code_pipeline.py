@@ -79,6 +79,10 @@ DEFAULT_CODE_GRAPH = "#code"
 
 LINEAGE = ["repo", "path", "commit", "content_sha256"]
 
+#: call-edge ambiguity / fan-out bound: a callee name defined in more
+#: files of one repo than this links nowhere
+MAX_DEF = 100
+
 
 @dataclass
 class CodeKgConfig:
@@ -108,10 +112,6 @@ class CodeKgConfig:
     #: all (extraction bag semantics — the per-document layer that
     #: resumable/incremental maintenance stores).
     dedup: bool | str = True
-    max_def: int = 100          # call-edge ambiguity / fan-out bound
-    num_chunks: int = 64        # resumable-run granularity
-    chunks_per_wave: int = 16
-    subject_buckets: int = 256
 
 
 def _file_uri() -> Column:
@@ -334,7 +334,7 @@ def code_kg_from_state(
     corpus's modules/symbols/hashes while only the wave's files emit
     rows. ``corpus_ids`` (same identity schema) feeds the module
     registry and the vendored spread; ``defs_registry``
-    (repo, _name, _def_path — already max_def-bounded) replaces the
+    (repo, _name, _def_path — already MAX_DEF-bounded) replaces the
     state-derived callee registry. Both default to the state-local
     basis.
 
@@ -413,7 +413,7 @@ def code_kg_from_state(
                     F.min("_dpath").alias("_def_path"),
                     F.countDistinct("_dpath").alias("_nc"),
                 )
-                .filter(F.col("_nc") <= config.max_def)
+                .filter(F.col("_nc") <= MAX_DEF)
                 .drop("_nc")
             )
         )
@@ -589,7 +589,7 @@ def code_kg_plan(
                 F.min("_dpath").alias("_def_path"),
                 F.countDistinct("_dpath").alias("_nc"),
             )
-            .filter(F.col("_nc") <= config.max_def)
+            .filter(F.col("_nc") <= MAX_DEF)
             .drop("_nc")
         )
     return code_kg_from_state(

@@ -47,7 +47,6 @@ class ExtractConfig:
     dedup: bool = True
     num_chunks: int = 64              # resume granularity
     chunks_per_wave: int = 16         # chunks committed per wave job
-    subject_buckets: int = 256
 
 
 def managed_content_requests(source: DataFrame, keep_group: bool = False) -> DataFrame:

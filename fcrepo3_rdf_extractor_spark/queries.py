@@ -2473,149 +2473,6 @@ def mm_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(media, every_n=16, max_frames=8)
 
 
-# --- events (stream-shaped batch analog) ------------------------------------
-
-
-@_q(
-    "events_asof_join",
-    """WITH clicks AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-            views AS (SELECT user_id, ts, max(value) AS view_value
-                      FROM events WHERE event_type = 'view' GROUP BY 1, 2)
-       SELECT c.event_id, c.user_id,
-              strftime(v.ts, '%Y-%m-%dT%H:%M:%S.%f') AS view_ts_asof,
-              round(v.view_value, 4) AS view_value_asof
-       FROM clicks c ASOF LEFT JOIN views v
-         ON c.user_id = v.user_id AND v.ts <= c.ts""",
-)
-def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (custom operator): each click matched to the latest
-    at-or-before view of the same user. Spark side is the union +
-    carry-forward composition (operators/relational.py); the oracle is
-    DuckDB's native ASOF JOIN — two independent implementations."""
-    from .operators.relational import asof_join
-
-    ev = _read(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("view_value"))
-        .withColumn("view_ts", F.col("ts"))
-    )
-    out = asof_join(clicks, views, on="ts", by=["user_id"],
-                    right_values=["view_ts", "view_value"])
-    return out.select(
-        "event_id", "user_id",
-        F.date_format("view_ts_asof", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("view_ts_asof"),
-        F.round("view_value_asof", 4).alias("view_value_asof"),
-    )
-
-
-@_q(
-    "events_asof_join_skewed",
-    """WITH ev AS (SELECT event_id, ts,
-                          CASE WHEN user_id % 2 = 0 THEN 1 ELSE user_id END
-                            AS user_id,
-                          event_type, value FROM events),
-            clicks AS (SELECT event_id, user_id, ts FROM ev
-                       WHERE event_type = 'click'),
-            views AS (SELECT user_id, ts, max(value) AS view_value
-                      FROM ev WHERE event_type = 'view' GROUP BY 1, 2)
-       SELECT c.event_id, c.user_id,
-              strftime(v.ts, '%Y-%m-%dT%H:%M:%S.%f') AS view_ts_asof,
-              round(v.view_value, 4) AS view_value_asof
-       FROM clicks c ASOF LEFT JOIN views v
-         ON c.user_id = v.user_id AND v.ts <= c.ts""",
-)
-def events_asof_join_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join under a SYNTHESIZED hot key (half of all users
-    collapsed onto user 1 — the one-tenant-dominates shape real event
-    logs have), answered by the pre-split variant: the carry-forward
-    window partitions by (user, time-bucket) with a bucket-granular
-    second-level carry stitching boundaries, so no partition ever holds
-    the whole hot key (plan-pinned in tests/test_plans.py). Output is
-    identical to plain asof_join (pytest-enforced); the oracle is
-    DuckDB's native ASOF JOIN on the same remapped data."""
-    from .operators.relational import asof_join_skewed
-
-    ev = _read(spark, sf_dir, "events").withColumn(
-        "user_id",
-        F.when(F.col("user_id") % 2 == 0, F.lit(1)).otherwise(F.col("user_id")),
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("view_value"))
-        .withColumn("view_ts", F.col("ts"))
-    )
-    out = asof_join_skewed(
-        clicks, views, on="ts", by=["user_id"],
-        right_values=["view_ts", "view_value"], granularity_sec=3600,
-    )
-    return out.select(
-        "event_id", "user_id",
-        F.date_format(
-            "view_ts_asof", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-        ).alias("view_ts_asof"),
-        F.round("view_value_asof", 4).alias("view_value_asof"),
-    )
-
-
-@_q(
-    "events_range_join",
-    """WITH w AS (SELECT user_id, ts AS ws, ts + INTERVAL 30 MINUTE AS we
-                  FROM events WHERE event_type = 'error'),
-            c AS (SELECT user_id, ts FROM events WHERE event_type = 'click')
-       SELECT w.user_id, strftime(w.ws, '%Y-%m-%dT%H:%M:%S.%f') AS window_start,
-              CAST(count(*) AS BIGINT) AS n_clicks
-       FROM w JOIN c ON c.user_id = w.user_id AND c.ts >= w.ws AND c.ts < w.we
-       GROUP BY 1, 2""",
-)
-def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range (interval) join as a custom operator: clicks attributed to
-    the 30-minute incident windows that contain them, per user. Spark
-    side is the bucketed-explode equi-join (operators/relational.py
-    range_join — a raw range theta-join would plan a
-    BroadcastNestedLoopJoin, pinned against in test_plans); the oracle
-    is DuckDB's native theta join — two independent formulations."""
-    from .operators.relational import range_join
-
-    ev = _read(spark, sf_dir, "events")
-    windows = ev.filter(F.col("event_type") == "error").select(
-        "user_id", F.col("ts").alias("ws"),
-        (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("we"),
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts")
-    out = range_join(clicks, windows, on="ts", start="ws", end="we",
-                     by=["user_id"], granularity_sec=1800)
-    return out.groupBy(
-        "user_id",
-        F.date_format("ws", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("window_start"),
-    ).agg(F.count("*").cast("long").alias("n_clicks"))
-
-
-@_q(
-    "events_user_trend",
-    """SELECT user_id, round(regr_slope(value, x), 6) AS slope,
-              CAST(count(*) AS BIGINT) AS n
-       FROM (SELECT user_id, value,
-                    epoch(ts - min(ts) OVER (PARTITION BY user_id)) / 86400.0 AS x
-             FROM events)
-       GROUP BY user_id""",
-)
-def events_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user value trend (slope per day) via the grouped-map
-    applyInPandas surface; the oracle is SQL's regr_slope — two
-    independent formulations of the same regression."""
-    from .operators.relational import grouped_trend
-
-    ev = _read(spark, sf_dir, "events")
-    return grouped_trend(ev, by="user_id", ts_col="ts", value_col="value")
-
-
 # =========================================================================
 # containment near-dup, global top-k, length histogram
 # =========================================================================
@@ -4620,55 +4477,6 @@ def kg_bgp_path_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "events_asof_forward_tolerance",
-    """WITH clicks AS (SELECT event_id, user_id, ts FROM events
-                       WHERE event_type = 'click'),
-            purch AS (SELECT user_id, ts, max(value) AS pvalue
-                      FROM events WHERE event_type = 'purchase'
-                      GROUP BY 1, 2)
-       SELECT c.event_id, c.user_id,
-              CASE WHEN epoch(p.ts) - epoch(c.ts) <= 3600
-                   THEN strftime(p.ts, '%Y-%m-%dT%H:%M:%S.%f') END
-                AS purchase_ts_asof,
-              CASE WHEN epoch(p.ts) - epoch(c.ts) <= 3600
-                   THEN round(p.pvalue, 4) END AS purchase_value_asof
-       FROM clicks c ASOF LEFT JOIN purch p
-         ON c.user_id = p.user_id AND p.ts >= c.ts""",
-)
-def events_asof_forward_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FORWARD as-of with a tolerance window: each click matched to the
-    user's earliest at-or-after purchase, NULLed when it lands more
-    than an hour later (pandas merge_asof semantics: nearest first,
-    then the gap test). Same union + carry composition run the other
-    way; the oracle is DuckDB's native forward ASOF JOIN with the gap
-    CASE applied after."""
-    from .operators.relational import asof_join
-
-    ev = _read(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    purch = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("pvalue"))
-        .withColumn("purchase_ts", F.col("ts"))
-    )
-    out = asof_join(
-        clicks, purch, on="ts", by=["user_id"],
-        right_values=["purchase_ts", "pvalue"],
-        direction="forward", tolerance=3600,
-    )
-    return out.select(
-        "event_id", "user_id",
-        F.date_format(
-            "purchase_ts_asof", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-        ).alias("purchase_ts_asof"),
-        F.round("pvalue_asof", 4).alias("purchase_value_asof"),
-    )
-
-
-@_q(
     "docs_code_clone_key",
     r"""WITH keyed AS (
           SELECT doc_id,
@@ -5308,7 +5116,7 @@ def kg_bgp_having_expr_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kg_bgp_agg_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SPARQL top-k idiom — GROUP BY .. ORDER BY DESC(?n) LIMIT k —
     previously rejected, now a first-class modifier over the aggregated
-    frame (operators/sparql.py:_apply_modifiers). Plans as
+    frame (operators/bgp.py:solution_modifiers). Plans as
     TakeOrderedAndProject above the one hash aggregate: no global sort
     materialization, the k winners ship from each partition. Ties break
     on the ascending group key so both engines return identical rows."""

@@ -20,7 +20,6 @@ def write_nquads(
     path: str,
     canonical: bool = False,
     num_files: int | None = None,
-    compression: str | None = None,
 ) -> None:
     lines = triples.select(nquad_line_col().alias("value"))
     if num_files:
@@ -34,10 +33,7 @@ def write_nquads(
             lines = lines.repartition(num_files)
     if canonical:
         lines = lines.sortWithinPartitions("value")
-    writer = lines.write.mode("overwrite")
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.text(path)
+    lines.write.mode("overwrite").text(path)
 
 
 def read_nquads(spark: SparkSession, path: str) -> DataFrame:

@@ -98,6 +98,11 @@ def main(argv: list[str] | None = None) -> int:
         print("error: --deep-resolve needs entity linking; drop "
               "--no-resolve", file=sys.stderr)
         return 2
+    if args.previous and args.checkpoint:
+        print("error: --previous (incremental) and --checkpoint "
+              "(resumable chunks) are separate modes; pick one",
+              file=sys.stderr)
+        return 2
 
     from fcrepo3_rdf_extractor_spark.session import job_session
 
@@ -141,17 +146,9 @@ def main(argv: list[str] | None = None) -> int:
         clone_keys=args.clone_keys,
         dedup=(False if args.no_dedup
                else "local" if args.local_dedup else True),
-        num_chunks=args.num_chunks,
-        subject_buckets=args.buckets,
     )
 
     summary: dict = {"out": args.out}
-    if args.previous and args.checkpoint:
-        print("error: --previous (incremental) and --checkpoint "
-              "(resumable chunks) are separate modes; pick one",
-              file=sys.stderr)
-        spark.stop()
-        return 2
     if config.dedup == "local" and not args.latest_only:
         # the 'local' mode is distinct by construction only over unique
         # (repo, path) rows; a repeated file would emit duplicate quads
@@ -229,23 +226,19 @@ def main(argv: list[str] | None = None) -> int:
         )
         summary["layout"] = "code_state"
         stored = spark.read.parquet(args.out)
-        cur_ids = source.select(
-            "repo", "path", "commit",
-            F.sha2(F.coalesce(F.col("content"), F.lit("")), 256).alias(
-                "content_sha256"
-            ),
+        # the live files' identities, from their code:sha256 state rows
+        # (the same rule code_kg_plan uses), not a second content pass
+        cur_ids = stored.filter(F.col("pred") == "code:sha256").select(
+            "repo", "path", "commit", "content_sha256"
         ).distinct()
         triples = code_kg_from_state(stored, cur_ids, config)
     elif args.checkpoint:
         # chunking/wave sizing rides the shared ExtractConfig; the plan
         # itself is the code-KG plan with the FULL source as the
         # resolution/vendored basis
-        chunk_cfg = ExtractConfig(
-            num_chunks=config.num_chunks,
-            chunks_per_wave=config.chunks_per_wave,
-        )
         stats = run_resumable(
-            source, args.out, args.checkpoint, chunk_cfg,
+            source, args.out, args.checkpoint,
+            ExtractConfig(num_chunks=args.num_chunks),
             plan_fn=lambda wave: code_kg_plan(wave, config, corpus=source),
         )
         summary.update(stats)

@@ -74,6 +74,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--local", type=int, default=None,
                     help="run on local[N] instead of the submitted master")
     args = ap.parse_args(argv)
+    if args.previous and args.checkpoint:
+        print("error: --previous (incremental) and --checkpoint "
+              "(resumable chunks) are separate modes; pick one",
+              file=sys.stderr)
+        return 2
 
     from fcrepo3_rdf_extractor_spark.session import job_session
 
@@ -129,7 +134,6 @@ def main(argv: list[str] | None = None) -> int:
         skip_empty=args.skip_empty_literals,
         dedup=not args.no_dedup,
         num_chunks=args.num_chunks,
-        subject_buckets=args.buckets,
     )
 
     summary: dict = {"out": args.out}

@@ -587,8 +587,9 @@ def extract_select_paths(spark, base: Path) -> dict:
 def extract_paths_with_checkpoint(spark, base: Path) -> dict:
     """--paths with --checkpoint must refuse: the resumable run marks
     every chunk done, so a later full run on that checkpoint would skip
-    everything. The guard fires before extraction, so a one-row blob
-    table is enough."""
+    everything. --previous with --checkpoint must refuse too: the
+    incremental refresh would run and write no checkpoint. The guards
+    fire before extraction, so a one-row blob table is enough."""
     src = str(base / "src")
     spark.createDataFrame(
         [("r", "info:fedora/x:1", "c", "foxml", "<not-parsed/>")],
@@ -600,7 +601,14 @@ def extract_paths_with_checkpoint(spark, base: Path) -> dict:
         "--source", src, "--out", str(base / "triples"),
         "--paths", "info:fedora/x:1", "--checkpoint", cp, "--local", "2",
     ])
-    return {"refused": refused, "checkpoint": cp}
+    cp_prev = str(base / "cp_prev")
+    refused_prev = _run_job("extract.py", [
+        "--source", src, "--out", str(base / "triples_prev"),
+        "--previous", str(base / "prev"), "--checkpoint", cp_prev,
+        "--local", "2",
+    ])
+    return {"refused": refused, "checkpoint": cp,
+            "refused_prev": refused_prev, "checkpoint_prev": cp_prev}
 
 
 @scenario

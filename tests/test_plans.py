@@ -152,16 +152,6 @@ def test_simhash_neardup_no_nested_loop_join(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_range_join_no_nested_loop_join(spark):
-    """The bucketed-explode range join must hash-partition; a raw range
-    theta-join would plan BroadcastNestedLoopJoin."""
-    from fcrepo3_rdf_extractor_spark.queries import events_range_join
-
-    plan = _formatted(events_range_join(spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_graph_two_hop_single_extraction(spark):
     """Regression: the members/owners self-join re-ran scan+parse once
     per branch (MapInPandas appeared twice in the executed plan)."""
@@ -284,24 +274,6 @@ def test_containment_neardup_bounded_equi_join(spark):
     # re-tokenizes (no split() left anywhere in the final plan)
     assert plan.count("Scan ExistingRDD") >= 4, plan
     assert "split(" not in plan, plan
-
-
-def test_asof_skewed_no_whole_key_window(spark):
-    """The skew-split as-of join must never run a window partitioned by
-    the raw `by` key alone: every per-row carry-forward window spec
-    includes the _bucket sub-key (the hot key is split across buckets),
-    and the bucket-boundary stitch is an equi-join — no BNLJ, no
-    cartesian."""
-    from fcrepo3_rdf_extractor_spark.queries import events_asof_join_skewed
-
-    plan = _formatted(events_asof_join_skewed(spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    specs = [l for l in plan.splitlines() if "windowspecdefinition" in l]
-    assert specs, plan
-    row_specs = [s for s in specs if "_rv" in s]  # the per-row carries
-    assert row_specs, plan
-    assert all("_bucket" in s for s in row_specs), row_specs
 
 
 def test_dedup_substrings_two_level_span_table(spark):

@@ -1,5 +1,6 @@
 """Regrowth pins: every ``operators/`` module must serve a program path,
-and every job takes its session from ``session.job_session``.
+every job takes its session from ``session.job_session``, and every
+plan-config field is read somewhere.
 
 Reach starts at every function of the jobs (``jobs/``), of the plan,
 stream and source modules, of the end-to-end benchmark (``perfbench/``),
@@ -7,8 +8,8 @@ at ``__spark_entry__.entry`` and at the KG queries (``kg_*``, ``src_*``,
 ``graph_*`` in ``queries.py``), and follows the names each reached
 function uses, local imports included. The other registry queries,
 ``bench.py``, ``tools/`` and the tests are no roots. These Spark-free
-scans fail when an operator module has no reached function, or when a
-job builds its own SparkSession.
+scans fail when an operator module has no reached function, when a
+job builds its own SparkSession, or when a config field is only set.
 """
 
 from __future__ import annotations
@@ -23,7 +24,10 @@ ROOT_DIRS = ("jobs/", "perfbench/", *(f"{PKG}/{d}/" for d in ("plans", "streamin
 #: operator modules only the query registry's reference checks and the
 #: unit tests still reach; they go together with those checks and tests
 #: (ROADMAP). Shrinks only; nothing may join it.
-UNREACHED = {"multimodal", "relational", "similarity"}
+UNREACHED = {"multimodal", "similarity"}
+
+#: plan-config dataclasses whose every field must be read somewhere
+CONFIGS = ("ExtractConfig", "CodeKgConfig")
 
 
 def _module(rel: str) -> str:
@@ -97,3 +101,29 @@ def test_jobs_take_their_session_from_job_session():
         if "SparkSession.builder" in p.read_text()
     ]
     assert not forks, forks
+
+
+def test_every_config_field_is_read():
+    """A field of ``ExtractConfig`` / ``CodeKgConfig`` that the jobs set
+    but no plan reads is a dead option. Each needs an ``<expr>.<field>``
+    read in the package or ``jobs/``, outside its class body; a job's
+    own ``args.<flag>`` does not count."""
+    fields, reads = {}, set()
+    for path in [*(ROOT / PKG).rglob("*.py"), *(ROOT / "jobs").glob("*.py")]:
+        tree = ast.parse(path.read_text())
+        inside = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ClassDef) and n.name in CONFIGS:
+                fields |= {
+                    f"{n.name}.{a.target.id}": a.target.id
+                    for a in n.body if isinstance(a, ast.AnnAssign)
+                }
+                inside |= {id(m) for m in ast.walk(n)}
+        reads |= {
+            n.attr for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load)
+            and id(n) not in inside
+            and not (isinstance(n.value, ast.Name) and n.value.id == "args")
+        }
+    unread = [k for k, f in fields.items() if f not in reads]
+    assert fields and not unread, unread

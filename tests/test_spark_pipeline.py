@@ -862,8 +862,9 @@ def test_fuzzy_entity_match_tiebreak_and_block_bound(spark):
 
 def test_extract_cli_paths_refuse_checkpoint(cli_results):
     """A selected-paths resumable run would mark every chunk done and
-    poison the checkpoint for the next full run: refused up front, the
-    checkpoint left unwritten."""
+    poison the checkpoint for the next full run; an incremental run
+    with --checkpoint would write no checkpoint. Both are refused up
+    front, the checkpoint left unwritten."""
     from conftest import cli_art
 
     art = cli_art(cli_results, "extract_paths_with_checkpoint")
@@ -873,6 +874,10 @@ def test_extract_cli_paths_refuse_checkpoint(cli_results):
         refused["stderr"]
     )
     assert not pathlib.Path(art["checkpoint"]).exists()
+    refused_prev = art["refused_prev"]
+    assert refused_prev["rc"] == 2, refused_prev["stderr"][-2000:]
+    assert "separate modes; pick one" in refused_prev["stderr"]
+    assert not pathlib.Path(art["checkpoint_prev"]).exists()
 
 
 def test_extract_cli_select_paths(spark, cli_results):
