@@ -8,8 +8,8 @@ Layers:
 - ``operators/``: vectorized extraction, filters, dedup, canonicalization,
   SPARQL (``bgp``, ``sparql``), code-KG extraction, and the corpus-curation
   operators ``jobs/curate.py`` runs (minhash/containment/line dedup,
-  text quality, sampling); ``multimodal`` and ``similarity`` serve
-  only the query registry's reference checks
+  text quality, sampling); ``multimodal`` serves only the query
+  registry's reference checks
 - ``sources/``: source-table readers/synthesizers, N-Quads sink
 - ``plans/``: the end-to-end extraction and code-KG pipelines +
   checkpoint/resume

@@ -1,12 +1,12 @@
 """Near-duplicate detection for training-data pipelines: exact-hash,
-MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine.
+MinHash+LSH, SimHash, n-gram Jaccard.
 
 Design for 100 TB:
 - signatures (minhash/simhash/fingerprints) are computed scan-side with
   pure column expressions — no shuffle, no Python
 - candidate generation shuffles only (band_key, doc_id) pairs — a tiny
   projection of the corpus — and joins within LSH buckets, never all-pairs
-- verification (exact Jaccard / cosine) runs only on candidate pairs
+- verification (exact Jaccard) runs only on candidate pairs
 - hot buckets (boilerplate-heavy corpora) are bounded by ``max_bucket``:
   oversized buckets are dropped with a logged count rather than letting
   one degenerate key quadratically dominate the stage (the skew defense
@@ -359,46 +359,6 @@ def simhash_near_duplicates(
         pairs.withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
-    )
-
-
-# --- embedding near-dup -------------------------------------------------------
-
-
-def embedding_near_duplicates(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    sign_bits: int = 4,
-    max_bucket: int = 5000,
-) -> DataFrame:
-    """Embedding-cosine near-dup: LSH by the sign pattern of the first
-    ``sign_bits`` dimensions (a fixed, deterministic hyperplane family),
-    exact cosine within buckets. Vectors whose bucket exceeds
-    ``max_bucket`` fall back to... nothing here — they are dropped, same
-    skew policy as minhash_lsh_candidates."""
-    from .similarity import cosine_col
-
-    key = F.concat_ws(
-        "", *[(F.element_at("embedding", i + 1) > 0).cast("int").cast("string")
-              for i in range(sign_bits)]
-    )
-    from pyspark.sql import Window
-
-    with_key = emb.select("vec_id", "embedding", key.alias("bucket"))
-    # bucket bound as a window count on the self-join's own shuffle
-    # (same one-exchange shape as minhash_lsh_candidates)
-    bounded = (
-        with_key.withColumn("_n", F.count("*").over(Window.partitionBy("bucket")))
-        .filter(F.col("_n") <= max_bucket)
-        .drop("_n")
-    )
-    a = bounded.select("bucket", F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a"))
-    b = bounded.select("bucket", F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b"))
-    pairs = a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b"))
-    cos = cosine_col(F.col("e_a"), F.col("e_b"))
-    return (
-        pairs.select("id_a", "id_b", F.round(cos, 6).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
     )
 
 
@@ -842,83 +802,4 @@ def fileset_near_duplicates(
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
-    )
-
-
-# --- SemDeDup (cluster-bounded semantic dedup) -------------------------------
-
-
-def semdedup_pairs(
-    emb: DataFrame,
-    k: int = 4,
-    n_iter: int = 3,
-    threshold: float = 0.95,
-    max_bucket: int = 100_000,
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): semantic dedup with the pair search
-    BOUNDED BY k-means clusters — embed, cluster, and compare cosine
-    similarity only WITHIN a cluster; pairs above the threshold are
-    semantic duplicates, and the member to drop is the one CLOSER to the
-    cluster centroid (the paper keeps the farthest-from-centroid
-    example, arguing it is the least redundant with the rest of the
-    cluster). This differs from :func:`embedding_near_duplicates` in
-    both the candidate structure (trained data-dependent clusters vs a
-    fixed hyperplane-sign LSH family) and in shipping the keep POLICY,
-    not just the pairs.
-
-    Output: (id_a, id_b, centroid_id, cosine, drop_id), pairs canonical
-    id_a < id_b; drop_id = the member with the higher rounded
-    centroid-cosine, ties dropping the larger id.
-
-    Scale shape (10^9 vectors): the centroid table is metadata
-    (k * dim doubles) — `kmeans_train`'s bounded driver loop trains it,
-    `ivf_assign` assigns with a broadcast argmin (one partial-agg
-    shuffle); the self-join shuffles on centroid_id with the
-    ``max_bucket`` window bound riding the join's own exchange (a
-    cluster bigger than max_bucket means k was chosen too small for the
-    corpus — at SemDeDup's published scale the paper uses k in the tens
-    of thousands, keeping clusters ~10^4)."""
-    from pyspark.sql import Window
-
-    from .similarity import cosine_col, ivf_assign, kmeans_train
-
-    cents = kmeans_train(emb, k=k, n_iter=n_iter)
-    # per-vector (centroid_id, rounded centroid-cosine) — ivf_assign's
-    # broadcast argmin already computes exactly this
-    asg = ivf_assign(emb, cents).select(
-        "vec_id", "centroid_id", F.col("cosine").alias("cc")
-    )
-    vecs = emb.select("vec_id", "embedding").join(asg, "vec_id")
-    bounded = (
-        vecs.withColumn(
-            "_n", F.count("*").over(Window.partitionBy("centroid_id"))
-        )
-        .filter(F.col("_n") <= max_bucket)
-        .drop("_n")
-    )
-    a = bounded.select(
-        "centroid_id", F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("e_a"), F.col("cc").alias("cc_a"),
-    )
-    b = bounded.select(
-        "centroid_id", F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("e_b"), F.col("cc").alias("cc_b"),
-    )
-    pairs = (
-        a.join(b, "centroid_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", "centroid_id",
-            F.round(cosine_col(F.col("e_a"), F.col("e_b")), 6).alias("cosine"),
-            "cc_a", "cc_b",
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-    drop = (
-        F.when(F.col("cc_a") > F.col("cc_b"), F.col("id_a"))
-        .when(F.col("cc_a") < F.col("cc_b"), F.col("id_b"))
-        .otherwise(F.greatest("id_a", "id_b"))
-    )
-    return pairs.select(
-        "id_a", "id_b", "centroid_id", "cosine", drop.alias("drop_id")
     )

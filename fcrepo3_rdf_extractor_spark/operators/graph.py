@@ -1,8 +1,8 @@
 """Graph algorithms over pair tables: connected components for duplicate
 clustering.
 
-Near-dup detection (MinHash/SimHash/embedding LSH — operators/
-dedup_approx.py) emits PAIRS; a training-data pipeline needs CLUSTERS:
+Near-dup detection (MinHash/SimHash — operators/dedup_approx.py)
+emits PAIRS; a training-data pipeline needs CLUSTERS:
 "these 17 documents are one logical document, keep exactly one". That is
 connected components over the pair graph, then a deterministic canonical
 pick per component.

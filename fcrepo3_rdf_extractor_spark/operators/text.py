@@ -104,8 +104,7 @@ def chunk_windows(
     step: every document splits into windows of ``window`` tokens
     starting every ``stride`` tokens (overlap = window - stride), each
     chunk independently addressable by a deterministic
-    ``chunk_id = doc_id#idx``. Chunks feed the embedding + ANN surface
-    (operators/similarity.py); unlike :func:`..sampling.sequence_pack`
+    ``chunk_id = doc_id#idx``; unlike :func:`..sampling.sequence_pack`
     (which places docs into a CONCATENATED global token stream) chunking
     is per-document, so it needs no prefix sum — pure scan-side column
     arithmetic: stage the token array once (CollapseProject keeps the
@@ -971,8 +970,8 @@ def bpe_train(
     explodes to tokens exactly once (groupBy word -> counts), and every
     training round operates on the word-count table (10^5-10^7 rows at
     web scale), weighted by the counts. Each round = one pair-count
-    partial aggregation + a 1-row argmax collect (the bounded
-    driver-loop discipline of ``kmeans_train``) + one literal-replace
+    partial aggregation + a 1-row argmax collect (a bounded driver
+    loop) + one literal-replace
     projection; per-round state is localCheckpoint-ed so the plan never
     grows with the merge count. No Python ever touches row data."""
     words = (
@@ -1327,9 +1326,8 @@ def bm25_topk(
 ) -> DataFrame:
     """BM25 lexical retrieval (Robertson-Sparck Jones, the Lucene idf
     variant): score every document against a bag of query terms and
-    return the top k — the sparse-retrieval twin of the dense ANN
-    surface (operators/similarity.py), and with :func:`chunk_windows`
-    upstream, the classic RAG hybrid-retrieval pair.
+    return the top k — with :func:`chunk_windows` upstream, the classic
+    RAG lexical-retrieval pair.
 
     Scale shape: the exploded corpus filters to the QUERY TERMS first —
     an ``isin`` over driver-held literals, so the (doc, term) stream

@@ -85,8 +85,8 @@ def append_manifest(manifest_rows: DataFrame, checkpoint_dir: str) -> None:
 
 def write_layout_marker(out_dir: str, layout: str, **extra) -> None:
     """Record the table layout in ``_LAYOUT.json`` next to the data, so a
-    later ``--previous`` can be validated (local paths only; on an
-    object-store URI the write fails and is skipped)."""
+    later ``--previous`` (or a checkpoint resume) can be validated (local
+    paths only; on an object-store URI the write fails and is skipped)."""
     try:
         with open(os.path.join(out_dir, "_LAYOUT.json"), "w") as fh:
             json.dump({"layout": layout, **extra}, fh)

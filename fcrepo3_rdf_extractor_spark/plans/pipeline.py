@@ -36,7 +36,9 @@ from .checkpoint import (
     append_manifest,
     chunk_manifest,
     read_done_chunks,
+    read_layout_marker,
     with_chunk_id,
+    write_layout_marker,
 )
 
 
@@ -360,7 +362,14 @@ def run_resumable(
     writes ``out_dir/chunk_id=<k>/`` via dynamic partition overwrite
     (idempotent under retry/crash: a re-run of a chunk replaces exactly
     its own directory), then appends the wave's manifest rows. Resume
-    skips every chunk already present in the manifest."""
+    skips every chunk already present in the manifest.
+
+    Chunk ids only mean something under the ``num_chunks`` that wrote
+    them, so the first wave of a fresh checkpoint records it in the
+    checkpoint dir's ``_LAYOUT.json``; a resume under a different
+    ``num_chunks`` raises ``ValueError`` instead of skipping chunks whose
+    objects were never extracted. A checkpoint without the record
+    resumes unchecked."""
     config = config or ExtractConfig()
     if plan_fn is None:
         plan_fn = lambda wave_src: extract_plan(  # noqa: E731
@@ -371,6 +380,15 @@ def run_resumable(
 
     chunked = with_chunk_id(source, config.num_chunks)
     done = read_done_chunks(spark, checkpoint_dir)
+    recorded = (read_layout_marker(checkpoint_dir) or {}).get("num_chunks")
+    if recorded is not None and recorded != config.num_chunks:
+        raise ValueError(
+            f"checkpoint {checkpoint_dir} was written with num_chunks="
+            f"{recorded} but this run has num_chunks={config.num_chunks}; "
+            "chunk ids differ between the two, so a resume would skip "
+            "objects never extracted. Rerun with the recorded value or "
+            "start a fresh checkpoint"
+        )
     todo = sorted(set(range(config.num_chunks)) - done)
     waves = [
         todo[i : i + config.chunks_per_wave]
@@ -399,6 +417,10 @@ def run_resumable(
             .fillna(0, ["n_objects", "n_triples", "n_errors", "content_fingerprint"])
         )
         append_manifest(manifest, checkpoint_dir)
+        if recorded is None and not done:
+            # fresh checkpoint: the manifest append created its dir
+            recorded = config.num_chunks
+            write_layout_marker(checkpoint_dir, "chunk_manifest", num_chunks=recorded)
         stats["chunks_run"] += len(wave)
     return stats
 

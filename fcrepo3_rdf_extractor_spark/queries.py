@@ -857,7 +857,7 @@ def kg_set_ops_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =========================================================================
-# training-data pipeline ops: dedup / similarity / text / multimodal
+# training-data pipeline ops: dedup / text / multimodal
 # =========================================================================
 
 # shared SQL fragments mirroring operators/text.py exactly
@@ -958,68 +958,6 @@ def docs_distinct_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.text import distinct_token_stats
 
     return distinct_token_stats(_read(spark, sf_dir, "documents"))
-
-
-_COS_SQL = (
-    "list_sum([x[1]*x[2] for x in list_zip({a}, {b})]) / "
-    "(sqrt(list_sum([x*x for x in {a}])) * sqrt(list_sum([x*x for x in {b}])))"
-)
-
-
-@_q(
-    "docs_hybrid_rrf",
-    f"""WITH t AS (SELECT doc_id, {_WORDS} AS toks FROM documents),
-        lens AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS l, toks FROM t),
-        stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(l) AS avgdl
-                  FROM lens),
-        qh AS (SELECT doc_id, l, unnest(toks) AS term FROM lens),
-        qf AS (SELECT * FROM qh WHERE term IN ('hash', 'join', 'vector')),
-        tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf,
-                      max(l) AS l FROM qf GROUP BY doc_id, term),
-        dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df
-                  FROM tf GROUP BY term),
-        bm AS (SELECT doc_id,
-                      ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * tf * 2.2
-                      / (tf + 1.2 * (0.25 + 0.75 * l / avgdl)) AS s
-               FROM tf JOIN dfreq USING (term) CROSS JOIN stats),
-        lex AS (SELECT doc_id, round(sum(s), 4) AS score FROM bm
-                GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20),
-        q AS (SELECT embedding::DOUBLE[] AS q_emb FROM embeddings
-              WHERE vec_id = 0),
-        dense AS (SELECT vec_id AS doc_id,
-                         round({_COS_SQL.format(a='embedding::DOUBLE[]',
-                                                b='q_emb')}, 6) AS score
-                  FROM embeddings CROSS JOIN q WHERE vec_id <> 0
-                  ORDER BY score DESC, doc_id LIMIT 20),
-        lr AS (SELECT doc_id,
-                      row_number() OVER (ORDER BY score DESC, doc_id) AS r
-               FROM lex),
-        dr AS (SELECT doc_id,
-                      row_number() OVER (ORDER BY score DESC, doc_id) AS r
-               FROM dense),
-        c AS (SELECT doc_id, CAST(1.0 AS DOUBLE) / (60 + r) AS c FROM lr
-              UNION ALL
-              SELECT doc_id, CAST(1.0 AS DOUBLE) / (60 + r) FROM dr)
-       SELECT doc_id, round(sum(c), 6) AS rrf_score FROM c GROUP BY doc_id
-       ORDER BY rrf_score DESC, doc_id LIMIT 10""",
-)
-def docs_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval: BM25 lexical top-20 fused with dense cosine
-    top-20 by reciprocal-rank fusion (operators/similarity.py:
-    rrf_fuse). Both arms are the already-oracled retrieval operators;
-    fusion works on ranks only, so the arms' incomparable score scales
-    never matter. All windows and aggregations in the fusion run over
-    top-k-sized (metadata) lists."""
-    from .operators.similarity import brute_force_topk, rrf_fuse
-    from .operators.text import bm25_topk
-
-    lex = bm25_topk(
-        _read(spark, sf_dir, "documents"), ["hash", "join", "vector"], k=20
-    )
-    dense = brute_force_topk(
-        _read(spark, sf_dir, "embeddings"), query_id=0, k=20
-    ).select(F.col("vec_id").alias("doc_id"), F.col("cosine").alias("score"))
-    return rrf_fuse([lex, dense], k=10)
 
 
 @_q(
@@ -1383,99 +1321,6 @@ def docs_dedup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_substrings(
         _read(spark, sf_dir, "documents"), k=_SUBSTR_K, keep_first=True
     )
-
-
-# --- product quantization (m=8 subspaces x 8 dims, ksub=16 codewords) ----
-#
-# The squared-distance SQL is an explicit left-associative term chain so
-# the fold order (and therefore every fp rounding step) matches the
-# Spark operator's sequential F.aggregate fold — fp addition is not
-# associative and a different order could flip an argmin tie.
-
-_PQ_M, _PQ_D, _PQ_KSUB = 8, 8, 16
-
-
-def _pq_sqdist_sql(vexpr: str, wexpr: str, s: int) -> str:
-    terms = [
-        f"(CAST({vexpr}[{s*_PQ_D+i+1}] AS DOUBLE) - "
-        f"CAST({wexpr}[{s*_PQ_D+i+1}] AS DOUBLE)) * "
-        f"(CAST({vexpr}[{s*_PQ_D+i+1}] AS DOUBLE) - "
-        f"CAST({wexpr}[{s*_PQ_D+i+1}] AS DOUBLE))"
-        for i in range(_PQ_D)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _pq_codes_ctes() -> str:
-    dist_cols = ", ".join(
-        f"{_pq_sqdist_sql('e.embedding', 'c.embedding', s)} AS d{s}"
-        for s in range(_PQ_M)
-    )
-    per_s = [
-        f"s{s} AS (SELECT vec_id, CAST(cid AS INT) AS c{s} FROM ("
-        f"SELECT vec_id, cid, row_number() OVER "
-        f"(PARTITION BY vec_id ORDER BY d{s}, cid) AS rn"
-        f" FROM dists) WHERE rn = 1)"
-        for s in range(_PQ_M)
-    ]
-    return (
-        f"cb AS (SELECT vec_id AS cid, embedding FROM embeddings "
-        f"WHERE vec_id < {_PQ_KSUB}),\n"
-        f"dists AS (SELECT e.vec_id, c.cid, {dist_cols} "
-        f"FROM embeddings e CROSS JOIN cb c),\n" + ",\n".join(per_s)
-    )
-
-
-def _pq_encode_oracle() -> str:
-    joins = " ".join(f"JOIN s{s} USING (vec_id)" for s in range(1, _PQ_M))
-    cols = ", ".join(f"c{s}" for s in range(_PQ_M))
-    return (
-        f"WITH {_pq_codes_ctes()}\n"
-        f"SELECT s0.vec_id, {cols} FROM s0 {joins}"
-    )
-
-
-def _pq_topk_oracle() -> str:
-    qd_cols = ", ".join(
-        f"{_pq_sqdist_sql('q.embedding', 'c.embedding', s)} AS d{s}"
-        for s in range(_PQ_M)
-    )
-    joins = " ".join(f"JOIN s{s} USING (vec_id)" for s in range(1, _PQ_M))
-    adist = " + ".join(
-        f"(SELECT d{s} FROM qd WHERE qd.cid = codes.c{s})" for s in range(_PQ_M)
-    )
-    return (
-        f"WITH {_pq_codes_ctes()},\n"
-        f"q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),\n"
-        f"qd AS (SELECT c.cid, {qd_cols} FROM cb c CROSS JOIN q),\n"
-        f"codes AS (SELECT s0.vec_id, "
-        f"{', '.join(f'c{s}' for s in range(_PQ_M))} FROM s0 {joins})\n"
-        f"SELECT vec_id, round({adist}, 6) AS adist FROM codes "
-        f"WHERE vec_id != 0 ORDER BY adist, vec_id LIMIT 10"
-    )
-
-
-@_q("emb_pq_encode", _pq_encode_oracle())
-def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization encoding (Jegou et al. 2011): 64-dim float
-    vectors -> 8 codes, codebooks = subvectors of the 16 lowest-id
-    vectors (deterministic stand-in for per-subspace k-means)."""
-    from .operators.similarity import pq_codebooks, pq_encode
-
-    emb = _read(spark, sf_dir, "embeddings")
-    books = pq_codebooks(emb, m=_PQ_M, ksub=_PQ_KSUB)
-    return pq_encode(emb, books)
-
-
-@_q("emb_pq_topk", _pq_topk_oracle())
-def emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ asymmetric-distance top-10 for query vector 0: distance-table
-    lookups over the codes only — the memory-compressed ANN scale path."""
-    from .operators.similarity import pq_codebooks, pq_topk
-
-    emb = _read(spark, sf_dir, "embeddings")
-    books = pq_codebooks(emb, m=_PQ_M, ksub=_PQ_KSUB)
-    return pq_topk(emb, books, query_id=0, k=10)
 
 
 _MINHASH_SQL = ", ".join(
@@ -1951,449 +1796,6 @@ def kg_dedup_exact_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_linenumber").cast("long").alias("witness"),
     )
     return dedup_exact_salted(li, key=["subj", "obj_value"], salt_buckets=16)
-
-
-# --- embeddings -----------------------------------------------------------
-
-@_q(
-    "emb_cosine_topk",
-    f"""WITH q AS (SELECT embedding::DOUBLE[] AS q_emb FROM embeddings WHERE vec_id = 0),
-        scored AS (
-          SELECT vec_id,
-                 round({_COS_SQL.format(a='embedding::DOUBLE[]', b='q_emb')}, 6) AS cosine
-          FROM embeddings CROSS JOIN q WHERE vec_id <> 0)
-        SELECT vec_id, cosine FROM scored ORDER BY cosine DESC, vec_id ASC LIMIT 10""",
-)
-def emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import brute_force_topk
-
-    return brute_force_topk(_read(spark, sf_dir, "embeddings"), query_id=0, k=10)
-
-
-_BUCKET_SQL = (
-    "concat(CAST((embedding[1] > 0) AS INT), CAST((embedding[2] > 0) AS INT), "
-    "CAST((embedding[3] > 0) AS INT), CAST((embedding[4] > 0) AS INT))"
-)
-
-
-@_q(
-    "emb_lsh_topk",
-    f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, {_BUCKET_SQL} AS bucket
-                   FROM embeddings),
-        q AS (SELECT emb AS q_emb, bucket AS q_bucket FROM e WHERE vec_id = 0),
-        scored AS (
-          SELECT vec_id, round({_COS_SQL.format(a='emb', b='q_emb')}, 6) AS cosine
-          FROM e JOIN q ON e.bucket = q.q_bucket WHERE vec_id <> 0)
-        SELECT vec_id, cosine FROM scored ORDER BY cosine DESC, vec_id ASC LIMIT 10""",
-)
-def emb_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import lsh_topk
-
-    return lsh_topk(_read(spark, sf_dir, "embeddings"), query_id=0, k=10, sign_bits=4)
-
-
-def _multiprobe_flips_sql(sign_bits: int = 4) -> str:
-    rows = ["SELECT q_bucket AS b FROM q"]
-    for i in range(sign_bits):
-        rows.append(
-            f"SELECT substr(q_bucket, 1, {i}) || "
-            f"(CASE substr(q_bucket, {i + 1}, 1) WHEN '1' THEN '0' ELSE '1' END) || "
-            f"substr(q_bucket, {i + 2}) FROM q"
-        )
-    return "\n          UNION ALL ".join(rows)
-
-
-@_q(
-    "emb_lsh_topk_multiprobe",
-    f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, {_BUCKET_SQL} AS bucket
-                   FROM embeddings),
-        q AS (SELECT emb AS q_emb, bucket AS q_bucket FROM e WHERE vec_id = 0),
-        probes AS (
-          {_multiprobe_flips_sql(4)}),
-        scored AS (
-          SELECT e.vec_id, round({_COS_SQL.format(a='e.emb', b='q.q_emb')}, 6) AS cosine
-          FROM e JOIN probes ON e.bucket = probes.b CROSS JOIN q
-          WHERE e.vec_id <> 0)
-        SELECT vec_id, cosine FROM scored ORDER BY cosine DESC, vec_id ASC LIMIT 10""",
-)
-def emb_lsh_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe LSH ANN: query bucket + all Hamming-radius-1 buckets
-    (the recall path past single-bucket LSH's ceiling; probes broadcast,
-    scan partition-prunable by bucket at scale)."""
-    from .operators.similarity import lsh_topk_multiprobe
-
-    return lsh_topk_multiprobe(
-        _read(spark, sf_dir, "embeddings"), query_id=0, k=10, sign_bits=4, radius=1
-    )
-
-
-@_q(
-    "emb_near_duplicates",
-    f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, {_BUCKET_SQL} AS bucket
-                   FROM embeddings),
-        pairs AS (
-          SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                 round({_COS_SQL.format(a='a.emb', b='b.emb')}, 6) AS cosine
-          FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-        SELECT id_a, id_b, cosine FROM pairs WHERE cosine >= 0.45""",
-)
-def emb_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup_approx import embedding_near_duplicates
-
-    return embedding_near_duplicates(
-        _read(spark, sf_dir, "embeddings"), threshold=0.45, sign_bits=4
-    )
-
-
-@_q(
-    "emb_ivf_assign",
-    f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        c AS (SELECT vec_id AS centroid_id, emb AS centroid FROM e WHERE vec_id < 8),
-        scored AS (
-          SELECT vec_id, centroid_id,
-                 {_COS_SQL.format(a='emb', b='centroid')} AS cos
-          FROM e CROSS JOIN c),
-        ranked AS (
-          SELECT vec_id, centroid_id, cos,
-                 row_number() OVER (PARTITION BY vec_id
-                                    ORDER BY cos DESC, centroid_id) AS rn
-          FROM scored)
-        SELECT vec_id, centroid_id, round(cos, 6) AS cosine FROM ranked WHERE rn = 1""",
-)
-def emb_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import ivf_assign
-
-    emb = _read(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-    )
-    return ivf_assign(emb, centroids)
-
-
-@_q(
-    "emb_ivf_topk",
-    f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        c AS (SELECT vec_id AS centroid_id, emb AS centroid FROM e WHERE vec_id < 8),
-        q AS (SELECT emb AS q_emb FROM e WHERE vec_id = 0),
-        assign AS (
-          SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, c.centroid_id,
-                   row_number() OVER (PARTITION BY e.vec_id
-                     ORDER BY {_COS_SQL.format(a='e.emb', b='c.centroid')} DESC,
-                              c.centroid_id) AS rn
-            FROM e CROSS JOIN c) t WHERE rn = 1),
-        probe AS (
-          SELECT centroid_id FROM (
-            SELECT c.centroid_id,
-                   row_number() OVER (
-                     ORDER BY {_COS_SQL.format(a='c.centroid', b='q.q_emb')} DESC,
-                              c.centroid_id) AS rn
-            FROM c CROSS JOIN q) t WHERE rn <= 2),
-        scored AS (
-          SELECT e.vec_id,
-                 round({_COS_SQL.format(a='e.emb', b='q.q_emb')}, 6) AS cosine
-          FROM e
-          JOIN assign a ON e.vec_id = a.vec_id
-          JOIN probe p ON a.centroid_id = p.centroid_id
-          CROSS JOIN q
-          WHERE e.vec_id <> 0)
-        SELECT vec_id, cosine FROM scored ORDER BY cosine DESC, vec_id ASC LIMIT 10""",
-)
-def emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full IVF search path: nprobe=2 centroid pruning + in-cluster
-    brute force (assignment inline; partitioned-by-centroid at scale)."""
-    from .operators.similarity import ivf_topk
-
-    emb = _read(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-    )
-    return ivf_topk(emb, centroids, query_id=0, k=10, nprobe=2)
-
-
-def _ivfpq_topk_oracle() -> str:
-    """IVF-PQ: the IVF assignment/probe CTEs (deterministic centroids =
-    vec_id < 8, the emb_ivf_topk fragments verbatim) gate which vectors
-    the PQ code CTEs' ADC distance ranks."""
-    qd_cols = ", ".join(
-        f"{_pq_sqdist_sql('qv.embedding', 'c2.embedding', s)} AS d{s}"
-        for s in range(_PQ_M)
-    )
-    joins = " ".join(f"JOIN s{s} USING (vec_id)" for s in range(1, _PQ_M))
-    adist = " + ".join(
-        f"(SELECT d{s} FROM qd WHERE qd.cid = codes.c{s})" for s in range(_PQ_M)
-    )
-    cos_ac = _COS_SQL.format(a="e2.emb", b="c.centroid")
-    cos_cq = _COS_SQL.format(a="c.centroid", b="q.q_emb")
-    return (
-        f"WITH {_pq_codes_ctes()},\n"
-        f"e2 AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),\n"
-        f"c AS (SELECT vec_id AS centroid_id, emb AS centroid FROM e2 "
-        f"WHERE vec_id < 8),\n"
-        f"q AS (SELECT emb AS q_emb FROM e2 WHERE vec_id = 0),\n"
-        f"assign AS (SELECT vec_id, centroid_id FROM ("
-        f"SELECT e2.vec_id, c.centroid_id, row_number() OVER ("
-        f"PARTITION BY e2.vec_id ORDER BY {cos_ac} DESC, c.centroid_id) AS rn "
-        f"FROM e2 CROSS JOIN c) t WHERE rn = 1),\n"
-        f"probe AS (SELECT centroid_id FROM ("
-        f"SELECT c.centroid_id, row_number() OVER ("
-        f"ORDER BY {cos_cq} DESC, c.centroid_id) AS rn "
-        f"FROM c CROSS JOIN q) t WHERE rn <= 2),\n"
-        f"cand AS (SELECT a.vec_id FROM assign a JOIN probe USING (centroid_id)),\n"
-        f"qv AS (SELECT embedding FROM embeddings WHERE vec_id = 0),\n"
-        f"qd AS (SELECT c2.cid, {qd_cols} FROM cb c2 CROSS JOIN qv),\n"
-        f"codes AS (SELECT s0.vec_id, "
-        f"{', '.join(f'c{s}' for s in range(_PQ_M))} FROM s0 {joins})\n"
-        f"SELECT vec_id, round({adist}, 6) AS adist "
-        f"FROM codes JOIN cand USING (vec_id) "
-        f"WHERE vec_id != 0 ORDER BY adist, vec_id LIMIT 10"
-    )
-
-
-@_q("emb_ivfpq_topk", _ivfpq_topk_oracle())
-def emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ search (IVFADC, Jegou et al. 2011 §IV): coarse-quantizer
-    pruning to nprobe=2 centroids' vectors, then PQ asymmetric-distance
-    ranking over their m-byte codes — the architecture that serves
-    billion-vector ANN from memory. Composes the oracled emb_ivf_topk
-    pruning with the oracled emb_pq_topk scoring; no full-precision
-    vector is touched at search time."""
-    from .operators.similarity import ivfpq_topk, pq_codebooks
-
-    emb = _read(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
-    books = pq_codebooks(emb, m=_PQ_M, ksub=_PQ_KSUB)
-    return ivfpq_topk(emb, centroids, books, query_id=0, k=10, nprobe=2)
-
-
-def _kmeans_ctes(
-    k: int = 4,
-    n_iter: int = 3,
-    dim: int = 64,
-    source: str = "SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings",
-) -> str:
-    """CTE body unrolling the exact fixed-iteration Lloyd's recurrence
-    that operators.similarity.kmeans_train runs — init = k lowest-id
-    vectors, cosine argmin with lowest-cid tie-break, element-wise
-    mean, empty clusters keep their previous centroid — one CTE block
-    per iteration. Shared by the kmeans, IVF-recall, and SemDeDup
-    oracles; ``source`` must yield (vec_id, emb DOUBLE[])."""
-    parts = [
-        f"""e AS ({source}),
- u AS (SELECT unnest(generate_series(1, {dim})) AS pos),
- c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid,
-               emb AS centroid
-        FROM (SELECT vec_id, emb FROM e ORDER BY vec_id LIMIT {k}))"""
-    ]
-    for t in range(1, n_iter + 1):
-        p = t - 1
-        cos = _COS_SQL.format(a="e.emb", b="c.centroid")
-        parts.append(f"""
- a{t} AS (SELECT vec_id, cid FROM (
-            SELECT e.vec_id, c.cid,
-                   row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY {cos} DESC, c.cid) AS rn
-            FROM e CROSS JOIN c{p} c) t WHERE rn = 1),
- m{t} AS (SELECT a.cid, u.pos, avg(e.emb[u.pos]) AS val
-          FROM e JOIN a{t} a USING (vec_id) CROSS JOIN u
-          GROUP BY a.cid, u.pos),
- n{t} AS (SELECT cid, list(val ORDER BY pos) AS centroid FROM m{t} GROUP BY cid),
- c{t} AS (SELECT c.cid, coalesce(n.centroid, c.centroid) AS centroid
-          FROM c{p} c LEFT JOIN n{t} n USING (cid))""")
-    return ",".join(parts)
-
-
-def _kmeans_oracle(k: int = 4, n_iter: int = 3, dim: int = 64) -> str:
-    return (
-        "WITH " + _kmeans_ctes(k, n_iter, dim)
-        + f"""
-SELECT cid AS centroid_id, CAST(u.pos - 1 AS INT) AS pos,
-       round(centroid[u.pos], 6) AS val
-FROM c{n_iter} CROSS JOIN u"""
-    )
-
-
-@_q("emb_kmeans_train", _kmeans_oracle())
-def emb_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed k-means centroid training (the IVF trainer): driver-
-    held literal centroids, codegen argmin assignment with no join or
-    window, one partial-agg groupBy per iteration. Output flattened to
-    (centroid_id, pos, val) long format — the oracle contract hashes
-    scalars, not arrays."""
-    from .operators.similarity import kmeans_train
-
-    emb = _read(spark, sf_dir, "embeddings")
-    cents = kmeans_train(emb, k=4, n_iter=3)
-    return cents.select(
-        "centroid_id", F.posexplode("centroid").alias("pos", "val")
-    ).select("centroid_id", "pos", F.round("val", 6).alias("val"))
-
-
-def _pq_recall_oracle(n_iter: int = 2, nq: int = 8, k: int = 10) -> str:
-    """Unroll the TRAINED-codebook PQ recall harness: per-subspace L2
-    Lloyd's (init = subvectors of the ksub lowest-id vectors, argmin
-    with lowest-cid tie-break, element-wise mean, empty clusters keep
-    their previous codeword — exactly pq_train_codebooks), then encode,
-    per-query ADC distance tables, and recall@k of ADC top-k vs exact
-    full-precision L2 top-k. Every distance is an explicit
-    left-associative term chain so each fp rounding step matches the
-    Spark operator's sequential fold."""
-    m, d, ksub = _PQ_M, _PQ_D, _PQ_KSUB
-
-    def dist(vexpr: str, s: int) -> str:
-        off = s * d
-        return " + ".join(
-            f"({vexpr}[{off+i+1}] - c.c[{i+1}]) * ({vexpr}[{off+i+1}] - c.c[{i+1}])"
-            for i in range(d)
-        )
-
-    # every CTE is MATERIALIZED: the per-subspace chains reference their
-    # predecessors twice, and DuckDB's default inlining re-evaluates the
-    # whole upstream chain per reference — exponential in n_iter (the
-    # un-materialized form spun for minutes; materialized runs in ~1s)
-    blocks = [
-        "e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings)",
-        f"u8 AS MATERIALIZED (SELECT unnest(generate_series(1, {d})) AS pos)",
-        f"qp AS MATERIALIZED (SELECT vec_id AS query_id, emb AS q_emb FROM e WHERE vec_id < {nq})",
-    ]
-    for s in range(m):
-        off = s * d
-        blocks.append(
-            f"c{s}x0 AS MATERIALIZED (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT)"
-            f" AS cid, emb[{off+1}:{off+d}] AS c"
-            f" FROM (SELECT vec_id, emb FROM e ORDER BY vec_id LIMIT {ksub}))"
-        )
-        for t in range(1, n_iter + 1):
-            p = t - 1
-            blocks += [
-                f"a{s}x{t} AS MATERIALIZED (SELECT vec_id, cid FROM ("
-                f"SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id"
-                f" ORDER BY ({dist('e.emb', s)}), c.cid) AS rn"
-                f" FROM e CROSS JOIN c{s}x{p} c) t WHERE rn = 1)",
-                f"m{s}x{t} AS MATERIALIZED (SELECT a.cid, u8.pos, avg(e.emb[{off} + u8.pos]) AS val"
-                f" FROM e JOIN a{s}x{t} a USING (vec_id) CROSS JOIN u8"
-                f" GROUP BY a.cid, u8.pos)",
-                f"n{s}x{t} AS MATERIALIZED (SELECT cid, list(val ORDER BY pos) AS c"
-                f" FROM m{s}x{t} GROUP BY cid)",
-                f"c{s}x{t} AS MATERIALIZED (SELECT c.cid, coalesce(n.c, c.c) AS c"
-                f" FROM c{s}x{p} c LEFT JOIN n{s}x{t} n USING (cid))",
-            ]
-        blocks += [
-            f"code{s} AS MATERIALIZED (SELECT vec_id, CAST(cid AS INT) AS c{s} FROM ("
-            f"SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id"
-            f" ORDER BY ({dist('e.emb', s)}), c.cid) AS rn"
-            f" FROM e CROSS JOIN c{s}x{n_iter} c) t WHERE rn = 1)",
-            f"qd{s} AS MATERIALIZED (SELECT q.query_id, c.cid, ({dist('q.q_emb', s)}) AS d"
-            f" FROM qp q CROSS JOIN c{s}x{n_iter} c)",
-        ]
-    code_joins = " ".join(f"JOIN code{s} USING (vec_id)" for s in range(1, m))
-    blocks.append(
-        f"codes AS MATERIALIZED (SELECT code0.vec_id, "
-        + ", ".join(f"c{s}" for s in range(m))
-        + f" FROM code0 {code_joins})"
-    )
-    qd_joins = " ".join(
-        f"JOIN qd{s} ON qd{s}.cid = codes.c{s} AND qd{s}.query_id = qd0.query_id"
-        for s in range(1, m)
-    )
-    adist = " + ".join(f"qd{s}.d" for s in range(m))
-    full = " + ".join(
-        f"(e.emb[{i+1}] - q.q_emb[{i+1}]) * (e.emb[{i+1}] - q.q_emb[{i+1}])"
-        for i in range(m * d)
-    )
-    blocks += [
-        f"ad AS MATERIALIZED (SELECT qd0.query_id, codes.vec_id, {adist} AS adist"
-        f" FROM codes JOIN qd0 ON qd0.cid = codes.c0 {qd_joins})",
-        f"apx AS MATERIALIZED (SELECT query_id, vec_id FROM ("
-        f"SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id"
-        f" ORDER BY adist, vec_id) AS rn FROM ad WHERE vec_id <> query_id) t"
-        f" WHERE rn <= {k})",
-        f"ex AS MATERIALIZED (SELECT query_id, vec_id FROM ("
-        f"SELECT q.query_id, e.vec_id, row_number() OVER (PARTITION BY q.query_id"
-        f" ORDER BY ({full}), e.vec_id) AS rn"
-        f" FROM e CROSS JOIN qp q WHERE e.vec_id <> q.query_id) t WHERE rn <= {k})",
-        "hits AS MATERIALIZED (SELECT query_id, CAST(count(*) AS BIGINT) AS n_hits"
-        " FROM ex JOIN apx USING (query_id, vec_id) GROUP BY query_id)",
-    ]
-    return (
-        "WITH " + ",\n ".join(blocks)
-        + f"""
-SELECT qp.query_id, coalesce(n_hits, 0) AS n_hits,
-       round(coalesce(n_hits, 0) / {float(k)}, 6) AS recall
-FROM qp LEFT JOIN hits USING (query_id)"""
-    )
-
-
-@_q("emb_pq_recall", _pq_recall_oracle())
-def emb_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of TRAINED-codebook PQ asymmetric-distance search vs
-    exact full-precision L2 brute force over an 8-query panel — the
-    quality gate that makes m/ksub/n_iter measured choices instead of
-    guesses. Codebooks come from per-subspace L2 k-means
-    (operators/similarity.py:pq_train_codebooks); the oracle unrolls
-    all 8 subspace recurrences as CTE chains."""
-    from .operators.similarity import pq_recall
-
-    return pq_recall(
-        _read(spark, sf_dir, "embeddings"),
-        n_queries=8, k=10, m=_PQ_M, ksub=_PQ_KSUB, n_iter=2,
-    )
-
-
-def _ivf_recall_oracle(
-    k: int = 10, kc: int = 4, n_iter: int = 3, nprobe: int = 2, nq: int = 8
-) -> str:
-    cos_ec = _COS_SQL.format(a="e.emb", b="c.centroid")
-    cos_cq = _COS_SQL.format(a="c.centroid", b="q.q_emb")
-    cos_eq = _COS_SQL.format(a="e.emb", b="q.q_emb")
-    return f"""WITH {_kmeans_ctes(kc, n_iter, 64)},
- cent AS (SELECT cid AS centroid_id, centroid FROM c{n_iter}),
- asg AS (SELECT vec_id, centroid_id FROM (
-     SELECT e.vec_id, c.centroid_id,
-            row_number() OVER (PARTITION BY e.vec_id
-                               ORDER BY {cos_ec} DESC, c.centroid_id) AS rn
-     FROM e CROSS JOIN cent c) t WHERE rn = 1),
- qp AS (SELECT vec_id AS query_id, emb AS q_emb FROM e WHERE vec_id < {nq}),
- probe AS (SELECT query_id, centroid_id FROM (
-     SELECT q.query_id, c.centroid_id,
-            row_number() OVER (PARTITION BY q.query_id
-                               ORDER BY {cos_cq} DESC, c.centroid_id) AS rn
-     FROM cent c CROSS JOIN qp q) t WHERE rn <= {nprobe}),
- apx AS (SELECT query_id, vec_id FROM (
-     SELECT p.query_id, a.vec_id,
-            row_number() OVER (PARTITION BY p.query_id
-                               ORDER BY {cos_eq} DESC, a.vec_id) AS rn
-     FROM asg a JOIN probe p USING (centroid_id)
-     JOIN e ON e.vec_id = a.vec_id JOIN qp q ON q.query_id = p.query_id
-     WHERE a.vec_id <> p.query_id) t WHERE rn <= {k}),
- ex AS (SELECT query_id, vec_id FROM (
-     SELECT q.query_id, e.vec_id,
-            row_number() OVER (PARTITION BY q.query_id
-                               ORDER BY {cos_eq} DESC, e.vec_id) AS rn
-     FROM e CROSS JOIN qp q WHERE e.vec_id <> q.query_id) t WHERE rn <= {k}),
- hits AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_hits
-          FROM ex JOIN apx USING (query_id, vec_id) GROUP BY query_id)
- SELECT qp.query_id, coalesce(n_hits, 0) AS n_hits,
-        round(coalesce(n_hits, 0) / {float(k)}, 6) AS recall
- FROM qp LEFT JOIN hits USING (query_id)"""
-
-
-@_q("emb_ivf_recall", _ivf_recall_oracle())
-def emb_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of IVF search (kmeans_train coarse centroids, nprobe=2)
-    vs exact cosine brute force over an 8-query panel — the IVF arm of
-    the ANN quality gate; the recall-vs-nprobe curve is where nprobe
-    gets chosen. Oracle = the kmeans CTE unroll + assignment + probe +
-    both ranking windows."""
-    from .operators.similarity import ivf_recall
-
-    return ivf_recall(
-        _read(spark, sf_dir, "embeddings"),
-        n_queries=8, k=10, kc=4, n_iter=3, nprobe=2,
-    )
 
 
 # --- multimodal -------------------------------------------------------------
@@ -3723,71 +3125,6 @@ def docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.text import perplexity_buckets
 
     return perplexity_buckets(_read(spark, sf_dir, "documents"))
-
-
-# SemDeDup over the embeddings augmented with PLANTED semantic dups:
-# vec_id < 40 get a copy at vec_id + 100000 whose first coordinate is
-# perturbed by +0.1 (cosine ~0.9999 to its source, far above any organic
-# pair — the testdata embeddings are near-orthogonal, max pairwise
-# cosine 0.479). Both engines derive the augmentation identically.
-_SEMDEDUP_AUG_SQL = """SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-        UNION ALL
-        SELECT vec_id + 100000,
-               list_prepend(emb0[1] + 0.1, emb0[2:64])
-        FROM (SELECT vec_id, embedding::DOUBLE[] AS emb0 FROM embeddings)
-        WHERE vec_id < 40"""
-
-
-def _semdedup_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    planted = emb.filter(F.col("vec_id") < 40).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("embedding", 1) + F.lit(0.1)),
-            F.slice("embedding", 2, 63),
-        ).alias("embedding"),
-    )
-    return emb.unionByName(planted)
-
-
-def _semdedup_oracle(k: int = 4, n_iter: int = 3, threshold: float = 0.9) -> str:
-    cos_ec = _COS_SQL.format(a="e.emb", b="c.centroid")
-    cos_ab = _COS_SQL.format(a="ea.emb", b="eb.emb")
-    return f"""WITH {_kmeans_ctes(k, n_iter, 64, source=_SEMDEDUP_AUG_SQL)},
- cent AS (SELECT cid AS centroid_id, centroid FROM c{n_iter}),
- asg AS (SELECT vec_id, centroid_id, round(cc, 6) AS cc FROM (
-     SELECT e.vec_id, c.centroid_id, {cos_ec} AS cc,
-            row_number() OVER (PARTITION BY e.vec_id
-                               ORDER BY {cos_ec} DESC, c.centroid_id) AS rn
-     FROM e CROSS JOIN cent c) t WHERE rn = 1),
- pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.centroid_id,
-                  a.cc AS cc_a, b.cc AS cc_b
-           FROM asg a JOIN asg b USING (centroid_id)
-           WHERE a.vec_id < b.vec_id),
- scored AS (SELECT id_a, id_b, centroid_id, cc_a, cc_b,
-                   round({cos_ab}, 6) AS cosine
-            FROM pairs JOIN e ea ON ea.vec_id = id_a
-                       JOIN e eb ON eb.vec_id = id_b)
- SELECT id_a, id_b, centroid_id, cosine,
-        CASE WHEN cc_a > cc_b THEN id_a
-             WHEN cc_a < cc_b THEN id_b
-             ELSE greatest(id_a, id_b) END AS drop_id
- FROM scored WHERE cosine >= {threshold}"""
-
-
-@_q("emb_semdedup", _semdedup_oracle())
-def emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (cluster-bounded semantic dedup) over the planted-dup
-    augmentation: trained k-means clusters bound the pair search, and
-    the keep policy drops the member closer to its centroid. See
-    operators/dedup_approx.py:semdedup_pairs for the scale shape."""
-    from .operators.dedup_approx import semdedup_pairs
-
-    return semdedup_pairs(
-        _semdedup_aug(spark, sf_dir), k=4, n_iter=3, threshold=0.9
-    )
 
 
 @_q(

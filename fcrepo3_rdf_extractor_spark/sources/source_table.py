@@ -12,16 +12,10 @@ bench runs, retries, and the DuckDB oracle all see identical data.
 
 from __future__ import annotations
 
-import pathlib
-import urllib.parse
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SOURCE_COLUMNS = ["repo", "path", "commit", "lang", "content"]
-
-_REFERENCE_RES = pathlib.Path("/root/reference/src/test/resources")
-_FIXTURE_PIDS = ["ct:85", "ct:86", "ct:88", "ct:90", "si-user:10", "si:1020", "si:1119"]
 
 
 def read_source(spark: SparkSession, location: str, fmt: str = "parquet") -> DataFrame:
@@ -57,18 +51,6 @@ def read_source(spark: SparkSession, location: str, fmt: str = "parquet") -> Dat
     else:
         df = spark.read.format(fmt).load(location)
     return df.select(*[c for c in SOURCE_COLUMNS if c in df.columns])
-
-
-def fixture_source(spark: SparkSession) -> DataFrame:
-    """The reference's 7 sample objects as a source table (data-only read
-    of the read-only fixture store)."""
-    rows = []
-    for pid in _FIXTURE_PIDS:
-        blob_key = "info:fedora/" + pid
-        path = urllib.parse.quote(blob_key, safe="")
-        content = (_REFERENCE_RES / "objectStore" / path).read_text()
-        rows.append(("sidora-sample", blob_key, "fixture-commit-0", "foxml", content))
-    return spark.createDataFrame(rows, ", ".join(f"{c} string" for c in SOURCE_COLUMNS))
 
 
 # --- deterministic FOXML synthesis from the TPC-H-ish testdata -------------

@@ -236,11 +236,16 @@ def main(argv: list[str] | None = None) -> int:
         # chunking/wave sizing rides the shared ExtractConfig; the plan
         # itself is the code-KG plan with the FULL source as the
         # resolution/vendored basis
-        stats = run_resumable(
-            source, args.out, args.checkpoint,
-            ExtractConfig(num_chunks=args.num_chunks),
-            plan_fn=lambda wave: code_kg_plan(wave, config, corpus=source),
-        )
+        try:
+            stats = run_resumable(
+                source, args.out, args.checkpoint,
+                ExtractConfig(num_chunks=args.num_chunks),
+                plan_fn=lambda wave: code_kg_plan(wave, config, corpus=source),
+            )
+        except ValueError as e:  # --num-chunks differs from the checkpoint's
+            print(f"error: {e}", file=sys.stderr)
+            spark.stop()
+            return 2
         summary.update(stats)
         summary["checkpoint"] = args.checkpoint
         # marked so a later --previous pointing here is rejected BY

@@ -176,10 +176,15 @@ def main(argv: list[str] | None = None) -> int:
         stored = spark.read.parquet(args.out)
         extracted = dedup_mixed(stored) if config.dedup else stored
     elif args.checkpoint:
-        stats = run_resumable(
-            source, args.out, args.checkpoint, config,
-            aliases=aliases, ds_store=ds_store,
-        )
+        try:
+            stats = run_resumable(
+                source, args.out, args.checkpoint, config,
+                aliases=aliases, ds_store=ds_store,
+            )
+        except ValueError as e:  # --num-chunks differs from the checkpoint's
+            print(f"error: {e}", file=sys.stderr)
+            spark.stop()
+            return 2
         summary.update(stats)
         summary["checkpoint"] = args.checkpoint
         # per-wave dedup keeps per-document semantics only without dedup;

@@ -526,9 +526,7 @@ def extract_then_query(spark, base: Path) -> dict:
     """The full product journey: bulk-extract the reference's 7 fixture
     objects with jobs/extract.py, then BGP-query the materialized
     triples table with jobs/query.py."""
-    from fcrepo3_rdf_extractor_spark.sources.source_table import (
-        fixture_source,
-    )
+    from conftest import fixture_source
 
     src = str(base / "src")
     fixture_source(spark).write.parquet(src)
@@ -555,9 +553,7 @@ def extract_select_paths(spark, base: Path) -> dict:
     --paths-file, plus the guard: --paths with --previous must refuse
     (the incremental anti-join would read unselected objects as
     deleted)."""
-    from fcrepo3_rdf_extractor_spark.sources.source_table import (
-        fixture_source,
-    )
+    from conftest import fixture_source
 
     src = str(base / "src")
     fixture_source(spark).write.parquet(src)
@@ -588,8 +584,10 @@ def extract_paths_with_checkpoint(spark, base: Path) -> dict:
     """--paths with --checkpoint must refuse: the resumable run marks
     every chunk done, so a later full run on that checkpoint would skip
     everything. --previous with --checkpoint must refuse too: the
-    incremental refresh would run and write no checkpoint. The guards
-    fire before extraction, so a one-row blob table is enough."""
+    incremental refresh would run and write no checkpoint. A resume
+    under another --num-chunks must refuse: its chunk ids differ from
+    the manifest's. The guards fire before extraction, so a one-row blob
+    table is enough."""
     src = str(base / "src")
     spark.createDataFrame(
         [("r", "info:fedora/x:1", "c", "foxml", "<not-parsed/>")],
@@ -607,8 +605,17 @@ def extract_paths_with_checkpoint(spark, base: Path) -> dict:
         "--previous", str(base / "prev"), "--checkpoint", cp_prev,
         "--local", "2",
     ])
+    cp_chunks = str(base / "cp_chunks")
+    chunked, rechunked = (
+        _run_job("extract.py", [
+            "--source", src, "--out", str(base / "triples_chunks"),
+            "--checkpoint", cp_chunks, "--num-chunks", n, "--local", "2",
+        ])
+        for n in ("4", "8")
+    )
     return {"refused": refused, "checkpoint": cp,
-            "refused_prev": refused_prev, "checkpoint_prev": cp_prev}
+            "refused_prev": refused_prev, "checkpoint_prev": cp_prev,
+            "chunked": chunked, "rechunked": rechunked}
 
 
 @scenario
@@ -636,6 +643,11 @@ def code_kg_end_to_end(spark, base: Path) -> dict:
     ]
     fresh = _run_job("code_kg.py", run_args)
     resume = _run_job("code_kg.py", run_args)
+    # a resume under another --num-chunks is refused, nothing run
+    rechunked = _run_job("code_kg.py", [
+        "--source", src, "--out", out, "--checkpoint", cp,
+        "--num-chunks", "8", "--local", "2",
+    ])
     # --local-dedup on this contract-valid (unique repo/path) table
     # must land the identical triple count with no full-output exchange
     local_dedup = _run_job("code_kg.py", [
@@ -682,7 +694,8 @@ def code_kg_end_to_end(spark, base: Path) -> dict:
     inc2 = _run_job("code_kg.py", [
         "--source", src2, "--out", st2, "--previous", st1, "--local", "2",
     ])
-    return {"fresh": fresh, "resume": resume, "query": query,
+    return {"fresh": fresh, "resume": resume, "rechunked": rechunked,
+            "query": query,
             "local_dedup": local_dedup, "local_dedup_dup": local_dedup_dup,
             "inc1": inc1, "inc2": inc2, "nquads_out": nq, "out": out}
 

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import pathlib
+import urllib.parse
 
 import pytest
 
@@ -10,6 +12,24 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "4")  # small & fast for unit tests
 # JVMs overlap (16 x 8g exceeded host RAM and showed up as subprocess
 # timeouts, not OOMs)
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
+
+
+REFERENCE_RES = pathlib.Path("/root/reference/src/test/resources")
+_FIXTURE_PIDS = ["ct:85", "ct:86", "ct:88", "ct:90", "si-user:10", "si:1020", "si:1119"]
+
+
+def fixture_source(spark):
+    """The reference's 7 sample objects as a source table (data-only read
+    of the read-only fixture store)."""
+    from fcrepo3_rdf_extractor_spark.sources.source_table import SOURCE_COLUMNS
+
+    rows = []
+    for pid in _FIXTURE_PIDS:
+        blob_key = "info:fedora/" + pid
+        path = urllib.parse.quote(blob_key, safe="")
+        content = (REFERENCE_RES / "objectStore" / path).read_text()
+        rows.append(("sidora-sample", blob_key, "fixture-commit-0", "foxml", content))
+    return spark.createDataFrame(rows, ", ".join(f"{c} string" for c in SOURCE_COLUMNS))
 
 
 @pytest.fixture(scope="session")

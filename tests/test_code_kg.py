@@ -633,6 +633,10 @@ def test_code_kg_cli_end_to_end(spark, cli_results):
     assert resume["rc"] == 0
     s2 = resume["summary"]
     assert s2["chunks_run"] == 0 and s2["n_triples"] == s1["n_triples"]
+    rechunked = art["rechunked"]
+    assert rechunked["rc"] == 2, rechunked["stderr"][-2000:]
+    assert ("written with num_chunks=4 but this run has num_chunks=8"
+            in rechunked["stderr"])
     ld = art["local_dedup"]
     assert ld["rc"] == 0, ld["stderr"][-2000:]
     # distinct-by-construction mode ≡ global dedup on the contract-

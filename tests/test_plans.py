@@ -190,16 +190,6 @@ def test_shared_pair_enum_is_bucket_bounded(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_ivf_assign_partial_aggregation(spark):
-    """Argmin-per-vector must map-side combine (min(struct(...))), not
-    shuffle+sort all candidate rows through a row_number window."""
-    from fcrepo3_rdf_extractor_spark.queries import emb_ivf_assign
-
-    plan = _formatted(emb_ivf_assign(spark, SF_DIR))
-    assert "partial_min" in plan, plan
-    assert "row_number" not in plan, plan
-
-
 def test_language_id_scores_evaluated_once(spark):
     """5 langs x 3 markers = 15 replace-chains; re-inlining would
     triple that."""
@@ -217,43 +207,6 @@ def test_stratified_sample_broadcasts_rates(spark):
     plan = _formatted(docs_stratified_sample(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-
-
-def test_pq_encode_is_shuffle_free_jvm_projection(spark):
-    """PQ encoding is a pure projection over driver-held literal
-    codebooks: the plan must contain no Exchange, no join, and no
-    Python eval node — the property that makes it a free rider on any
-    corpus scan at 10^9 vectors. The scan + subspace-slice stage is
-    whole-stage-codegen'd; the argmin projection itself uses
-    higher-order functions (aggregate/zip_with), which are
-    CodegenFallback — JVM interpreted-eval, still no Python."""
-    from fcrepo3_rdf_extractor_spark.operators.similarity import (
-        pq_codebooks,
-        pq_encode,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    books = pq_codebooks(emb, m=8, ksub=16)
-    plan = _formatted(pq_encode(emb, books))
-    assert "Exchange" not in plan, plan
-    assert "Join" not in plan, plan
-    assert "Python" not in plan and "ArrowEval" not in plan, plan
-    assert "codegen id" in plan, plan  # the scan/slice stage stays fused
-
-
-def test_pq_topk_takeordered_no_global_sort(spark):
-    """ADC top-k must be TakeOrderedAndProject over the codegen scan —
-    never a full Sort + Limit materialization."""
-    from fcrepo3_rdf_extractor_spark.operators.similarity import (
-        pq_codebooks,
-        pq_topk,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    books = pq_codebooks(emb, m=8, ksub=16)
-    plan = _formatted(pq_topk(emb, books, query_id=0, k=10))
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "Exchange" not in plan, plan
 
 
 def test_containment_neardup_bounded_equi_join(spark):
@@ -307,33 +260,6 @@ def test_top_terms_global_take_ordered(spark):
     plan = _formatted(docs_top_terms_global(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan, plan
     assert "partial_count" in plan
-
-
-def test_ivfpq_topk_is_joinfree_pruned_scan(spark):
-    """IVF-PQ search plan: centroids and codebooks are driver-held
-    literals, so the WHOLE search is one scan -> assignment-argmin
-    projection -> literal isin filter -> ADC projection ->
-    TakeOrderedAndProject: NO join, NO exchange, NO Python anywhere.
-    On the materialized centroid-partitioned layout the isin filter is
-    partition pruning — this plan is the property that makes the query
-    an nprobe-partition scan at 10^9 vectors."""
-    from fcrepo3_rdf_extractor_spark.operators.similarity import (
-        ivfpq_topk,
-        pq_codebooks,
-    )
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
-    books = pq_codebooks(emb, m=8, ksub=16)
-    plan = _formatted(ivfpq_topk(emb, centroids, books, query_id=0))
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "Join" not in plan, plan
-    assert "Exchange" not in plan, plan
-    assert "Python" not in plan and "ArrowEval" not in plan, plan
 
 
 def test_dsir_bucket_tables_broadcast(spark):

@@ -1,6 +1,6 @@
 """Regrowth pins: every ``operators/`` module must serve a program path,
-every job takes its session from ``session.job_session``, and every
-plan-config field is read somewhere.
+every job takes its session from ``session.job_session``, every
+plan-config field is read somewhere, and every oracle view is read.
 
 Reach starts at every function of the jobs (``jobs/``), of the plan,
 stream and source modules, of the end-to-end benchmark (``perfbench/``),
@@ -9,13 +9,16 @@ at ``__spark_entry__.entry`` and at the KG queries (``kg_*``, ``src_*``,
 function uses, local imports included. The other registry queries,
 ``bench.py``, ``tools/`` and the tests are no roots. These Spark-free
 scans fail when an operator module has no reached function, when a
-job builds its own SparkSession, or when a config field is only set.
+job builds its own SparkSession, when a config field is only set, or
+when ``tools/check_oracles.py`` registers a table no oracle reads.
 """
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
+import sys
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PKG = "fcrepo3_rdf_extractor_spark"
@@ -24,7 +27,7 @@ ROOT_DIRS = ("jobs/", "perfbench/", *(f"{PKG}/{d}/" for d in ("plans", "streamin
 #: operator modules only the query registry's reference checks and the
 #: unit tests still reach; they go together with those checks and tests
 #: (ROADMAP). Shrinks only; nothing may join it.
-UNREACHED = {"multimodal", "similarity"}
+UNREACHED = {"multimodal"}
 
 #: plan-config dataclasses whose every field must be read somewhere
 CONFIGS = ("ExtractConfig", "CodeKgConfig")
@@ -127,3 +130,19 @@ def test_every_config_field_is_read():
         }
     unread = [k for k, f in fields.items() if f not in reads]
     assert fields and not unread, unread
+
+
+def test_every_oracle_view_is_read():
+    """``tools/check_oracles.py`` registers one DuckDB view per
+    ``TABLES`` entry; a view no ``oracle_sql()`` text reads from is a
+    table the registry no longer checks against."""
+    sys.path.insert(0, str(ROOT))
+    from fcrepo3_rdf_extractor_spark.queries import oracle_sql
+    from tools.check_oracles import TABLES
+
+    texts = list(oracle_sql().values())
+    unread = [
+        t for t in TABLES
+        if not any(re.search(rf"\b(?:FROM|JOIN)\s+{t}\b", s, re.I) for s in texts)
+    ]
+    assert not unread, unread

@@ -7,6 +7,8 @@ from __future__ import annotations
 import pathlib
 
 import pytest
+from conftest import REFERENCE_RES as RES
+from conftest import fixture_source
 from pyspark.sql import functions as F
 
 from fcrepo3_rdf_extractor_spark.functions import nquad_line_col, subject_bucket
@@ -34,10 +36,8 @@ from fcrepo3_rdf_extractor_spark.plans.pipeline import (
     run_resumable,
 )
 from fcrepo3_rdf_extractor_spark.sources.nquads import read_nquads, write_nquads
-from fcrepo3_rdf_extractor_spark.sources.source_table import fixture_source
 from fcrepo3_rdf_extractor_spark.terms import load_nt, sha256_hex
 
-RES = pathlib.Path("/root/reference/src/test/resources")
 ANSWERS = {
     "ct:85": "ct-85", "ct:86": "ct-86", "ct:88": "ct-88", "ct:90": "ct-90",
     "si-user:10": "si-user-10", "si:1020": "si-1020", "si:1119": "si-1119",
@@ -463,6 +463,98 @@ def test_run_resumable_and_resume(spark, tmp_path):
     assert agg[0] == 7 and agg[1] == 365
 
 
+def test_run_resumable_refuses_changed_num_chunks(spark, tmp_path):
+    """Chunk ids depend on num_chunks: a 4-chunk checkpoint resumed at 8
+    would treat 8-chunk ids 0-3 as done and never extract the rest, so
+    the resume raises, naming both values. A checkpoint without the
+    record (written before it existed) resumes unchecked."""
+    src = spark.createDataFrame(
+        [("r", f"info:fedora/x:{i}", "c", "foxml", "<not-parsed/>") for i in range(8)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    out_dir, cp_dir = str(tmp_path / "out"), str(tmp_path / "cp")
+    cfg = ExtractConfig(num_chunks=4, chunks_per_wave=2)
+    assert run_resumable(src, out_dir, cp_dir, cfg)["chunks_run"] == 4
+    with pytest.raises(ValueError, match="num_chunks=4 but this run has num_chunks=8"):
+        run_resumable(src, out_dir, cp_dir, ExtractConfig(num_chunks=8))
+    (tmp_path / "cp" / "_LAYOUT.json").unlink()
+    stats = run_resumable(src, out_dir, cp_dir, cfg)
+    assert stats["chunks_done_before"] == 4 and stats["chunks_run"] == 0
+
+
+SF_DIR = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="module")
+def orders_one_shot(spark, tmp_path_factory):
+    """An uninterrupted 4-chunk, 2-wave resumable run over the synthesized
+    sf0.001 orders: the table every crash-and-resume must reproduce."""
+    if not pathlib.Path(SF_DIR).exists():
+        pytest.skip("testdata not generated")
+    from fcrepo3_rdf_extractor_spark.sources.source_table import (
+        synthesize_foxml_from_orders,
+    )
+
+    src = synthesize_foxml_from_orders(spark, SF_DIR)
+    base = tmp_path_factory.mktemp("one_shot")
+    cfg = ExtractConfig(num_chunks=4, chunks_per_wave=2)
+    run_resumable(src, str(base / "out"), str(base / "cp"), cfg)
+    return src, cfg, spark.read.parquet(str(base / "out"))
+
+
+@pytest.mark.parametrize("crash", ["before_manifest_append", "mid_write"])
+def test_run_resumable_crash_then_resume_equals_one_shot(
+    spark, tmp_path, monkeypatch, orders_one_shot, crash
+):
+    """Wave 2 (chunks 2-3) dies either after its chunks are written but
+    before they enter the manifest, or inside its write job. The rerun
+    must skip exactly wave 1, re-run wave 2, and land the same table as
+    an uninterrupted run, with one manifest row per chunk."""
+    import fcrepo3_rdf_extractor_spark.plans.pipeline as pipeline
+    from fcrepo3_rdf_extractor_spark.plans.checkpoint import with_chunk_id
+
+    src, cfg, want = orders_one_shot
+    out_dir, cp_dir = str(tmp_path / "out"), str(tmp_path / "cp")
+    plan_fn = None
+    if crash == "before_manifest_append":
+        calls = []
+        real_append = pipeline.append_manifest
+
+        def append_manifest(rows, checkpoint_dir):
+            calls.append(checkpoint_dir)
+            if len(calls) == 2:
+                raise RuntimeError("injected crash before the manifest append")
+            real_append(rows, checkpoint_dir)
+
+        monkeypatch.setattr(pipeline, "append_manifest", append_manifest)
+    else:
+        bad = (
+            with_chunk_id(src, cfg.num_chunks)
+            .filter(F.col("chunk_id").isin(2, 3))
+            .select("path").first().path
+        )
+
+        def plan_fn(wave_src):
+            out = extract_plan(wave_src, cfg)
+            return out.withColumn("subj", F.when(
+                F.col("path") == bad, F.raise_error(F.lit("injected crash"))
+            ).otherwise(F.col("subj")))
+
+    with pytest.raises(Exception, match="injected crash"):
+        run_resumable(src, out_dir, cp_dir, cfg, plan_fn=plan_fn)
+    monkeypatch.undo()
+
+    stats = run_resumable(src, out_dir, cp_dir, cfg)
+    assert stats["chunks_done_before"] == 2 and stats["chunks_run"] == 2
+    got = spark.read.parquet(out_dir)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    manifest = spark.read.parquet(str(tmp_path / "cp" / "manifest"))
+    per_chunk = {r.chunk_id: r.n for r in manifest.groupBy("chunk_id").agg(
+        F.count("*").alias("n")).collect()}
+    assert per_chunk == {0: 1, 1: 1, 2: 1, 3: 1}
+
+
 def test_materialize_graph_bucketed(spark, extracted, tmp_path):
     out = str(tmp_path / "graph")
     materialize_graph(extracted, out, buckets=8, canonical_sort=True)
@@ -485,7 +577,6 @@ def test_extract_incremental_reuses_unchanged(spark):
         extract_incremental,
         extract_plan,
     )
-    from fcrepo3_rdf_extractor_spark.sources.source_table import fixture_source
 
     cfg = ExtractConfig(skip_empty=True, dedup=False)
     v1 = fixture_source(spark)  # 7 objects
@@ -532,7 +623,6 @@ def test_extract_incremental_with_dedup_matches_full_rebuild(spark):
         extract_incremental,
         extract_plan,
     )
-    from fcrepo3_rdf_extractor_spark.sources.source_table import fixture_source
 
     cfg = ExtractConfig(skip_empty=True, dedup=True)
     base = fixture_source(spark)
@@ -864,7 +954,8 @@ def test_extract_cli_paths_refuse_checkpoint(cli_results):
     """A selected-paths resumable run would mark every chunk done and
     poison the checkpoint for the next full run; an incremental run
     with --checkpoint would write no checkpoint. Both are refused up
-    front, the checkpoint left unwritten."""
+    front, the checkpoint left unwritten. A resume under a different
+    --num-chunks is refused too (exit 2, both values named)."""
     from conftest import cli_art
 
     art = cli_art(cli_results, "extract_paths_with_checkpoint")
@@ -878,6 +969,11 @@ def test_extract_cli_paths_refuse_checkpoint(cli_results):
     assert refused_prev["rc"] == 2, refused_prev["stderr"][-2000:]
     assert "separate modes; pick one" in refused_prev["stderr"]
     assert not pathlib.Path(art["checkpoint_prev"]).exists()
+    chunked, rechunked = art["chunked"], art["rechunked"]
+    assert chunked["rc"] == 0, chunked["stderr"][-2000:]
+    assert rechunked["rc"] == 2, rechunked["stderr"][-2000:]
+    assert ("written with num_chunks=4 but this run has num_chunks=8"
+            in rechunked["stderr"])
 
 
 def test_extract_cli_select_paths(spark, cli_results):

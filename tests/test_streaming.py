@@ -3,11 +3,11 @@ source with availableNow and matches the batch plan's output."""
 
 from __future__ import annotations
 
+from conftest import fixture_source
 from pyspark.sql import functions as F
 
 from fcrepo3_rdf_extractor_spark.operators.extractor import extract_triples
 from fcrepo3_rdf_extractor_spark.operators.filters import skip_empty_literals, with_graph
-from fcrepo3_rdf_extractor_spark.sources.source_table import fixture_source
 from fcrepo3_rdf_extractor_spark.streaming.extract_stream import (
     read_blob_stream,
     streaming_extract,

@@ -1,6 +1,6 @@
 """Unit tests for the training-data pipeline operators: near-dup
-detection finds planted duplicates, similarity search agrees with a
-NumPy oracle, text analysis and multimodal plumbing behave."""
+detection finds planted duplicates, text analysis and multimodal
+plumbing behave."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from fcrepo3_rdf_extractor_spark.operators.dedup_approx import (
     dedup_exact_docs,
-    embedding_near_duplicates,
     minhash_lsh_candidates,
     minhash_near_duplicates,
     minhash_signature,
@@ -22,11 +21,6 @@ from fcrepo3_rdf_extractor_spark.operators.multimodal import (
     extract_media_features,
     resize_metadata,
     sample_frames,
-)
-from fcrepo3_rdf_extractor_spark.operators.similarity import (
-    brute_force_topk,
-    ivf_assign,
-    lsh_topk,
 )
 from fcrepo3_rdf_extractor_spark.operators.text import (
     fingerprint,
@@ -197,78 +191,6 @@ def test_simhash_similar_docs_close(spark):
     ham_near = bin(out[0] ^ out[2]).count("1")
     ham_far = bin(out[0] ^ out[3]).count("1")
     assert ham_near <= ham_far
-
-
-def _emb(spark, n=64, dim=16):
-    rng = np.random.RandomState(7)
-    vecs = rng.randn(n, dim).astype("float32")
-    vecs[1] = vecs[0] * 1.5          # same direction as 0 -> cosine 1
-    vecs[2] = vecs[0] + rng.randn(dim).astype("float32") * 0.05
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(n)]
-    return (
-        spark.createDataFrame(rows, "vec_id long, embedding array<float>"),
-        vecs,
-    )
-
-
-def test_brute_force_topk_matches_numpy(spark):
-    emb, vecs = _emb(spark)
-    got = [(r.vec_id, r.cosine) for r in brute_force_topk(emb, query_id=0, k=5).collect()]
-    v = vecs.astype("float64")
-    cos = (v @ v[0]) / (np.linalg.norm(v, axis=1) * np.linalg.norm(v[0]))
-    order = sorted((i for i in range(len(v)) if i != 0),
-                   key=lambda i: (-round(cos[i], 6), i))[:5]
-    assert [g[0] for g in got] == order
-    assert got[0][0] == 1 and got[0][1] == 1.0  # scaled copy of the query
-    assert got[1][0] == 2                        # noisy copy next
-
-
-def test_lsh_topk_subset_of_bucket(spark):
-    emb, vecs = _emb(spark)
-    got = lsh_topk(emb, query_id=0, k=5, sign_bits=4).collect()
-    # every hit shares the query's sign bucket
-    qsig = tuple(vecs[0][:4] > 0)
-    for r in got:
-        assert tuple(np.array(vecs[r.vec_id][:4]) > 0) == qsig
-    assert got[0].vec_id == 1
-
-
-def test_lsh_multiprobe_improves_recall_over_single_bucket(spark):
-    """Radius-1 probing scans a candidate SUPERSET of the single bucket,
-    so its top-k cosines dominate pointwise; every hit must be within
-    Hamming distance 1 of the query bucket; radius=0 degenerates to
-    plain lsh_topk."""
-    from fcrepo3_rdf_extractor_spark.operators.similarity import lsh_topk_multiprobe
-
-    emb, vecs = _emb(spark)
-    single = lsh_topk(emb, query_id=0, k=5, sign_bits=4).collect()
-    multi = lsh_topk_multiprobe(emb, query_id=0, k=5, sign_bits=4, radius=1).collect()
-    for s, m in zip(single, multi):
-        assert m.cosine >= s.cosine
-    qsig = np.array(vecs[0][:4]) > 0
-    for r in multi:
-        assert (qsig != (np.array(vecs[r.vec_id][:4]) > 0)).sum() <= 1
-    r0 = lsh_topk_multiprobe(emb, query_id=0, k=5, sign_bits=4, radius=0).collect()
-    assert [(r.vec_id, r.cosine) for r in r0] == [(r.vec_id, r.cosine) for r in single]
-
-
-def test_embedding_near_duplicates(spark):
-    emb, _ = _emb(spark)
-    pairs = {(r.id_a, r.id_b): r.cosine
-             for r in embedding_near_duplicates(emb, threshold=0.95).collect()}
-    assert (0, 1) in pairs and (0, 2) in pairs and (1, 2) in pairs
-    assert len(pairs) == 3
-
-
-def test_ivf_assign_puts_centroid_on_itself(spark):
-    emb, _ = _emb(spark)
-    cents = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-    )
-    out = {r.vec_id: r.centroid_id for r in ivf_assign(emb, cents).collect()}
-    for c in range(4):
-        assert out[c] == c
-    assert out[1] == 1 and out[2] == 0 or out[2] == 2  # 2 is nearly parallel to 0
 
 
 def test_token_count_and_quality(spark):
@@ -877,159 +799,6 @@ def test_pagerank_conserves_total_rank(spark):
         assert total == pytest.approx(1.0, abs=1e-12)
 
 
-# --- k-means ----------------------------------------------------------------
-
-
-def _kmeans_reference(vecs, k, n_iter):
-    """Pure-Python Lloyd's on cosine, lowest-id init, lowest-cid ties,
-    empty clusters keep their previous centroid."""
-    import math
-
-    cents = [list(map(float, vecs[i][1])) for i in range(k)]
-    for _ in range(n_iter):
-        assign = {}
-        for vid, v in vecs:
-            best = None
-            for j, c in enumerate(cents):
-                dot = sum(x * y for x, y in zip(v, c))
-                nv = math.sqrt(sum(x * x for x in v))
-                nc = math.sqrt(sum(x * x for x in c))
-                cos = dot / (nv * nc)
-                if best is None or -cos < best[0] - 1e-15 or (
-                    abs(-cos - best[0]) <= 1e-15 and j < best[1]
-                ):
-                    best = (-cos, j)
-            assign[vid] = best[1]
-        for j in range(k):
-            members = [v for vid, v in vecs if assign[vid] == j]
-            if members:
-                cents[j] = [
-                    sum(m[i] for m in members) / len(members)
-                    for i in range(len(cents[j]))
-                ]
-    return cents
-
-
-def test_kmeans_train_matches_reference(spark):
-    """Two tight clusters, k=2: assignments and final centroids must
-    match the sequential reference to fp tolerance."""
-    from fcrepo3_rdf_extractor_spark.operators.similarity import kmeans_train
-
-    vecs = [
-        (0, [1.0, 0.1, 0.0]), (1, [0.9, 0.0, 0.1]), (2, [1.1, 0.05, 0.05]),
-        (3, [0.0, 1.0, 0.9]), (4, [0.1, 0.9, 1.0]), (5, [0.0, 1.1, 1.0]),
-    ]
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in vecs],
-        "vec_id long, embedding array<float>",
-    )
-    got = {
-        r.centroid_id: list(r.centroid)
-        for r in kmeans_train(df, k=2, n_iter=3).collect()
-    }
-    # reference runs on the float32-rounded values Spark actually reads
-    vecs32 = [(i, list(np.array(v, dtype=np.float32).astype(float))) for i, v in vecs]
-    want = _kmeans_reference(vecs32, k=2, n_iter=3)
-    assert sorted(got) == [0, 1]
-    for j in range(2):
-        assert got[j] == pytest.approx(want[j], abs=1e-9)
-
-
-def test_kmeans_empty_cluster_keeps_previous_centroid(spark):
-    """k=3 over two tight clusters: one init centroid (a duplicate of
-    another) attracts nothing after the lowest-cid tie-break and must
-    survive unchanged instead of going NULL/NaN."""
-    from fcrepo3_rdf_extractor_spark.operators.similarity import kmeans_train
-
-    rows = [
-        (0, [1.0, 0.0]), (1, [1.0, 0.0]),        # identical -> cid 1 starves
-        (2, [0.0, 1.0]), (3, [0.05, 1.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {r.centroid_id: list(r.centroid)
-           for r in kmeans_train(df, k=3, n_iter=2).collect()}
-    assert got[1] == pytest.approx([1.0, 0.0], abs=1e-9)  # kept, not NaN
-    assert got[0] == pytest.approx([1.0, 0.0], abs=1e-9)
-    assert got[2][1] > got[2][0]  # the second cluster's mean
-
-
-def test_kmeans_centroids_feed_ivf(spark):
-    """Composition contract: kmeans_train output is exactly the table
-    ivf_topk probes; trained centroids must give the same top-1 as
-    brute force on clustered data."""
-    from fcrepo3_rdf_extractor_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        kmeans_train,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = kmeans_train(emb, k=4, n_iter=2)
-    ivf = ivf_topk(emb, cents, query_id=0, k=5, nprobe=2).collect()
-    bf = brute_force_topk(emb, query_id=0, k=5).collect()
-    assert ivf[0].vec_id == bf[0].vec_id
-
-
-def test_pq_trained_codebooks_reduce_distortion(spark):
-    """pq_train_codebooks initializes from exactly the seed codebooks
-    (subvectors of the ksub lowest-id vectors), so by Lloyd's
-    monotonicity the trained books can never quantize the training set
-    WORSE than the seed books — the measurable claim that 'trained'
-    means something. Shapes and determinism are pinned too."""
-    from fcrepo3_rdf_extractor_spark.operators.similarity import (
-        pq_codebooks,
-        pq_train_codebooks,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    m, ksub, d = 8, 16, 8
-    seed = pq_codebooks(emb, m=m, ksub=ksub)
-    trained = pq_train_codebooks(emb, m=m, ksub=ksub, n_iter=2)
-    assert len(trained) == m
-    assert all(len(b) == ksub for b in trained)
-    assert all(len(w) == d for b in trained for w in b)
-    # determinism: a second training run is bit-identical
-    assert trained == pq_train_codebooks(emb, m=m, ksub=ksub, n_iter=2)
-
-    vecs = [[float(x) for x in r.embedding] for r in
-            emb.select("embedding").collect()]
-
-    def distortion(books):
-        tot = 0.0
-        for v in vecs:
-            for s, book in enumerate(books):
-                sub = v[s * d:(s + 1) * d]
-                tot += min(
-                    sum((a - b) * (a - b) for a, b in zip(sub, w))
-                    for w in book
-                )
-        return tot
-
-    assert distortion(trained) <= distortion(seed) + 1e-9
-
-
-def test_pq_and_ivf_recall_gates(spark):
-    """The PQ and IVF arms of the ANN quality gate: one row per panel
-    query, recall = n_hits/k in [0,1], and IVF with nprobe=ALL lists
-    must be exact (recall 1.0 for every query) — probing every list IS
-    brute force, so anything less is a harness bug."""
-    from fcrepo3_rdf_extractor_spark.operators.similarity import (
-        ivf_recall,
-        pq_recall,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    pq = pq_recall(emb, n_queries=4, k=5, m=8, ksub=16, n_iter=1).collect()
-    assert {r.query_id for r in pq} == {0, 1, 2, 3}
-    for r in pq:
-        assert 0.0 <= r.recall <= 1.0 and abs(r.recall - r.n_hits / 5) < 1e-9
-    full = ivf_recall(emb, n_queries=4, k=5, kc=4, n_iter=1, nprobe=4).collect()
-    assert all(r.recall == 1.0 for r in full), full
-    partial = ivf_recall(emb, n_queries=4, k=5, kc=4, n_iter=1, nprobe=1)
-    for r in partial.collect():
-        assert 0.0 <= r.recall <= 1.0
-
-
 def test_dedup_lines_removes_corpus_boilerplate(spark):
     from fcrepo3_rdf_extractor_spark.operators.dedup_approx import dedup_lines
 
@@ -1130,51 +899,6 @@ def test_curate_job_line_dedup_and_pii_stages(spark, cli_results):
     assert "<EMAIL>" in got[0].text and "alice@example.com" not in got[0].text
     assert "<PHONE>" in got[1].text
     assert got[0].n_pii == 1 and got[1].n_pii == 1
-
-def test_pq_encode_seed_vectors_hit_own_codeword(spark):
-    """Codebooks are the subvectors of the 16 lowest-id vectors, so each
-    seed vector must encode to its own codeword id in every subspace."""
-    from fcrepo3_rdf_extractor_spark.operators.similarity import (
-        pq_codebooks, pq_encode)
-
-    rng = np.random.RandomState(7)
-    rows = [(i, [float(x) for x in rng.randn(64)]) for i in range(40)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    books = pq_codebooks(emb, m=8, ksub=16)
-    out = {r["vec_id"]: r for r in pq_encode(emb, books).collect()}
-    assert len(out) == 40
-    for i in range(16):
-        assert [out[i][f"c{s}"] for s in range(8)] == [i] * 8
-
-
-def test_pq_topk_matches_numpy_adc(spark):
-    """pq_topk must equal the NumPy ADC computation: encode with the
-    same codebooks, distance-table lookups, ascending sum."""
-    from fcrepo3_rdf_extractor_spark.operators.similarity import (
-        pq_codebooks, pq_topk)
-
-    rng = np.random.RandomState(11)
-    vecs = rng.randn(60, 64).astype(np.float32)
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(60)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    books = pq_codebooks(emb, m=8, ksub=16)
-
-    b = np.array(books, dtype=np.float64)          # (8, 16, 8)
-    v = vecs.astype(np.float64).reshape(60, 8, 8)  # (n, s, d)
-    # codes: argmin over squared L2 per subspace (ties -> low id)
-    d2 = ((v[:, :, None, :] - b[None, :, :, :]) ** 2).sum(-1)  # (n, s, 16)
-    codes = d2.argmin(axis=2)
-    q = v[0]
-    dt = ((q[:, None, :] - b) ** 2).sum(-1)        # (s, 16)
-    adist = np.array([dt[range(8), codes[i]].sum() for i in range(60)])
-    order = sorted((float(adist[i]), i) for i in range(1, 60))[:10]
-
-    got = [(r["vec_id"], r["adist"]) for r in
-           pq_topk(emb, books, query_id=0, k=10).collect()]
-    assert [g[0] for g in got] == [i for _, i in order]
-    for (gid, gad), (ead, _) in zip(got, order):
-        assert abs(gad - ead) < 1e-6
-
 
 def test_mixture_rates_closed_loop(spark):
     """The solved rates, applied through stratified_sample, land the
@@ -1531,39 +1255,6 @@ def test_curate_code_filter_stage(spark, cli_results):
     assert w["summary"]["n_docs"] == 1
     assert "after_code_filter" not in wo["summary"]["stages"]
     assert wo["summary"]["n_docs"] == 3
-
-
-def test_semdedup_pairs_policy_and_cluster_bound(spark):
-    """SemDeDup on a crafted corpus: two tight direction-groups plus a
-    planted near-copy. The near-copy pairs with its source, drop_id is
-    the member CLOSER to the centroid (the paper keeps the farthest),
-    and vectors in different clusters never pair even at cosine ~0
-    threshold (the cluster bound, not the threshold, limits the search
-    space)."""
-    from fcrepo3_rdf_extractor_spark.operators.dedup_approx import (
-        semdedup_pairs,
-    )
-
-    def vec(direction, scale, eps=0.0):
-        v = [0.0] * 8
-        v[direction] = scale
-        v[(direction + 1) % 8] = eps
-        return v
-
-    rows = [
-        (0, vec(0, 1.0)), (1, vec(0, 1.0, 0.05)), (2, vec(0, 1.0, 0.4)),
-        (10, vec(4, 1.0)), (11, vec(4, 1.0, 0.4)),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {(r.id_a, r.id_b): r
-           for r in semdedup_pairs(emb, k=2, n_iter=2, threshold=0.95).collect()}
-    assert (0, 1) in got            # the tight near-copy pair
-    assert all(a in (0, 1, 2) and b in (0, 1, 2) or a in (10, 11) and b in (10, 11)
-               for a, b in got)     # never across clusters
-    r = got[(0, 1)]
-    assert r.drop_id in (0, 1)
-    # cross-cluster pairs absent even though cos((4,.4),(4,0)) > 0.9
-    assert (0, 10) not in got and (2, 11) not in got
 
 
 def test_perplexity_buckets_terciles(spark):
@@ -2344,30 +2035,6 @@ def test_bm25_indexed_equals_streaming_and_probe_plan(spark, tmp_path):
     q2 = [tuple(r) for r in bm25_topk_indexed(idx2, terms, k=10).collect()]
     want2 = [tuple(r) for r in bm25_topk_indexed(rebuilt, terms, k=10).collect()]
     assert q2 == want2
-
-
-def test_rrf_fuse_semantics(spark):
-    """RRF: an item ranked well in BOTH arms beats each arm's solo
-    leader; items in one arm only still score; rejects empty input."""
-    from fcrepo3_rdf_extractor_spark.operators.similarity import rrf_fuse
-
-    lex = spark.createDataFrame(
-        [(1, 5.0), (2, 4.0), (3, 3.0)], "doc_id long, score double"
-    )
-    dense = spark.createDataFrame(
-        [(2, 0.9), (4, 0.8), (1, 0.1)], "doc_id long, score double"
-    )
-    got = rrf_fuse([lex, dense], k=10, k_rrf=60).collect()
-    scores = {r.doc_id: r.rrf_score for r in got}
-    # doc 2: rank 2 lex + rank 1 dense; doc 1: rank 1 lex + rank 3 dense
-    assert scores[2] == round(1 / 62 + 1 / 61, 6)
-    assert scores[1] == round(1 / 61 + 1 / 63, 6)
-    assert scores[4] == round(1 / 62, 6)
-    assert got[0].doc_id == 2  # fused winner appears in both arms
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="at least one ranking"):
-        rrf_fuse([])
 
 
 def test_distinct_token_stats_hll_error_gate(spark):

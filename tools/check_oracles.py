@@ -14,8 +14,8 @@ import sys
 
 sys.path.insert(0, ".")
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+TABLES = ["region", "nation", "customer", "part", "orders", "lineitem",
+          "events", "documents"]
 
 
 def norm_cell(v):
