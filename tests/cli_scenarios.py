@@ -176,8 +176,10 @@ def query_cli_sparql(spark, base: Path) -> dict:
 
 @scenario
 def extract_then_query(spark, base: Path) -> dict:
-    """The full product journey: bulk-extract the reference's 7 fixture
-    objects with jobs/extract.py, then BGP-query the materialized
+    """The full product journey: bulk-extract the 7 fixture objects
+    (``conftest.fixture_source``: the reference's objects where
+    ``/root/reference`` exists, else in-repo stand-ins under the same
+    blob keys) with jobs/extract.py, then BGP-query the materialized
     triples table with jobs/query.py."""
     from conftest import fixture_source
 
@@ -205,7 +207,9 @@ def extract_select_paths(spark, base: Path) -> dict:
     only 2 of the 7 fixture objects via --paths, then a third via
     --paths-file, plus the guard: --paths with --previous must refuse
     (the incremental anti-join would read unselected objects as
-    deleted)."""
+    deleted). The fixture objects come from ``conftest.fixture_source``
+    (the reference's where ``/root/reference`` exists, else in-repo
+    stand-ins under the same blob keys)."""
     from conftest import fixture_source
 
     src = str(base / "src")

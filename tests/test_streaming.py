@@ -52,7 +52,9 @@ def test_streaming_repo_totals_stateful(spark, tmp_path):
     )
 
     src_dir = str(tmp_path / "ssrc")
-    source = fixture_source(spark)  # 7 objects, all repo='sidora-sample'
+    # 7 objects, all repo='sidora-sample': the reference's where it exists,
+    # else in-repo stand-ins under the same blob keys (conftest.py)
+    source = fixture_source(spark)
     # two separate files -> two micro-batches (deterministic path split;
     # limit() would pick arbitrary, possibly overlapping rows)
     first = source.filter(F.col("path") < "info:fedora/si")
