@@ -25,12 +25,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MANIFEST_SCHEMA = (
-    "chunk_id int, n_objects long, n_triples long, n_errors long, "
-    "content_fingerprint long, num_chunks int"
-)
-
-
 def with_chunk_id(source: DataFrame, num_chunks: int) -> DataFrame:
     return source.withColumn(
         "chunk_id",

@@ -857,7 +857,7 @@ def kg_set_ops_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =========================================================================
-# training-data pipeline ops: dedup / text / multimodal
+# training-data pipeline ops: dedup / text
 # =========================================================================
 
 # shared SQL fragments mirroring operators/text.py exactly
@@ -1588,83 +1588,6 @@ def kg_dedup_exact_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_linenumber").cast("long").alias("witness"),
     )
     return dedup_exact_salted(li, key=["subj", "obj_value"], salt_buckets=16)
-
-
-# --- multimodal -------------------------------------------------------------
-
-
-@_q(
-    "mm_media_metadata",
-    """SELECT doc_id AS media_id,
-              CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'gif'
-                   ELSE 'jpeg' END AS format,
-              CAST(1 + length(text) % 1000 AS INT) AS width,
-              CAST(1 + doc_id % 800 AS INT) AS height,
-              CAST(strlen(text) + CASE doc_id % 3 WHEN 0 THEN 33
-                   WHEN 1 THEN 13 ELSE 39 END AS BIGINT) AS n_bytes
-       FROM documents""",
-)
-def mm_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Codec-free media metadata: documents_as_image_media synthesizes
-    VALID PNG/GIF/JPEG file headers (format/width/height deterministic
-    functions of the doc row) and media_dimensions reads the dimensions
-    back from the ACTUAL BYTES with pure JVM column ops — PNG IHDR
-    uint32s, GIF little-endian screen descriptor, a JPEG marker-segment
-    walk to SOF0. The oracle states the planted closed forms, so a
-    match proves the byte parser recovered them from the headers; the
-    parser is separately unit-tested against genuine file bytes
-    (tests/test_training_ops.py). Header sizes: PNG 33 B, GIF 13 B,
-    JPEG 39 B."""
-    from .operators.multimodal import documents_as_image_media, media_dimensions
-
-    media = documents_as_image_media(_read(spark, sf_dir, "documents"))
-    dims = media_dimensions(media)
-    return dims.join(media.select("media_id", "n_bytes"), "media_id").select(
-        "media_id", "format", "width", "height", "n_bytes"
-    )
-
-
-@_q(
-    "mm_resize_plan",
-    """SELECT media_id, width, height,
-              CAST(round(width * (224.0 / least(width, height))) AS INT) AS out_width,
-              CAST(round(height * (224.0 / least(width, height))) AS INT) AS out_height
-       FROM (SELECT doc_id AS media_id,
-                    64 + (strlen(text) % 1024) AS width,
-                    64 + ((strlen(text) // 7) % 1024) AS height
-             FROM documents) t""",
-)
-def mm_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exercises the full binary plumbing: text -> payload bytes ->
-    mapInPandas fake-decode (width/height derived from byte length) ->
-    JVM-side resize arithmetic. The oracle restates the fake codec's
-    arithmetic relationally."""
-    from .operators.multimodal import (
-        documents_as_media,
-        extract_media_features,
-        resize_metadata,
-    )
-
-    media = documents_as_media(_read(spark, sf_dir, "documents"))
-    feats = extract_media_features(media, decode_stub="fake")
-    return resize_metadata(feats, target=224)
-
-
-@_q(
-    "mm_frame_sampling",
-    # byte-slice md5 == char-slice md5 because the testdata documents are
-    # pure ASCII (strlen == length verified); DuckDB md5 hashes UTF-8 bytes
-    """SELECT doc_id AS media_id, CAST(f AS INT) AS frame_no,
-              md5(substr(text, CAST(f*16+1 AS INT), 16)) AS frame_fp
-       FROM (SELECT doc_id, text,
-                    unnest(generate_series(0, least((strlen(text)-1)//16, 7))) AS f
-             FROM documents WHERE strlen(text) > 0)""",
-)
-def mm_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.multimodal import documents_as_media, sample_frames
-
-    media = documents_as_media(_read(spark, sf_dir, "documents"))
-    return sample_frames(media, every_n=16, max_frames=8)
 
 
 # =========================================================================

@@ -187,63 +187,3 @@ def test_extract_object_never_raises(content):
     if not triples:
         assert errors
 
-
-# --- real codec paths (operators/multimodal.py): encode/decode round
-# trips over arbitrary pixel bytes — a wrong filter/unfilter branch,
-# LZW width bump, or palette lookup cannot survive these.
-
-@given(st.data())
-@settings(max_examples=40, deadline=None)
-def test_png_roundtrip_property(data):
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-    )
-
-    w = data.draw(st.integers(1, 12))
-    h = data.draw(st.integers(1, 12))
-    ch = data.draw(st.sampled_from([1, 2, 3, 4]))
-    pix = data.draw(st.binary(min_size=w * h * ch, max_size=w * h * ch))
-    assert decode_png(encode_png(w, h, pix, channels=ch)) == (w, h, ch, pix)
-
-
-@given(st.data())
-@settings(max_examples=40, deadline=None)
-def test_gif_lzw_roundtrip_property(data):
-    from test_training_ops import _gif_reference_compress
-
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        _gif_lzw_decode,
-    )
-
-    mcs = data.draw(st.integers(2, 8))
-    n = data.draw(st.integers(1, 1200))
-    syms = data.draw(
-        st.lists(st.integers(0, (1 << mcs) - 1), min_size=n, max_size=n)
-    )
-    raw = bytes(syms)
-    assert _gif_lzw_decode(_gif_reference_compress(raw, mcs), mcs, n) == raw
-
-
-@given(st.data())
-@settings(max_examples=25, deadline=None)
-def test_gif_full_roundtrip_property(data):
-    import numpy as np
-
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        decode_gif,
-        encode_gif,
-    )
-
-    w = data.draw(st.integers(1, 16))
-    h = data.draw(st.integers(1, 16))
-    idx = data.draw(st.binary(min_size=w * h, max_size=w * h))
-    j = np.arange(256, dtype=np.int64)
-    pal = (
-        np.stack([j, (2 * j) % 256, (3 * j) % 256], axis=1)
-        .astype(np.uint8)
-        .tobytes()
-    )
-    got = decode_gif(encode_gif(w, h, idx, pal))
-    exp = b"".join(pal[i * 3 : i * 3 + 3] for i in idx)
-    assert got == (w, h, 3, exp)

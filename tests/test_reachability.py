@@ -2,15 +2,16 @@
 every job takes its session from ``session.job_session``, every
 plan-config field is read somewhere, and every oracle view is read.
 
-Reach starts at every function of the jobs (``jobs/``), of the plan,
-stream and source modules, of the end-to-end benchmark (``perfbench/``),
+Reach starts at every function of the jobs (``jobs/``), of the plan
+and source modules, of the end-to-end benchmark (``perfbench/``),
 at ``__spark_entry__.entry`` and at the KG queries (``kg_*``, ``src_*``,
 ``graph_*`` in ``queries.py``), and follows the names each reached
 function uses, local imports included. The other registry queries,
-``bench.py``, ``tools/`` and the tests are no roots. These Spark-free
-scans fail when an operator module has no reached function, when a
-job builds its own SparkSession, when a config field is only set, or
-when ``tools/check_oracles.py`` registers a table no oracle reads.
+``bench.py``, ``tools/`` and the tests are no roots, and no module is
+exempt. These Spark-free scans fail when an operator module has no
+reached function, when a job builds its own SparkSession, when a
+config field is only set, or when ``tools/check_oracles.py`` registers
+a table no oracle reads.
 """
 
 from __future__ import annotations
@@ -22,12 +23,7 @@ import sys
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PKG = "fcrepo3_rdf_extractor_spark"
-ROOT_DIRS = ("jobs/", "perfbench/", *(f"{PKG}/{d}/" for d in ("plans", "streaming", "sources")))
-
-#: operator modules only the query registry's reference checks and the
-#: unit tests still reach; they go together with those checks and tests
-#: (ROADMAP). Shrinks only; nothing may join it.
-UNREACHED = {"multimodal"}
+ROOT_DIRS = ("jobs/", "perfbench/", *(f"{PKG}/{d}/" for d in ("plans", "sources")))
 
 #: plan-config dataclasses whose every field must be read somewhere
 CONFIGS = ("ExtractConfig", "CodeKgConfig")
@@ -93,7 +89,7 @@ def test_every_operator_module_is_reached_from_a_program_path():
         for p in (ROOT / PKG / "operators").glob("*.py")
         if p.stem != "__init__" and f"{PKG}.operators.{p.stem}" not in reached_mods
     }
-    assert unreached == UNREACHED, unreached ^ UNREACHED
+    assert not unreached, unreached
 
 
 def test_jobs_take_their_session_from_job_session():

@@ -5,6 +5,7 @@ resumable checkpointed runs, and graph materialization."""
 from __future__ import annotations
 
 import pathlib
+import re
 
 import pytest
 from conftest import (
@@ -110,17 +111,32 @@ def test_select_objects_pushdown(spark):
 
 def test_errors_for_missing_dc_and_relsext(spark):
     foxml = simple_foxml()
-    # strip the DC datastream -> reference still attempts it -> error
+    # the same document without its DC and RELS-EXT datastreams: the
+    # reference consumes both unguarded, so each absence is one error
+    stripped = re.sub(
+        r'<foxml:datastream\b[^>]*\bID="(?:DC|RELS-EXT)".*?</foxml:datastream>',
+        "", foxml, flags=re.S,
+    )
+    ds_ids = re.findall(r'<foxml:datastream\b[^>]*\bID="([^"]+)"', stripped)
+    assert not {"DC", "RELS-EXT"} & set(ds_ids)
     src = spark.createDataFrame(
-        [("r", "p1", "c", "foxml", foxml)],
+        [("r", "p1", "c", "foxml", foxml), ("r", "stripped", "c", "foxml", stripped)],
         "repo string, path string, commit string, lang string, content string",
     )
-    out = extract_triples(src)
-    errs = {(r.error_stage, r.error_ds_id) for r in errors_only(out).collect()}
-    # CRAZYDS is MANAGED but never consumed; DC+RELS-EXT inline -> no errors
-    assert errs == set()
+    out = extract_triples(src).cache()
+    intact, bare = (out.filter(F.col("path") == p) for p in ("p1", "stripped"))
+    # the intact row: CRAZYDS is MANAGED but never consumed, DC and
+    # RELS-EXT are inline -> no errors
+    assert {(r.error_stage, r.error_ds_id) for r in errors_only(intact).collect()} == set()
+    assert {r.error_stage: r.n_errors for r in error_counts(intact).collect()} == {}
+    errs = {(r.error_stage, r.error_ds_id) for r in errors_only(bare).collect()}
+    assert errs == {("dc", "[NO DS ID]"), ("rels_ext", "[NO DS ID]")}
     counts = {r.error_stage: r.n_errors for r in error_counts(out).collect()}
-    assert counts == {}
+    assert counts == {"dc": 1, "rels_ext": 1}
+    # the stripped row keeps its constant triples: 6 object triples + 6
+    # per non-AUDIT datastream left
+    n_ds = sum(ds != "AUDIT" for ds in ds_ids)
+    assert triples_only(bare).count() == 6 + 6 * n_ds
 
 
 def test_error_rows_isolate_bad_objects(spark):

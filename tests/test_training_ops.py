@@ -1,6 +1,6 @@
 """Unit tests for the training-data pipeline operators: near-dup
-detection finds planted duplicates, text analysis and multimodal
-plumbing behave."""
+detection finds planted duplicates, and the text, graph and code
+operators behave."""
 
 from __future__ import annotations
 
@@ -14,12 +14,6 @@ from fcrepo3_rdf_extractor_spark.operators.dedup_approx import (
     minhash_signature,
     ngram_jaccard,
     simhash,
-)
-from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-    documents_as_media,
-    extract_media_features,
-    resize_metadata,
-    sample_frames,
 )
 from fcrepo3_rdf_extractor_spark.operators.text import (
     fingerprint,
@@ -216,27 +210,26 @@ def test_fingerprint_whitespace_invariant(spark):
     assert fp[0] != fp[2]
 
 
-def test_multimodal_pipeline_fake_decode(spark):
-    docs = _docs(spark)
-    media = documents_as_media(docs)
-    feats = extract_media_features(media, decode_stub="fake")
-    rows = {r.media_id: r for r in feats.collect()}
-    n = {r.media_id: r.n_bytes for r in media.collect()}
-    for mid, r in rows.items():
-        assert r.width == 64 + (n[mid] % 1024)
-        assert len(r.feature) == 16
-        assert abs(sum(r.feature) - 1.0) < 0.01
-    plan = resize_metadata(feats).collect()
-    assert all(min(p.out_width, p.out_height) == 224 for p in plan)
-    frames = sample_frames(media, every_n=16, max_frames=8)
-    per_doc = {r[0]: r[1] for r in frames.groupBy("media_id").count().collect()}
-    assert all(1 <= c <= 8 for c in per_doc.values())
+def test_with_quality_language_match_narrow_ops(spark):
+    """The in-place annotators (with_quality/with_language, per-row
+    projections that keep every input column) must produce the exact
+    values of the narrow oracled operators they refactor."""
+    from fcrepo3_rdf_extractor_spark.operators.text import (
+        language_id,
+        quality_score,
+        with_language,
+        with_quality,
+    )
 
-
-def test_multimodal_raise_stub(spark):
-    media = documents_as_media(_docs(spark))
-    with pytest.raises(Exception, match="NotImplementedError|codecs"):
-        extract_media_features(media, decode_stub="raise").collect()
+    docs = spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet").limit(50)
+    inplace = {r.doc_id: (r.quality, r.pred_lang)
+               for r in with_language(with_quality(docs)).collect()}
+    q = {r.doc_id: r.quality for r in quality_score(docs).collect()}
+    l = {r.doc_id: r.pred_lang for r in language_id(docs).collect()}
+    assert inplace == {d: (q[d], l[d]) for d in q}
+    # in-place forms keep every input column
+    assert set(docs.columns) <= set(with_language(with_quality(docs)).columns)
 
 
 def test_winnow_fingerprint_alignment_robust(spark):
@@ -279,22 +272,6 @@ def test_hll_sketch_distinct_error_bound(spark):
         assert abs(approx - exact) / exact < 0.05, (flag, approx, exact)
 
 
-def test_media_features_null_payload_survives(spark):
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        documents_as_media,
-        extract_media_features,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "real text", "en", "s", 9), (2, None, "en", "s", 0)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    feats = {r.media_id: r for r in
-             extract_media_features(documents_as_media(docs)).collect()}
-    assert feats[1].width is not None
-    assert feats[2].width is None and feats[2].feature is None
-
-
 def test_vocab_token_count_greedy_longest_match(spark):
     """Greedy longest-match segmentation: the longest matching vocab
     piece wins at each position ('foobar' with {'foo','foob','ba','r'}
@@ -317,105 +294,6 @@ def test_vocab_token_count_greedy_longest_match(spark):
     got = {r.doc_id: r.n_vocab_tokens
            for r in vocab_token_count(docs, vocab).collect()}
     assert got == {0: 3, 1: 4, 2: 3, 3: 0, 4: 1}
-
-
-def test_media_dimensions_genuine_file_headers(spark):
-    """The codec-free header parser must read dimensions from GENUINE
-    file bytes — a real PNG (correct IHDR CRC), a GIF89a screen
-    descriptor (little-endian!), and a JPEG whose SOF0 sits behind
-    APP0+APP1+DQT segments so the marker walk is actually exercised —
-    and yield NULL (not a task failure) on garbage and truncation."""
-    import struct
-    import zlib
-
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        media_dimensions,
-    )
-
-    def png(w, h):
-        ihdr = struct.pack(">II", w, h) + bytes([8, 6, 0, 0, 0])
-        return (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
-                + ihdr + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr)))
-
-    def gif(w, h):
-        return b"GIF89a" + struct.pack("<HH", w, h) + b"\xf7\x00\x00"
-
-    def jpeg(w, h):
-        app0 = (b"\xff\xe0" + struct.pack(">H", 16)
-                + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-        app1 = b"\xff\xe1" + struct.pack(">H", 10) + b"Exif\x00\x00\x00\x00"
-        dqt = b"\xff\xdb" + struct.pack(">H", 5) + b"\x00\x01\x02"
-        sof0 = (b"\xff\xc0" + struct.pack(">H", 17) + b"\x08"
-                + struct.pack(">HH", h, w)
-                + b"\x03\x01\x11\x00\x02\x11\x01\x03\x11\x01")
-        return b"\xff\xd8" + app0 + app1 + dqt + sof0 + b"\xff\xda..."
-
-    rows = [
-        (1, bytearray(png(640, 480))),
-        (2, bytearray(gif(320, 200))),
-        (3, bytearray(jpeg(1920, 1080))),
-        (4, bytearray(b"not an image at all")),
-        (5, bytearray(b"\x89PN")),  # truncated magic
-        (6, bytearray(b"\xff\xd8\xff\xe0")),  # JPEG cut before any length
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {r.media_id: (r.format, r.width, r.height)
-           for r in media_dimensions(df).collect()}
-    assert got[1] == ("png", 640, 480)
-    assert got[2] == ("gif", 320, 200)
-    assert got[3] == ("jpeg", 1920, 1080)
-    assert got[4] == (None, None, None)
-    assert got[5] == (None, None, None)
-    assert got[6] == ("jpeg", None, None)
-
-
-def test_media_dimensions_overflowing_fields_yield_null(spark):
-    """A payload that passes the PNG magic but carries 0xFFFFFFFF in the
-    width/height fields must yield NULL dims, not a task failure: a
-    straight cast('int') of the conv() string raises CAST_OVERFLOW under
-    ANSI mode (Spark 4 default), so one hostile row would kill a 100 TB
-    metadata job."""
-    import struct
-
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        media_dimensions,
-    )
-
-    evil_png = (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
-                + b"\xff\xff\xff\xff" + struct.pack(">I", 480)
-                + bytes([8, 6, 0, 0, 0]) + b"\x00\x00\x00\x00")
-    evil_gif = b"GIF89a\xff\xff\xff\xff\xf7\x00\x00"  # 65535s: in range
-    df = spark.createDataFrame(
-        [(1, bytearray(evil_png)), (2, bytearray(evil_gif))],
-        "media_id long, payload binary",
-    )
-    got = {r.media_id: (r.format, r.width, r.height)
-           for r in media_dimensions(df).collect()}
-    assert got[1] == ("png", None, 480)
-    assert got[2] == ("gif", 65535, 65535)  # uint16 can't overflow int32
-
-
-def test_documents_as_image_media_roundtrip(spark):
-    """Synthesized headers are valid enough that the parser recovers
-    exactly the planted (format, width, height) closed forms."""
-    from pyspark.sql import functions as F
-
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        documents_as_image_media,
-        media_dimensions,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "x" * (7 * i + 1)) for i in range(9)],
-        "doc_id long, text string",
-    )
-    media = documents_as_image_media(docs)
-    got = {r.media_id: r for r in media_dimensions(media).collect()}
-    for i in range(9):
-        fmt = ["png", "gif", "jpeg"][i % 3]
-        assert got[i].format == fmt
-        assert got[i].width == 1 + (7 * i + 1) % 1000
-        assert got[i].height == 1 + i % 800
 
 
 def test_connected_components_chain_and_singletons(spark):
@@ -1217,30 +1095,6 @@ def test_contamination_closure_propagates_across_cluster(spark):
     }
 
 
-def test_ppm_decode_real_bytes_and_error_isolation(spark):
-    """decode_ppm parses a hand-built golden P6 (with a header comment)
-    to exact channel means; malformed and non-PPM payloads come back as
-    NULL rows, not task failures."""
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        decode_ppm,
-        extract_ppm_features,
-    )
-
-    # 2x1 image: red pixel (255,0,0), mid pixel (10,20,30)
-    golden = b"P6\n# comment\n2 1\n255\n" + bytes([255, 0, 0, 10, 20, 30])
-    w, h, maxval, raster = decode_ppm(golden)
-    assert (w, h, maxval) == (2, 1, 255) and len(raster) == 6
-
-    media = spark.createDataFrame(
-        [(1, golden), (2, b"not an image"), (3, b"P6\n2 1\n255\n\x00")],
-        "media_id long, payload binary",
-    )
-    got = {r.media_id: r for r in extract_ppm_features(media).collect()}
-    assert (got[1].width, got[1].height) == (2, 1)
-    assert (got[1].mean_r, got[1].mean_g, got[1].mean_b) == (132.5, 10.0, 15.0)
-    assert got[2].width is None and got[3].width is None  # isolated, not fatal
-
-
 def test_code_clone_key_type2_semantics(spark):
     """Renamed identifiers + changed literals + different comments =
     SAME key; changed structure (operator, call shape) = different key."""
@@ -1287,20 +1141,6 @@ def test_bpe_token_count_udf_arm_matches_jvm_chain(spark):
     udf = {r.doc_id: r.n_tokens
            for r in bpe_token_count(df, merges, max_jvm_merges=0).collect()}
     assert jvm == udf and udf[4] == 0
-
-
-def test_ppm_zero_pixel_yields_null_features(spark):
-    """A valid-header zero-pixel P6 yields a NULL feature row (never
-    NaN means)."""
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        extract_ppm_features,
-    )
-
-    media = spark.createDataFrame(
-        [(1, b"P6\n0 0\n255\n")], "media_id long, payload binary"
-    )
-    row = extract_ppm_features(media).collect()[0]
-    assert row.width is None and row.mean_r is None
 
 
 def test_chunk_windows_semantics(spark):
@@ -1581,322 +1421,3 @@ def test_label_propagation_two_triangles(spark):
     assert got == again
 
 
-def test_png_decode_roundtrip_all_filters():
-    """decode_png inverts encode_png for every supported colortype,
-    with filter_mode='cycle' forcing all five scanline filters — a
-    wrong or faked unfilter branch cannot round-trip. Malformed
-    payloads (signature, CRC, truncation, palette) raise ValueError."""
-    import numpy as np
-
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(7)
-    for w, h, ch in [(4, 3, 3), (7, 6, 1), (5, 5, 4), (3, 9, 2), (1, 1, 3)]:
-        pix = rng.integers(0, 256, size=w * h * ch, dtype=np.uint8).tobytes()
-        got = decode_png(encode_png(w, h, pix, channels=ch))
-        assert got == (w, h, ch, pix)
-
-    ok = encode_png(4, 3, bytes(36))
-    corrupted = bytearray(ok)
-    corrupted[20] ^= 0xFF  # inside IHDR data -> CRC mismatch
-    for bad, msg in [
-        (b"JFIF....", "not a PNG"),
-        (bytes(corrupted), "CRC mismatch"),
-        (ok[:-16], "truncated|missing"),
-    ]:
-        with pytest.raises(ValueError, match=msg):
-            decode_png(bad)
-
-
-def test_png_features_and_error_isolation(spark):
-    """extract_png_features over a mixed frame: valid PNGs reduce to
-    exact channel means; a non-PNG payload yields a NULL feature row
-    (E1-style error isolation), never a task failure."""
-    import numpy as np
-
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        encode_png,
-        extract_png_features,
-    )
-
-    pix = np.arange(24, dtype=np.uint8).tobytes()  # 4x2 RGB, means exact
-    rows = [
-        (1, bytearray(encode_png(4, 2, pix, channels=3))),
-        (2, bytearray(b"not an image")),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {r.media_id: r for r in extract_png_features(media).collect()}
-    px = np.frombuffer(pix, dtype=np.uint8).reshape(-1, 3)
-    assert got[1].width == 4 and got[1].height == 2
-    assert got[1].mean_r == round(float(px[:, 0].mean()), 6)
-    assert got[1].mean_b == round(float(px[:, 2].mean()), 6)
-    assert got[2].width is None and got[2].mean_g is None
-
-
-def _gif_reference_compress(data: bytes, mcs: int) -> bytes:
-    """Reference GIF-convention LZW compressor (growing dictionary,
-    early-change width bump) — test-only, to prove the decoder's
-    general path, which the fixed-width fixture encoder never
-    exercises."""
-    clear, eoi = 1 << mcs, (1 << mcs) + 1
-    table = {bytes([i]): i for i in range(clear)}
-    next_code, width = eoi + 1, mcs + 1
-    codes = [(clear, mcs + 1)]
-    s = b""
-    for ch in data:
-        sc = s + bytes([ch])
-        if sc in table:
-            s = sc
-            continue
-        codes.append((table[s], width))
-        if next_code < 4096:
-            table[sc] = next_code
-            next_code += 1
-            if next_code == (1 << width) and width < 12:
-                width += 1
-        s = bytes([ch])
-    codes.append((table[s], width))
-    codes.append((eoi, width))
-    acc = nbits = 0
-    out = bytearray()
-    for code, wdt in codes:
-        acc |= code << nbits
-        nbits += wdt
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def test_gif_decode_roundtrip_and_real_lzw():
-    """decode_gif inverts the fixture encoder (palette applied), and
-    the LZW core decodes genuine growing-dictionary streams from a
-    reference compressor — width bumps to 12 bits, KwKwK, repetitive
-    data. Malformed inputs raise ValueError."""
-    import numpy as np
-
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        _gif_lzw_decode,
-        decode_gif,
-        encode_gif,
-    )
-
-    rng = np.random.default_rng(11)
-    j = np.arange(256, dtype=np.int64)
-    pal = (
-        np.stack([j, (2 * j) % 256, (3 * j) % 256], axis=1)
-        .astype(np.uint8)
-        .tobytes()
-    )
-    for w, h in [(4, 3), (20, 17), (1, 1)]:
-        idx = rng.integers(0, 256, size=w * h, dtype=np.uint8).tobytes()
-        got = decode_gif(encode_gif(w, h, idx, pal))
-        assert got == (w, h, 3, b"".join(pal[i * 3 : i * 3 + 3] for i in idx))
-
-    for n, mcs in [(50, 2), (4000, 8), (300, 4)]:
-        data = bytes(rng.integers(0, 1 << mcs, size=n, dtype=np.uint8))
-        assert _gif_lzw_decode(_gif_reference_compress(data, mcs), mcs, n) == data
-    rep = b"abcabcabcaabbccabcabc" * 200
-    assert _gif_lzw_decode(_gif_reference_compress(rep, 8), 8, len(rep)) == rep
-
-    ok = encode_gif(4, 3, bytes(12), pal)
-    for bad, msg in [
-        (b"PNG12345", "not a GIF"),
-        (ok[:-30], "GIF|truncated"),  # cut removes the image block entirely
-        # clear the global-color-table flag: palette bytes misread as blocks
-        (ok[:10] + bytes([0x40]) + ok[11:],
-         "unknown GIF block|no color table|no image"),
-    ]:
-        with pytest.raises(ValueError, match=msg):
-            decode_gif(bad)
-
-
-def test_gif_features_error_isolation(spark):
-    """extract_gif_features: valid payloads reduce to exact means; a
-    non-GIF payload yields a NULL feature row, never a task failure."""
-    import numpy as np
-
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        encode_gif,
-        extract_gif_features,
-    )
-
-    j = np.arange(256, dtype=np.int64)
-    pal = (
-        np.stack([j, (2 * j) % 256, (3 * j) % 256], axis=1)
-        .astype(np.uint8)
-        .tobytes()
-    )
-    idx = np.arange(12, dtype=np.uint8)
-    rows = [
-        (1, bytearray(encode_gif(4, 3, idx.tobytes(), pal))),
-        (2, bytearray(b"GIF89a truncated nonsense")),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {r.media_id: r for r in extract_gif_features(media).collect()}
-    assert got[1].width == 4 and got[1].height == 3
-    assert got[1].mean_r == round(float(idx.mean()), 6)
-    assert got[1].mean_g == round(float(((2 * idx.astype(int)) % 256).mean()), 6)
-    assert got[2].width is None and got[2].mean_b is None
-
-
-def test_gif_interlaced_roundtrip():
-    """GIF89a appendix E interlacing: the four-pass row order written
-    by the encoder is inverted by the decoder — interlaced and plain
-    encodings of the same pixels decode identically."""
-    import numpy as np
-
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        decode_gif,
-        encode_gif,
-    )
-
-    rng = np.random.default_rng(5)
-    j = np.arange(256, dtype=np.int64)
-    pal = (
-        np.stack([j, (2 * j) % 256, (3 * j) % 256], axis=1)
-        .astype(np.uint8)
-        .tobytes()
-    )
-    for w, h in [(4, 3), (20, 17), (1, 1), (8, 9), (3, 16)]:
-        idx = rng.integers(0, 256, size=w * h, dtype=np.uint8).tobytes()
-        plain = decode_gif(encode_gif(w, h, idx, pal))
-        inter = decode_gif(encode_gif(w, h, idx, pal, interlace=True))
-        assert plain == inter == (
-            w, h, 3, b"".join(pal[i * 3 : i * 3 + 3] for i in idx)
-        )
-
-
-def test_png_adam7_roundtrip():
-    """Adam7 interlacing (PNG §8.2): seven independently-filtered
-    sub-images, scattered back onto the pass grid — interlaced and
-    sequential encodings of the same pixels decode identically across
-    all colortypes, including dimensions where late passes are empty."""
-    import numpy as np
-
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(9)
-    for w, h, ch in [(4, 3, 3), (7, 6, 1), (5, 5, 4), (3, 9, 2),
-                     (1, 1, 3), (16, 16, 3), (9, 2, 1)]:
-        pix = rng.integers(0, 256, size=w * h * ch, dtype=np.uint8).tobytes()
-        plain = decode_png(encode_png(w, h, pix, channels=ch))
-        inter = decode_png(
-            encode_png(w, h, pix, channels=ch, interlace=True)
-        )
-        assert plain == inter == (w, h, ch, pix)
-
-
-def test_png_palette_decode():
-    """Colortype 3 (palette) PNG: 1 index byte per pixel unfiltered
-    like greyscale, then mapped through PLTE to RGB on return — the
-    full 8-bit PNG colortype surface. A palette image missing its PLTE
-    chunk raises."""
-    import zlib
-
-    import numpy as np
-
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        _PNG_SIG,
-        decode_png,
-    )
-
-    def chunk(ctype, data):
-        return (
-            len(data).to_bytes(4, "big") + ctype + data
-            + zlib.crc32(ctype + data).to_bytes(4, "big")
-        )
-
-    rng = np.random.default_rng(2)
-    w, h = 6, 5
-    idx = rng.integers(0, 256, size=w * h, dtype=np.uint8)
-    j = np.arange(256, dtype=np.int64)
-    pal = (
-        np.stack([j, (5 * j) % 256, (11 * j) % 256], axis=1)
-        .astype(np.uint8)
-        .tobytes()
-    )
-    raw = b"".join(
-        b"\x00" + idx[r * w : (r + 1) * w].tobytes() for r in range(h)
-    )
-    ihdr = (
-        w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, 3, 0, 0, 0])
-    )
-    png = (
-        _PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"PLTE", pal)
-        + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-    )
-    exp = b"".join(pal[i * 3 : i * 3 + 3] for i in idx)
-    assert decode_png(png) == (w, h, 3, exp)
-
-    no_plte = (
-        _PNG_SIG + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="missing PLTE"):
-        decode_png(no_plte)
-
-
-def test_png_16bit_decode_high_byte():
-    """16-bit PNG: filters unfilter at the true bytes-per-pixel (2*ch,
-    PNG §9), then samples reduce to their big-endian high byte — the
-    standard 16->8 depth reduction for feature extraction. Exercises
-    None and Up filters over hand-built raw scanlines."""
-    import zlib
-
-    import numpy as np
-
-    from fcrepo3_rdf_extractor_spark.operators.multimodal import (
-        _PNG_SIG,
-        decode_png,
-    )
-
-    def chunk(c, d):
-        return (
-            len(d).to_bytes(4, "big") + c + d
-            + zlib.crc32(c + d).to_bytes(4, "big")
-        )
-
-    rng = np.random.default_rng(4)
-    w, h, ch = 5, 4, 3
-    samples = rng.integers(0, 65536, size=w * h * ch, dtype=np.uint16)
-    be = samples.astype(">u2").tobytes()
-    rowbytes = w * ch * 2
-    rows = [be[r * rowbytes : (r + 1) * rowbytes] for r in range(h)]
-    raw = bytearray()
-    for r, row in enumerate(rows):
-        if r % 2 == 0:
-            raw += b"\x00" + row
-        else:
-            prev = np.frombuffer(rows[r - 1], np.uint8).astype(int)
-            cur = np.frombuffer(row, np.uint8).astype(int)
-            raw += b"\x02" + ((cur - prev) & 0xFF).astype(np.uint8).tobytes()
-    ihdr = (
-        w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([16, 2, 0, 0, 0])
-    )
-    png = (
-        _PNG_SIG + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
-    )
-    exp = (samples >> 8).astype(np.uint8).tobytes()
-    assert decode_png(png) == (w, h, ch, exp)
-
-    # sub-byte depths stay a clear rejection
-    bad_ihdr = (
-        w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([4, 0, 0, 0, 0])
-    )
-    bad = (
-        _PNG_SIG + chunk(b"IHDR", bad_ihdr)
-        + chunk(b"IDAT", zlib.compress(b"\x00" * 10)) + chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="unsupported bit depth"):
-        decode_png(bad)
