@@ -90,16 +90,7 @@ def managed_content_requests(source: DataFrame, keep_group: bool = False) -> Dat
     )
     ds_block = r"(?s)<foxml:datastream\b.*?</foxml:datastream>"
     v_block = r"(?s)<foxml:datastreamVersion\b.*?</foxml:datastreamVersion>"
-    exploded = needs.select(
-        "repo", "path", "commit",
-        F.explode(F.regexp_extract_all("content", F.lit(ds_block), 0)).alias("_ds"),
-    ).filter(
-        F.col("_ds").rlike("^<foxml:datastream\\b[^>]*\\bCONTROL_GROUP=[\"'][MER][\"']")
-        & F.col("_ds").rlike("^<foxml:datastream\\b[^>]*\\bID=[\"'](DC|RELS-EXT|RELS-INT)[\"']")
-    ).withColumn(
-        "_group",
-        F.regexp_extract("_ds", "\\bCONTROL_GROUP=[\"']([MER])[\"']", 1),
-    )
+
     def xml_unescape(col):
         # regex extraction reads RAW attribute text; decode character
         # references so fetch keys match what the ElementTree-backed
@@ -119,86 +110,120 @@ def managed_content_requests(source: DataFrame, keep_group: bool = False) -> Dat
             0,
         )
 
-        def dec(t):
+        def code(t):
+            # a numeric reference's code point; NULL for any other token
             dec_code = F.regexp_replace(t, "[^0-9]", "").try_cast("int")
             hex_code = F.conv(F.regexp_replace(t, "&#x|;", ""), 16, 10).try_cast("int")
-            code = F.when(t.rlike("^&#x"), hex_code).otherwise(dec_code)
+            return F.when(t.rlike("^&#x"), hex_code).when(t.rlike("^&#"), dec_code)
+
+        def dec(tc):
+            t, c = tc["t"], tc["c"]
             return (
                 F.when(t == "&amp;", F.lit("&"))
                 .when(t == "&lt;", F.lit("<"))
                 .when(t == "&gt;", F.lit(">"))
                 .when(t == "&quot;", F.lit('"'))
                 .when(t == "&apos;", F.lit("'"))
-                .when(
-                    t.rlike("^&#")
-                    & code.isNotNull() & (code >= 32) & (code <= 126),
-                    F.char(code),
-                )
+                .when((c >= 32) & (c <= 126), F.char(c))
                 .otherwise(t)
             )
 
-        return F.array_join(F.transform(toks, dec), "")
+        # stage the code point: dec reads it three times
+        coded = F.transform(toks, lambda t: F.struct(t.alias("t"), code(t).alias("c")))
+        return F.array_join(F.transform(coded, dec), "")
 
-    versions = F.transform(
-        F.regexp_extract_all("_ds", F.lit(v_block), 0),
-        lambda v: F.struct(
-            # PARSED timestamp as the ordering key: lexicographic max
-            # diverges for variable-length fractions ('..0.1Z' > '..0.15Z'
-            # because 'Z' > '5') and non-Z offsets, both of which the
-            # engine's date grammar accepts; try_to_timestamp matches
-            # parse_foxml's parse_instant ordering and yields NULL for
-            # absent/garbage CREATED (sorted last, like the parser)
-            F.try_to_timestamp(attr_val(v, r"\bCREATED")).alias("k"),
-            xml_unescape(
-                attr_val(v, r"<foxml:contentLocation\b[^>]*?\bREF")
-            ).alias("r"),
+    def newest_ref(ds):
+        # newest version = the max of (parsed CREATED, -position, raw REF).
+        # Struct order puts a NULL k first, so any parseable CREATED
+        # beats none (the parser sorts absent/garbage CREATED last);
+        # -position makes ties and all-NULL k pick the FIRST version in
+        # document order, like the parser's stable sort. try_to_timestamp,
+        # not the raw text: lexicographic max diverges for
+        # variable-length fractions ('..0.1Z' > '..0.15Z' because
+        # 'Z' > '5') and non-Z offsets. A version-less block gives an
+        # empty array, whose array_max is NULL (no ANSI abort, E1).
+        newest = F.array_max(F.transform(
+            F.regexp_extract_all(ds, F.lit(v_block), 0),
+            lambda v, i: F.struct(
+                F.try_to_timestamp(attr_val(v, r"\bCREATED")).alias("k"),
+                (-i).alias("o"),
+                attr_val(v, r"<foxml:contentLocation\b[^>]*?\bREF").alias("r"),
+            ),
+        ))
+        return newest["r"]
+
+    # Every stage below is a projection of per-object ARRAYS, and bad
+    # keys are dropped inside those arrays with one inline at the end.
+    # A Filter over a staged, non-cheap column would be pushed below
+    # its projection with the column's whole expression copied in for
+    # each reference (versions transform, xml_unescape, minting), a
+    # plan over 10x the size; test_plans.py pins the regexp_extract_all
+    # count.
+    blocks = F.filter(
+        F.regexp_extract_all("content", F.lit(ds_block), 0),
+        lambda ds: (
+            ds.rlike("^<foxml:datastream\\b[^>]*\\bCONTROL_GROUP=[\"'][MER][\"']")
+            & ds.rlike("^<foxml:datastream\\b[^>]*\\bID=[\"'](DC|RELS-EXT|RELS-INT)[\"']")
         ),
     )
-    staged = exploded.select("repo", "path", "commit", "_group", versions.alias("_vs"))
-    maxk = F.array_max(F.transform(F.col("_vs"), lambda x: x["k"]))
-    # try_element_at, NOT element_at: a version-less datastream block
-    # yields an empty _vs, and under ANSI mode (Spark 4 default)
-    # element_at on an empty array ABORTS THE JOB — a malformed object
-    # must cost an error row, never the job (E1)
-    newest_ref = F.when(
-        # no version has a parseable CREATED -> document order, like the
-        # parser's stable sort
-        maxk.isNull(), F.try_element_at(F.col("_vs"), F.lit(1))["r"]
-    ).otherwise(
-        F.try_element_at(
-            F.filter(F.col("_vs"), lambda x: x["k"] == maxk), F.lit(1)
-        )["r"]
+    picked = needs.select(
+        "repo", "path", "commit",
+        F.transform(blocks, lambda ds: F.struct(
+            F.regexp_extract(ds, "\\bCONTROL_GROUP=[\"']([MER])[\"']", 1).alias("g"),
+            newest_ref(ds).alias("r"),
+        )).alias("_reqs"),
     )
-    tokens = staged.select(
-        "repo", "path", "commit", "_group", newest_ref.alias("_token")
-    ).filter(F.col("_token").isNotNull() & (F.col("_token") != ""))
-    # stage the split: referenced 4x below (CollapseProject would
-    # re-inline the split per reference otherwise)
+    # decode only the chosen REF; NULL (no version) and empty tokens
+    # yield no request row
+    tokens = picked.select(
+        "repo", "path", "commit",
+        F.filter(
+            F.transform("_reqs", lambda q: F.struct(
+                q["g"].alias("g"), xml_unescape(q["r"]).alias("t"),
+            )),
+            lambda q: q["t"].isNotNull() & (q["t"] != ""),
+        ).alias("_reqs"),
+    )
+    # stage the split: minting reads it 4x per token, through the lambda
+    # variable, so CollapseProject may merge these projections without
+    # copying the split per reference
     parts = tokens.select(
-        "repo", "path", "commit", "_group", "_token",
-        F.split("_token", r"\+").alias("_p"),
+        "repo", "path", "commit",
+        F.transform("_reqs", lambda q: F.struct(
+            q["g"].alias("g"), q["t"].alias("t"), F.split(q["t"], r"\+").alias("p"),
+        )).alias("_reqs"),
     )
-    p = F.col("_p")
-    mint3 = F.concat(
-        p[0], F.lit("/"), F.url_encode(p[1]), F.lit("/"), F.url_encode(p[2])
+
+    def request(q):
+        tok, p = q["t"], q["p"]
+        mint3 = F.concat(
+            p[0], F.lit("/"), F.url_encode(p[1]), F.lit("/"), F.url_encode(p[2])
+        )
+        minted = F.when(
+            F.size(p) == 1,
+            F.when(tok.startswith("info:fedora/"), tok)
+            .otherwise(F.concat(F.lit("info:fedora/"), tok)),
+        ).when(
+            F.size(p) == 3,
+            F.when(p[0].startswith("info:fedora/"), mint3)
+            .otherwise(F.concat(F.lit("info:fedora/"), mint3)),
+        )
+        # MANAGED locations mint to Akubra blob ids; EXTERNAL/REDIRECT
+        # locations are verbatim URLs — the fetch key the crawler table
+        # uses
+        fields = [F.when(q["g"] == "M", minted).otherwise(tok).alias("blob_id")]
+        if keep_group:
+            # jobs/crawl.py needs the dispatch group to enumerate E/R URLs
+            fields.append(q["g"].alias("control_group"))
+        return F.struct(*fields)
+
+    # an unmintable MANAGED token gives a NULL blob_id: no request row
+    return parts.select(
+        "repo", "path", "commit",
+        F.inline(F.filter(
+            F.transform("_reqs", request), lambda r: r["blob_id"].isNotNull()
+        )),
     )
-    minted = F.when(
-        F.size(p) == 1,
-        F.when(F.col("_token").startswith("info:fedora/"), F.col("_token"))
-        .otherwise(F.concat(F.lit("info:fedora/"), F.col("_token"))),
-    ).when(
-        F.size(p) == 3,
-        F.when(p[0].startswith("info:fedora/"), mint3)
-        .otherwise(F.concat(F.lit("info:fedora/"), mint3)),
-    )
-    # MANAGED locations mint to Akubra blob ids; EXTERNAL/REDIRECT
-    # locations are verbatim URLs — the fetch key the crawler table uses
-    blob = F.when(F.col("_group") == "M", minted).otherwise(F.col("_token"))
-    cols = ["repo", "path", "commit", blob.alias("blob_id")]
-    if keep_group:
-        # jobs/crawl.py needs the dispatch group to enumerate E/R URLs
-        cols.append(F.col("_group").alias("control_group"))
-    return parts.select(*cols).filter(F.col("blob_id").isNotNull())
 
 
 def attach_managed_content(source: DataFrame, ds_store: DataFrame) -> DataFrame:

@@ -141,6 +141,23 @@ def test_managed_content_plan_single_python_stage(spark):
     assert tree.count("MapInPandas") == 1, tree
 
 
+def test_managed_content_requests_not_reinlined(spark):
+    """Regression: Filters over the staged ``_token`` and ``blob_id``
+    columns were pushed below their projections with the versions
+    transform, ``xml_unescape`` and minting copied in per reference —
+    123 ``regexp_extract_all(`` in the optimized request pass (130 KB
+    of plan text over the sf0.001 orders). Bad keys are now dropped inside arrays before one
+    inline, so each regex appears once per use: 3 (datastream blocks,
+    versions, the entity tokenizer)."""
+    from fcrepo3_rdf_extractor_spark.plans.pipeline import managed_content_requests
+    from fcrepo3_rdf_extractor_spark.sources.source_table import (
+        synthesize_foxml_from_orders,
+    )
+
+    plan = _optimized(managed_content_requests(synthesize_foxml_from_orders(spark, SF_DIR)))
+    assert plan.count("regexp_extract_all(") <= 3, plan.count("regexp_extract_all(")
+
+
 def test_simhash_neardup_no_nested_loop_join(spark):
     """Regression: the OR-of-band-equalities join condition planned a
     BroadcastNestedLoopJoin (O(n^2) compares, no bucket bound). The

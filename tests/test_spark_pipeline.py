@@ -381,6 +381,7 @@ def test_managed_content_requests_version_pick_and_minting(spark):
     minting matches terms.get_blob_id including percent-encoding, and a
     malformed token yields no request row (extraction will emit the
     error row) instead of failing the pass."""
+    from fcrepo3_rdf_extractor_spark.foxml import parse_foxml
     from fcrepo3_rdf_extractor_spark.plans.pipeline import managed_content_requests
     from fcrepo3_rdf_extractor_spark.terms import get_blob_id
 
@@ -473,6 +474,35 @@ def test_managed_content_requests_version_pick_and_minting(spark):
         "<foxml:contentLocation TYPE='INTERNAL_ID' REF='sq:1+DC+DC.0'/>"
         "</foxml:datastreamVersion></foxml:datastream>"
     )
+
+    def two_versions(first_created: str, second_created: str, pid: str) -> str:
+        # two MANAGED DC versions, REF ...+FIRST listed before ...+SECOND
+        def version(vid: str, created: str) -> str:
+            return (
+                f'<foxml:datastreamVersion ID="DC.{vid}"{created}>'
+                f'<foxml:contentLocation TYPE="INTERNAL_ID" REF="{pid}+DC+{vid}"/>'
+                "</foxml:datastreamVersion>"
+            )
+
+        return foxml(
+            '<foxml:datastream ID="DC" STATE="A" CONTROL_GROUP="M">'
+            + version("FIRST", first_created) + version("SECOND", second_created)
+            + "</foxml:datastream>"
+        )
+
+    same = ' CREATED="2021-05-05T00:00:00.000Z"'
+    tie = two_versions(same, same, "t:1")        # equal CREATED: first wins
+    no_created = two_versions("", "", "t:2")     # no CREATED at all: first wins
+    later_created = two_versions("", same, "t:3")  # only the second is dated
+    tie_break = {
+        "p11": (tie, "t:1+DC+FIRST"),
+        "p12": (no_created, "t:2+DC+FIRST"),
+        "p13": (later_created, "t:3+DC+SECOND"),
+    }
+    for content, token in tie_break.values():
+        # the expectation is parse_foxml's stable sort, not a restatement
+        (ds,) = parse_foxml(content)["datastreams"]
+        assert ds["versions"][0]["content_location"] == token
     src = spark.createDataFrame(
         [("r", "p1", "c", "foxml", multi_version),
          ("r", "p2", "c", "foxml", encoded),
@@ -483,7 +513,9 @@ def test_managed_content_requests_version_pick_and_minting(spark):
          ("r", "p7", "c", "foxml", frac),
          ("r", "p8", "c", "foxml", single_quoted),
          ("r", "p9", "c", "foxml", numeric_refs),
-         ("r", "p10", "c", "foxml", no_rescan)],
+         ("r", "p10", "c", "foxml", no_rescan)]
+        + [("r", path, "c", "foxml", content)
+           for path, (content, _) in tie_break.items()],
         "repo string, path string, commit string, lang string, content string",
     )
     got = {(r.path, r.blob_id) for r in managed_content_requests(src).collect()}
@@ -496,6 +528,9 @@ def test_managed_content_requests_version_pick_and_minting(spark):
         ("p8", get_blob_id("sq:1+DC+DC.0")),         # single-quoted attributes
         ("p9", "http://ex.org/ds?a=1&b=2&c=3"),      # numeric char refs decoded
         ("p10", "http://ex.org/ds?q=&amp;"),         # decoded once, no re-scan
+        ("p11", get_blob_id("t:1+DC+FIRST")),        # CREATED tie: document order
+        ("p12", get_blob_id("t:2+DC+FIRST")),        # no CREATED: document order
+        ("p13", get_blob_id("t:3+DC+SECOND")),       # a CREATED beats none
     }
 
 
