@@ -1,6 +1,6 @@
-"""JVM-side column functions: N-Quads rendering, term escaping, subject
-bucketing. All pure ``pyspark.sql.functions`` compositions — they stay
-inside whole-stage codegen; no Python executes per row.
+"""JVM-side column functions: N-Quads rendering, subject bucketing, and
+the SQL-literal quoting that fixed SQL-text expressions share. No Python
+executes per row.
 
 The N-Quads string column replaces the reference's Jena
 ``WriterStreamRDFPlain`` sink (`TripleDump.java:51-66`) with a
@@ -15,90 +15,79 @@ from pyspark.sql import functions as F
 from ..vocab import XSD_STRING
 
 
-# C0 controls without a dedicated ECHAR (everything below 0x20 except
-# \t \n \r) — \uXXXX-escaped, byte-identical to terms.escape_literal
-_CTRL_ESCAPES: list[tuple[str, str]] = [
-    (chr(c), "\\u%04X" % c)
-    for c in range(0x20)
-    if chr(c) not in ("\t", "\n", "\r")
-]
+def sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal (the parser resolves
+    backslash escapes, so backslash and quote are the two characters to
+    escape)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def escape_literal_col(col: Column) -> Column:
-    """N-Triples ECHAR escaping as a replace chain (backslash first),
-    plus \\uXXXX for the remaining C0 controls. The control chain sits
-    behind a regexp guard so clean literals pay one scan, not 29."""
-    out = F.replace(col, F.lit("\\"), F.lit("\\\\"))
-    out = F.replace(out, F.lit('"'), F.lit('\\"'))
-    out = F.replace(out, F.lit("\n"), F.lit("\\n"))
-    out = F.replace(out, F.lit("\r"), F.lit("\\r"))
-    out = F.replace(out, F.lit("\t"), F.lit("\\t"))
-    ctl = out
-    for ch, esc in _CTRL_ESCAPES:
-        ctl = F.replace(ctl, F.lit(ch), F.lit(esc))
-    return F.when(col.rlike("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]"), ctl).otherwise(out)
+# A term is escaped per character class: the regexp guard keeps a clean
+# value to one scan, and only a value holding a special character is
+# split into tokens (one per special character, one per run of ordinary
+# ones) whose special tokens map to their escapes. Tokenizing instead of
+# a 42-deep replace chain keeps every generated method under HotSpot's
+# 8,000-byte JIT limit: the chain, fused with the table scan, generated a
+# 15-16 KB ``processNext``, so every row ran in the bytecode interpreter.
+_UCHAR = "concat('\\\\u', lpad(hex(ascii(t)), 4, '0'))"  # as terms.escape_*: %04X
 
 
-# IRIREF-illegal characters (N-Triples: controls, space, <>"{}|^`\) and
-# their UCHAR escapes — byte-identical to terms.escape_uri. Backslash is
-# listed FIRST so already-written escapes are never double-escaped.
-_URI_ESCAPES: list[tuple[str, str]] = [("\\", "\\u005C")] + [
-    (ch, "\\u%04X" % ord(ch))
-    for ch in [chr(c) for c in range(0x21)] + list('<>"{}|^`')
-]
-# Java-regex test for "contains any IRIREF-illegal char" (guards the chain)
-_URI_ILLEGAL_RX = "[\\x00-\\x20<>\"{}|^`\\\\]"
-
-
-def escape_uri_col(col: Column) -> Column:
-    """UCHAR-escape IRIREF-illegal characters, byte-identical to the
-    pure-Python ``terms.escape_uri`` (equality is tested). A regexp guard
-    keeps the common all-legal path to one scan; the 42-replace chain only
-    evaluates for rows that actually carry an illegal character (Spark's
-    ``when`` is lazy per row)."""
-    escaped = col
-    for ch, esc in _URI_ESCAPES:
-        escaped = F.replace(escaped, F.lit(ch), F.lit(esc))
-    return F.when(col.rlike(_URI_ILLEGAL_RX), escaped).otherwise(col)
-
-
-def term_col(value: Column, is_literal: Column, datatype: Column, lang: Column) -> Column:
-    uri = F.concat(F.lit("<"), escape_uri_col(value), F.lit(">"))
-    lex = F.concat(F.lit('"'), escape_literal_col(value), F.lit('"'))
-    lit = (
-        F.when(lang.isNotNull(), F.concat(lex, F.lit("@"), lang))
-        .when(
-            datatype.isNotNull() & (datatype != F.lit(XSD_STRING)),
-            F.concat(lex, F.lit("^^<"), escape_uri_col(datatype), F.lit(">")),
-        )
-        .otherwise(lex)
+def _escaped(col: str, special: str, escape: str) -> str:
+    """SQL for ``col`` with every character in the regex character class
+    ``[special]`` replaced by ``escape``: an SQL expression over lambda
+    token ``t`` (one special character, or a run of ordinary ones) that
+    returns an ordinary run unchanged."""
+    guard = sql_str(f"[{special}]")
+    tokens = sql_str(f"[{special}]|[^{special}]+")
+    return (
+        f"CASE WHEN {col} RLIKE {guard} THEN array_join(transform("
+        f"regexp_extract_all({col}, {tokens}, 0), t -> {escape}), '') "
+        f"ELSE {col} END"
     )
-    return F.when(is_literal, lit).otherwise(uri)
 
 
-def nquad_line_col(
-    subj: Column | str = "subj",
-    pred: Column | str = "pred",
-    obj_value: Column | str = "obj_value",
-    obj_is_literal: Column | str = "obj_is_literal",
-    obj_datatype: Column | str = "obj_datatype",
-    obj_lang: Column | str = "obj_lang",
-    graph: Column | str | None = "graph",
-) -> Column:
-    """One N-Quads line per triple row, byte-compatible with the
-    pure-Python ``terms.nquad_line`` (tested for equality)."""
-    c = lambda x: F.col(x) if isinstance(x, str) else x  # noqa: E731
-    parts = [
-        F.concat(F.lit("<"), escape_uri_col(c(subj)), F.lit(">")),
-        F.lit(" "),
-        F.concat(F.lit("<"), escape_uri_col(c(pred)), F.lit(">")),
-        F.lit(" "),
-        term_col(c(obj_value), c(obj_is_literal), c(obj_datatype), c(obj_lang)),
-    ]
-    if graph is not None:
-        parts += [F.lit(" "), F.concat(F.lit("<"), escape_uri_col(c(graph)), F.lit(">"))]
-    parts += [F.lit(" .")]
-    return F.concat(*parts)
+# IRIREF-illegal characters (N-Triples: controls, space, <>"{}|^`\),
+# UCHAR-escaped, byte-identical to terms.escape_uri. An ordinary token's
+# first character is none of them, so ``ascii(t)`` tells the classes apart.
+_URI_SPECIAL = "\\x00-\\x20<>\"{}|^`\\\\"
+_URI_CODES = ", ".join(str(ord(c)) for c in '<>"{}|^`\\')
+# ECHARs, then \uXXXX for the remaining C0 controls, byte-identical to
+# terms.escape_literal
+_LITERAL_SPECIAL = "\\x00-\\x1F\"\\\\"
+_ECHARS = {"\\": "\\\\", '"': '\\"', "\n": "\\n", "\r": "\\r", "\t": "\\t"}
+
+
+def _uri(col: str) -> str:
+    esc = f"IF(ascii(t) <= 32 OR ascii(t) IN ({_URI_CODES}), {_UCHAR}, t)"
+    return f"concat('<', {_escaped(col, _URI_SPECIAL, esc)}, '>')"
+
+
+def _literal(col: str) -> str:
+    whens = " ".join(f"WHEN {ord(c)} THEN {sql_str(e)}" for c, e in _ECHARS.items())
+    esc = f"CASE ascii(t) {whens} ELSE IF(ascii(t) < 32, {_UCHAR}, t) END"
+    return f"""concat('"', {_escaped(col, _LITERAL_SPECIAL, esc)}, '"')"""
+
+
+# an empty lang or datatype (the parser keeps xml:lang="") tags nothing,
+# as in terms.serialize_term: '"x"@' is no N-Quads term
+_OBJECT = (
+    f"CASE WHEN obj_is_literal THEN concat({_literal('obj_value')}, "
+    f"CASE WHEN obj_lang != '' THEN concat('@', obj_lang) "
+    f"WHEN obj_datatype != '' AND obj_datatype != {sql_str(XSD_STRING)} "
+    f"THEN concat('^^', {_uri('obj_datatype')}) ELSE '' END) "
+    f"ELSE {_uri('obj_value')} END"
+)
+NQUAD_LINE_SQL = (
+    f"concat({_uri('subj')}, ' ', {_uri('pred')}, ' ', {_OBJECT}, ' ', "
+    f"{_uri('graph')}, ' .')"
+)
+
+
+def nquad_line_col() -> Column:
+    """One N-Quads line per row of the triple schema (``subj``, ``pred``,
+    ``obj_*``, ``graph``), byte-compatible with the pure-Python
+    ``terms.nquad_line`` (tested for equality)."""
+    return F.expr(NQUAD_LINE_SQL)
 
 
 def subject_bucket(subj: Column | str = "subj", num_buckets: int = 256) -> Column:

@@ -26,7 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import subject_bucket
+from ..functions import sql_str, subject_bucket
 from ..operators.canonicalize import canonicalize
 from ..operators.dedup import TRIPLE_KEY, dedup_exact
 from ..operators.extractor import extract_triples
@@ -49,6 +49,133 @@ class ExtractConfig:
     chunks_per_wave: int = 16         # chunks committed per wave job
 
 
+def _attr_val(el: str, name: str) -> str:
+    """SQL for an XML attribute's raw value in element text ``el``,
+    accepting EITHER quote style: well-formed XML allows single quotes
+    too, and the ElementTree-backed UDF accepts them. Each branch
+    excludes only its own quote character, so an apostrophe inside a
+    double-quoted value (or vice versa) survives."""
+    dq, sq = (
+        f"regexp_extract({el}, {sql_str(f'(?s){name}={q}([^{q}]*){q}')}, 1)" for q in "\"'"
+    )
+    return f"CASE WHEN {dq} != '' THEN {dq} ELSE {sq} END"
+
+
+def _xml_unescape(col: str) -> str:
+    """SQL decoding the character references of raw attribute text, so
+    fetch keys match what the ElementTree-backed extraction UDF looks up
+    ('&' MUST be entity-escaped in well-formed attributes, so URLs with
+    query strings carry '&amp;' or '&#38;'). ONE tokenizer pass (the
+    five named entities plus decimal/hex numeric refs), so decoded
+    output is never re-scanned: chained replaces turn the raw literal
+    '&#38;amp;' into '&' instead of '&amp;'. Numeric refs decode over
+    printable ASCII (32-126), the URL-legal alphabet a contentLocation
+    can carry; anything else stays undecoded and surfaces as the
+    per-datastream error row. The code point is staged in a struct
+    because the decode reads it three times."""
+    tokens = sql_str("&#[0-9]+;|&#x[0-9a-fA-F]+;|&(?:amp|lt|gt|quot|apos);|&|[^&]+")
+    code = (
+        "CASE WHEN t RLIKE '^&#x' THEN try_cast(conv(regexp_replace(t, '&#x|;', ''), 16, 10) AS int) "
+        "WHEN t RLIKE '^&#' THEN try_cast(regexp_replace(t, '[^0-9]', '') AS int) END"
+    )
+    named = " ".join(
+        f"WHEN e.t = '&{name};' THEN {sql_str(char)}"
+        for name, char in (("amp", "&"), ("lt", "<"), ("gt", ">"), ("quot", '"'), ("apos", "'"))
+    )
+    return (
+        f"array_join(transform(transform(regexp_extract_all({col}, {tokens}, 0), "
+        f"t -> named_struct('t', t, 'c', {code})), "
+        f"e -> CASE {named} WHEN e.c >= 32 AND e.c <= 126 THEN chr(e.c) ELSE e.t END), '')"
+    )
+
+
+_CONTROL_GROUP_RX = r"""CONTROL_GROUP=["'][MER]["']"""
+_DS_ID_RX = r"""ID=["'](DC|RELS-EXT|RELS-INT)["']"""
+_DS_BLOCK_RX = r"(?s)<foxml:datastream\b.*?</foxml:datastream>"
+_DS_OPEN_RX = r"^<foxml:datastream\b[^>]*\b"
+_VERSION_BLOCK_RX = r"(?s)<foxml:datastreamVersion\b.*?</foxml:datastreamVersion>"
+_CREATED_ATTR = r"\bCREATED"
+_REF_ATTR = r"<foxml:contentLocation\b[^>]*?\bREF"
+_GROUP_RX = r"""\bCONTROL_GROUP=["']([MER])["']"""
+
+# The request pass is four staged projections of per-object ARRAYS, and
+# bad keys are dropped inside those arrays with one inline at the end. A
+# Filter over a staged, non-cheap column would be pushed below its
+# projection with the column's whole expression copied in for each
+# reference (versions transform, xml_unescape, minting), a plan over 10x
+# the size; test_plans.py pins the regexp_extract_all count. Each stage
+# is SQL text built once at import: one py4j call per stage, where the
+# Column API paid about a thousand per run.
+
+# prefilter: one regex scan per condition
+_NEEDS = f"content RLIKE {sql_str(_CONTROL_GROUP_RX)} AND content RLIKE {sql_str(_DS_ID_RX)}"
+
+# newest version = the max of (parsed CREATED, -position, raw REF).
+# Struct order puts a NULL k first, so any parseable CREATED beats none
+# (the parser sorts absent/garbage CREATED last); -position makes ties
+# and all-NULL k pick the FIRST version in document order, like the
+# parser's stable sort. try_to_timestamp, not the raw text:
+# lexicographic max diverges for variable-length fractions
+# ('..0.1Z' > '..0.15Z' because 'Z' > '5') and non-Z offsets. A
+# version-less block gives an empty array, whose array_max is NULL (no
+# ANSI abort, E1).
+_NEWEST_REF = (
+    f"array_max(transform(regexp_extract_all(ds, {sql_str(_VERSION_BLOCK_RX)}, 0), "
+    f"(v, i) -> named_struct('k', try_to_timestamp({_attr_val('v', _CREATED_ATTR)}), "
+    f"'o', -i, 'r', {_attr_val('v', _REF_ATTR)}))).r"
+)
+# the qualifying datastream blocks -> (control group, newest raw REF)
+_PICKED = (
+    f"transform(filter(regexp_extract_all(content, {sql_str(_DS_BLOCK_RX)}, 0), "
+    f"ds -> ds RLIKE {sql_str(_DS_OPEN_RX + _CONTROL_GROUP_RX)} "
+    f"AND ds RLIKE {sql_str(_DS_OPEN_RX + _DS_ID_RX)}), "
+    f"ds -> named_struct("
+    f"'g', regexp_extract(ds, {sql_str(_GROUP_RX)}, 1), "
+    f"'r', {_NEWEST_REF})) AS _reqs"
+)
+# decode only the chosen REF; NULL (no version) and empty tokens yield
+# no request row
+_TOKENS = (
+    f"filter(transform(_reqs, q -> named_struct('g', q.g, 't', {_xml_unescape('q.r')})), "
+    f"q -> q.t IS NOT NULL AND q.t != '') AS _reqs"
+)
+# stage the split: minting reads it 4x per token, through the lambda
+# variable, so CollapseProject may merge these projections without
+# copying the split per reference
+_PARTS = (
+    f"transform(_reqs, q -> named_struct('g', q.g, 't', q.t, 'p', split(q.t, '\\\\+'))) "
+    f"AS _reqs"
+)
+# Blob-id minting as terms.get_blob_id: a 1-token key gains the
+# info:fedora/ prefix, a 3-token ns:id+dsId+dsvId one becomes
+# info:fedora/ns:id/<enc>/<enc> with Java-URLEncoder form encoding (=
+# url_encode), any other count is unmintable (NULL).
+_MINT3 = "concat(q.p[0], '/', url_encode(q.p[1]), '/', url_encode(q.p[2]))"
+_MINTED = (
+    "CASE WHEN size(q.p) = 1 THEN "
+    "CASE WHEN startswith(q.t, 'info:fedora/') THEN q.t ELSE concat('info:fedora/', q.t) END "
+    f"WHEN size(q.p) = 3 THEN CASE WHEN startswith(q.p[0], 'info:fedora/') THEN {_MINT3} "
+    f"ELSE concat('info:fedora/', {_MINT3}) END END"
+)
+
+
+def _requests(fields: str) -> str:
+    """The last stage: MANAGED locations mint to Akubra blob ids,
+    EXTERNAL/REDIRECT ones stay verbatim URLs (the crawler table's
+    key). An unmintable MANAGED token gives a NULL blob_id and no row,
+    and two datastreams with one fetch key give one row, because the
+    attach builds a map on that key."""
+    return (
+        f"inline(array_distinct(filter(transform(_reqs, q -> named_struct("
+        f"'blob_id', CASE WHEN q.g = 'M' THEN {_MINTED} ELSE q.t END{fields})), "
+        f"r -> r.blob_id IS NOT NULL)))"
+    )
+
+
+# jobs/crawl.py needs the dispatch group to enumerate E/R URLs
+_REQUESTS = {False: _requests(""), True: _requests(", 'control_group', q.g")}
+
+
 def managed_content_requests(source: DataFrame, keep_group: bool = False) -> DataFrame:
     """The content *request* pass: object row -> the fetch keys of the
     newest DC/RELS-EXT/RELS-INT MANAGED (M) and EXTERNAL/REDIRECT (E/R)
@@ -64,165 +191,20 @@ def managed_content_requests(source: DataFrame, keep_group: bool = False) -> Dat
     and the extraction hot path keeps exactly ONE Python stage (pinned).
 
     Version choice mirrors ``foxml.parse_foxml``: newest CREATED wins by
-    PARSED-timestamp order (try_to_timestamp — lexicographic comparison
-    breaks on variable-length fractions and offsets), document order
-    breaks ties/absent-CREATED. Blob-id minting
-    mirrors ``terms.get_blob_id`` (`ObjectProcessor.java:293-341`):
-    3-token ``ns:id+dsId+dsvId`` -> ``info:fedora/ns:id/<enc>/<enc>``
-    with Java-URLEncoder form encoding (= Spark ``url_encode``);
-    malformed tokens yield no request row, so the extraction UDF emits
-    the per-datastream error row instead of the job dying."""
-    def attr_val(col, name: str):
-        """Extract an XML attribute value accepting EITHER quote style —
-        well-formed XML allows single quotes too, and the ElementTree-
-        backed UDF accepts them, so the regex pass must as well. Each
-        branch excludes only its own quote character, so an apostrophe
-        inside a double-quoted value (or vice versa) survives."""
-        dq = F.regexp_extract(col, f'(?s){name}="([^"]*)"', 1)
-        sq = F.regexp_extract(col, f"(?s){name}='([^']*)'", 1)
-        return F.when(dq != "", dq).otherwise(sq)
-
-    # prefilter: one regex scan replacing the per-literal contains chain
-    # (both quote styles)
-    needs = source.filter(
-        F.col("content").rlike("CONTROL_GROUP=[\"'][MER][\"']")
-        & F.col("content").rlike("ID=[\"'](DC|RELS-EXT|RELS-INT)[\"']")
-    )
-    ds_block = r"(?s)<foxml:datastream\b.*?</foxml:datastream>"
-    v_block = r"(?s)<foxml:datastreamVersion\b.*?</foxml:datastreamVersion>"
-
-    def xml_unescape(col):
-        # regex extraction reads RAW attribute text; decode character
-        # references so fetch keys match what the ElementTree-backed
-        # extraction UDF will look up ('&' MUST be entity-escaped in
-        # well-formed attributes, so URLs with query strings carry
-        # '&amp;' or '&#38;'). ONE tokenizer pass — the five named
-        # entities plus decimal/hex numeric refs — so decoded output is
-        # never re-scanned (chained replaces turn the raw literal
-        # '&#38;amp;' into '&' instead of '&amp;'). Numeric refs decode
-        # over printable ASCII (32-126) — the URL-legal alphabet a
-        # contentLocation can carry; anything outside stays undecoded
-        # and surfaces as the per-datastream error row (same contract
-        # as before, now a far smaller surface).
-        toks = F.regexp_extract_all(
-            col,
-            F.lit("&#[0-9]+;|&#x[0-9a-fA-F]+;|&(?:amp|lt|gt|quot|apos);|&|[^&]+"),
-            0,
-        )
-
-        def code(t):
-            # a numeric reference's code point; NULL for any other token
-            dec_code = F.regexp_replace(t, "[^0-9]", "").try_cast("int")
-            hex_code = F.conv(F.regexp_replace(t, "&#x|;", ""), 16, 10).try_cast("int")
-            return F.when(t.rlike("^&#x"), hex_code).when(t.rlike("^&#"), dec_code)
-
-        def dec(tc):
-            t, c = tc["t"], tc["c"]
-            return (
-                F.when(t == "&amp;", F.lit("&"))
-                .when(t == "&lt;", F.lit("<"))
-                .when(t == "&gt;", F.lit(">"))
-                .when(t == "&quot;", F.lit('"'))
-                .when(t == "&apos;", F.lit("'"))
-                .when((c >= 32) & (c <= 126), F.char(c))
-                .otherwise(t)
-            )
-
-        # stage the code point: dec reads it three times
-        coded = F.transform(toks, lambda t: F.struct(t.alias("t"), code(t).alias("c")))
-        return F.array_join(F.transform(coded, dec), "")
-
-    def newest_ref(ds):
-        # newest version = the max of (parsed CREATED, -position, raw REF).
-        # Struct order puts a NULL k first, so any parseable CREATED
-        # beats none (the parser sorts absent/garbage CREATED last);
-        # -position makes ties and all-NULL k pick the FIRST version in
-        # document order, like the parser's stable sort. try_to_timestamp,
-        # not the raw text: lexicographic max diverges for
-        # variable-length fractions ('..0.1Z' > '..0.15Z' because
-        # 'Z' > '5') and non-Z offsets. A version-less block gives an
-        # empty array, whose array_max is NULL (no ANSI abort, E1).
-        newest = F.array_max(F.transform(
-            F.regexp_extract_all(ds, F.lit(v_block), 0),
-            lambda v, i: F.struct(
-                F.try_to_timestamp(attr_val(v, r"\bCREATED")).alias("k"),
-                (-i).alias("o"),
-                attr_val(v, r"<foxml:contentLocation\b[^>]*?\bREF").alias("r"),
-            ),
-        ))
-        return newest["r"]
-
-    # Every stage below is a projection of per-object ARRAYS, and bad
-    # keys are dropped inside those arrays with one inline at the end.
-    # A Filter over a staged, non-cheap column would be pushed below
-    # its projection with the column's whole expression copied in for
-    # each reference (versions transform, xml_unescape, minting), a
-    # plan over 10x the size; test_plans.py pins the regexp_extract_all
-    # count.
-    blocks = F.filter(
-        F.regexp_extract_all("content", F.lit(ds_block), 0),
-        lambda ds: (
-            ds.rlike("^<foxml:datastream\\b[^>]*\\bCONTROL_GROUP=[\"'][MER][\"']")
-            & ds.rlike("^<foxml:datastream\\b[^>]*\\bID=[\"'](DC|RELS-EXT|RELS-INT)[\"']")
-        ),
-    )
-    picked = needs.select(
-        "repo", "path", "commit",
-        F.transform(blocks, lambda ds: F.struct(
-            F.regexp_extract(ds, "\\bCONTROL_GROUP=[\"']([MER])[\"']", 1).alias("g"),
-            newest_ref(ds).alias("r"),
-        )).alias("_reqs"),
-    )
-    # decode only the chosen REF; NULL (no version) and empty tokens
-    # yield no request row
-    tokens = picked.select(
-        "repo", "path", "commit",
-        F.filter(
-            F.transform("_reqs", lambda q: F.struct(
-                q["g"].alias("g"), xml_unescape(q["r"]).alias("t"),
-            )),
-            lambda q: q["t"].isNotNull() & (q["t"] != ""),
-        ).alias("_reqs"),
-    )
-    # stage the split: minting reads it 4x per token, through the lambda
-    # variable, so CollapseProject may merge these projections without
-    # copying the split per reference
-    parts = tokens.select(
-        "repo", "path", "commit",
-        F.transform("_reqs", lambda q: F.struct(
-            q["g"].alias("g"), q["t"].alias("t"), F.split(q["t"], r"\+").alias("p"),
-        )).alias("_reqs"),
-    )
-
-    def request(q):
-        tok, p = q["t"], q["p"]
-        mint3 = F.concat(
-            p[0], F.lit("/"), F.url_encode(p[1]), F.lit("/"), F.url_encode(p[2])
-        )
-        minted = F.when(
-            F.size(p) == 1,
-            F.when(tok.startswith("info:fedora/"), tok)
-            .otherwise(F.concat(F.lit("info:fedora/"), tok)),
-        ).when(
-            F.size(p) == 3,
-            F.when(p[0].startswith("info:fedora/"), mint3)
-            .otherwise(F.concat(F.lit("info:fedora/"), mint3)),
-        )
-        # MANAGED locations mint to Akubra blob ids; EXTERNAL/REDIRECT
-        # locations are verbatim URLs — the fetch key the crawler table
-        # uses
-        fields = [F.when(q["g"] == "M", minted).otherwise(tok).alias("blob_id")]
-        if keep_group:
-            # jobs/crawl.py needs the dispatch group to enumerate E/R URLs
-            fields.append(q["g"].alias("control_group"))
-        return F.struct(*fields)
-
-    # an unmintable MANAGED token gives a NULL blob_id: no request row
-    return parts.select(
-        "repo", "path", "commit",
-        F.inline(F.filter(
-            F.transform("_reqs", request), lambda r: r["blob_id"].isNotNull()
-        )),
+    PARSED-timestamp order, document order breaks ties/absent-CREATED.
+    Blob-id minting mirrors ``terms.get_blob_id``
+    (`ObjectProcessor.java:293-341`); malformed tokens yield no request
+    row, so the extraction UDF emits the per-datastream error row
+    instead of the job dying. Output columns: repo, path, commit,
+    blob_id (+ control_group with ``keep_group``), one row per distinct
+    key of an object."""
+    key = ("repo", "path", "commit")
+    return (
+        source.filter(_NEEDS)
+        .selectExpr(*key, _PICKED)
+        .selectExpr(*key, _TOKENS)
+        .selectExpr(*key, _PARTS)
+        .selectExpr(*key, _REQUESTS[keep_group])
     )
 
 

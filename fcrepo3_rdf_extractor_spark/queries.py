@@ -798,7 +798,7 @@ def _nquads_literal_escape_sql(col: str = "text") -> str:
         FROM documents""",
 )
 def kg_nquads_render(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K1: deterministic N-Quads serialization as a codegen'd column."""
+    """K1: deterministic N-Quads serialization as a JVM column."""
     from .functions import nquad_line_col
 
     docs = _read(spark, sf_dir, "documents")

@@ -84,6 +84,7 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = job_session("kg-extract", args.local)
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from fcrepo3_rdf_extractor_spark.operators.extractor import triples_only
     from fcrepo3_rdf_extractor_spark.plans.checkpoint import (
@@ -207,7 +208,11 @@ def main(argv: list[str] | None = None) -> int:
         write_layout_marker(
             args.out, "per_document" if args.no_dedup else "deduped"
         )
-        extracted = spark.read.parquet(args.out)
+        # read back with the schema just written: no schema-inference job
+        written = T.StructType(
+            extracted.schema.fields + [T.StructField("subj_bucket", T.IntegerType())]
+        )
+        extracted = spark.read.schema(written).parquet(args.out)
 
     # the whole report is ONE action: the NULL error_stage group is the
     # triples, the others are per-stage error counts. The struct keeps a

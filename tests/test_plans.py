@@ -7,7 +7,8 @@ Each test pins one scale-critical plan property:
 - small dims broadcast (BroadcastHashJoin, never SortMergeJoin)
 - dedup aggregates partially before the shuffle (partial_min)
 - exactly one Python stage on the extraction hot path
-- N-Quads rendering stays JVM-side (no Python eval nodes)
+- N-Quads rendering stays JVM-side (no Python eval nodes), and its
+  generated methods stay under HotSpot's JIT size limit
 - token/shingle staging isn't re-inlined by CollapseProject (the
   O(n*k)-splits regression fixed in text.py)
 """
@@ -103,6 +104,61 @@ def test_nquads_render_stays_jvm_side(spark):
     plan = _formatted(kg_nquads_render(spark, SF_DIR))
     for node in ("MapInPandas", "BatchEvalPython", "ArrowEvalPython"):
         assert node not in plan, node
+
+
+def test_nquads_render_methods_fit_the_jit_limit(spark, tmp_path):
+    """HotSpot never JIT-compiles a method over 8,000 bytes of bytecode,
+    so a whole-stage-codegen method past it runs every row in the
+    interpreter: the N-Quads render's 42-deep replace chains, fused with
+    the table scan, generated a 16 KB ``processNext``. Pinned on the
+    sink's executed plan over the extracted table read back, as
+    jobs/extract.py renders it."""
+    from conftest import fixture_source
+
+    from fcrepo3_rdf_extractor_spark.functions import nquad_line_col
+    from fcrepo3_rdf_extractor_spark.operators.extractor import triples_only
+    from fcrepo3_rdf_extractor_spark.plans.pipeline import extract_plan, materialize_graph
+
+    out = str(tmp_path / "table")
+    materialize_graph(extract_plan(fixture_source(spark)), out, buckets=4)
+    # the projection write_nquads writes
+    lines = triples_only(spark.read.parquet(out)).select(nquad_line_col().alias("value"))
+    lines.collect()  # AQE settles the final plan, codegen stages included
+    plan = lines._jdf.queryExecution().executedPlan()
+    subtrees = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
+    sizes = [subtrees.apply(i)._3().maxMethodCodeSize() for i in range(subtrees.size())]
+    assert sizes and max(sizes) < 8000, sizes
+
+
+def test_fixed_expressions_cost_few_py4j_round_trips(spark):
+    """The N-Quads render and the managed-content request pass are SQL
+    text built at import: building both in a warm session costs a few
+    dozen py4j round trips, where composing them through the Column API
+    cost about 4,000 per run. The count varies by about 30% between
+    processes, hence the margin."""
+    from unittest import mock
+
+    from py4j.clientserver import ClientServerConnection
+
+    from fcrepo3_rdf_extractor_spark.functions import nquad_line_col
+    from fcrepo3_rdf_extractor_spark.plans.pipeline import managed_content_requests
+
+    source = spark.createDataFrame(
+        [("r", "p", "c", "foxml", "<x/>")],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    nquad_line_col(), managed_content_requests(source)  # warm
+    send = ClientServerConnection.send_command
+    calls = []
+
+    def counted(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    with mock.patch.object(ClientServerConnection, "send_command", counted):
+        nquad_line_col()
+        managed_content_requests(source)
+    assert 0 < len(calls) <= 200, len(calls)
 
 
 def test_minhash_staging_not_reinlined(spark):

@@ -221,6 +221,48 @@ def test_nquad_rendering_jvm_matches_python_on_illegal_uris(spark):
         assert parse_nt_line(line) == row
 
 
+def test_nquad_rendering_differential_random(spark):
+    """Differential test of the JVM render against ``terms.nquad_line``
+    over seeded random terms drawn from every character the escapes
+    treat specially (C0 controls, space, the IRIREF-illegal set,
+    backslash, quotes) and ones they must pass through (U+0085, U+2028,
+    a non-BMP character), in every term position: URI and literal
+    objects, plain, typed and language-tagged (an empty tag or datatype
+    tags nothing), and the graph."""
+    import random
+
+    from fcrepo3_rdf_extractor_spark.terms import Triple, nquad_line, parse_nt_line
+
+    rng = random.Random(20261019)
+    alphabet = ([chr(c) for c in range(0x20)] + list(' <>"{}|^`\\\'')
+                + ["\u0085", "\u2028", "\U0001F600", "a", "Z", "é", ":", "#", "&"])
+
+    def text(prefix=""):
+        return prefix + "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 10)))
+
+    rows = []
+    for _ in range(400):
+        kind = rng.choice(["uri", "plain", "typed", "lang"])
+        rows.append((
+            text("s:"), text("p:"), text(), kind != "uri",
+            rng.choice([text("d:"), ""]) if kind == "typed" else None,
+            # xml:lang="" reaches the table as an empty tag
+            rng.choice(["en", "de-CH", "x-1", ""]) if kind == "lang" else None,
+            text("#g"),
+        ))
+    df = spark.createDataFrame(
+        rows,
+        "subj string, pred string, obj_value string, obj_is_literal boolean, "
+        "obj_datatype string, obj_lang string, graph string",
+    )
+    jvm = [r.line for r in df.select(nquad_line_col().alias("line")).collect()]
+    py = [nquad_line(Triple(*row[:6]), row[6]) for row in rows]
+    assert [line.encode() for line in jvm] == [line.encode() for line in py]
+    for row, line in zip(rows, jvm):
+        s, p, o, is_literal, datatype, lang, g = row
+        assert parse_nt_line(line) == (s, p, o, is_literal, datatype or None, lang or None, g)
+
+
 def test_nquads_roundtrip(spark, extracted, tmp_path):
     out = str(tmp_path / "quads")
     write_nquads(triples_only(extracted), out, canonical=True)
@@ -845,6 +887,52 @@ def test_attach_external_content_via_url_table(spark):
     assert ("info:fedora/e:2", "urn:ex#p", "urn:o2", False, None, None) in keys
     errs = [r.error_stage for r in errors_only(out).collect()]
     assert errs == ["dc"]  # only the absent DC errors
+
+
+def test_attach_managed_content_shared_fetch_key(spark):
+    """Regression: two of an object's datastreams with one fetch key
+    (DC and RELS-EXT both EXTERNAL to the same URL) gave two request
+    rows, and the attach's ``map_from_arrays`` aborted the whole job
+    with ``[DUPLICATED_MAP_KEY]``. The object must extract as the
+    pure-Python extractor does with the same blob lookup."""
+    from fcrepo3_rdf_extractor_spark.extract import extract_object
+
+    url = "http://ex.org/same"
+    datastreams = "".join(
+        f'<foxml:datastream ID="{ds_id}" STATE="A" CONTROL_GROUP="E">'
+        f'<foxml:datastreamVersion ID="{ds_id}.0" CREATED="2020-01-01T00:00:00.000Z" '
+        f'MIMETYPE="text/xml"><foxml:contentLocation TYPE="URL" REF="{url}"/>'
+        "</foxml:datastreamVersion></foxml:datastream>"
+        for ds_id in ("DC", "RELS-EXT")
+    )
+    foxml = (
+        '<foxml:digitalObject VERSION="1.1" PID="d:1" '
+        'xmlns:foxml="info:fedora/fedora-system:def/foxml#">'
+        "<foxml:objectProperties>"
+        '<foxml:property NAME="info:fedora/fedora-system:def/model#state" VALUE="A"/>'
+        '<foxml:property NAME="info:fedora/fedora-system:def/model#createdDate" '
+        'VALUE="2020-01-01T00:00:00.000Z"/>'
+        '<foxml:property NAME="info:fedora/fedora-system:def/view#lastModifiedDate" '
+        'VALUE="2020-01-01T00:00:00.000Z"/>'
+        "</foxml:objectProperties>" + datastreams + "</foxml:digitalObject>"
+    )
+    blob = """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+      xmlns:dc="http://purl.org/dc/elements/1.1/" xmlns:ex="urn:ex#">
+      <rdf:Description rdf:about="info:fedora/d:1"><ex:p rdf:resource="urn:o"/>
+      <dc:title>shared</dc:title></rdf:Description>
+    </rdf:RDF>"""
+    src = spark.createDataFrame(
+        [("r", "info:fedora/d:1", "c", "foxml", foxml)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    ds_store = spark.createDataFrame([(url, blob)], "blob_id string, content string")
+    out = extract_triples(attach_managed_content(src, ds_store))
+
+    triples, errors = extract_object(foxml, {url: blob}.get)
+    assert triples, "the blob must yield triples for the comparison to bite"
+    assert rows_to_set(triples_only(out).collect()) == set(triples)
+    got_errs = sorted((r.error_stage, r.error_ds_id) for r in errors_only(out).collect())
+    assert got_errs == sorted((e.stage, e.ds_id) for e in errors)
 
 
 def test_sameas_closure_chains_and_cycles(spark):
