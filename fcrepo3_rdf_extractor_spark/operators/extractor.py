@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..extract import extract_object
+from ..extract import DsLookup, extract_object
 
 #: lineage carried from the source table through to every output row
 LINEAGE_COLS = ["repo", "path", "commit", "content_sha256"]
@@ -51,6 +51,18 @@ TRIPLES_SCHEMA = T.StructType(
 _OUT_COLS = [f.name for f in TRIPLES_SCHEMA.fields]
 
 
+def _store_lookup(fetched: dict) -> DsLookup:
+    """A lookup over one object's ``managed_content``. The attach maps a
+    key that the ds-store holds with two different contents to NULL;
+    that key fails its datastream with a conflict error, not a miss."""
+    def lookup(key: str) -> str | None:
+        content = fetched.get(key)
+        if content is None and key in fetched:
+            raise ValueError(f"conflicting ds-store contents for {key}")
+        return content
+    return lookup
+
+
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     import numpy as np
 
@@ -69,7 +81,7 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             if has_managed:
                 managed = pdf["managed_content"].iat[i]
                 if managed is not None and len(managed):
-                    lookup = dict(managed).get
+                    lookup = _store_lookup(dict(managed))
             triples, errors = extract_object(content, ds_lookup=lookup)
             n_per_doc[i] = len(triples)
             for t in triples:

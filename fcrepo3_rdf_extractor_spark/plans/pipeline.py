@@ -3,7 +3,7 @@
 ``extract_plan`` is the declarative hot path (one job, no driver loops):
 
     scan(repo,path,commit,content)            # pruned parquet/iceberg scan
-      -> [managed-content join]               # only if a ds-store is given
+      -> [managed-content join]               # ds-store given: prefiltered rows only
       -> mapInPandas(extract)                 # the one Python stage
       -> with_graph -> skip_empty_literals    # codegen'd column ops
       -> [canonicalize via broadcast dict]    # broadcast hash join
@@ -107,8 +107,12 @@ _GROUP_RX = r"""\bCONTROL_GROUP=["']([MER])["']"""
 # is SQL text built once at import: one py4j call per stage, where the
 # Column API paid about a thousand per run.
 
-# prefilter: one regex scan per condition
-_NEEDS = f"content RLIKE {sql_str(_CONTROL_GROUP_RX)} AND content RLIKE {sql_str(_DS_ID_RX)}"
+# prefilter: one datastream open tag carrying both attributes, in either
+# order. _PICKED applies the same tag test to each block, so every row
+# the request pass keeps passes it; coalesce sends NULL content to the
+# attach's pass-through side
+_NEEDS_RX = rf"<foxml:datastream\b(?=[^>]*\b{_DS_ID_RX})(?=[^>]*\b{_CONTROL_GROUP_RX})"
+_NEEDS = f"coalesce(content RLIKE {sql_str(_NEEDS_RX)}, false)"
 
 # newest version = the max of (parsed CREATED, -position, raw REF).
 # Struct order puts a NULL k first, so any parseable CREATED beats none
@@ -159,14 +163,15 @@ _MINTED = (
 )
 
 
-def _requests(fields: str) -> str:
+def _requests(fields: str, generator: str = "inline") -> str:
     """The last stage: MANAGED locations mint to Akubra blob ids,
     EXTERNAL/REDIRECT ones stay verbatim URLs (the crawler table's
     key). An unmintable MANAGED token gives a NULL blob_id and no row,
     and two datastreams with one fetch key give one row, because the
-    attach builds a map on that key."""
+    attach builds a map on that key. ``inline_outer`` keeps an object
+    with no valid request as one row with a NULL blob_id."""
     return (
-        f"inline(array_distinct(filter(transform(_reqs, q -> named_struct("
+        f"{generator}(array_distinct(filter(transform(_reqs, q -> named_struct("
         f"'blob_id', CASE WHEN q.g = 'M' THEN {_MINTED} ELSE q.t END{fields})), "
         f"r -> r.blob_id IS NOT NULL)))"
     )
@@ -174,6 +179,18 @@ def _requests(fields: str) -> str:
 
 # jobs/crawl.py needs the dispatch group to enumerate E/R URLs
 _REQUESTS = {False: _requests(""), True: _requests(", 'control_group', q.g")}
+_ATTACH_REQUESTS = _requests("", "inline_outer")
+
+
+def _request_pass(needs: DataFrame, keep: list[str], requests: str) -> DataFrame:
+    """The staged request projections over prefiltered rows, carrying
+    the ``keep`` columns through."""
+    return (
+        needs.selectExpr(*keep, _PICKED)
+        .selectExpr(*keep, _TOKENS)
+        .selectExpr(*keep, _PARTS)
+        .selectExpr(*keep, requests)
+    )
 
 
 def managed_content_requests(source: DataFrame, keep_group: bool = False) -> DataFrame:
@@ -198,14 +215,20 @@ def managed_content_requests(source: DataFrame, keep_group: bool = False) -> Dat
     instead of the job dying. Output columns: repo, path, commit,
     blob_id (+ control_group with ``keep_group``), one row per distinct
     key of an object."""
-    key = ("repo", "path", "commit")
-    return (
-        source.filter(_NEEDS)
-        .selectExpr(*key, _PICKED)
-        .selectExpr(*key, _TOKENS)
-        .selectExpr(*key, _PARTS)
-        .selectExpr(*key, _REQUESTS[keep_group])
-    )
+    return _request_pass(source.filter(_NEEDS), ["repo", "path", "commit"], _REQUESTS[keep_group])
+
+
+# One object's fetched (blob_id, content) pairs -> its managed_content
+# map. Identical pairs (a store row appended twice) collapse; a key with
+# two different contents maps to NULL, which the extraction UDF reports
+# as a conflict on that datastream. No fetched pair -> NULL map, as for
+# an object that needs no fetch.
+_FETCHED = "array_distinct(collect_list(IF(_blob IS NULL, NULL, struct(blob_id, _blob)))) AS _fetched"
+_MANAGED = (
+    "IF(size(_fetched) = 0, NULL, map_from_entries(transform("
+    "transform(array_distinct(_fetched.blob_id), k -> filter(_fetched, f -> f.blob_id = k)), "
+    "g -> struct(g[0].blob_id, IF(size(g) = 1, g[0]._blob, NULL))))) AS managed_content"
+)
 
 
 def attach_managed_content(source: DataFrame, ds_store: DataFrame) -> DataFrame:
@@ -213,25 +236,39 @@ def attach_managed_content(source: DataFrame, ds_store: DataFrame) -> DataFrame:
 
     ``ds_store`` has columns (blob_id, content) — Akubra blob ids for
     MANAGED datastreams and verbatim URLs for EXTERNAL/REDIRECT ones
-    (one table, one key column). Only objects that can
-    possibly need a managed/external DC/RELS fetch are joined (cheap JVM-side
-    substring prefilter — exact control-group dispatch happens in the
-    UDF), so at 10^12 scale the join input is a sliver of the table.
-    The fetched blobs arrive as a per-object map column. The request
-    pass is pure column expressions (``managed_content_requests``), so
-    FOXML parses exactly once per object — in the extraction UDF."""
-    req = managed_content_requests(source)
-    fetched = (
-        req.join(ds_store.select("blob_id", F.col("content").alias("_blob_content")),
-                 "blob_id", "inner")
-        .groupBy("repo", "path", "commit")
-        .agg(
-            F.map_from_arrays(
-                F.collect_list("blob_id"), F.collect_list("_blob_content")
-            ).alias("managed_content")
-        )
+    (one table, one key column). The source splits once on the
+    request pass's prefilter:
+
+    - rows that cannot need a DC/RELS fetch get a NULL
+      ``managed_content`` and stay on the scan's own splits, so the
+      extraction UDF runs with the input's task count;
+    - rows that may need one carry their columns and a per-row id (a
+      group key only: ``(repo, path, commit)`` need not be unique)
+      through the request pass, left-join the store, and group back
+      into one row with a per-object map of fetched blobs.
+
+    So only the prefiltered rows cross a shuffle: at 10^12 scale the
+    join input is a sliver of the table. A ds-store key held with two
+    different contents is that datastream's error row, never a job
+    abort (E1). The request pass is pure column expressions
+    (``managed_content_requests``), so FOXML parses exactly once per
+    object — in the extraction UDF."""
+    cols = [f"`{c}`" for c in source.columns]
+    needs = _request_pass(
+        source.filter(_NEEDS).selectExpr("*", "monotonically_increasing_id() AS _rid"),
+        [*cols, "_rid"], _ATTACH_REQUESTS,
     )
-    return source.join(fetched, ["repo", "path", "commit"], "left")
+    store = ds_store.selectExpr("blob_id", "content AS _blob").filter("_blob IS NOT NULL")
+    fetched = (
+        needs.join(store, "blob_id", "left")
+        .groupBy("_rid")
+        .agg(*(F.expr(f"any_value({c}) AS {c}") for c in cols), F.expr(_FETCHED))
+        .selectExpr(*cols, _MANAGED)
+    )
+    rest = source.filter(f"NOT {_NEEDS}").selectExpr(
+        *cols, "CAST(NULL AS map<string, string>) AS managed_content"
+    )
+    return rest.unionByName(fetched)
 
 
 def dedup_mixed(out: DataFrame) -> DataFrame:

@@ -22,7 +22,10 @@ ENGINE_CONF = {
     # 1024 rows/batch keeps a batch O(100 MB) worst-case per task
     "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
     # 128 MB input splits — the knob that sets extraction task
-    # granularity at 100 TB (≈800k tasks, fine for a 1000-exec cluster)
+    # granularity at 100 TB (≈800k tasks, fine for a 1000-exec cluster).
+    # With a ds-store too: only the prefiltered rows that need a fetch
+    # cross the attach's shuffle, every other row reaches the UDF on
+    # its input split (plans/pipeline.py:attach_managed_content)
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.parquet.compression.codec": "zstd",
 }

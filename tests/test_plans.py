@@ -214,6 +214,101 @@ def test_managed_content_requests_not_reinlined(spark):
     assert plan.count("regexp_extract_all(") <= 3, plan.count("regexp_extract_all(")
 
 
+def _gen_source(spark, tmp_path, files: int = 4):
+    """A seeded gen FOXML corpus written as ``files`` parquet files, and
+    its ds-store."""
+    from conftest import _gen
+
+    corpus = _gen().foxml_corpus(7, 300)
+    src, store = str(tmp_path / "src"), str(tmp_path / "store")
+    spark.createDataFrame(
+        corpus.rows, "repo string, path string, commit string, lang string, content string"
+    ).repartition(files).write.parquet(src)
+    spark.createDataFrame(corpus.store, "blob_id string, content string").write.parquet(store)
+    return spark.read.parquet(src), spark.read.parquet(store)
+
+
+def _tree(node) -> tuple:
+    """A JVM physical plan node as (name, filter condition, output
+    names, children); an unexecuted adaptive plan is replaced by its
+    current plan, Exchanges included."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    out, kids = node.output(), node.children()
+    cond = node.condition().toString() if node.nodeName() == "Filter" else ""
+    return (node.nodeName(), cond, {out.apply(i).name() for i in range(out.size())},
+            [_tree(kids.apply(i)) for i in range(kids.size())])
+
+
+def _walk(tree, path=()):
+    """Every (node, path of its ancestors) of ``tree``."""
+    yield tree, path
+    for kid in tree[3]:
+        yield from _walk(kid, path + (tree,))
+
+
+def test_managed_content_attach_shuffles_only_prefiltered_rows(spark, tmp_path):
+    """The attach splits on the request pass's prefilter: rows that
+    fail it reach the extraction UDF straight off the scan, and only
+    rows that pass it cross an Exchange. The whole-table left join
+    shuffled every source row, ``content`` included, and AQE coalesced
+    those few MB into one partition, so the UDF ran as one task. Pinned
+    on the plan a store too large to broadcast gets."""
+    from fcrepo3_rdf_extractor_spark.plans.pipeline import ExtractConfig, extract_plan
+
+    src, store = _gen_source(spark, tmp_path)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = _tree(extract_plan(src, ExtractConfig(), ds_store=store)._jdf
+                     .queryExecution().executedPlan())
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+
+    def is_prefilter(node, negated):
+        return (node[0] == "Filter" and "RLIKE" in node[1]
+                and node[1].startswith("NOT") == negated)
+
+    def source_scan(node):  # the store's scan has no path column
+        return node[0].startswith("Scan") and "path" in node[2]
+
+    udf = [n for n, _ in _walk(plan) if n[0] == "MapInPandas"]
+    assert len(udf) == 1, [n[0] for n, _ in _walk(plan)]
+    below = list(_walk(udf[0]))
+    passing = [path for n, path in below
+               if source_scan(n) and any(is_prefilter(p, True) for p in path)]
+    assert passing, "no pass-through branch"
+    for path in passing:
+        assert not [p[0] for p in path if "Exchange" in p[0]], [p[0] for p in path]
+    fed = [n for n, _ in below
+           if "Exchange" in n[0] and any(source_scan(m) for m, _ in _walk(n))]
+    assert any("content" in n[2] for n in fed), [n[:3] for n in fed]
+    for exchange in fed:
+        assert any(is_prefilter(n, False) for n, _ in _walk(exchange)), exchange[:3]
+
+
+def test_managed_content_udf_runs_on_scan_splits(spark, tmp_path):
+    """Runtime shape of the pin above: over a 4-file source on
+    ``local[4]`` the stage running ``MapInPandas`` has at least one task
+    per file. It is the result stage: with ``dedup=False`` no Exchange
+    sits above the UDF. The whole-table join ran it as 1 task."""
+    from fcrepo3_rdf_extractor_spark.plans.pipeline import ExtractConfig, extract_plan
+
+    src, store = _gen_source(spark, tmp_path)
+    assert src.rdd.getNumPartitions() == 4
+    out = extract_plan(src, ExtractConfig(dedup=False), ds_store=store)
+    sc, group = spark.sparkContext, "udf-on-scan-splits"
+    sc.setJobGroup(group, "attach task count")
+    try:
+        out.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    last_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    result_stage = tracker.getStageInfo(max(last_job.stageIds))
+    assert result_stage.numTasks >= 4, result_stage
+
+
 def test_simhash_neardup_no_nested_loop_join(spark):
     """Regression: the OR-of-band-equalities join condition planned a
     BroadcastNestedLoopJoin (O(n^2) compares, no bucket bound). The

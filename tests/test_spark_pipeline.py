@@ -889,24 +889,18 @@ def test_attach_external_content_via_url_table(spark):
     assert errs == ["dc"]  # only the absent DC errors
 
 
-def test_attach_managed_content_shared_fetch_key(spark):
-    """Regression: two of an object's datastreams with one fetch key
-    (DC and RELS-EXT both EXTERNAL to the same URL) gave two request
-    rows, and the attach's ``map_from_arrays`` aborted the whole job
-    with ``[DUPLICATED_MAP_KEY]``. The object must extract as the
-    pure-Python extractor does with the same blob lookup."""
-    from fcrepo3_rdf_extractor_spark.extract import extract_object
-
-    url = "http://ex.org/same"
+def _external_object(pid: str, ds_ids: tuple[str, ...], url: str) -> str:
+    """A FOXML object whose ``ds_ids`` datastreams are all EXTERNAL to
+    ``url``."""
     datastreams = "".join(
         f'<foxml:datastream ID="{ds_id}" STATE="A" CONTROL_GROUP="E">'
         f'<foxml:datastreamVersion ID="{ds_id}.0" CREATED="2020-01-01T00:00:00.000Z" '
         f'MIMETYPE="text/xml"><foxml:contentLocation TYPE="URL" REF="{url}"/>'
         "</foxml:datastreamVersion></foxml:datastream>"
-        for ds_id in ("DC", "RELS-EXT")
+        for ds_id in ds_ids
     )
-    foxml = (
-        '<foxml:digitalObject VERSION="1.1" PID="d:1" '
+    return (
+        f'<foxml:digitalObject VERSION="1.1" PID="{pid}" '
         'xmlns:foxml="info:fedora/fedora-system:def/foxml#">'
         "<foxml:objectProperties>"
         '<foxml:property NAME="info:fedora/fedora-system:def/model#state" VALUE="A"/>'
@@ -916,23 +910,167 @@ def test_attach_managed_content_shared_fetch_key(spark):
         'VALUE="2020-01-01T00:00:00.000Z"/>'
         "</foxml:objectProperties>" + datastreams + "</foxml:digitalObject>"
     )
-    blob = """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-      xmlns:dc="http://purl.org/dc/elements/1.1/" xmlns:ex="urn:ex#">
-      <rdf:Description rdf:about="info:fedora/d:1"><ex:p rdf:resource="urn:o"/>
-      <dc:title>shared</dc:title></rdf:Description>
-    </rdf:RDF>"""
+
+
+#: DC and RELS-EXT statements about d:1, readable as either datastream
+_SHARED_BLOB = """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+  xmlns:dc="http://purl.org/dc/elements/1.1/" xmlns:ex="urn:ex#">
+  <rdf:Description rdf:about="info:fedora/d:1"><ex:p rdf:resource="urn:o"/>
+  <dc:title>shared</dc:title></rdf:Description>
+</rdf:RDF>"""
+
+
+def _assert_extracts_as(out, foxml: str, lookup) -> list:
+    """``out`` (one object's extraction) equals ``extract_object`` with
+    ``lookup``, triples and (stage, ds_id) of every error; returns the
+    triples."""
+    from fcrepo3_rdf_extractor_spark.extract import extract_object
+
+    triples, errors = extract_object(foxml, lookup)
+    assert rows_to_set(triples_only(out).collect()) == set(triples)
+    got_errs = sorted((r.error_stage, r.error_ds_id) for r in errors_only(out).collect())
+    assert got_errs == sorted((e.stage, e.ds_id) for e in errors)
+    return triples
+
+
+def test_attach_managed_content_shared_fetch_key(spark):
+    """Regression: two of an object's datastreams with one fetch key
+    (DC and RELS-EXT both EXTERNAL to the same URL) gave two request
+    rows, and the attach's ``map_from_arrays`` aborted the whole job
+    with ``[DUPLICATED_MAP_KEY]``. The object must extract as the
+    pure-Python extractor does with the same blob lookup."""
+    url = "http://ex.org/same"
+    foxml = _external_object("d:1", ("DC", "RELS-EXT"), url)
     src = spark.createDataFrame(
         [("r", "info:fedora/d:1", "c", "foxml", foxml)],
         "repo string, path string, commit string, lang string, content string",
     )
-    ds_store = spark.createDataFrame([(url, blob)], "blob_id string, content string")
+    ds_store = spark.createDataFrame([(url, _SHARED_BLOB)], "blob_id string, content string")
     out = extract_triples(attach_managed_content(src, ds_store))
-
-    triples, errors = extract_object(foxml, {url: blob}.get)
+    triples = _assert_extracts_as(out, foxml, {url: _SHARED_BLOB}.get)
     assert triples, "the blob must yield triples for the comparison to bite"
-    assert rows_to_set(triples_only(out).collect()) == set(triples)
-    got_errs = sorted((r.error_stage, r.error_ds_id) for r in errors_only(out).collect())
-    assert got_errs == sorted((e.stage, e.ds_id) for e in errors)
+
+
+def test_attach_managed_content_duplicated_store_key(spark):
+    """Regression: a ds-store holding one key twice (two crawls of one
+    URL appended to the table) aborted the whole job with
+    ``[DUPLICATED_MAP_KEY]``. Identical rows collapse; two different
+    contents under the key are that datastream's error row, naming the
+    conflict, while the rest of the object still extracts (E1)."""
+    url = "http://ex.org/a"
+    foxml = _external_object("d:1", ("DC",), url)
+    src = spark.createDataFrame(
+        [("r", "info:fedora/d:1", "c", "foxml", foxml)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    schema = "blob_id string, content string"
+
+    twice = spark.createDataFrame([(url, _SHARED_BLOB)] * 2, schema)
+    out = extract_triples(attach_managed_content(src, twice))
+    assert "http://purl.org/dc/elements/1.1/title" in {r.pred for r in triples_only(out).collect()}
+    _assert_extracts_as(out, foxml, {url: _SHARED_BLOB}.get)
+
+    conflict = spark.createDataFrame([(url, _SHARED_BLOB), (url, "<y/>")], schema)
+    out = extract_triples(attach_managed_content(src, conflict))
+    _assert_extracts_as(out, foxml, {}.get)
+    dc_errors = [r.error_message for r in errors_only(out).collect() if r.error_stage == "dc"]
+    assert len(dc_errors) == 1 and "conflicting" in dc_errors[0] and url in dc_errors[0], dc_errors
+
+
+def test_attach_managed_content_differential(spark):
+    """Differential test: the prefilter-split attach against the
+    whole-table left join it replaced, written here as the reference:
+    every source row joins the map of blobs fetched for its
+    ``(repo, path, commit)``. The reference's ``distinct()`` keeps it
+    defined on repeated rows, where the whole-table join aborted with
+    ``[DUPLICATED_MAP_KEY]``. Per-document outputs (``dedup=False``)
+    must be equal row multisets over a seeded gen corpus plus
+    hand-built rows at the edges of the prefilter and the row id."""
+    from collections import Counter
+
+    from conftest import _gen
+
+    from fcrepo3_rdf_extractor_spark.plans.pipeline import managed_content_requests
+
+    gen = _gen()
+    corpus = gen.foxml_corpus(5, 200)
+
+    def obj(pid, *datastreams, dc=None):
+        props = {"state": "A", "label": pid, "owner": "o",
+                 "created": "2020-01-01T00:00:00.000Z",
+                 "modified": "2021-01-01T00:00:00.000Z"}
+        dc = dc or gen.Datastream("DC", versions=[gen.Version(
+            "DC.0", "2020-01-01T00:00:00.000Z", xml=gen._dc_xml([("title", pid)], False))])
+        return gen._foxml(pid, props, [dc, *datastreams])
+
+    def managed(ds_id, loc, group="M", versions=True):
+        return gen.Datastream(ds_id, group, versions=[gen.Version(
+            f"{ds_id}.0", "2020-01-01T00:00:00.000Z", location=loc)] if versions else [])
+
+    def dc_blob(title):
+        return gen._dc_xml([("title", title)], False)
+
+    rels = gen._rdf_xml([("info:fedora/h:4", [("rel:isMemberOfCollection", "info:fedora/c:1", False)])])
+    # inline DC and a MANAGED OBJ: the per-attribute prefilter passed it
+    inline_dc = obj("h:1", managed("OBJ", "h:1+OBJ+OBJ.0"))
+    # MANAGED DC, CONTROL_GROUP before ID, single quotes
+    reordered = obj("h:2", dc=managed("DC", "h:2+DC+DC.0")).replace(
+        '<foxml:datastream ID="DC" STATE="A" CONTROL_GROUP="M"',
+        "<foxml:datastream CONTROL_GROUP='M' STATE='A' ID='DC'",
+    )
+    # EXTERNAL RELS-EXT, mixed quotes, group first
+    mixed = obj("h:4", managed("RELS-EXT", "http://ex.org/h4", "E")).replace(
+        '<foxml:datastream ID="RELS-EXT" STATE="A" CONTROL_GROUP="E"',
+        "<foxml:datastream CONTROL_GROUP='E' STATE=\"A\" ID='RELS-EXT'",
+    )
+    assert "ID='DC'" in reordered and "ID='RELS-EXT'" in mixed
+    versionless = obj("h:5", managed("RELS-INT", None, versions=False))
+    unmintable = obj("h:6", managed("RELS-EXT", "h:6+RELS-EXT"))
+    same_key_a = obj("h:7", managed("RELS-INT", "h:7+RELS-INT+RELS-INT.0"))
+    same_key_b = obj("h:7", managed("RELS-INT", "h:7+RELS-INT+RELS-INT.1"))
+    rels_int = gen._rdf_xml([("info:fedora/h:7/RELS-INT", [("si:note", "x", True)])])
+    hand = [("h:0", None), ("h:1", inline_dc), ("h:2", reordered), ("h:2", reordered),
+            ("h:4", mixed), ("h:5", versionless), ("h:6", unmintable),
+            ("h:7", same_key_a), ("h:7", same_key_b)]
+    rows = corpus.rows + [("r", f"info:fedora/{pid}", "c", "foxml", content)
+                          for pid, content in hand]
+    store = corpus.store + [
+        ("info:fedora/h:1/OBJ/OBJ.0", dc_blob("obj")),
+        ("info:fedora/h:2/DC/DC.0", dc_blob("h:2 managed")),
+        ("http://ex.org/h4", rels),
+        ("info:fedora/h:7/RELS-INT/RELS-INT.0", rels_int),
+        ("info:fedora/h:7/RELS-INT/RELS-INT.1", rels_int.replace(">x<", ">y<")),
+    ]
+    source = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    ).repartition(4)
+    ds_store = spark.createDataFrame(store, "blob_id string, content string")
+
+    def whole_table_attach(source, ds_store):
+        fetched = (
+            managed_content_requests(source).distinct()
+            .join(ds_store.withColumnRenamed("content", "_blob"), "blob_id")
+            .groupBy("repo", "path", "commit")
+            .agg(F.map_from_arrays(F.collect_list("blob_id"), F.collect_list("_blob"))
+                 .alias("managed_content"))
+        )
+        return source.join(fetched, ["repo", "path", "commit"], "left")
+
+    def per_document(attached):
+        out = skip_empty_literals(with_graph(extract_triples(attached), ExtractConfig().graph))
+        return Counter(tuple(r) for r in out.collect())
+
+    got = per_document(attach_managed_content(source, ds_store))
+    want = per_document(whole_table_attach(source, ds_store))
+    assert got == want, (list((got - want).items())[:3], list((want - got).items())[:3])
+    # the hand-built fetches resolve: h:2's managed DC, h:4's external
+    # RELS-EXT, both h:7 versions' RELS-INT, and h:1 keeps its inline DC
+    objs = {(k[0], k[2]) for k in got if k[1] in ("http://purl.org/dc/elements/1.1/title",
+                                                  gen.SI + "note")}
+    assert {("info:fedora/h:2", "h:2 managed"), ("info:fedora/h:1", "h:1"),
+            ("info:fedora/h:7/RELS-INT", "x"), ("info:fedora/h:7/RELS-INT", "y")} <= objs, objs
+    assert ("info:fedora/h:4", gen.REL + "isMemberOfCollection",
+            "info:fedora/c:1") in {k[:3] for k in got}
 
 
 def test_sameas_closure_chains_and_cycles(spark):
