@@ -1299,8 +1299,7 @@ def bgp_ask(
     but each one STOPS at its first local match and ships at most one
     row, so the work per task is the probe, not the partition. (It is
     NOT Spark's incremental CollectLimit scheduling — that only applies
-    when the limit is the terminal collect; use :func:`bgp_ask_value`
-    for the driver-side form that gets it.) Never a full count of the
+    when the limit is the terminal collect.) Never a full count of the
     solution set either way.
     """
     first = bgp_query(
@@ -1315,20 +1314,6 @@ def bgp_ask(
         exists=exists,
     ).limit(1)
     return first.agg((F.count(F.lit(1)) > 0).alias("matched"))
-
-
-def bgp_ask_value(
-    triples: DataFrame,
-    patterns: Sequence[tuple[str, str, str]],
-    **kwargs,
-) -> bool:
-    """Driver-side ASK returning a plain bool via ``isEmpty()`` —
-    a terminal take(1), so Spark's INCREMENTAL limit scheduling applies:
-    one partition runs first, then a geometrically growing subset, and
-    a selective ASK over a large table touches a fraction of the
-    partitions. Prefer this in driver logic; :func:`bgp_ask` is the
-    DataFrame form for composition and the oracle contract."""
-    return not bgp_query(triples, patterns, **kwargs).isEmpty()
 
 
 def bgp_describe(

@@ -1,11 +1,16 @@
-"""KG construction over source-code corpora: definitions, resolved
-dependency edges, and vendored-file detection.
+"""KG construction over source-code corpora: the rules and standalone
+operators behind the code knowledge graph.
 
 The north-rule corpus is an Iceberg table of source-code repositories
-(repo, path, commit, lang, content). :mod:`.text` already extracts the
-raw import graph (``code_import_triples``); this module adds the rest
-of the code knowledge graph:
+(repo, path, commit, lang, content). ``plans/code_pipeline.py`` builds
+the graph from the rules kept here:
 
+- :data:`IMPORT_PATTERNS` / :data:`DEF_PATTERNS` — the import and
+  definition statement shapes behind ``code:imports`` and
+  ``code:defines``
+- :func:`with_license` / :func:`clone_key_expr` — the per-file
+  ``code:license`` / ``code:permissive`` and ``code:cloneKey``
+  annotations
 - :func:`code_def_triples` — what each file DEFINES (functions/classes
   across languages), the symbol nodes of the graph
 - :func:`resolve_import_edges` — entity linking: each textual import is
@@ -15,9 +20,9 @@ of the code knowledge graph:
   (vendored/copied files), the repo-level hygiene signal a training-data
   pipeline uses to avoid over-weighting popular vendored libraries
 
-All three are pure DataFrame column algebra (no Python on the hot
-path); the regex patterns are RE2-compatible with a single capture
-group so the DuckDB oracles replay them byte-for-byte.
+All are pure DataFrame column algebra (no Python on the hot path); the
+regex patterns are RE2-compatible with a single capture group so the
+DuckDB oracles replay them byte-for-byte.
 """
 
 from __future__ import annotations
@@ -25,10 +30,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import IMPORT_PATTERNS
+#: (kind, regex-with-one-capture) import/include/require statement shapes.
+#: RE2-compatible (no lookaround) so the DuckDB oracle replays them
+#: byte-for-byte; (?m) anchors ^ at line starts in both engines.
+IMPORT_PATTERNS: list[tuple[str, str]] = [
+    ("py_import", r"(?m)^\s*import\s+([A-Za-z_][A-Za-z0-9_.]*)"),
+    ("py_from", r"(?m)^\s*from\s+([A-Za-z_][A-Za-z0-9_.]*)\s+import"),
+    ("c_include", r"(?m)^\s*#include\s+[<\"]([^>\"]+)[>\"]"),
+    ("js_require", r"require\(\s*['\"]([^'\"]+)['\"]\s*\)"),
+    ("js_import", r"(?m)^\s*import\s+[^\n]*\s+from\s+['\"]([^'\"]+)['\"]"),
+]
 
 #: (kind, regex-with-one-capture) definition-statement shapes. Same
-#: contract as text.IMPORT_PATTERNS: RE2-safe (no lookaround), (?m) for
+#: contract as :data:`IMPORT_PATTERNS`: RE2-safe (no lookaround), (?m) for
 #: line anchoring, exactly one capture group = the defined name. The
 #: set is deliberately cross-match-safe: no two patterns capture the
 #: same line shape, so a file never emits duplicate (name, kind) pairs
@@ -79,6 +93,81 @@ def _tagged_matches(
     return F.flatten(F.array(*[tagged(kind, rx) for kind, rx in patterns]))
 
 
+#: Detection order matters: an explicit SPDX tag always wins; phrase
+#: heuristics follow in a fixed order so a file quoting several license
+#: names classifies deterministically.
+_PERMISSIVE = ("MIT", "Apache-2.0", "BSD-3-Clause", "ISC", "Unlicense")
+
+
+def with_license(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """License detection for code corpora (The Stack / StarCoder
+    pipelines keep only permissive-licensed files): every input column
+    plus the detected ``license`` id and a ``permissive`` verdict. An
+    explicit ``SPDX-License-Identifier:`` tag is authoritative;
+    otherwise a fixed-order chain of header-phrase heuristics (MIT's
+    "permission is hereby granted", Apache's name+version, GPL, BSD's
+    redistribution clause). Unknown -> NULL license, permissive = 0
+    (no license, no training).
+
+    One narrow codegen projection — staged lowered text, one
+    regexp_extract + a CASE chain of contains() tests; no explode, no
+    join, no shuffle. The phrase list is deliberately small: production
+    detection (askalono, go-license-detector) ranks against full
+    license TEXTS; this is the cheap high-precision header pass those
+    tools also run first."""
+    spdx = F.regexp_extract(
+        F.col(text_col), r"SPDX-License-Identifier:\s*([A-Za-z0-9.+\-]+)", 1
+    )
+    staged = df.select(
+        "*",
+        F.lower(F.col(text_col)).alias("_t"),
+        F.when(spdx != "", spdx).alias("_spdx"),
+    )
+    t = F.col("_t")
+    lic = F.coalesce(
+        F.col("_spdx"),
+        F.when(t.contains("permission is hereby granted"), "MIT")
+        .when(
+            t.contains("apache license") & t.contains("version 2.0"),
+            "Apache-2.0",
+        )
+        .when(t.contains("gnu general public license"), "GPL-3.0-only")
+        .when(
+            t.contains("redistribution and use in source and binary forms"),
+            "BSD-3-Clause",
+        ),
+    )
+    return staged.select(
+        *df.columns,
+        lic.alias("license"),
+        F.when(lic.isin(*_PERMISSIVE), 1).otherwise(0).cast("int").alias(
+            "permissive"
+        ),
+    )
+
+
+def clone_key_expr(text_col: str = "text") -> F.Column:
+    """Type-2 code-clone key (Roy & Cordy's taxonomy: clones identical
+    up to identifier names, literal values, comments, and whitespace):
+    strip comments, abstract every identifier to ``v`` and every numeric
+    literal to ``0``, collapse whitespace, and md5 the result. Files
+    sharing a key are type-2 exact clones — the renamed-copy modality
+    whole-text exact dedup misses.
+
+    Normalization is deliberately lookaround-free (RE2-compatible, so
+    the DuckDB oracle replays it byte-for-byte): keywords abstract along
+    with identifiers, the standard trade for a single-regex-pass
+    normalizer; structure (operators, punctuation, nesting) is what
+    survives."""
+    t = F.col(text_col)
+    t = F.regexp_replace(t, r"(?s)/\*.*?\*/", " ")      # block comments
+    t = F.regexp_replace(t, r"(?m)(//|#)[^\n]*", " ")   # line comments
+    t = F.regexp_replace(t, r"[A-Za-z_][A-Za-z0-9_]*", "v")  # identifiers
+    t = F.regexp_replace(t, r"[0-9]+(\.[0-9]+)?", "0")  # numeric literals
+    t = F.trim(F.regexp_replace(t, r"\s+", " "))        # whitespace
+    return F.md5(t)
+
+
 def code_def_triples(
     files: DataFrame,
     repo_col: str = "repo",
@@ -93,10 +182,11 @@ def code_def_triples(
     explode drops it) — identical to ''-content output, so no coalesce
     guard is needed here, unlike the hash-keyed operators below.
 
-    Scale shape (10^12 files): identical to
-    :func:`.text.code_import_triples` — a narrow 3-column projection of
-    the scan, all regex work inside whole-stage-codegen-adjacent JVM
-    expressions, output partitioning inherited from the scan.
+    Scale shape (10^12 files): identical to the ``code:imports`` family
+    of ``plans.code_pipeline.code_kg_state`` — a narrow 3-column
+    projection of the scan, all regex work inside
+    whole-stage-codegen-adjacent JVM expressions, output partitioning
+    inherited from the scan.
     """
     exploded = files.select(
         F.col(repo_col).alias("_repo"),

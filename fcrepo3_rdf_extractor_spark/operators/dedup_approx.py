@@ -15,10 +15,37 @@ Design for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import shingles_of, tokens_col
+# --- tokenization / shingling ---------------------------------------------
+
+
+def tokens_col(text: Column) -> Column:
+    """Whitespace tokenization of lowercased trimmed text."""
+    return F.split(F.lower(F.trim(text)), r"\s+")
+
+
+def shingles_of(words: Column, k: int = 3) -> Column:
+    """Word k-gram shingles from a *materialized* token-array column;
+    fewer than k words yield one shingle = the whole (normalized) text.
+
+    ``words`` must be a bound column (an attribute from a previous
+    projection), NOT an inline ``tokens_col(...)`` expression: Catalyst
+    inlines non-attribute subexpressions once per reference, and each
+    gram references the token array k times — an inline split() would be
+    re-evaluated O(n*k) times per row (measured 25x slowdown at 500
+    docs). CollapseProject keeps the staging projection intact because
+    the alias is non-cheap and referenced more than once."""
+    n = F.size(words)
+
+    def gram(i: Column) -> Column:
+        parts = [F.element_at(words, i + off) for off in range(k)]
+        return F.concat_ws(" ", *parts)
+
+    return F.when(
+        n >= k, F.transform(F.sequence(F.lit(1), n - (k - 1)), gram)
+    ).otherwise(F.array(F.concat_ws(" ", words)))
 
 
 def dedup_exact_docs(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -63,15 +63,17 @@ from pyspark.sql import functions as F
 
 from ..operators.code import (
     DEF_PATTERNS,
+    IMPORT_PATTERNS,
     _module_key,
     _tagged_matches,
+    clone_key_expr,
     deep_module_winner,
     module_registry,
     module_registry_deep,
     netted_mention_structs,
+    with_license,
 )
 from ..operators.dedup import TRIPLE_KEY, dedup_exact
-from ..operators.text import IMPORT_PATTERNS, clone_key_expr, with_license
 
 XSD_BOOLEAN = "http://www.w3.org/2001/XMLSchema#boolean"
 

@@ -857,10 +857,11 @@ def kg_set_ops_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =========================================================================
-# training-data pipeline ops: dedup / text
+# training-data pipeline ops: near-duplicate detection
 # =========================================================================
 
-# shared SQL fragments mirroring operators/text.py exactly
+# shared SQL fragments mirroring operators/dedup_approx.py's tokens_col
+# and shingles_of exactly
 _WORDS = "string_split_regex(trim(lower(text)), '\\s+')"
 _SHINGLES = (
     f"CASE WHEN len({_WORDS}) >= 3 THEN "
@@ -880,296 +881,6 @@ def docs_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup_approx import dedup_exact_docs
 
     return dedup_exact_docs(_read(spark, sf_dir, "documents"))
-
-
-@_q(
-    "docs_token_count",
-    f"""SELECT doc_id, CAST(len({_WORDS}) AS BIGINT) AS n_tokens,
-               CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_subword_est
-        FROM documents""",
-)
-def docs_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text import token_count
-
-    return token_count(_read(spark, sf_dir, "documents"))
-
-
-@_q(
-    "docs_bm25_topk",
-    _BM25_ORACLE := f"""WITH t AS (SELECT doc_id, {_WORDS} AS toks FROM documents),
-        lens AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS l, toks FROM t),
-        stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(l) AS avgdl
-                  FROM lens),
-        hits AS (SELECT doc_id, l, unnest(toks) AS term FROM lens),
-        qh AS (SELECT * FROM hits WHERE term IN ('hash', 'join', 'vector')),
-        tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf,
-                      max(l) AS l
-               FROM qh GROUP BY doc_id, term),
-        dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df
-                  FROM tf GROUP BY term),
-        scored AS (SELECT doc_id,
-                          ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-                          * tf * 2.2
-                          / (tf + 1.2 * (1.0 - 0.75 + 0.75 * l / avgdl)) AS s
-                   FROM tf JOIN dfreq USING (term) CROSS JOIN stats)
-       SELECT doc_id, round(sum(s), 4) AS score
-       FROM scored GROUP BY doc_id
-       ORDER BY score DESC, doc_id LIMIT 10""",
-)
-def docs_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-10 for the query {hash, join, vector} (operators/text.py:
-    bm25_topk — query-term isin filter before the tf aggregation,
-    broadcast df/stats, rounded-then-ranked scores, doc_id tiebreak,
-    TakeOrderedAndProject)."""
-    from .operators.text import bm25_topk
-
-    return bm25_topk(
-        _read(spark, sf_dir, "documents"), ["hash", "join", "vector"], k=10
-    )
-
-
-@_q("docs_bm25_indexed", _BM25_ORACLE)
-def docs_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same BM25 top-10 served from the MATERIALIZED inverted index
-    (operators/text.py:bm25_index -> bm25_topk_indexed): corpus stats
-    from the index's doc rows, tf/df from the term-filtered posting
-    rows — repeated retrieval probes an index instead of re-tokenizing
-    100 TB per query set. Same oracle as docs_bm25_topk because the
-    results are identical by construction (also pytest-pinned)."""
-    from .operators.text import bm25_index, bm25_topk_indexed
-
-    idx = bm25_index(_read(spark, sf_dir, "documents")).persist()
-    return bm25_topk_indexed(idx, ["hash", "join", "vector"], k=10)
-
-
-@_q(
-    "docs_distinct_token_stats",
-    f"""SELECT source, CAST(count(*) AS BIGINT) AS n_tokens,
-              CAST(count(DISTINCT term) AS BIGINT) AS n_distinct_terms
-       FROM (SELECT source, unnest({_WORDS}) AS term FROM documents)
-       GROUP BY source""",
-)
-def docs_distinct_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source vocabulary stats, exact arm (operators/text.py:
-    distinct_token_stats). The approx_count_distinct (HLL++) twin is the
-    10^12-token path — fixed-size mergeable registers instead of
-    shuffling every (source, term) pair — with its error measured in a
-    pytest gate rather than guessed."""
-    from .operators.text import distinct_token_stats
-
-    return distinct_token_stats(_read(spark, sf_dir, "documents"))
-
-
-@_q(
-    "docs_chunk_windows",
-    f"""WITH t AS (SELECT doc_id, {_WORDS} AS toks FROM documents),
-        st AS (SELECT doc_id, toks,
-                      unnest(range(0, len(toks), 48)) AS start FROM t),
-        c AS (SELECT doc_id, start,
-                     toks[start + 1 : start + 64] AS chunk FROM st)
-       SELECT doc_id,
-              CAST(start // 48 AS BIGINT) AS chunk_idx,
-              doc_id || '#' || CAST(start // 48 AS BIGINT) AS chunk_id,
-              CAST(start AS BIGINT) AS start_token,
-              CAST(len(chunk) AS BIGINT) AS n_tokens,
-              array_to_string(chunk, ' ') AS chunk_text
-       FROM c""",
-)
-def docs_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAG chunking (operators/text.py: chunk_windows): 64-token windows
-    every 48 tokens (16-token overlap), deterministic chunk ids, tail
-    windows shorter. Scan-side only — staged token array, exploded
-    start-offset sequence, per-start slice; no shuffle, no Python."""
-    from .operators.text import chunk_windows
-
-    return chunk_windows(
-        _read(spark, sf_dir, "documents"), window=64, stride=48
-    )
-
-
-@_q(
-    "docs_winnow_fingerprint",
-    """WITH s AS (SELECT doc_id, lower(trim(text)) AS t FROM documents),
-        g AS (SELECT doc_id,
-                     CASE WHEN length(t) >= 8
-                          THEN [md5(substr(t, CAST(i AS INT), 8))
-                                for i in generate_series(1, length(t) - 7)]
-                          ELSE [md5(t)] END AS h
-              FROM s),
-        sel AS (SELECT doc_id,
-                       CASE WHEN len(h) >= 16
-                            THEN [list_min(h[i:i+15])
-                                  for i in generate_series(1, len(h) - 15)]
-                            ELSE [list_min(h)] END AS w
-                FROM g)
-        SELECT doc_id, array_to_string(list_sort(list_distinct(w)), '|') AS fingerprints
-        FROM sel""",
-)
-def docs_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Query contract note: the operator returns array<string>; the
-    driver's hash canonicalization cannot sort array cells, so the
-    registry entry flattens to a '|'-joined string on BOTH sides (the
-    array itself is covered by tests/test_training_ops.py)."""
-    from .operators.text import winnow_fingerprint
-
-    out = winnow_fingerprint(_read(spark, sf_dir, "documents"))
-    return out.select(
-        "doc_id", F.array_join("fingerprints", "|").alias("fingerprints")
-    )
-
-
-def _lang_score_sql(markers: list[str]) -> str:
-    padded = "(' ' || lower(text) || ' ')"
-    parts = [
-        f"(length({padded}) - length(replace({padded}, '{m}', ''))) / {len(m)}"
-        for m in markers
-    ]
-    return "CAST((" + " + ".join(parts) + ") AS BIGINT)"
-
-
-def _langid_oracle() -> str:
-    from .operators.text import LANG_MARKERS
-
-    langs = sorted(LANG_MARKERS)
-    scores = {lang: _lang_score_sql(LANG_MARKERS[lang]) for lang in langs}
-    score_cols = ", ".join(f"{scores[l]} AS score_{l}" for l in langs)
-    best = "greatest(" + ", ".join(f"score_{l}" for l in langs) + ")"
-    pred = "'und'"
-    for lang in reversed(langs):
-        pred = (
-            f"CASE WHEN score_{lang} > 0 AND score_{lang} = {best} "
-            f"THEN '{lang}' ELSE {pred} END"
-        )
-    return (
-        f"SELECT doc_id, score_de, score_en, score_es, score_fr, score_zh, "
-        f"{pred} AS pred_lang FROM (SELECT doc_id, {score_cols} FROM documents) t"
-    )
-
-
-@_q("docs_language_id", _langid_oracle())
-def docs_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text import language_id
-
-    return language_id(_read(spark, sf_dir, "documents"))
-
-
-@_q(
-    "docs_quality_score",
-    f"""SELECT doc_id,
-          CAST(length(text) AS BIGINT) AS n_chars,
-          CAST(len({_WORDS}) AS BIGINT) AS n_words,
-          round((length(text) - length(regexp_replace(text,
-                '[.,;:!?''"()\\[\\]{{}}]', '', 'g'))) /
-                greatest(length(text), 1), 4) AS punct_ratio,
-          round(stop_n / greatest(len({_WORDS}), 1), 4) AS stopword_ratio,
-          round(length(regexp_replace(text, '\\s+', '', 'g')) /
-                greatest(len({_WORDS}), 1), 4) AS mean_word_len,
-          round((CASE WHEN length(text) BETWEEN 20 AND 100000 THEN 0.4 ELSE 0.0 END)
-              + (CASE WHEN round(stop_n / greatest(len({_WORDS}), 1), 4) > 0.01
-                      THEN 0.3 ELSE 0.0 END)
-              + (CASE WHEN length(regexp_replace(text, '\\s+', '', 'g')) /
-                           greatest(len({_WORDS}), 1)
-                      BETWEEN 2 AND 12 THEN 0.3 ELSE 0.0 END), 4) AS quality
-        FROM (SELECT *, {_lang_score_sql([" the ", " a ", " an ", " and ", " or ", " of ", " to ", " in "])} AS stop_n
-              FROM documents) t""",
-)
-def docs_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text import quality_score
-
-    return quality_score(_read(spark, sf_dir, "documents"))
-
-
-@_q(
-    "docs_fingerprint",
-    f"""SELECT doc_id,
-          md5(array_to_string(w, ' ')) AS content_fp,
-          list_min([md5(s) for s in sh]) AS min_shingle_fp
-        FROM (SELECT doc_id, w, {_SHINGLES} AS sh
-              FROM (SELECT doc_id, {_WORDS} AS w, text FROM documents) a) b""",
-)
-def docs_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text import fingerprint
-
-    return fingerprint(_read(spark, sf_dir, "documents"))
-
-_5GRAMS = (
-    "CASE WHEN len(w) >= 5 THEN "
-    "[w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4] "
-    " for i in generate_series(1, len(w)-4)] "
-    "ELSE [array_to_string(w, ' ')] END"
-)
-
-
-def _hex4(off: int) -> str:
-    """DuckDB expression: value of 4 md5-hex chars of column ``h`` at
-    1-based offset ``off`` — mirrors Spark's conv(substring(md5,o,4),16,10)."""
-    digit = "strpos('0123456789abcdef', substr(h, {}, 1)) - 1"
-    return (
-        f"(({digit.format(off)}) * 4096 + ({digit.format(off + 1)}) * 256"
-        f" + ({digit.format(off + 2)}) * 16 + ({digit.format(off + 3)}))"
-    )
-
-
-_BLOOM_PROBES_SQL = f"[{_hex4(1)}, {_hex4(5)}, {_hex4(9)}]"
-
-
-@_q(
-    "docs_bloom_contamination",
-    f"""WITH t AS (SELECT doc_id, {_WORDS} AS w FROM documents),
-        g AS (SELECT doc_id, unnest(list_distinct({_5GRAMS})) AS gram FROM t),
-        bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 50 = 0),
-        bpos AS (SELECT unnest({_BLOOM_PROBES_SQL}) AS p
-                 FROM (SELECT md5(gram) AS h FROM bench)),
-        filt AS (SELECT (CAST(p AS BIGINT) >> 5) AS wd,
-                        bit_or(CAST(1 AS BIGINT)
-                               << CAST(CAST(p AS BIGINT) & 31 AS INT)) AS bits
-                 FROM bpos GROUP BY 1),
-        probes AS (SELECT doc_id, gram, unnest({_BLOOM_PROBES_SQL}) AS p
-                   FROM (SELECT doc_id, gram, md5(gram) AS h FROM g)),
-        hit AS (SELECT doc_id, gram
-                FROM probes JOIN filt ON (CAST(p AS BIGINT) >> 5) = wd
-                WHERE (bits >> CAST(CAST(p AS BIGINT) & 31 AS INT)) & 1 = 1
-                GROUP BY doc_id, gram HAVING count(*) = 3),
-        tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams
-                FROM g GROUP BY doc_id),
-        h2 AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hits
-               FROM hit GROUP BY doc_id)
-        SELECT doc_id, n_grams,
-               CAST(coalesce(n_hits, 0) AS BIGINT) AS n_bloom_hits,
-               round(coalesce(n_hits, 0) / n_grams, 4) AS bloom_frac,
-               CAST(round(coalesce(n_hits, 0) / n_grams, 4) >= 0.5 AS INT)
-                 AS flagged
-        FROM tot LEFT JOIN h2 USING (doc_id)""",
-)
-def docs_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter decontamination: the space-bounded membership path
-    for when the eval-gram table is too big to broadcast as strings —
-    the filter (2^16 bits, 16 KB) constant-folds into every task and
-    probing is a shuffle-free projection. The eval set is every 50th
-    doc; flagged counts include
-    the filter's (deterministic) false positives, reproduced
-    bit-for-bit by the oracle's identical md5 arithmetic. See
-    operators/text.py:bloom_contamination for geometry and fp math."""
-    from .operators.text import (
-        bloom_build,
-        bloom_contamination,
-        shingles_of,
-        tokens_col,
-    )
-
-    docs = _read(spark, sf_dir, "documents")
-    bench = (
-        docs.filter(F.col("doc_id") % 50 == 0)
-        .select(tokens_col(F.col("text")).alias("_w"))
-        .select(
-            F.explode(F.array_distinct(shingles_of(F.col("_w"), 5))).alias(
-                "gram"
-            )
-        )
-        .distinct()
-    )
-    words = bloom_build(bench)
-    return bloom_contamination(docs, words, k=5, threshold=0.5)
 
 
 @_q(
@@ -1203,8 +914,7 @@ def docs_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     has no newlines, so line structure is synthesized deterministically
     (3-word chunks joined by newline, identical expression in both
     engines) — the operator under test is ``dedup_lines``."""
-    from .operators.dedup_approx import dedup_lines
-    from .operators.text import tokens_col
+    from .operators.dedup_approx import dedup_lines, tokens_col
 
     docs = _read(spark, sf_dir, "documents")
     staged = docs.select("doc_id", tokens_col(F.col("text")).alias("_w"))
@@ -1503,74 +1213,6 @@ def docs_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "docs_unigram_logprob",
-    f"""WITH toks AS (SELECT doc_id, unnest({_WORDS}) AS term FROM documents),
-        counts AS (SELECT term, count(*) AS term_n FROM toks GROUP BY 1),
-        total AS (SELECT count(*) AS total_n FROM toks)
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-               round(sum(ln(term_n::DOUBLE / total_n)), 4) AS logprob,
-               round(sum(ln(term_n::DOUBLE / total_n)) / count(*), 6)
-                 AS per_token_logprob
-        FROM toks JOIN counts USING (term) CROSS JOIN total
-        GROUP BY doc_id""",
-)
-def docs_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM document scoring (the model-based quality signal):
-    log-likelihood of each doc under the corpus's own unigram
-    distribution. Vocabulary broadcasts; the corpus shuffles once."""
-    from .operators.text import unigram_logprob
-
-    return unigram_logprob(_read(spark, sf_dir, "documents"))
-
-
-@_q(
-    "docs_corpus_stats",
-    f"""SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(len({_WORDS})) AS BIGINT) AS n_tokens,
-               round(avg(n_chars), 4) AS avg_chars,
-               CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-        FROM documents GROUP BY source""",
-)
-def docs_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source corpus profile (a mixing report over the documents
-    table): doc/token counts, mean length, language spread."""
-    from .operators.text import tokens_col
-
-    docs = _read(spark, sf_dir, "documents")
-    return docs.groupBy("source").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum(F.size(tokens_col(F.col("text")))).cast("long").alias("n_tokens"),
-        F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-        F.countDistinct("lang").cast("long").alias("n_langs"),
-    )
-
-
-@_q(
-    "docs_tfidf_top_term",
-    f"""WITH toks AS (SELECT doc_id, unnest({_WORDS}) AS term FROM documents),
-        tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        dfreq AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
-        n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        scored AS (
-          SELECT doc_id, tf.term,
-                 round(tf * ln(n_docs::DOUBLE / df), 6) AS tfidf
-          FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN n),
-        ranked AS (
-          SELECT *, row_number() OVER (PARTITION BY doc_id
-                      ORDER BY tfidf DESC, term ASC) AS rn
-          FROM scored)
-        SELECT doc_id, term, tfidf, CAST(rn AS BIGINT) AS rank
-        FROM ranked WHERE rn <= 1""",
-)
-def docs_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document top tf-idf term (explode -> two hash aggs -> window
-    top-k; the vocabulary-sized df table broadcasts)."""
-    from .operators.text import tfidf_top_terms
-
-    return tfidf_top_terms(_read(spark, sf_dir, "documents"), k=1)
-
-
-@_q(
     "kg_dedup_exact_salted",
     """SELECT l_orderkey AS subj, l_returnflag AS obj_value,
               CAST(min(l_linenumber) AS BIGINT) AS witness
@@ -1591,7 +1233,7 @@ def kg_dedup_exact_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =========================================================================
-# containment near-dup, global top-k, length histogram
+# containment near-dup
 # =========================================================================
 
 _CONTAINMENT_SQL = f"""WITH sh AS (
@@ -1667,32 +1309,6 @@ def docs_containment_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "docs_top_terms_global",
-    f"""SELECT term, CAST(count(*) AS BIGINT) AS n
-        FROM (SELECT unnest({_WORDS}) AS term FROM documents)
-        GROUP BY term
-        ORDER BY n DESC, term ASC LIMIT 20""",
-)
-def docs_top_terms_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level heavy hitters (vocabulary head): explode -> count ->
-    top-20. The groupBy gets map-side partial combine (a term occurring
-    10^9 times collapses per partition before the shuffle) and the final
-    order-limit plans as TakeOrderedAndProject — a per-partition heap +
-    driver merge of 20-row tops, never a global sort. The term tiebreak
-    makes the cut deterministic across engines and partitionings."""
-    docs = _read(spark, sf_dir, "documents")
-    from .operators.text import tokens_col
-
-    return (
-        docs.select(F.explode(tokens_col(F.col("text"))).alias("term"))
-        .groupBy("term")
-        .agg(F.count("*").cast("long").alias("n"))
-        .orderBy(F.col("n").desc(), F.col("term").asc())
-        .limit(20)
-    )
-
-
-@_q(
     "docs_triangle_participation",
     f"""WITH p AS ({_MINHASH_NEARDUP_SQL}),
         e AS (SELECT doc_a AS u, doc_b AS v FROM p),
@@ -1720,94 +1336,9 @@ def docs_triangle_participation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_participation(pairs)
 
 
-@_q(
-    "docs_length_histogram",
-    f"""SELECT CAST(least(len({_WORDS}) // 10, 9) AS BIGINT) AS bucket,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(min(len({_WORDS})) AS BIGINT) AS min_tokens,
-               CAST(max(len({_WORDS})) AS BIGINT) AS max_tokens
-        FROM documents
-        GROUP BY least(len({_WORDS}) // 10, 9)""",
-)
-def docs_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-length histogram (10-token buckets, top-clamped) — the
-    corpus-profiling pass that sizes packing budgets and length filters.
-    Fixed-width bucketing keys the ONE aggregation directly (map-side
-    combine); an ntile/percentile bucketing would need a global sort
-    first. The token expression is staged once as a projection column
-    (the CollapseProject re-inlining guard, as everywhere else)."""
-    from .operators.text import tokens_col
-
-    docs = _read(spark, sf_dir, "documents").select(
-        F.size(tokens_col(F.col("text"))).alias("_n")
-    )
-    return (
-        docs.groupBy(
-            F.least(F.floor(F.col("_n") / 10), F.lit(9))
-            .cast("long")
-            .alias("bucket")
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.min("_n").cast("long").alias("min_tokens"),
-            F.max("_n").cast("long").alias("max_tokens"),
-        )
-    )
-
-
 # =========================================================================
-# code-corpus curation: structural filters, fork detection, DSIR
+# code-corpus KG: fork detection, imports, definitions, resolution
 # =========================================================================
-
-# newlines planted deterministically into the single-line testdata word
-# streams (every literal " merge " token becomes a line break) so the
-# line-shape signals are non-degenerate; replace() is a non-overlapping
-# left-to-right scan in both engines, so the results agree exactly
-_CODE_LINES_SQL = "replace(text, ' merge ', chr(10))"
-
-
-@_q(
-    "docs_code_filters",
-    f"""WITH t AS (SELECT doc_id, {_CODE_LINES_SQL} AS text FROM documents),
-        l AS (SELECT doc_id, text, string_split(text, chr(10)) AS lines,
-                     string_split_regex(trim(lower(text)), '\\s+') AS w
-              FROM t)
-        SELECT doc_id,
-          CAST(len(lines) AS BIGINT) AS n_lines,
-          CAST(list_max([length(x) for x in lines]) AS BIGINT) AS max_line_len,
-          round((length(text) - (len(lines) - 1)) / len(lines), 4)
-            AS avg_line_len,
-          round(length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g'))
-                / greatest(length(text), 1), 4) AS alnum_frac,
-          round(len(list_filter(w, x -> regexp_matches(x, '[a-z]')))
-                / greatest(len(w), 1), 4) AS alpha_word_frac,
-          (lower(text) LIKE '%auto-generated%'
-           OR lower(text) LIKE '%do not edit%'
-           OR lower(text) LIKE '%generated by%') AS autogen,
-          (CAST(list_max([length(x) for x in lines]) AS BIGINT) <= 1000
-           AND round((length(text) - (len(lines) - 1)) / len(lines), 4) <= 100.0
-           AND round(length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g'))
-                     / greatest(length(text), 1), 4) >= 0.25
-           AND round(len(list_filter(w, x -> regexp_matches(x, '[a-z]')))
-                     / greatest(len(w), 1), 4) >= 0.5
-           AND NOT (lower(text) LIKE '%auto-generated%'
-                    OR lower(text) LIKE '%do not edit%'
-                    OR lower(text) LIKE '%generated by%')) AS keep
-        FROM l""",
-)
-def docs_code_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Stack/StarCoder structural code filters over the documents
-    corpus with deterministically planted line breaks (see
-    operators.text.code_quality_signals for the scale argument: one
-    narrow codegen projection, no shuffle)."""
-    from .operators.text import code_quality_signals
-
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.replace(F.col("text"), F.lit(" merge "), F.lit("\n")).alias("text"),
-    )
-    return code_quality_signals(docs)
-
 
 # synthetic multi-repo file table from documents: 40 base repos r0..r39
 # (file = document, identity = md5(text)); repos 0..7 have a planted
@@ -1841,7 +1372,7 @@ def _repo_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _import_pats_values() -> str:
-    from .operators.text import IMPORT_PATTERNS
+    from .operators.code import IMPORT_PATTERNS
 
     return ", ".join(
         "('" + kind + "', '" + rx.replace("'", "''") + "')"
@@ -1879,14 +1410,12 @@ _CODE_CONTENT_SQL = """'import mod' || CAST(doc_id % 50 AS VARCHAR) || chr(10)
        FROM hits""",
 )
 def src_import_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KG construction over source code (the north rule's corpus shape):
-    extract the import graph from synthesized code files as
-    (src:<repo>/<path>, code:imports, module) triples. One content scan
-    evaluates ALL language patterns (operators/text.py:
-    code_import_triples — per-pattern regexp_extract_all, kind-tagged,
-    flattened, exploded once); the edges feed the BGP compiler,
-    transitive closure, and pagerank like any other triple set."""
-    from .operators.text import code_import_triples
+    """The code-KG job's own ``code:imports`` rule over synthesized code
+    files: ``code_kg_state`` (no dedup, no resolution) filtered to its
+    import rows, one (src:<repo>/<path>, code:imports, module, kind) row
+    per match. One content scan evaluates ALL language patterns; the
+    oracle replays each pattern as an independent regexp_extract_all."""
+    from .plans.code_pipeline import CodeKgConfig, code_kg_state
 
     docs = _read(spark, sf_dir, "documents")
     d = F.col("doc_id")
@@ -1897,13 +1426,17 @@ def src_import_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = docs.select(
         F.concat(F.lit("r"), (d % 40).cast("string")).alias("repo"),
         F.concat(F.lit("src/f"), d.cast("string"), F.lit(".py")).alias("path"),
+        F.lit("c0").alias("commit"),
         F.concat(
             F.lit("import mod"), (d % 50).cast("string"), F.lit("\n"),
             F.lit("from pkg"), (d % 7).cast("string"),
             F.lit(" import thing\n"), inc, F.col("text"),
         ).alias("content"),
     )
-    return code_import_triples(files)
+    state = code_kg_state(files, CodeKgConfig(dedup=False, resolve=False))
+    return state.filter(F.col("pred") == "code:imports").select(
+        "subj", "pred", "obj_value", "kind"
+    )
 
 
 @_q(
@@ -2746,78 +2279,6 @@ def src_resolve_imports_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "docs_dsir_weights",
-    """WITH toks AS (SELECT doc_id,
-                substr(md5(unnest(string_split_regex(trim(lower(text)),
-                                                     '\\s+'))), 1, 2) AS g
-         FROM documents),
-        tgt AS (SELECT substr(md5(unnest(string_split_regex(trim(lower(text)),
-                                                            '\\s+'))), 1, 2) AS g
-                FROM documents WHERE lang = 'en'),
-        rc AS (SELECT g, count(*) AS raw_n FROM toks GROUP BY g),
-        tc AS (SELECT g, count(*) AS tgt_n FROM tgt GROUP BY g),
-        rt AS (SELECT sum(raw_n) AS raw_total FROM rc),
-        tt AS (SELECT sum(tgt_n) AS tgt_total FROM tc)
-        SELECT doc_id,
-               CAST(count(*) AS BIGINT) AS n_tokens,
-               round(sum(ln((COALESCE(tgt_n, 0) + 1)::DOUBLE / (tgt_total + 256))
-                       - ln((COALESCE(raw_n, 0) + 1)::DOUBLE / (raw_total + 256))),
-                     4) AS log_weight,
-               round(sum(ln((COALESCE(tgt_n, 0) + 1)::DOUBLE / (tgt_total + 256))
-                       - ln((COALESCE(raw_n, 0) + 1)::DOUBLE / (raw_total + 256)))
-                     / count(*), 6) AS per_token_log_weight
-        FROM toks
-        LEFT JOIN rc USING (g) LEFT JOIN tc USING (g)
-        CROSS JOIN rt CROSS JOIN tt
-        GROUP BY doc_id""",
-)
-def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights toward the lang='en' slice of the corpus
-    (Xie et al. 2023): hashed-unigram log-likelihood ratio per document
-    (see operators.text.dsir_importance — bucket tables broadcast, one
-    real shuffle)."""
-    from .operators.text import dsir_importance
-
-    return dsir_importance(
-        _read(spark, sf_dir, "documents"), F.col("lang") == "en"
-    )
-
-
-@_q(
-    "docs_perplexity_buckets",
-    f"""WITH toks AS (SELECT doc_id, unnest({_WORDS}) AS term FROM documents),
-        counts AS (SELECT term, count(*) AS term_n FROM toks GROUP BY 1),
-        total AS (SELECT count(*) AS total_n FROM toks),
-        lp AS MATERIALIZED (SELECT doc_id,
-               round(sum(ln(term_n::DOUBLE / total_n)) / count(*), 6)
-                 AS per_token_logprob
-             FROM toks JOIN counts USING (term) CROSS JOIN total
-             GROUP BY doc_id),
-        nn AS (SELECT count(*) AS n FROM lp),
-        t1 AS (SELECT max(per_token_logprob) AS v FROM
-               (SELECT per_token_logprob FROM lp
-                ORDER BY per_token_logprob, doc_id
-                LIMIT (SELECT CAST(ceil(n / 3.0) AS BIGINT) FROM nn))),
-        t2 AS (SELECT max(per_token_logprob) AS v FROM
-               (SELECT per_token_logprob FROM lp
-                ORDER BY per_token_logprob, doc_id
-                LIMIT (SELECT CAST(ceil(2 * n / 3.0) AS BIGINT) FROM nn)))
-        SELECT doc_id, per_token_logprob,
-               CASE WHEN per_token_logprob <= t1.v THEN 'tail'
-                    WHEN per_token_logprob <= t2.v THEN 'middle'
-                    ELSE 'head' END AS bucket
-        FROM lp CROSS JOIN t1 CROSS JOIN t2""",
-)
-def docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet head/middle/tail perplexity terciles under the corpus's own
-    unigram LM — order-statistic thresholds, never interpolated
-    quantiles (see operators/text.py:perplexity_buckets)."""
-    from .operators.text import perplexity_buckets
-
-    return perplexity_buckets(_read(spark, sf_dir, "documents"))
-
-
-@_q(
     "kg_bgp_star_query",
     f"""SELECT 'info:fedora/order:' || o_orderkey AS obj,
               'info:fedora/collection:' || (o_custkey % 100) AS coll,
@@ -3052,11 +2513,12 @@ _LIC_HEADER_SQL = """CASE doc_id % 4
 def docs_license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Stack-style license gate: SPDX tag wins, then fixed-order
     header-phrase heuristics, permissive verdict for training
-    admission. One codegen projection (operators/text.py:
-    license_detect); the corpus is augmented with deterministic
-    doc_id%4 license headers both engines derive identically (SPDX
-    non-permissive / Apache phrase / MIT phrase / none)."""
-    from .operators.text import license_detect
+    admission. One codegen projection (operators/code.py:
+    with_license, the code-KG job's ``code:license`` rule); the corpus
+    is augmented with deterministic doc_id%4 license headers both
+    engines derive identically (SPDX non-permissive / Apache phrase /
+    MIT phrase / none)."""
+    from .operators.code import with_license
 
     docs = _read(spark, sf_dir, "documents")
     header = (
@@ -3077,7 +2539,7 @@ def docs_license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     aug = docs.select(
         "doc_id", F.concat(header, F.col("text")).alias("text")
     )
-    return license_detect(aug)
+    return with_license(aug).select("doc_id", "license", "permissive")
 
 
 @_q(
@@ -3528,10 +2990,19 @@ def docs_code_clone_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals, comments, whitespace — the renamed-copy modality): one
     lookaround-free regex normalization pass, md5 key, group sizes.
     The oracle replays the identical RE2-compatible regex chain
-    (operators/text.py:code_clone_key)."""
-    from .operators.text import code_clone_key
+    (operators/code.py:clone_key_expr, the code-KG job's
+    ``code:cloneKey`` rule)."""
+    from .operators.code import clone_key_expr
 
-    return code_clone_key(_read(spark, sf_dir, "documents"))
+    keyed = _read(spark, sf_dir, "documents").select(
+        "doc_id", clone_key_expr().alias("clone_key")
+    )
+    sizes = keyed.groupBy("clone_key").agg(
+        F.count("*").cast("long").alias("clone_group_size")
+    )
+    return keyed.join(sizes, "clone_key").select(
+        "doc_id", "clone_key", "clone_group_size"
+    )
 
 
 @_q(
@@ -3566,122 +3037,6 @@ def kg_bgp_union_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         select=["obj", "owner"],
     )
-
-
-def _bpe_train_ctes(n_merges: int) -> list[str]:
-    """Unrolled BPE training rounds. Each round: adjacent-pair counts
-    over the wrapped-symbol word table, deterministic argmax, literal
-    replace applied to every word. MATERIALIZED because each level is
-    referenced twice (pair counts + the next word table)."""
-    ctes = [
-        """toks AS MATERIALIZED (
-           SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-           FROM documents)""",
-        r"""w0 AS MATERIALIZED (
-           SELECT regexp_replace(term, '(.)', '(\1)', 'g') AS enc,
-                  count(*) AS n
-           FROM toks
-           WHERE term NOT LIKE '%(%' AND term NOT LIKE '%)%'
-             AND len(term) > 0
-           GROUP BY term)""",
-    ]
-    for i in range(1, n_merges + 1):
-        ctes.append(
-            f"""sy{i} AS MATERIALIZED (
-           SELECT string_split(substring(enc, 2, length(enc) - 2), ')(') AS sy, n
-           FROM w{i - 1})"""
-        )
-        ctes.append(
-            f"""p{i} AS MATERIALIZED (
-           SELECT l AS lhs, r AS rhs, sum(n) AS pair_count FROM (
-             SELECT unnest(sy[1:len(sy) - 1]) AS l,
-                    unnest(sy[2:len(sy)]) AS r, n
-             FROM sy{i} WHERE len(sy) >= 2)
-           GROUP BY 1, 2)"""
-        )
-        ctes.append(
-            f"""b{i} AS MATERIALIZED (
-           SELECT lhs, rhs, pair_count FROM p{i}
-           ORDER BY pair_count DESC, lhs, rhs LIMIT 1)"""
-        )
-        if i < n_merges:
-            ctes.append(
-                f"""w{i} AS MATERIALIZED (
-           SELECT replace(enc, '(' || b.lhs || ')(' || b.rhs || ')',
-                          '(' || b.lhs || b.rhs || ')') AS enc, n
-           FROM w{i - 1} CROSS JOIN b{i} b)"""
-            )
-    return ctes
-
-
-def _bpe_oracle(n_merges: int) -> str:
-    finals = "\nUNION ALL\n".join(
-        f"SELECT CAST({i} AS INTEGER) AS rank, lhs, rhs, "
-        f"CAST(pair_count AS BIGINT) AS pair_count FROM b{i}"
-        for i in range(1, n_merges + 1)
-    )
-    chain = ",\n        ".join(_bpe_train_ctes(n_merges))
-    return f"WITH {chain}\n{finals}"
-
-
-def _bpe_count_oracle(n_merges: int) -> str:
-    """Train n merges (shared CTE chain), then apply them IN ORDER to
-    every document's wrapped-word encoding and count the '(' wrappers
-    left — the same constant-folded replace chain the Spark side runs."""
-    ctes = _bpe_train_ctes(n_merges)
-    ctes.append(
-        r"""d0 AS MATERIALIZED (
-       SELECT doc_id, array_to_string(
-         list_transform(
-           list_filter(string_split_regex(trim(lower(text)), '\s+'),
-                       w -> len(w) > 0 AND w NOT LIKE '%(%'
-                            AND w NOT LIKE '%)%'),
-           w -> regexp_replace(w, '(.)', '(\1)', 'g')), ' ') AS enc
-       FROM documents)"""
-    )
-    for i in range(1, n_merges + 1):
-        ctes.append(
-            f"""d{i} AS MATERIALIZED (
-       SELECT doc_id, replace(enc, '(' || b.lhs || ')(' || b.rhs || ')',
-                      '(' || b.lhs || b.rhs || ')') AS enc
-       FROM d{i - 1} CROSS JOIN b{i} b)"""
-        )
-    chain = ",\n        ".join(ctes)
-    return (
-        f"WITH {chain}\n"
-        f"SELECT doc_id, CAST(length(enc) - length(replace(enc, '(', ''))"
-        f" AS BIGINT) AS n_tokens FROM d{n_merges}"
-    )
-
-
-@_q("docs_bpe_train", _bpe_oracle(8))
-def docs_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE tokenizer TRAINING over the corpus (Sennrich et al. 2016):
-    the 8 most valuable merges, learned by iterated adjacent-pair
-    counting on the word-count table. After one corpus aggregation the
-    whole loop is vocabulary-sized; merge application is a literal
-    replace over the wrapped-symbol encoding, identical byte-for-byte
-    in the DuckDB oracle's unrolled rounds
-    (operators/text.py:bpe_train)."""
-    from .operators.text import bpe_train
-
-    return bpe_train(_read(spark, sf_dir, "documents"), n_merges=8)
-
-
-@_q("docs_bpe_token_count", _bpe_count_oracle(4))
-def docs_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """True BPE token counts under 4 trained merges: train (bounded
-    driver loop), collect the metadata-sized merge list, and count via
-    ONE constant-folded replace-chain projection — no join, no shuffle,
-    no Python (operators/text.py:bpe_token_count). The oracle trains
-    with the same unrolled rounds and applies the same chain."""
-    from .operators.text import bpe_token_count, bpe_train
-
-    docs = _read(spark, sf_dir, "documents")
-    merges = [
-        (r.lhs, r.rhs) for r in bpe_train(docs, n_merges=4).orderBy("rank").collect()
-    ]
-    return bpe_token_count(docs, merges)
 
 
 def _kcore_oracle(k: int, rounds: int) -> str:
@@ -3731,75 +3086,6 @@ def docs_dup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         _read(spark, sf_dir, "documents"), threshold=0.5, num_hashes=8, bands=4
     )
     return kcore(pairs, k=2)
-
-
-@_q(
-    "docs_badwords_filter",
-    f"""WITH w AS (SELECT doc_id, {_WORDS} AS words FROM documents)
-        SELECT doc_id,
-               CAST(len(list_intersect(list_distinct(words),
-                                       ['broken', 'leak', 'slow'])) AS BIGINT)
-                 AS n_bad_terms,
-               CAST(len(list_filter(words,
-                        t -> list_contains(['broken', 'leak', 'slow'], t)))
-                    AS BIGINT) AS n_bad_tokens,
-               CAST(CASE WHEN len(list_filter(words,
-                        t -> list_contains(['broken', 'leak', 'slow'], t))) = 0
-                    THEN 1 ELSE 0 END AS INTEGER) AS keep
-        FROM w""",
-)
-def docs_badwords_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style blocklist filtering: token-level blocklist hits per
-    document + keep verdict. The list constant-folds into one narrow
-    codegen projection — no explode, no join, no shuffle (see
-    operators/text.py:badwords_filter for the large-list alternative).
-    The test list is arbitrary but deterministic; both engines fold the
-    same three words."""
-    from .operators.text import badwords_filter
-
-    return badwords_filter(
-        _read(spark, sf_dir, "documents"), ["slow", "broken", "leak"]
-    )
-
-
-@_q(
-    "docs_bigram_logprob",
-    f"""WITH w AS (SELECT doc_id, {_WORDS} AS words FROM documents),
-        pos AS (SELECT doc_id,
-                       unnest(words[1:len(words) - 1]) AS prev,
-                       unnest(words[2:len(words)]) AS cur
-                FROM w WHERE len(words) >= 2),
-        toks AS (SELECT unnest(words) AS term FROM w),
-        uni AS (SELECT term, count(*) AS term_n FROM toks GROUP BY 1),
-        total AS (SELECT sum(term_n) AS total_n FROM uni),
-        big AS (SELECT prev, cur, count(*) AS bi_n FROM pos GROUP BY 1, 2),
-        scored AS (
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-                 round(sum(ln(0.8 * (bi_n::DOUBLE / pn.term_n)
-                              + 0.2 * (cn.term_n::DOUBLE / total_n))), 4)
-                   AS logprob,
-                 round(sum(ln(0.8 * (bi_n::DOUBLE / pn.term_n)
-                              + 0.2 * (cn.term_n::DOUBLE / total_n)))
-                       / count(*), 6) AS per_token_logprob
-          FROM pos
-          JOIN big USING (prev, cur)
-          JOIN uni pn ON pos.prev = pn.term
-          JOIN uni cn ON pos.cur = cn.term
-          CROSS JOIN total
-          GROUP BY doc_id)
-       SELECT w.doc_id,
-              CAST(coalesce(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-              s.logprob, s.per_token_logprob
-       FROM w LEFT JOIN scored s ON w.doc_id = s.doc_id""",
-)
-def docs_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated-bigram LM document scoring — the conditional upgrade
-    of docs_unigram_logprob (word ORDER now matters). Count tables are
-    vocabulary-sized broadcasts; the corpus explodes once and shuffles
-    once on doc_id (operators/text.py:bigram_logprob)."""
-    from .operators.text import bigram_logprob
-
-    return bigram_logprob(_read(spark, sf_dir, "documents"), lam=0.8)
 
 
 # =========================================================================

@@ -762,13 +762,6 @@ def test_literal_bracket_escape(spark):
     assert ("a", "c") in path and ("b", "b") in path
 
 
-def test_ask_value_driver_side(triples):
-    from fcrepo3_rdf_extractor_spark.operators.bgp import bgp_ask_value
-
-    assert bgp_ask_value(triples, [("?x", "m:state", "Active")]) is True
-    assert bgp_ask_value(triples, [("?x", "m:state", "Zombie")]) is False
-
-
 def test_solution_modifiers_order_limit_offset(triples):
     """ORDER BY + LIMIT plans as TakeOrderedAndProject; OFFSET pages
     deterministically; OFFSET without ORDER BY is rejected."""

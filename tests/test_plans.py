@@ -10,7 +10,7 @@ Each test pins one scale-critical plan property:
 - N-Quads rendering stays JVM-side (no Python eval nodes), and its
   generated methods stay under HotSpot's JIT size limit
 - token/shingle staging isn't re-inlined by CollapseProject (the
-  O(n*k)-splits regression fixed in text.py)
+  O(n*k)-splits regression; see dedup_approx.shingles_of)
 """
 
 from __future__ import annotations
@@ -358,15 +358,6 @@ def test_shared_pair_enum_is_bucket_bounded(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_language_id_scores_evaluated_once(spark):
-    """5 langs x 3 markers = 15 replace-chains; re-inlining would
-    triple that."""
-    from fcrepo3_rdf_extractor_spark.operators.text import language_id
-
-    plan = _optimized(language_id(_docs(spark)))
-    assert plan.count("replace(") <= 16, plan.count("replace(")
-
-
 def test_containment_neardup_bounded_equi_join(spark):
     """Containment dedup must candidate via the shingle inverted index —
     hash-partitioned, never BNLJ/Cartesian — with the intersection size
@@ -407,33 +398,6 @@ def test_dedup_substrings_two_level_span_table(spark):
     # staged inputs: token array + gram occurrences are checkpointed
     assert plan.count("Scan ExistingRDD") >= 3, plan
     assert "split(" not in plan, plan
-
-
-def test_top_terms_global_take_ordered(spark):
-    """Global top-k must plan TakeOrderedAndProject (per-partition heap +
-    driver merge), never a global Sort, and the term count must combine
-    map-side."""
-    from fcrepo3_rdf_extractor_spark.queries import docs_top_terms_global
-
-    plan = _formatted(docs_top_terms_global(spark, SF_DIR))
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "partial_count" in plan
-
-
-def test_dsir_bucket_tables_broadcast(spark):
-    """DSIR's two bucket-count tables are metadata (<=256 rows): they
-    must join as BroadcastHashJoin, and the only nested-loop joins in
-    the plan are the two 1-row scalar-total crossJoins (the
-    documented-fine shape) — never a real non-broadcast join on the
-    exploded corpus."""
-    from fcrepo3_rdf_extractor_spark.queries import queries
-
-    df = queries()["docs_dsir_weights"](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert plan.count("BroadcastNestedLoopJoin") == 2  # 1-row totals only
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_repo_forks_candidate_join_is_equi(spark):
@@ -495,20 +459,6 @@ def test_vendored_stats_linear_no_self_join(spark):
     assert "BroadcastNestedLoopJoin" not in phys
     assert "CartesianProduct" not in phys
     assert "partial_count" in phys, phys
-
-
-def test_chunk_windows_scan_side_no_shuffle(spark):
-    """RAG chunking is pure scan-side column arithmetic: token array
-    staged ONCE (no re-inlined split), and the whole plan has no
-    exchange and no Python stage."""
-    from fcrepo3_rdf_extractor_spark.operators.text import chunk_windows
-
-    out = chunk_windows(_docs(spark), window=8, stride=4)
-    plan = _optimized(out)
-    assert plan.count("split(") == 1, plan.count("split(")
-    phys = out._jdf.queryExecution().executedPlan().toString()
-    for node in ("Exchange", "MapInPandas", "BatchEvalPython"):
-        assert node not in phys, node
 
 
 def test_sparql_subquery_plan_shape(spark):

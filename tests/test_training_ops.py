@@ -1,6 +1,7 @@
 """Unit tests for the training-data pipeline operators: near-dup
-detection finds planted duplicates, and the text, graph and code
-operators behave."""
+detection finds planted duplicates, and the graph and code operators
+behave, including the code-KG job's license, clone-key and import
+rules."""
 
 from __future__ import annotations
 
@@ -14,12 +15,6 @@ from fcrepo3_rdf_extractor_spark.operators.dedup_approx import (
     minhash_signature,
     ngram_jaccard,
     simhash,
-)
-from fcrepo3_rdf_extractor_spark.operators.text import (
-    fingerprint,
-    language_id,
-    quality_score,
-    token_count,
 )
 
 BASE = ("the quick brown fox jumps over the lazy dog and then runs far away "
@@ -186,74 +181,6 @@ def test_simhash_similar_docs_close(spark):
     assert ham_near <= ham_far
 
 
-def test_token_count_and_quality(spark):
-    docs = _docs(spark)
-    tc = {r.doc_id: r.n_tokens for r in token_count(docs).collect()}
-    assert tc[0] == len(BASE)
-    q = {r.doc_id: r for r in quality_score(docs).collect()}
-    assert q[0].quality == 1.0  # long, stopword-rich, sane word length
-    assert 0 <= q[3].punct_ratio <= 1
-
-
-def test_language_id(spark):
-    out = {r.doc_id: r.pred_lang for r in language_id(_docs(spark)).collect()}
-    assert out[0] == "en"
-    assert out[4] == "es"
-
-
-def test_fingerprint_whitespace_invariant(spark):
-    docs = spark.createDataFrame(
-        [(0, "a b  c"), (1, "A   b\tc"), (2, "a b d")], "doc_id long, text string"
-    )
-    fp = {r.doc_id: (r.content_fp, r.min_shingle_fp) for r in fingerprint(docs).collect()}
-    assert fp[0] == fp[1]      # case/whitespace-normalized identity
-    assert fp[0] != fp[2]
-
-
-def test_with_quality_language_match_narrow_ops(spark):
-    """The in-place annotators (with_quality/with_language, per-row
-    projections that keep every input column) must produce the exact
-    values of the narrow oracled operators they refactor."""
-    from fcrepo3_rdf_extractor_spark.operators.text import (
-        language_id,
-        quality_score,
-        with_language,
-        with_quality,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").limit(50)
-    inplace = {r.doc_id: (r.quality, r.pred_lang)
-               for r in with_language(with_quality(docs)).collect()}
-    q = {r.doc_id: r.quality for r in quality_score(docs).collect()}
-    l = {r.doc_id: r.pred_lang for r in language_id(docs).collect()}
-    assert inplace == {d: (q[d], l[d]) for d in q}
-    # in-place forms keep every input column
-    assert set(docs.columns) <= set(with_language(with_quality(docs)).columns)
-
-
-def test_winnow_fingerprint_alignment_robust(spark):
-    """Winnowing's point: an insertion shifts k-gram positions but most
-    selected (window-min) hashes survive — unlike head-anchored hashes."""
-    from fcrepo3_rdf_extractor_spark.operators.text import winnow_fingerprint
-
-    base = "the quick brown fox jumps over the lazy dog and runs far away " * 4
-    shifted = "PREFIX INSERTED " + base
-    df = spark.createDataFrame(
-        [(1, base), (2, shifted)], "doc_id long, text string"
-    )
-    fps = {r.doc_id: set(r.fingerprints) for r in winnow_fingerprint(df).collect()}
-    overlap = len(fps[1] & fps[2]) / len(fps[1] | fps[2])
-    assert overlap > 0.7, overlap
-    # and a genuinely different doc shares almost nothing
-    other = spark.createDataFrame(
-        [(3, "completely unrelated content about spark physical plans " * 5)],
-        "doc_id long, text string",
-    )
-    fps3 = set(winnow_fingerprint(other).collect()[0].fingerprints)
-    assert len(fps[1] & fps3) / len(fps[1] | fps3) < 0.05
-
-
 def test_hll_sketch_distinct_error_bound(spark):
     """approx_count_distinct (HyperLogLog++): mergeable distributed
     sketch; rsd=0.02 must land within 5% of exact on every grouping."""
@@ -270,30 +197,6 @@ def test_hll_sketch_distinct_error_bound(spark):
     assert got
     for flag, (approx, exact) in got.items():
         assert abs(approx - exact) / exact < 0.05, (flag, approx, exact)
-
-
-def test_vocab_token_count_greedy_longest_match(spark):
-    """Greedy longest-match segmentation: the longest matching vocab
-    piece wins at each position ('foobar' with {'foo','foob','ba','r'}
-    -> foob+UNK(a)+r = 3, never foo+ba+r), unknown chars fall back to
-    1-char UNK pieces, empty text counts 0, and whole-word vocab hits
-    cost exactly 1."""
-    from fcrepo3_rdf_extractor_spark.operators.text import vocab_token_count
-
-    vocab = ["foo", "foob", "ba", "r", "hello"]
-    docs = spark.createDataFrame(
-        [
-            (0, "foobar"),          # foob + a(UNK) + r = 3
-            (1, "hello foobar"),    # 1 + 3 = 4
-            (2, "zzz"),             # 3 UNK chars
-            (3, ""),                # 0 pieces
-            (4, "HELLO"),           # lowercased -> 1
-        ],
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: r.n_vocab_tokens
-           for r in vocab_token_count(docs, vocab).collect()}
-    assert got == {0: 3, 1: 4, 2: 3, 3: 0, 4: 1}
 
 
 def test_connected_components_chain_and_singletons(spark):
@@ -384,37 +287,6 @@ def test_dedup_clusters_keep_is_min_id(spark):
     rows = {r.doc_id: (r.cluster_id, r.keep)
             for r in dedup_clusters(pairs, docs).collect()}
     assert rows == {3: (3, True), 7: (3, False), 9: (3, False), 42: (42, True)}
-
-
-def test_tfidf_top_term_prefers_rare_term(spark):
-    from fcrepo3_rdf_extractor_spark.operators.text import tfidf_top_terms
-
-    docs = spark.createDataFrame(
-        [(1, "common common zebra"), (2, "common common common"),
-         (3, "common yak yak")],
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: r.term for r in tfidf_top_terms(docs, k=1).collect()}
-    # 'common' appears in every doc -> idf 0; rare terms win where present
-    assert got[1] == "zebra" and got[3] == "yak"
-    # doc 2 has only zero-idf terms; deterministic pick still emitted
-    assert got[2] == "common"
-
-
-def test_unigram_logprob_flags_rare_content(spark):
-    from math import isclose, log
-
-    from fcrepo3_rdf_extractor_spark.operators.text import unigram_logprob
-
-    docs = spark.createDataFrame(
-        [(0, "a a a"), (1, "a a b")], "doc_id long, text string"
-    )
-    # corpus: a x5, b x1, total 6
-    got = {r.doc_id: r for r in unigram_logprob(docs).collect()}
-    assert isclose(got[0].logprob, round(3 * log(5 / 6), 4))
-    assert isclose(got[1].logprob, round(2 * log(5 / 6) + log(1 / 6), 4))
-    # the doc containing the rare token scores lower per token
-    assert got[1].per_token_logprob < got[0].per_token_logprob
 
 
 def test_connected_components_raises_on_non_convergence(spark):
@@ -670,45 +542,6 @@ def test_triangle_participation_known_graph(spark):
     assert got == {0: 3, 1: 3, 2: 3, 3: 3}
 
 
-def test_code_quality_signals_flags_and_keeps(spark):
-    """Structural code filters: a minified one-liner (max line length),
-    a number table (alphabetic-word fraction), an auto-generated header,
-    an encoded blob (alnum is fine but lines/alpha fail), and a normal
-    multi-line source file that passes everything."""
-    from fcrepo3_rdf_extractor_spark.operators.text import (
-        code_quality_signals,
-    )
-
-    good = "def add(a, b):\n    return a + b\n\nprint(add(2, 3))"
-    minified = "var x=" + "a" * 2000 + ";"
-    numbers = "1 2 3 4 5 6 7 8\n9 10 11 12 13 14"
-    autogen = "# auto-generated file\ndef f():\n    return 1"
-    rows = [(0, good), (1, minified), (2, numbers), (3, autogen)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in code_quality_signals(df).collect()}
-    assert got[0].keep and not got[0].autogen
-    assert got[0].n_lines == 4 and got[0].max_line_len == 16
-    assert not got[1].keep and got[1].max_line_len > 1000
-    assert not got[2].keep and got[2].alpha_word_frac == 0.0
-    assert not got[3].keep and got[3].autogen
-
-
-def test_code_quality_signals_is_single_projection(spark):
-    """The filter battery must stay one narrow codegen projection: no
-    exchange, no Python stage, and the line/token arrays staged once
-    (CollapseProject would otherwise re-run the splits per signal)."""
-    from fcrepo3_rdf_extractor_spark.operators.text import (
-        code_quality_signals,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = code_quality_signals(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
-    # one split for lines, one for tokens — not one per signal column
-    assert plan.count("split(") <= 2, plan.count("split(")
-
-
 def test_fileset_near_duplicates_fork_and_boilerplate(spark):
     """Repo fork detection: an exact mirror scores 1.0, a 3/4 fork
     scores 0.6 (3 shared / 5 union), unrelated repos don't pair, and a
@@ -741,158 +574,6 @@ def test_fileset_near_duplicates_fork_and_boilerplate(spark):
              for r in fileset_near_duplicates(
                  files, threshold=0.0, max_df=100).collect()}
     assert ("rA", "rZ") in loose  # boilerplate-only overlap now pairs
-
-
-def test_dsir_importance_prefers_target_like_docs(spark):
-    """DSIR: documents drawn from the target vocabulary must outscore
-    off-target documents in per-token log weight, and a target doc's
-    weight must be positive (its buckets are denser under the target
-    distribution than under the mixed raw one)."""
-    from pyspark.sql import functions as F
-
-    from fcrepo3_rdf_extractor_spark.operators.text import dsir_importance
-
-    tgt_text = "alpha beta gamma delta alpha beta gamma delta"
-    off_text = "uno dos tres cuatro uno dos tres cuatro"
-    rows = ([(i, tgt_text, "en") for i in range(10)]
-            + [(100 + i, off_text, "es") for i in range(10)]
-            + [(200, "alpha beta gamma delta", "und"),   # target-like
-               (201, "uno dos tres cuatro", "und")])     # off-target
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    got = {r.doc_id: r for r in
-           dsir_importance(df, F.col("lang") == "en").collect()}
-    assert got[200].per_token_log_weight > got[201].per_token_log_weight
-    assert got[200].log_weight > 0 > got[201].log_weight
-    assert got[200].n_tokens == 4
-
-
-def test_perplexity_buckets_terciles(spark):
-    """Head/middle/tail split: bucket sizes are ceil-tercile balanced,
-    the head bucket holds the HIGHEST per-token logprobs (most
-    predictable text — repeated common tokens), and every doc is
-    bucketed exactly once."""
-    from fcrepo3_rdf_extractor_spark.operators.text import (
-        perplexity_buckets,
-    )
-
-    rows = ([(i, "common common common common") for i in range(3)]
-            + [(10 + i, f"common word{i} mixed tokens here") for i in range(3)]
-            + [(20 + i, f"rare{i} unique{i} single{i} shot{i}") for i in range(3)])
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in perplexity_buckets(df).collect()}
-    assert len(got) == 9
-    from collections import Counter
-    sizes = Counter(r.bucket for r in got.values())
-    assert sizes == {"tail": 3, "middle": 3, "head": 3}
-    assert all(got[i].bucket == "head" for i in range(3))
-    assert all(got[20 + i].bucket == "tail" for i in range(3))
-
-
-def test_bloom_build_matches_python_reference(spark):
-    """The driver-held word array must equal a pure-Python md5 Bloom
-    build over the same grams (same 4-hex-char probe windows, 32-bit
-    words in longs) — pins the Spark-side shift/pow/bit_or arithmetic
-    the DuckDB oracle mirrors."""
-    import hashlib
-
-    from fcrepo3_rdf_extractor_spark.operators.text import (
-        BLOOM_WORDS,
-        bloom_build,
-    )
-
-    grams = ["alpha beta gamma", "delta epsilon zeta", "eta theta iota"]
-    bench = spark.createDataFrame([(g,) for g in grams], "gram string")
-    got = bloom_build(bench)
-    want = [0] * BLOOM_WORDS
-    for g in grams:
-        h = hashlib.md5(g.encode()).hexdigest()
-        for i in range(3):
-            p = int(h[4 * i : 4 * i + 4], 16)
-            want[p >> 5] |= 1 << (p & 31)
-    assert got == want
-
-
-def test_bloom_contamination_no_false_negatives_and_joinfree(spark):
-    """Every gram in the filter must be reported hit (Bloom admits
-    false positives, never false negatives), docs sharing no grams with
-    the benchmark stay unflagged at this density, and the probe stage
-    is a pure projection: no Join/Exchange/explode anywhere in the
-    probe plan (the filter rides as a constant-folded literal)."""
-    from fcrepo3_rdf_extractor_spark.operators.text import (
-        bloom_build,
-        bloom_contamination,
-        shingles_of,
-        tokens_col,
-    )
-
-    docs = _docs(spark)
-    bench = (
-        docs.filter(F.col("doc_id") == 0)
-        .select(tokens_col(F.col("text")).alias("_w"))
-        .select(F.explode(shingles_of(F.col("_w"), 3)).alias("gram"))
-        .distinct()
-    )
-    words = bloom_build(bench)
-    out = {
-        r.doc_id: r
-        for r in bloom_contamination(docs, words, k=3, threshold=0.5).collect()
-    }
-    # docs 0 and 1 are the benchmark text verbatim: every gram hits
-    assert out[0].n_bloom_hits == out[0].n_grams
-    assert out[1].flagged == 1
-    # near-dup doc 2 shares all but the trailing grams
-    assert 0 < out[2].n_bloom_hits < out[2].n_grams
-    # disjoint docs: no hits at this density (fp rate ~1e-12 for n=~20)
-    assert out[3].n_bloom_hits == 0 and out[4].n_bloom_hits == 0
-
-    plan = bloom_contamination(docs, words, k=3)._sc._jvm.PythonSQLUtils.explainString(
-        bloom_contamination(docs, words, k=3)._jdf.queryExecution(), "formatted"
-    )
-    for bad in ("Join", "Exchange", "Generate"):
-        assert bad not in plan, f"probe plan must not contain {bad}:\n{plan}"
-
-
-def test_badwords_filter_counts_and_plan(spark):
-    """Token-level hits: distinct-term vs occurrence counts diverge on
-    repeats; substring containment ('slowly') must NOT match; and the
-    whole operator is one join-free, shuffle-free projection."""
-    from fcrepo3_rdf_extractor_spark.operators.text import badwords_filter
-
-    df = spark.createDataFrame(
-        [
-            (1, "slow slow broken fast"),
-            (2, "slowly unbroken fast"),
-            (3, "clean text here"),
-        ],
-        "doc_id long, text string",
-    )
-    out = badwords_filter(df, ["slow", "broken"])
-    got = {r.doc_id: r for r in out.collect()}
-    assert (got[1].n_bad_terms, got[1].n_bad_tokens, got[1].keep) == (2, 3, 0)
-    assert (got[2].n_bad_terms, got[2].n_bad_tokens, got[2].keep) == (0, 0, 1)
-    assert (got[3].n_bad_terms, got[3].n_bad_tokens, got[3].keep) == (0, 0, 1)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Join" not in plan
-
-
-def test_bigram_logprob_order_sensitivity(spark):
-    """The bigram model must separate documents the unigram model scores
-    identically: same bag of words, different order -> the order the
-    corpus repeats scores strictly higher. Short docs (<2 tokens) come
-    back with n_bigrams=0 and NULL logprob."""
-    from fcrepo3_rdf_extractor_spark.operators.text import bigram_logprob
-
-    rows = [(i, "the quick brown fox") for i in range(5)] + [
-        (100, "fox brown quick the"),
-        (101, "solo"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in bigram_logprob(df).collect()}
-    assert len(got) == 7
-    assert got[0].per_token_logprob > got[100].per_token_logprob
-    assert got[101].n_bigrams == 0 and got[101].logprob is None
-    # every in-order doc scores identically (same positions, same counts)
-    assert len({got[i].logprob for i in range(5)}) == 1
 
 
 def test_kcore_known_graph(spark):
@@ -940,113 +621,11 @@ def test_transitive_closure_shortest_depths(spark):
     assert gc[(1, 1)] == 3 and gc[(1, 3)] == 2 and len(gc) == 9
 
 
-def test_bpe_train_matches_python_reference(spark):
-    """The wrapped-symbol literal-replace merge application must equal
-    canonical (Sennrich) per-word left-to-right non-overlapping merging
-    — including the run-of-repeats case ('aaaaaa' -> aa aa aa, where a
-    naive space-delimited replace diverges) — and the learned merge
-    sequence must match a pure-Python trainer with the same
-    (count DESC, lhs, rhs) tiebreak."""
-    from collections import Counter
-
-    from fcrepo3_rdf_extractor_spark.operators.text import bpe_train
-
-    texts = [
-        "low lower lowest low low",
-        "new newer newest new newer",
-        "aaaaaa aaaa aa",
-        "wide wider widest wide",
-        "low new wide aaaaaa",
-    ]
-
-    def py_bpe(texts, n_merges):
-        words = Counter()
-        for t in texts:
-            for w in t.lower().split():
-                words[tuple(w)] += 1
-        merges = []
-        for rank in range(1, n_merges + 1):
-            pairs = Counter()
-            for sym, n in words.items():
-                for a, b in zip(sym, sym[1:]):
-                    pairs[(a, b)] += n
-            if not pairs:
-                break
-            # count DESC, then lexicographic (lhs, rhs) ASC
-            (l, r), cnt = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-            merges.append((rank, l, r, cnt))
-            out = Counter()
-            for sym, n in words.items():
-                new, i = [], 0
-                while i < len(sym):
-                    if i + 1 < len(sym) and sym[i] == l and sym[i + 1] == r:
-                        new.append(l + r)
-                        i += 2
-                    else:
-                        new.append(sym[i])
-                        i += 1
-                out[tuple(new)] += n
-            words = out
-        return merges
-
-    expected = py_bpe(texts, 6)
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    got = [
-        (r.rank, r.lhs, r.rhs, r.pair_count)
-        for r in bpe_train(df, n_merges=6).orderBy("rank").collect()
-    ]
-    assert got == expected
-
-
-def test_bpe_token_count_matches_python_apply(spark):
-    """Counting under trained merges must equal applying canonical BPE
-    merges per word in Python and summing the pieces — and the whole
-    count must be one join-free, shuffle-free projection."""
-    from fcrepo3_rdf_extractor_spark.operators.text import (
-        bpe_token_count,
-        bpe_train,
-    )
-
-    texts = ["low lower lowest", "new newer lowest low", "aaaaaa aa low"]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    merges = [
-        (r.lhs, r.rhs)
-        for r in bpe_train(df, n_merges=3).orderBy("rank").collect()
-    ]
-
-    def apply(word):
-        sym = list(word)
-        for l, r in merges:
-            out, i = [], 0
-            while i < len(sym):
-                if i + 1 < len(sym) and sym[i] == l and sym[i + 1] == r:
-                    out.append(l + r)
-                    i += 2
-                else:
-                    out.append(sym[i])
-                    i += 1
-            sym = out
-        return len(sym)
-
-    expected = {
-        i: sum(apply(w) for w in t.lower().split()) for i, t in enumerate(texts)
-    }
-    out = bpe_token_count(df, merges)
-    got = {r.doc_id: r.n_tokens for r in out.collect()}
-    assert got == expected
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Join" not in plan
-
-
 def test_license_detect_precedence_and_plan(spark):
     """SPDX beats phrases (a GPL-phrased file with an MIT SPDX tag is
     MIT); unknown -> NULL + permissive 0; and the operator is one
     join-free, shuffle-free projection."""
-    from fcrepo3_rdf_extractor_spark.operators.text import license_detect
+    from fcrepo3_rdf_extractor_spark.operators.code import with_license
 
     rows = [
         (1, "// SPDX-License-Identifier: MIT\nGNU General Public License"),
@@ -1057,7 +636,7 @@ def test_license_detect_precedence_and_plan(spark):
         (6, "def main(): pass"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = license_detect(df)
+    out = with_license(df).select("doc_id", "license", "permissive")
     got = {r.doc_id: (r.license, r.permissive) for r in out.collect()}
     assert got == {
         1: ("MIT", 1),
@@ -1098,7 +677,7 @@ def test_contamination_closure_propagates_across_cluster(spark):
 def test_code_clone_key_type2_semantics(spark):
     """Renamed identifiers + changed literals + different comments =
     SAME key; changed structure (operator, call shape) = different key."""
-    from fcrepo3_rdf_extractor_spark.operators.text import code_clone_key
+    from fcrepo3_rdf_extractor_spark.operators.code import clone_key_expr
 
     a = "def total(xs):\n    # sum them\n    return sum(xs) + 1\n"
     b = "def acc(items):\n    /* other note */\n    return sum(items) + 42\n"
@@ -1106,78 +685,26 @@ def test_code_clone_key_type2_semantics(spark):
     df = spark.createDataFrame(
         [(1, a), (2, b), (3, c)], "doc_id long, text string"
     )
+    keyed = df.select("doc_id", clone_key_expr().alias("clone_key"))
+    sizes = keyed.groupBy("clone_key").agg(
+        F.count("*").cast("long").alias("clone_group_size")
+    )
     got = {r.doc_id: (r.clone_key, r.clone_group_size)
-           for r in code_clone_key(df).collect()}
+           for r in keyed.join(sizes, "clone_key").collect()}
     assert got[1][0] == got[2][0] and got[1][1] == 2
     assert got[3][0] != got[1][0] and got[3][1] == 1
 
 
-def test_bpe_token_count_udf_arm_matches_jvm_chain(spark):
-    """The large-vocabulary pandas-UDF arm must count exactly what the
-    constant-folded JVM replace chain counts for trained merges (the
-    documented precondition), across repeats, singletons, and the
-    run-of-'a's case."""
-    from fcrepo3_rdf_extractor_spark.operators.text import (
-        bpe_token_count,
-        bpe_train,
-    )
-
-    texts = [
-        "low lower lowest low low",
-        "new newer newest new newer",
-        "aaaaaa aaaa aa",
-        "solo",
-        "",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    merges = [
-        (r.lhs, r.rhs)
-        for r in bpe_train(df, n_merges=6).orderBy("rank").collect()
-    ]
-    jvm = {r.doc_id: r.n_tokens
-           for r in bpe_token_count(df, merges).collect()}
-    udf = {r.doc_id: r.n_tokens
-           for r in bpe_token_count(df, merges, max_jvm_merges=0).collect()}
-    assert jvm == udf and udf[4] == 0
-
-
-def test_chunk_windows_semantics(spark):
-    """Overlapping windows with a shorter tail; a short doc yields one
-    chunk; chunk ids deterministic."""
-    from fcrepo3_rdf_extractor_spark.operators.text import chunk_windows
-
-    docs = spark.createDataFrame(
-        [(1, " ".join(f"t{i}" for i in range(10))), (2, "only three words")],
-        "doc_id long, text string",
-    )
-    got = sorted(
-        chunk_windows(docs, window=6, stride=4).collect(),
-        key=lambda r: (r.doc_id, r.chunk_idx),
-    )
-    d1 = [r for r in got if r.doc_id == 1]
-    # starts 0,4,8 over 10 tokens: 6,6,2 tokens
-    assert [(r.chunk_idx, r.start_token, r.n_tokens) for r in d1] == [
-        (0, 0, 6), (1, 4, 6), (2, 8, 2)]
-    assert d1[0].chunk_text == "t0 t1 t2 t3 t4 t5"
-    assert d1[1].chunk_text.startswith("t4 t5")  # overlap of 2
-    assert d1[2].chunk_text == "t8 t9"
-    assert d1[0].chunk_id == "1#0" and d1[2].chunk_id == "1#2"
-    d2 = [r for r in got if r.doc_id == 2]
-    assert len(d2) == 1 and d2[0].n_tokens == 3
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="stride"):
-        chunk_windows(docs, window=4, stride=5)
-
-
 def test_code_import_triples_kinds(spark):
-    """Import-graph extraction: each pattern kind fires on its own
-    statement shape, all from ONE content scan; edges compose with the
-    BGP compiler like any other triples."""
+    """Import-graph extraction (``code_kg_state``'s ``code:imports``
+    rows): each pattern kind fires on its own statement shape, all from
+    ONE content scan; edges compose with the BGP compiler like any
+    other triples."""
     from fcrepo3_rdf_extractor_spark.operators.bgp import bgp_query
-    from fcrepo3_rdf_extractor_spark.operators.text import code_import_triples
+    from fcrepo3_rdf_extractor_spark.plans.code_pipeline import (
+        CodeKgConfig,
+        code_kg_state,
+    )
 
     files = spark.createDataFrame(
         [
@@ -1187,8 +714,9 @@ def test_code_import_triples_kinds(spark):
             ("r2", "d.txt", "no imports here at all"),
         ],
         "repo string, path string, content string",
-    )
-    got = code_import_triples(files)
+    ).withColumn("commit", F.lit("c0"))
+    state = code_kg_state(files, CodeKgConfig(dedup=False, resolve=False))
+    got = state.filter(F.col("pred") == "code:imports")
     rows = {(r.subj, r.obj_value, r.kind) for r in got.collect()}
     assert rows == {
         ("src:r1/a.py", "os.path", "py_import"),
@@ -1295,103 +823,6 @@ def test_vendored_file_stats(spark):
     assert (stats["r2"].n_files, stats["r2"].n_vendored) == (3, 1)
     assert (stats["r3"].n_files, stats["r3"].n_vendored) == (1, 0)
     assert stats["r1"].vendored_frac == 0.5
-
-
-def test_bm25_topk_ranking(spark):
-    """BM25: term-frequency saturation and length normalization rank a
-    short on-topic doc above a long one; docs without query terms are
-    absent; the top-k plans as TakeOrderedAndProject."""
-    import math
-
-    from fcrepo3_rdf_extractor_spark.operators.text import bm25_topk
-
-    docs = spark.createDataFrame(
-        [
-            (1, "spark join join"),                      # short, tf=2
-            (2, "spark join " + "filler " * 20),         # long, tf=1
-            (3, "nothing relevant here"),
-        ],
-        "doc_id long, text string",
-    )
-    out = bm25_topk(docs, ["join"], k=10)
-    phys = out._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in phys, phys
-    got = out.collect()
-    assert [r.doc_id for r in got] == [1, 2]
-    # hand-check doc 1: N=3, df('join')=2, len=3, avgdl=(3+22+3)/3
-    idf = math.log(1 + (3 - 2 + 0.5) / (2 + 0.5))
-    avgdl = (3 + 22 + 3) / 3
-    s1 = idf * 2 * 2.2 / (2 + 1.2 * (0.25 + 0.75 * 3 / avgdl))
-    assert abs(got[0].score - round(s1, 4)) < 1e-9
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="query term"):
-        bm25_topk(docs, [])
-
-
-def test_bm25_indexed_equals_streaming_and_probe_plan(spark, tmp_path):
-    """The materialized index serves the SAME results as the streaming
-    scorer (row-identical on the real documents table), the incremental
-    update replaces re-ingested docs instead of duplicating them, and
-    the probe plan never re-reads the corpus: its only scan is the
-    index parquet, with the query-term IN-list pushed down."""
-    from fcrepo3_rdf_extractor_spark.operators.text import (
-        bm25_index,
-        bm25_index_update,
-        bm25_topk,
-        bm25_topk_indexed,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    terms = ["hash", "join", "vector"]
-    want = [tuple(r) for r in bm25_topk(docs, terms, k=10).collect()]
-    idx_path = str(tmp_path / "bm25_index")
-    bm25_index(docs).write.parquet(idx_path)
-    idx = spark.read.parquet(idx_path)
-    got = bm25_topk_indexed(idx, terms, k=10)
-    assert [tuple(r) for r in got.collect()] == want
-
-    plan = got._sc._jvm.PythonSQLUtils.explainString(
-        got._jdf.queryExecution(), "formatted"
-    )
-    scans = [l for l in plan.splitlines() if "ReadSchema" in l]
-    assert all("text" not in l for l in scans), scans  # no corpus re-scan
-    assert "PushedFilters" in plan and "In(term" in plan, plan
-    assert "TakeOrderedAndProject" in plan, plan
-
-    # incremental update: re-ingesting changed docs REPLACES their rows
-    from pyspark.sql import functions as F
-
-    changed = docs.filter(F.col("doc_id") < 5).withColumn(
-        "text", F.lit("hash hash vector")
-    )
-    idx2 = bm25_index_update(idx, changed)
-    rebuilt = bm25_index(
-        docs.filter(F.col("doc_id") >= 5).unionByName(changed)
-    )
-    q2 = [tuple(r) for r in bm25_topk_indexed(idx2, terms, k=10).collect()]
-    want2 = [tuple(r) for r in bm25_topk_indexed(rebuilt, terms, k=10).collect()]
-    assert q2 == want2
-
-
-def test_distinct_token_stats_hll_error_gate(spark):
-    """Measured HLL++ error vs exact on a real corpus slice: every
-    per-source approx distinct count within 3x the requested rsd, and
-    the two arms agree on n_tokens exactly."""
-    from fcrepo3_rdf_extractor_spark.operators.text import distinct_token_stats
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    exact = {r.source: r for r in distinct_token_stats(docs).collect()}
-    approx = {
-        r.source: r
-        for r in distinct_token_stats(docs, approx=True, rsd=0.05).collect()
-    }
-    assert set(exact) == set(approx) and len(exact) >= 2
-    for src, e in exact.items():
-        a = approx[src]
-        assert a.n_tokens == e.n_tokens
-        rel = abs(a.n_distinct_terms - e.n_distinct_terms) / e.n_distinct_terms
-        assert rel <= 0.15, (src, e.n_distinct_terms, a.n_distinct_terms)
 
 
 def test_label_propagation_two_triangles(spark):
